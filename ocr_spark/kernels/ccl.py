@@ -29,28 +29,34 @@ import numpy as np
 
 
 def _runs(m: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """All dark runs of a bool mask: (row, xs, xe) with xe exclusive."""
+    """All dark runs of a 2-D bool mask: (row, xs, xe) with xe exclusive."""
     h, w = m.shape
     padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = m
     d = np.diff(padded.astype(np.int8), axis=1)
-    ys, starts = np.nonzero(d == 1)
-    _, ends = np.nonzero(d == -1)
+    # flat indices of the bool masks: np.nonzero's order, ~2x faster
+    ys, starts = np.divmod(np.flatnonzero(d == 1), w + 1)
+    ends = np.flatnonzero(d == -1) % (w + 1)
     return ys, starts, ends
 
 
-def label_boxes(mask: np.ndarray, min_area: int = 1) -> list[tuple[int, int, int, int]]:
+def label_boxes(mask: np.ndarray, min_area: int = 1):
     """8-connected components of a boolean mask -> bounding boxes.
 
     Returns [(x0, y0, x1, y1)] with exclusive right/bottom edges,
-    sorted by (y0, x0). Deterministic for a given mask.
+    sorted by (y0, x0). Deterministic for a given mask. An (n, h, w)
+    stack of masks returns one box list per page: the pages are
+    labelled as one tall image with an empty row between pages, so no
+    component crosses a page boundary.
     """
     m = np.asarray(mask, dtype=bool)
+    h, w = m.shape[-2:]
+    out: list[list[tuple[int, int, int, int]]] = [[] for _ in range(int(np.prod(m.shape[:-2])))]
     if not m.any():
-        return []
-    h, w = m.shape
-    row, xs, xe = _runs(m)
-    n = len(row)
+        return out if m.ndim == 3 else out[0]
+    row, xs, xe = _runs(m.reshape(-1, w))
+    row = row + row // h  # page k's row y sits at k*(h+1) + y
+    n_runs = len(row)
 
     # adjacency: run i (row y) touches prev-row run j iff
     # xe_j - 1 >= xs_i - 1 and xs_j <= xe_i  (8-connectivity, xe excl).
@@ -63,7 +69,7 @@ def label_boxes(mask: np.ndarray, min_area: int = 1) -> list[tuple[int, int, int
     lo = np.searchsorted(key_pxe, tgt + (xs - 1), side="left")
     hi = np.searchsorted(key_pxs, tgt + xe, side="right")
     cnt = np.maximum(hi - lo, 0)
-    src = np.repeat(np.arange(n), cnt)
+    src = np.repeat(np.arange(n_runs), cnt)
     # multi-arange: concatenate(arange(lo_i, lo_i + cnt_i) for all i)
     csum = np.cumsum(cnt)
     offs = np.arange(csum[-1]) - np.repeat(csum - cnt, cnt)
@@ -75,7 +81,7 @@ def label_boxes(mask: np.ndarray, min_area: int = 1) -> list[tuple[int, int, int
     # ~ log(component diameter). Fixpoint label = min run index of the
     # component — the same root choice as a smaller-index-wins
     # union-find, entirely in numpy (no per-edge Python loop).
-    root = np.arange(n)
+    root = np.arange(n_runs)
     while True:
         before = root.copy()
         l_src = root[src]
@@ -101,10 +107,13 @@ def label_boxes(mask: np.ndarray, min_area: int = 1) -> list[tuple[int, int, int
     y1 = np.maximum.reduceat(row[order], starts) + 1
     area = np.add.reduceat((xe - xs)[order], starts)
 
-    keep = area >= min_area
-    out = [
-        (int(a), int(b), int(c), int(d))
-        for a, b, c, d in zip(x0[keep], y0[keep], x1[keep], y1[keep])
-    ]
-    out.sort(key=lambda b: (b[1], b[0]))
-    return out
+    # (page, y0, x0) order; the stable sort keeps root order on ties,
+    # as the per-page list sort did
+    keep = np.flatnonzero(area >= min_area)
+    keep = keep[np.lexsort((x0[keep], y0[keep]))]
+    page = y0[keep] // (h + 1)
+    top = page * (h + 1)
+    for k, a, b, c, d in zip(page.tolist(), x0[keep].tolist(), (y0[keep] - top).tolist(),
+                             x1[keep].tolist(), (y1[keep] - top).tolist()):
+        out[k].append((a, b, c, d))
+    return out if m.ndim == 3 else out[0]

@@ -32,14 +32,17 @@ def apply_gray_channels(img: dict, fn, *args, **kw) -> dict:
 def contrast(arr: np.ndarray, black: float, white: float) -> np.ndarray:
     """Linear stretch with clamps (misc.c:106-151).
 
-    black == white -> hard binary threshold (misc.c:111-121);
+    black == white -> hard binary threshold (misc.c:111-121), which also
+    takes one threshold per page of an (n, h, w) stack;
     white < black -> inverted ramp (misc.c:139-150).
     """
     a = np.asarray(arr, dtype=F32)
-    black = F32(black)
-    white = F32(white)
-    if white == black:
-        return np.where(a <= black, F32(0), F32(255))
+    black = np.asarray(black, dtype=F32)
+    white = np.asarray(white, dtype=F32)
+    if (white == black).all():
+        thr = black[..., None, None] if black.ndim else black
+        return np.where(a <= thr, F32(0), F32(255))
+    black, white = F32(black), F32(white)
     m = F32(np.float64(255.0) / (np.float64(white) - np.float64(black)))
     q = F32(-m * black)
     ramp = a * m + q
@@ -48,11 +51,12 @@ def contrast(arr: np.ndarray, black: float, white: float) -> np.ndarray:
     return np.where(a >= black, F32(0), np.where(a <= white, F32(255), ramp)).astype(F32)
 
 
-def binarize(arr: np.ndarray, thr: float) -> np.ndarray:
-    """CLI `bin` (grafix.c:189-200): x*=255 if x<=1, then threshold."""
-    thr = F32(thr)
-    if thr <= 1:
-        thr = F32(thr * F32(255))
+def binarize(arr: np.ndarray, thr) -> np.ndarray:
+    """CLI `bin` (grafix.c:189-200): x*=255 if x<=1, then threshold.
+
+    `thr` is one threshold, or one per page of an (n, h, w) stack."""
+    thr = np.array(thr, dtype=F32)
+    thr[thr <= 1] *= F32(255)
     return contrast(arr, thr, thr)
 
 

@@ -4,8 +4,9 @@ Cites: image_background misc.c:19-68; mean_y misc.c:153-178;
 calc_statistics misc.c:196-270.
 
 All recurrences are vectorized across the independent axis (whole rows
-or columns move through numpy at once); only the genuinely sequential
-axis is a Python loop, which is the same asymptotic work the C does.
+or columns move through numpy at once, for every page of a stack);
+only the genuinely sequential axis is a Python loop, which is the same
+asymptotic work the C does.
 """
 
 from __future__ import annotations
@@ -22,6 +23,9 @@ F32 = np.float32
 # tests to force the replay path on small images).
 F32_EXACT_LIMIT = 2**24
 
+# D[a, b] = (b - a)^2 over the 256x256 (lo, hi) pixel-pair grid
+_PAIR_D2 = (np.arange(256, dtype=np.int64)[None, :] - np.arange(256)[:, None]) ** 2
+
 
 def background(arr: np.ndarray, d: float) -> np.ndarray:
     """Morphological background by decaying max propagation (misc.c:19-68).
@@ -30,24 +34,31 @@ def background(arr: np.ndarray, d: float) -> np.ndarray:
     bottom->up pass over the *rounded* intermediate. The decay factor
     follows the C float/double dance exactly: d = (float)(0.333/d);
     d = (float)exp(-d).
+
+    Takes one (h, w) page or an (n, h, w) stack of same-shape pages:
+    every sweep step is elementwise within a page, so a stack runs each
+    sequential step once for all n pages, bit-exactly.
     """
     a = np.asarray(arr, dtype=F32)
-    h, w = a.shape
+    h, w = a.shape[-2:]
     dd = F32(np.float64(0.333) / np.float64(F32(d)))
     dec = F32(np.exp(-np.float64(dd)))
 
-    v = a.copy()
     # horizontal decaying max, both directions (misc.c:36-43);
-    # vectorized over rows, sequential over x. Run on the TRANSPOSE so
-    # each step touches a contiguous row instead of a strided column —
-    # identical elementwise ops (bit-exact), ~20x less memory latency.
-    vt = np.ascontiguousarray(v.T)
+    # vectorized over rows, sequential over x. Run on a (w, n, h) copy
+    # so each step touches one contiguous slab instead of a strided
+    # column — identical elementwise ops (bit-exact), ~20x less memory
+    # latency.
+    a3 = a.reshape(-1, h, w)
+    n = len(a3)
+    vt = np.ascontiguousarray(a3.transpose(2, 0, 1)).reshape(w, n * h)
     for x in range(1, w):
         np.maximum(vt[x], vt[x - 1] * dec, out=vt[x])
     for x in range(w - 2, -1, -1):
         np.maximum(vt[x], vt[x + 1] * dec, out=vt[x])
-    v = np.ascontiguousarray(vt.T)
-    # top->down combine with previous row's unrounded values (misc.c:44-47)
+    # top->down combine with previous row's unrounded values
+    # (misc.c:44-47), on an (h, n, w) copy for the same reason
+    v = np.ascontiguousarray(vt.reshape(w, n, h).transpose(2, 1, 0)).reshape(h, n * w)
     for y in range(1, h):
         np.maximum(v[y], v[y - 1] * dec, out=v[y])
     out = c_round(v)
@@ -56,7 +67,9 @@ def background(arr: np.ndarray, d: float) -> np.ndarray:
     # output, maxes with below*dec, and is re-rounded. For non-negative
     # pages (every decoded scan) C round() == floor(x64 + 0.5), so the
     # sequential loop can skip c_round's sign branch — ~30% fewer numpy
-    # launches on the one genuinely sequential axis.
+    # launches on the one genuinely sequential axis. Both branches give
+    # the same value on non-negative pixels, so one test per stack is
+    # exact for every page in it.
     v0 = v[h - 1]
     if np.all(v[h - 1] >= 0) and np.all(out >= 0):
         for y in range(h - 2, -1, -1):
@@ -68,7 +81,7 @@ def background(arr: np.ndarray, d: float) -> np.ndarray:
             v1 = np.maximum(out[y], v0 * dec)
             out[y] = c_round(v1)
             v0 = v1
-    return out.astype(F32)
+    return np.ascontiguousarray(out.reshape(h, n, w).transpose(1, 0, 2), dtype=F32).reshape(a.shape)
 
 
 def mean_y(arr: np.ndarray, d: int) -> np.ndarray:
@@ -89,26 +102,16 @@ def mean_y(arr: np.ndarray, d: int) -> np.ndarray:
     return out
 
 
-def calc_statistics(arr: np.ndarray) -> dict:
-    """The auto-threshold engine (misc.c:196-270).
+def _histograms(ai: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """calc_statistics' three float32 histograms (ha, hb, thr) of one
+    (h, w) page of C `short` pixels.
 
-    One pass over horizontally+vertically adjacent pixel pairs builds
-    three histograms with a range-update trick (+1 at min bin, -1 at
-    max bin, prefix-summed later): `ha` per-pixel area counts, `hb`
-    border counts, `thr` squared-contrast-weighted counts. Returns
-    {black, graythr, white, area, thickness, t}.
-
-    Faithful quirks preserved:
-    - pixel values are truncated to C `short` before binning;
     - the last row contributes w copies of its FIRST pixel to `ha`
       (the pointer never advances through the y==h-1 row, misc.c:223);
     - `thr`/`hb` accumulate in float32 in exact scan order
       (np.add.at applies updates sequentially).
     """
-    a = np.asarray(arr, dtype=F32)
-    h, w = a.shape
-    ai = a.astype(np.int16)  # (short) truncation toward zero
-
+    h, w = ai.shape
     # area histogram: every pixel of rows 0..h-2 once, plus w copies of
     # the last row's first pixel
     ha = np.bincount(np.clip(ai[: h - 1].ravel(), 0, 255), minlength=256).astype(np.int64)
@@ -170,9 +173,7 @@ def calc_statistics(arr: np.ndarray) -> dict:
             np.bincount(code_h, minlength=65536)
             + np.bincount(code_v, minlength=65536)
         ).reshape(256, 256)
-        grid = np.arange(256, dtype=np.int64)
-        d2 = (grid[None, :] - grid[:, None]) ** 2
-        md = m2 * d2
+        md = m2 * _PAIR_D2
         row_m, col_m = m2.sum(axis=1), m2.sum(axis=0)
         row_d, col_d = md.sum(axis=1), md.sum(axis=0)
         counts = row_m + col_m
@@ -288,33 +289,68 @@ def calc_statistics(arr: np.ndarray) -> dict:
                 seq = np.zeros(256, dtype=F32)
                 np.add.at(seq, idx[mask], thr_vals[mask])
                 thr[thr_risky] = seq[thr_risky]
+    return ha, hb, thr
+
+
+def calc_statistics(arr: np.ndarray) -> dict | list[dict]:
+    """The auto-threshold engine (misc.c:196-270).
+
+    One pass over horizontally+vertically adjacent pixel pairs builds
+    three histograms with a range-update trick (+1 at min bin, -1 at
+    max bin, prefix-summed later): `ha` per-pixel area counts, `hb`
+    border counts, `thr` squared-contrast-weighted counts. Returns
+    {black, graythr, white, area, thickness, t}; pixel values are
+    truncated to C `short` before binning.
+
+    Takes one (h, w) page (returns the dict) or an (n, h, w) stack of
+    same-shape pages (returns one dict per page). The histograms are
+    built page by page (`_histograms`: its in-range test, fast path
+    and replay gates are per-page decisions), and the threshold search
+    and sums after them run across the stack.
+    """
+    a = np.asarray(arr, dtype=F32)
+    h, w = a.shape[-2:]
+    ai = a.reshape(-1, h, w).astype(np.int16)  # (short) truncation toward zero
+    n = len(ai)
+    pages = np.arange(n)
+    ha, hb, thr = (np.stack(x) for x in zip(*(_histograms(p) for p in ai)))
 
     # prefix sums in float32 (cumul_vector, vector.c:72-78)
-    thr_c = np.cumsum(thr, dtype=F32)
-    hb_c = np.cumsum(hb, dtype=F32)
-    t = int(np.argmax(thr_c))  # index_of_max: first max (vector.c:214-222)
+    thr_c = np.cumsum(thr, axis=1, dtype=F32)
+    hb_c = np.cumsum(hb, axis=1, dtype=F32)
+    t = np.argmax(thr_c, axis=1)  # index_of_max: first max (vector.c:214-222)
 
-    graythr = F32(np.float64(t) / 255.0)
-    border = F32(hb_c[t] * F32(0.8))
-    ha_c = np.cumsum(ha, dtype=F32)  # cumul_vector(ha) ran before use (misc.c:246)
-    area = F32(ha_c[t])
-    thickness = F32(F32(2) * area / border) if border != 0 else F32(np.inf)
-    black_acc = F32(0)
-    for i in range(t):  # sums the CUMULATIVE histogram (misc.c:250-253)
-        black_acc = F32(black_acc + ha_c[i])
-    # (t - black/area) evaluates in float, then /255.0 in double (misc.c:254)
-    inner = F32(F32(t) - F32(black_acc / area)) if area != 0 else F32(0)
-    black = F32(np.float64(inner) / 255.0)
-    white = F32(np.float64(255.0) * w * h - np.float64(area * F32(t)))
-    for i in range(t + 1, 256):  # also cumulative (misc.c:256-259)
-        white = F32(white - ha_c[i])
-    denom = np.float64(w * h - np.float64(area)) * 255.0
-    white = F32(np.float64(white) / denom) if denom != 0 else F32(0)
-    return {
-        "black": float(black),
-        "graythr": float(graythr),
-        "white": float(white),
-        "area": float(area),
-        "thickness": float(thickness),
-        "t": t,
-    }
+    graythr = (t / 255.0).astype(F32)
+    border = hb_c[pages, t] * F32(0.8)
+    ha_c = np.cumsum(ha, axis=1, dtype=F32)  # cumul_vector(ha) ran before use (misc.c:246)
+    area = ha_c[pages, t]
+    tf = t.astype(F32)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        thickness = np.where(border != 0, F32(2) * area / border, F32(np.inf))
+        # black sums the CUMULATIVE histogram over bins < t in float32
+        # (misc.c:250-253): the float32 prefix sum at t, starting from 0
+        black_acc = np.cumsum(np.c_[np.zeros((n, 1), F32), ha_c], axis=1, dtype=F32)[pages, t]
+        # (t - black/area) evaluates in float, then /255.0 in double (misc.c:254)
+        inner = np.where(area != 0, tf - black_acc / area, F32(0))
+    black = (inner.astype(np.float64) / 255.0).astype(F32)
+    # white subtracts the cumulative bins > t from 255*w*h - area*t in
+    # float32 (misc.c:256-259): the same adds as one masked float32
+    # cumsum (x - c == x + -c; the masked +0.0 adds are identities)
+    white0 = (np.float64(255.0) * w * h - (area * tf).astype(np.float64)).astype(F32)
+    tail = np.where(np.arange(256) > t[:, None], -ha_c, F32(0))
+    white = np.cumsum(np.c_[white0, tail], axis=1, dtype=F32)[:, -1]
+    denom = (w * h - area.astype(np.float64)) * 255.0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        white = np.where(denom != 0, (white.astype(np.float64) / denom).astype(F32), F32(0))
+    out = [
+        {
+            "black": float(black[i]),
+            "graythr": float(graythr[i]),
+            "white": float(white[i]),
+            "area": float(area[i]),
+            "thickness": float(thickness[i]),
+            "t": int(t[i]),
+        }
+        for i in range(n)
+    ]
+    return out if a.ndim == 3 else out[0]

@@ -3,8 +3,10 @@
 pages (url, warc_ts, html, text, lang)
   -> DOM-path text-density boilerplate strip        (extract.py UDF)
   -> embedded scan payload decode                   (extract.py UDF)
-  -> fused per-page OCR chain: fix-bg, stats, bin auto, deskew,
-     projection-profile line bands, CCL glyph boxes (stages.py UDF)
+  -> fused OCR chain: fix-bg, stats, bin auto, deskew,
+     projection-profile line bands, CCL glyph boxes (stages.py UDF),
+     run per Arrow batch over same-shape stacks of scans capped at
+     stages.STACK_BYTES; a corrupt scan gives null scan features
   -> (url, warc_ts, lang, extracted, scan features...)
 
 Scale contract:

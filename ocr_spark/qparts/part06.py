@@ -816,7 +816,7 @@ def dmarc_record_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _front_matter_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -893,14 +893,14 @@ def yaml_front_matter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("fm"),
     )
     tags_inner = F.regexp_extract(
-        "fm", "tags: \[([^\]]*)\]", 1)
+        "fm", r"tags: \[([^\]]*)\]", 1)
     return s.select(
         "doc_id",
         F.when(F.col("fm") != "", 1).otherwise(0).cast("int")
         .alias("has_front_matter"),
         F.regexp_extract("fm", "(?m)^title: (.*)$", 1).alias("title"),
         F.when(F.regexp_like(F.col("fm"),
-                             F.lit("tags: \[[^\]]")),
+                             F.lit(r"tags: \[[^\]]")),
                F.size(F.regexp_extract_all(
                    tags_inner, F.lit("[^, ]+"), 0)))
         .otherwise(0).cast("int").alias("n_tags"),
@@ -911,7 +911,7 @@ def yaml_front_matter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _toml_deps_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1011,20 +1011,20 @@ def toml_manifest_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "txt",
         F.when(F.col("txt").contains("[project]")
                & F.regexp_like(F.col("txt"),
-                               F.lit("dependencies = \[")),
+                               F.lit(r"dependencies = \[")),
                "pyproject")
         .when(F.regexp_like(F.col("txt"),
-                            F.lit("\[dependencies\]")), "cargo")
+                            F.lit(r"\[dependencies\]")), "cargo")
         .otherwise("").alias("kind"),
     ).where(F.col("kind") != "")
     deps = (
         F.when(F.col("kind") == "pyproject", F.regexp_extract_all(
             F.regexp_extract(
-                "txt", "dependencies = \[([^\]]*)\]", 1),
+                "txt", r"dependencies = \[([^\]]*)\]", 1),
             F.lit('"([^"]+)"'), 1))
         .otherwise(F.regexp_extract_all(
             F.regexp_extract(
-                "txt", "(?s)\[dependencies\]\n(.*)$", 1),
+                "txt", "(?s)\\[dependencies\\]\n(.*)$", 1),
             F.lit("(?m)^[a-z0-9_-]+ = .*$"), 0))
     )
     b = k.select(
@@ -1133,7 +1133,7 @@ def env_file_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _makefile_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1549,11 +1549,11 @@ def _git_config_oracle() -> str:
           '(?m)^[ ' || chr(9) || ']*url = ([^\n]+)$', 1), '')
           AS remote_url
       FROM p
-      WHERE regexp_matches(txt, '(?m)^\[[a-z]+')
+      WHERE regexp_matches(txt, '(?m)^\\[[a-z]+')
         AND regexp_matches(txt,
           '(?m)^[ ' || chr(9) || ']*url = '))
     SELECT doc_id,
-      CAST(len(regexp_extract_all(txt, '(?m)^\[')) AS INT)
+      CAST(len(regexp_extract_all(txt, '(?m)^\\[')) AS INT)
         AS n_sections,
       remote_url,
       CASE WHEN remote_url LIKE 'https://%' THEN 'https'
@@ -1602,7 +1602,7 @@ def git_config_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = d.select("doc_id", txt.alias("txt"))
     g = p.where(
-        F.regexp_like(F.col("txt"), F.lit("(?m)^\[[a-z]+"))
+        F.regexp_like(F.col("txt"), F.lit(r"(?m)^\[[a-z]+"))
         & F.regexp_like(F.col("txt"), F.lit("(?m)^[ \t]*url = "))
     ).select(
         "doc_id", "txt",
@@ -1612,7 +1612,7 @@ def git_config_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("remote_url"), F.lit("^https://[^:/@]+:[^@]+@"))
     return g.select(
         "doc_id",
-        F.size(F.regexp_extract_all(F.col("txt"), F.lit("(?m)^\["), 0))
+        F.size(F.regexp_extract_all(F.col("txt"), F.lit(r"(?m)^\["), 0))
         .cast("int").alias("n_sections"),
         "remote_url",
         F.when(F.col("remote_url").startswith("https://"), "https")
@@ -1626,7 +1626,7 @@ def git_config_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _access_log_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1742,7 +1742,7 @@ def access_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cred_dump_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1853,9 +1853,9 @@ def _zone_file_oracle() -> str:
         '(?m)^[@A-Za-z0-9._-]+ IN (A|AAAA|MX|CNAME|SOA|NS|TXT) '))
     SELECT doc_id,
       COALESCE(regexp_extract(txt,
-        '(?m)^\$ORIGIN ([^\n]+)$', 1), '') AS origin,
-      CAST(CASE WHEN regexp_matches(txt, '(?m)^\$TTL [0-9]+')
-        THEN CAST(regexp_extract(txt, '(?m)^\$TTL ([0-9]+)', 1)
+        '(?m)^\\$ORIGIN ([^\n]+)$', 1), '') AS origin,
+      CAST(CASE WHEN regexp_matches(txt, '(?m)^\\$TTL [0-9]+')
+        THEN CAST(regexp_extract(txt, '(?m)^\\$TTL ([0-9]+)', 1)
           AS INT) ELSE -1 END AS INT) AS default_ttl,
       CAST(len(regexp_extract_all(txt, '(?m)^[^ ]+ IN A ')) AS INT)
         AS n_a,
@@ -1866,7 +1866,7 @@ def _zone_file_oracle() -> str:
       CAST(len(regexp_extract_all(txt, '(?m)^[^ ]+ IN CNAME ')) AS INT)
         AS n_cname,
       COALESCE(regexp_extract(txt,
-        'IN SOA [^(]*\( ([0-9]+)', 1), '') AS soa_serial,
+        'IN SOA [^(]*\\( ([0-9]+)', 1), '') AS soa_serial,
       COALESCE(regexp_extract(txt,
         '(?m)^[^ ]+ IN A ([0-9.]+)$', 1), '') AS first_a_ip
     FROM g
@@ -1952,9 +1952,9 @@ def _adblock_oracle() -> str:
       FROM documents),
     g AS (
       SELECT doc_id, txt FROM p
-      WHERE regexp_matches(txt, '(?m)^(\|\||##|@@|!)'))
+      WHERE regexp_matches(txt, '(?m)^(\\|\\||##|@@|!)'))
     SELECT doc_id,
-      CAST(len(regexp_extract_all(txt, '(?m)^\|\|')) AS INT)
+      CAST(len(regexp_extract_all(txt, '(?m)^\\|\\|')) AS INT)
         AS n_domain_rules,
       CAST(len(regexp_extract_all(txt, '(?m)^[^\n!]*##')) AS INT)
         AS n_cosmetic_rules,
@@ -1963,7 +1963,7 @@ def _adblock_oracle() -> str:
       CAST(len(regexp_extract_all(txt, '(?m)^!')) AS INT)
         AS n_comments,
       COALESCE(regexp_extract(txt,
-        '(?m)^\|\|([a-z0-9.-]+)\^', 1), '') AS first_blocked_host,
+        '(?m)^\\|\\|([a-z0-9.-]+)\\^', 1), '') AS first_blocked_host,
       CAST(CASE WHEN txt LIKE '%$third-party%' THEN 1 ELSE 0 END
         AS INT) AS has_third_party_option
     FROM g
@@ -2125,7 +2125,7 @@ def robots_snippet_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rst_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -2958,7 +2958,7 @@ def webfinger_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _aasa_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3052,7 +3052,7 @@ def aasa_universal_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _irc_log_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3141,7 +3141,7 @@ def irc_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shortcode_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3259,11 +3259,11 @@ def _dot_leader_oracle() -> str:
       SELECT doc_id,
         generate_subscripts(ls, 1) - 1 AS entry_idx, unnest(ls) AS ln
       FROM (SELECT doc_id, regexp_extract_all(txt,
-              '(?m)^([A-Z][^\n.]{2,60}?) ?\.{4,} ?[0-9]+$') AS ls
+              '(?m)^([A-Z][^\n.]{2,60}?) ?\\.{4,} ?[0-9]+$') AS ls
             FROM p)),
     t AS (
       SELECT doc_id, entry_idx,
-        trim(regexp_extract(ln, '^([^.]*[^. ]) ?\.{4,}', 1))
+        trim(regexp_extract(ln, '^([^.]*[^. ]) ?\\.{4,}', 1))
           AS entry_title,
         CAST(regexp_extract(ln, '([0-9]+)$', 1) AS INT) AS page_no
       FROM g)
@@ -3365,7 +3365,7 @@ def _uuencode_oracle() -> str:
       CAST(CASE WHEN mode IN ('755', '775', '777') THEN 1 ELSE 0 END
         AS INT) AS is_executable,
       CAST(CASE WHEN regexp_matches(filename,
-        '\.(sh|exe|bat|com|scr)$') OR mode IN ('755', '775', '777')
+        '\\.(sh|exe|bat|com|scr)$') OR mode IN ('755', '775', '777')
         THEN 1 ELSE 0 END AS INT) AS quarantine
     FROM s
     """
@@ -3529,7 +3529,7 @@ def har_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pgn_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3959,9 +3959,9 @@ def _asciidoc_oracle() -> str:
       CAST(len(regexp_extract_all(txt, '(?m)^== ')) AS INT)
         AS n_sections,
       CAST(len(regexp_extract_all(txt,
-        '(?m)^\[source,([a-z]+)\]')) AS INT) AS n_source_blocks,
+        '(?m)^\\[source,([a-z]+)\\]')) AS INT) AS n_source_blocks,
       COALESCE(regexp_extract(txt,
-        '(?m)^\[source,([a-z]+)\]', 1), '') AS first_source_lang,
+        '(?m)^\\[source,([a-z]+)\\]', 1), '') AS first_source_lang,
       CAST(len(regexp_extract_all(txt,
         '(?m)^(NOTE|WARNING|TIP|IMPORTANT|CAUTION): ')) AS INT)
         AS n_admonitions,
@@ -4043,20 +4043,20 @@ def _org_mode_oracle() -> str:
       FROM documents),
     g AS (
       SELECT doc_id, txt FROM p
-      WHERE regexp_matches(txt, '(?m)^\*+ [A-Za-z]'))
+      WHERE regexp_matches(txt, '(?m)^\\*+ [A-Za-z]'))
     SELECT doc_id,
-      COALESCE(regexp_extract(txt, '(?m)^#\+TITLE: ([^\n]+)$', 1),
+      COALESCE(regexp_extract(txt, '(?m)^#\\+TITLE: ([^\n]+)$', 1),
         '') AS title,
-      CAST(len(regexp_extract_all(txt, '(?m)^\* ')) AS INT)
+      CAST(len(regexp_extract_all(txt, '(?m)^\\* ')) AS INT)
         AS n_top_headings,
-      CAST(len(regexp_extract_all(txt, '(?m)^\*\* ')) AS INT)
+      CAST(len(regexp_extract_all(txt, '(?m)^\\*\\* ')) AS INT)
         AS n_sub_headings,
-      CAST(len(regexp_extract_all(txt, '(?m)^\*+ TODO ')) AS INT)
+      CAST(len(regexp_extract_all(txt, '(?m)^\\*+ TODO ')) AS INT)
         AS n_todo,
-      CAST(len(regexp_extract_all(txt, '(?m)^\*+ DONE ')) AS INT)
+      CAST(len(regexp_extract_all(txt, '(?m)^\\*+ DONE ')) AS INT)
         AS n_done,
       CAST(len(regexp_extract_all(txt,
-        '(?m)^#\+BEGIN_SRC ([a-z]+)')) AS INT) AS n_src_blocks
+        '(?m)^#\\+BEGIN_SRC ([a-z]+)')) AS INT) AS n_src_blocks
     FROM g
     """
 
@@ -4113,7 +4113,7 @@ def org_mode_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _svg_active_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -4205,7 +4205,7 @@ def svg_active_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _xxe_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -4633,7 +4633,7 @@ def ssh_pubkey_file_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dkim_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -4747,7 +4747,7 @@ def _mta_sts_oracle() -> str:
           AS BIGINT) ELSE -1 END AS BIGINT) AS max_age_s,
       CAST(CASE WHEN regexp_extract(txt, '(?m)^mode: ([a-z]+)$', 1)
         = 'enforce' THEN 1 ELSE 0 END AS INT) AS is_enforcing,
-      CAST(CASE WHEN regexp_matches(txt, '(?m)^mx: \*\.')
+      CAST(CASE WHEN regexp_matches(txt, '(?m)^mx: \\*\\.')
         THEN 1 ELSE 0 END AS INT) AS has_wildcard_mx
     FROM g
     """
@@ -4808,7 +4808,7 @@ def mta_sts_policy_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phpinfo_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -4918,7 +4918,7 @@ def phpinfo_leak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _traffic_advice_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -4994,7 +4994,7 @@ def traffic_advice_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _prometheus_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -5092,7 +5092,7 @@ def prometheus_metrics_parse(spark: SparkSession,
 
 
 def _nginx_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -5223,23 +5223,23 @@ def _ci_workflow_oracle() -> str:
     g AS (
       SELECT doc_id, txt FROM p
       WHERE regexp_matches(txt, '(?m)^jobs:$')
-        AND regexp_matches(txt, '(?m)^\s+runs-on: ')),
+        AND regexp_matches(txt, '(?m)^\\s+runs-on: ')),
     s AS (
       SELECT doc_id, txt,
         regexp_extract_all(txt,
-          '(?m)^\s+- uses: ([^\n]+)$', 1) AS uses
+          '(?m)^\\s+- uses: ([^\n]+)$', 1) AS uses
       FROM g)
     SELECT doc_id,
-      CAST(len(regexp_extract_all(txt, '(?m)^\s+runs-on: '))
+      CAST(len(regexp_extract_all(txt, '(?m)^\\s+runs-on: '))
         AS INT) AS n_jobs,
       CAST(len(uses) AS INT) AS n_action_uses,
       CAST(len(list_filter(uses, x ->
         NOT regexp_matches(x, '@v[0-9]+$'))) AS INT)
         AS n_unpinned_actions,
-      CAST(len(regexp_extract_all(txt, '(?m)^\s+- run: '))
+      CAST(len(regexp_extract_all(txt, '(?m)^\\s+- run: '))
         AS INT) AS n_run_steps,
       CAST(CASE WHEN regexp_matches(txt,
-        '(?m)^\s+runs-on: self-hosted') THEN 1 ELSE 0 END AS INT)
+        '(?m)^\\s+runs-on: self-hosted') THEN 1 ELSE 0 END AS INT)
         AS has_self_hosted
     FROM s
     """
@@ -5636,10 +5636,10 @@ def _compose_oracle() -> str:
     g AS (
       SELECT doc_id, txt FROM p
       WHERE regexp_matches(txt, '(?m)^services:$')
-        AND regexp_matches(txt, '(?m)^\s+image: ')),
+        AND regexp_matches(txt, '(?m)^\\s+image: ')),
     s AS (
       SELECT doc_id, txt,
-        regexp_extract_all(txt, '(?m)^\s+image: ([^\n]+)$', 1)
+        regexp_extract_all(txt, '(?m)^\\s+image: ([^\n]+)$', 1)
           AS images
       FROM g)
     SELECT doc_id,
@@ -5755,7 +5755,7 @@ def _k8s_oracle() -> str:
           '(?m)^  replicas: ([0-9]+)', 1) AS INT) ELSE -1 END
         AS INT) AS replicas,
       CAST(len(regexp_extract_all(txt,
-        '(?m)^\s+- image: ')) AS INT) AS n_containers,
+        '(?m)^\\s+- image: ')) AS INT) AS n_containers,
       CAST(CASE WHEN regexp_matches(txt, 'privileged: true')
         THEN 1 ELSE 0 END AS INT) AS has_privileged
     FROM g
@@ -5940,7 +5940,7 @@ def mediawiki_export_parse(spark: SparkSession,
 
 
 def _se_dump_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -6159,7 +6159,7 @@ def pushshift_jsonl_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gutenberg_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -6276,7 +6276,7 @@ def gutenberg_header_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oauth_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -6605,7 +6605,7 @@ def _passwd_oracle() -> str:
       SELECT doc_id, txt,
         regexp_extract_all(txt,
           '(?m)^([a-z_][a-z0-9_-]*):[^:]*:[0-9]+:', 1) AS users,
-        len(regexp_extract_all(txt, '(?m)^[^:\n]+:\$[0-9]'))
+        len(regexp_extract_all(txt, '(?m)^[^:\n]+:\\$[0-9]'))
           AS n_hashes
       FROM g)
     SELECT doc_id,
@@ -6683,7 +6683,7 @@ def passwd_file_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cve_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -6980,7 +6980,7 @@ def _dsn_oracle() -> str:
         AND regexp_matches(txt, '(?m)^Status: ')),
     s AS (
       SELECT doc_id, txt,
-        regexp_extract(txt, '(?m)^Status: ([0-9]\.[0-9]+\.[0-9]+)$',
+        regexp_extract(txt, '(?m)^Status: ([0-9]\\.[0-9]+\\.[0-9]+)$',
           1) AS status
       FROM g)
     SELECT doc_id,
@@ -7347,7 +7347,7 @@ def shell_history_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _wp_config_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -7959,14 +7959,14 @@ def _hosts_file_oracle() -> str:
     s AS (
       SELECT doc_id, txt,
         regexp_extract_all(txt,
-          '(?m)^[0-9.]+ ([a-z0-9.-]+\.internal)\\b', 1) AS internals
+          '(?m)^[0-9.]+ ([a-z0-9.-]+\\.internal)\\b', 1) AS internals
       FROM g)
     SELECT doc_id,
       CAST(len(regexp_extract_all(txt,
         '(?m)^[0-9a-fA-F.:]+ ')) AS INT) AS n_entries,
       CAST(len(internals) AS INT) AS n_internal_hosts,
       COALESCE(internals[1], '') AS first_internal_host,
-      CAST(len(regexp_extract_all(txt, '(?m)^0\.0\.0\.0 '))
+      CAST(len(regexp_extract_all(txt, '(?m)^0\\.0\\.0\\.0 '))
         AS INT) AS n_blocklist_entries,
       CAST(CASE WHEN len(internals) > 0 THEN 1 ELSE 0 END AS INT)
         AS discloses_topology
@@ -8050,7 +8050,7 @@ def _registry_auth_oracle() -> str:
           ELSE 'pypirc' END AS kind
       FROM p
       WHERE regexp_matches(txt, ':_authToken=')
-        OR (regexp_matches(txt, '(?m)^\[pypi\]$')
+        OR (regexp_matches(txt, '(?m)^\\[pypi\\]$')
             AND regexp_matches(txt, '(?m)^password = ')))
     SELECT doc_id, kind,
       COALESCE(regexp_extract(txt,
@@ -8118,7 +8118,7 @@ def package_registry_auth_leak(spark: SparkSession,
 
 
 def _proxy_pac_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -8218,7 +8218,7 @@ def proxy_pac_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _metar_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -8315,7 +8315,7 @@ def metar_weather_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _slowlog_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -8422,7 +8422,7 @@ def mysql_slowlog_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dmesg_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -8520,7 +8520,7 @@ def dmesg_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _traceroute_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -8659,7 +8659,7 @@ def _merge_conflict_oracle() -> str:
         '') AS ours_label,
       COALESCE(regexp_extract(txt, '(?m)^>>>>>>> ([^\n]+)$', 1),
         '') AS theirs_label,
-      CAST(CASE WHEN regexp_matches(txt, '(?m)^\|\|\|\|\|\|\| ')
+      CAST(CASE WHEN regexp_matches(txt, '(?m)^\\|\\|\\|\\|\\|\\|\\| ')
         THEN 1 ELSE 0 END AS INT) AS is_diff3_style,
       CAST(1 AS INT) AS is_broken_content
     FROM s
@@ -8742,10 +8742,10 @@ def _rmarkdown_oracle() -> str:
       FROM documents),
     g AS (
       SELECT doc_id, txt FROM p
-      WHERE regexp_matches(txt, '(?m)^```\{[a-z]+[,} ]')),
+      WHERE regexp_matches(txt, '(?m)^```\\{[a-z]+[,} ]')),
     s AS (
       SELECT doc_id, txt,
-        regexp_extract_all(txt, '(?m)^```\{([a-z]+)', 1) AS langs
+        regexp_extract_all(txt, '(?m)^```\\{([a-z]+)', 1) AS langs
       FROM g)
     SELECT doc_id,
       CAST(len(langs) AS INT) AS n_chunks,

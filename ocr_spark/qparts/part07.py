@@ -24,7 +24,7 @@ globals().update(
 
 
 def _graphviz_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -246,7 +246,7 @@ def _received_chain_oracle() -> str:
       SELECT doc_id, txt,
         regexp_extract_all(txt,
           '(?m)^Received: from ([^ \n]+) ', 1) AS hops,
-        regexp_extract_all(txt, '\[([0-9.]+)\]', 1) AS ips
+        regexp_extract_all(txt, '\\[([0-9.]+)\\]', 1) AS ips
       FROM g)
     SELECT doc_id,
       CAST(len(hops) AS INT) AS n_hops,
@@ -327,7 +327,7 @@ def received_header_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cidr_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -418,7 +418,7 @@ def cidr_block_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fix_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -518,13 +518,13 @@ def _hl7_oracle() -> str:
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
-          WHEN 0 THEN 'MSH|^~\&|HIS|HOSPITAL|LAB|FACILITY|2024031'
+          WHEN 0 THEN 'MSH|^~\\&|HIS|HOSPITAL|LAB|FACILITY|2024031'
             || CAST(doc_id % 10 AS VARCHAR) || '1000||ADT^A01|MSG'
             || CAST(10000 + doc_id % 900 AS VARCHAR) || '|P|2.3'
             || chr(10) || 'PID|1||12345^^^HOSPITAL||DOE^JANE||'
             || '19800101|F' || chr(10)
             || 'PV1|1|I|WARD^101^A'
-          WHEN 1 THEN 'MSH|^~\&|APP|ORG|RCV|DEST|202403151200||'
+          WHEN 1 THEN 'MSH|^~\\&|APP|ORG|RCV|DEST|202403151200||'
             || 'ORU^R01|X1|T|2.5' || chr(10)
             || 'OBX|1|NM|GLUCOSE||95|mg/dL'
           ELSE 'the msh of the network is a mesh of pipes'
@@ -532,18 +532,18 @@ def _hl7_oracle() -> str:
       FROM documents),
     g AS (
       SELECT doc_id, txt FROM p
-      WHERE regexp_matches(txt, '^MSH\|\^~\\\\&\|')),
+      WHERE regexp_matches(txt, '^MSH\\|\\^~\\\\&\\|')),
     s AS (
       SELECT doc_id, txt,
         string_split(string_split(txt, chr(10))[1], '|') AS msh
       FROM g)
     SELECT doc_id,
-      COALESCE(regexp_extract(txt, '\|([A-Z]{3}\^[A-Z0-9]{3})\|',
+      COALESCE(regexp_extract(txt, '\\|([A-Z]{3}\\^[A-Z0-9]{3})\\|',
         1), '') AS message_type,
       COALESCE(msh[12], '') AS hl7_version,
       CAST(len(regexp_extract_all(txt,
-        '(?m)^[A-Z0-9]{3}\|')) AS INT) AS n_segments,
-      CAST(CASE WHEN regexp_matches(txt, '(?m)^PID\|')
+        '(?m)^[A-Z0-9]{3}\\|')) AS INT) AS n_segments,
+      CAST(CASE WHEN regexp_matches(txt, '(?m)^PID\\|')
         THEN 1 ELSE 0 END AS INT) AS has_patient_segment,
       CAST(1 AS INT) AS quarantine
     FROM s
@@ -603,7 +603,7 @@ def hl7_message_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _llm_artifact_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -900,7 +900,7 @@ def hexdump_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _speakable_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -999,7 +999,7 @@ def speakable_schema_extract(spark: SparkSession,
 
 
 def _interview_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1096,7 +1096,7 @@ def interview_transcript_parse(spark: SparkSession,
 
 
 def _drama_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1303,7 +1303,7 @@ def verse_structure_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _xmp_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1606,7 +1606,7 @@ def git_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _archive_listing_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -1801,7 +1801,7 @@ def citation_count_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _wikidata_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -2421,7 +2421,7 @@ def client_hints_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gtag_consent_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -2644,7 +2644,7 @@ def memento_timemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _permissions_policy_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -2751,11 +2751,11 @@ def _nel_oracle() -> str:
       FROM documents),
     g AS (
       SELECT doc_id, txt FROM p
-      WHERE regexp_matches(txt, '(?m)^NEL: \{')
+      WHERE regexp_matches(txt, '(?m)^NEL: \\{')
         AND regexp_matches(txt, '"report_to":')),
     s AS (
       SELECT doc_id, txt,
-        regexp_extract(txt, '(?m)^NEL: (\{[^\n]+\})$', 1) AS nel
+        regexp_extract(txt, '(?m)^NEL: (\\{[^\n]+\\})$', 1) AS nel
       FROM g)
     SELECT doc_id,
       json_extract_string(nel, '$.report_to') AS report_group,
@@ -2766,7 +2766,7 @@ def _nel_oracle() -> str:
       CAST(CASE WHEN CAST(json_extract(nel, '$.max_age')
         AS BIGINT) = 0 THEN 1 ELSE 0 END AS INT) AS is_disabled,
       COALESCE(regexp_extract(txt,
-        '"endpoints":\[\{"url":"([^"]+)"', 1), '')
+        '"endpoints":\\[\\{"url":"([^"]+)"', 1), '')
         AS report_endpoint
     FROM s
     """
@@ -2825,7 +2825,7 @@ def nel_policy_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _early_hints_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -2927,7 +2927,7 @@ def early_hints_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _chord_chart_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3022,7 +3022,7 @@ def chord_chart_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sgf_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3139,9 +3139,9 @@ def _abc_notation_oracle() -> str:
       COALESCE(regexp_extract(txt, '(?m)^M:([^\n]+)$', 1), '')
         AS meter,
       regexp_extract(txt, '(?m)^K:([^\n]+)$', 1) AS key_sig,
-      CAST(len(regexp_extract_all(txt, '\|')) AS INT)
+      CAST(len(regexp_extract_all(txt, '\\|')) AS INT)
         AS n_bar_separators,
-      CAST(CASE WHEN regexp_matches(txt, '\|:') THEN 1 ELSE 0 END
+      CAST(CASE WHEN regexp_matches(txt, '\\|:') THEN 1 ELSE 0 END
         AS INT) AS has_repeats
     FROM s
     """
@@ -3195,7 +3195,7 @@ def abc_notation_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dice_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3380,7 +3380,7 @@ def _imdb_oracle() -> str:
           AS titles,
         regexp_extract_all(txt, '\\b(nm[0-9]{7,8})\\b', 1)
           AS names,
-        CASE WHEN regexp_matches(txt, 'imdb\.com/') THEN 1 ELSE 0
+        CASE WHEN regexp_matches(txt, 'imdb\\.com/') THEN 1 ELSE 0
           END AS has_url
       FROM p)
     SELECT doc_id,
@@ -3525,7 +3525,7 @@ def ecli_case_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _uscode_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3606,7 +3606,7 @@ def uscode_cite_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fountain_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3
@@ -3889,7 +3889,7 @@ def game_score_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quake_oracle() -> str:
-    return """
+    return r"""
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 3

@@ -16,6 +16,7 @@ import hashlib
 EXTRACTION_GOLDEN = "5ae324798ed491e235325d4df5d0c60f"
 BATTERY_GOLDEN = "71d138d5355658c0dfbb08d7b1006200"
 GRAFIX_GOLDEN = "91e1b6c7c9342912ab696a5df4119e3c"
+SCAN_FEATURES_GOLDEN = "266160cda35536d89f884e174f8ce85f"
 
 
 def test_extraction_pipeline_golden(spark):
@@ -28,6 +29,20 @@ def test_extraction_pipeline_golden(spark):
         for r in extract_pages(pages).select("url", "extracted").collect()
     )
     assert hashlib.md5(repr(rows).encode()).hexdigest() == EXTRACTION_GOLDEN
+
+
+def test_scan_features_golden(spark):
+    """Literal pin of every OCR feature the pipeline emits, so a change
+    that moves both ocr_page and the UDF the same way still fails."""
+    from ocr_spark.operators.pipeline import extract_pages
+    from ocr_spark.sources.corpus import pages_df
+
+    pages = pages_df(spark, 64, seed=42, embed_scan=True, scan_shape=(64, 96))
+    cols = ("url", "scan_width", "scan_height", "graythr", "black", "white",
+            "thickness", "skew_deg", "n_lines", "n_glyphs", "ink_ratio")
+    rows = sorted(tuple(r) for r in extract_pages(pages).select(*cols).collect())
+    assert len(rows) == 64
+    assert hashlib.md5(repr(rows).encode()).hexdigest() == SCAN_FEATURES_GOLDEN
 
 
 def test_kernel_battery_golden(spark):
