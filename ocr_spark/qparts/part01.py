@@ -1,11 +1,10 @@
 """Query registry part: flagship: main-content extraction (the engine's reason to exist); relational coverage (SURVEY.md §2.12): scan/filter/agg/join/window/setops; text analysis (training-data ops over `documents`); reference pointwise/histogram ops as SQL-checkable analogues; vector ops over `embeddings` (cumsum/diff/argmax = vector.c analogues); pixel-path queries (rows-only checks: numpy kernels are not SQL-; deduplication family (operators/dedup.py): exact dedup is above; these; text analysis (functions/text_analysis.py): language-ID + fingerprints; si
 
-Part 01 of 09 of the split query registry (VERDICT r4 next
+Part 01 of 02 of the split query registry (VERDICT r4 next
 #7: the 72.8k-line ocr_spark/queries.py split behind the same
 QUERIES/ORACLE registry, registration order preserved — parts import
-sequentially from the ocr_spark.queries facade, which also
-back-patches call-time name resolution so intra-registry helper
-references behave exactly as in the original single module).
+sequentially from the ocr_spark.queries facade; part02 starts from
+this part's namespace, and nothing here names a part02 definition).
 """
 
 from __future__ import annotations

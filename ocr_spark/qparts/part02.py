@@ -1,11 +1,12 @@
-"""Query registry part: PNG decode (kernels/png.py — stdlib zlib + numpy, no external codec); JPEG decode (kernels/jpeg.py — baseline T.81 in pure numpy); WAV decode (stdlib wave + numpy — public PCM format, no codec); GIF + BMP decode (kernels/gif.py, kernels/bmp.py — pure stdlib + numpy); charset-aware extraction (legacy-encoding payloads)
+"""Query registry part 02 of 02: the later-round queries, in their
+original registration order, that each reach an ``ocr_spark`` engine
+module, hold a bench.py HEADLINE or curated first-50 slot, or are the
+first query with their plan signature (see CENSUS.json, written by
+``tools/dump_plans.py``).
 
-Part 02 of 09 of the split query registry (VERDICT r4 next
-#7: the 72.8k-line ocr_spark/queries.py split behind the same
-QUERIES/ORACLE registry, registration order preserved — parts import
-sequentially from the ocr_spark.queries facade, which also
-back-patches call-time name resolution so intra-registry helper
-references behave exactly as in the original single module).
+Parts import sequentially from the ocr_spark.queries facade; this part
+starts from part01's namespace, so part01 helpers resolve here at
+import and at call time.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ import ocr_spark.qparts.part01 as _prev
 globals().update(
     {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
 )
-
 
 
 @query(
@@ -686,6 +686,8 @@ _REDIRECT_EDGES = {
     "c": "c",
     "d0": "d1", "d1": "d0",
 }
+
+
 _REDIRECT_URLS = sorted(set(_REDIRECT_EDGES) | set(_REDIRECT_EDGES.values()) | {"e"})
 
 
@@ -1061,6 +1063,7 @@ _SITEMAP_FETCHED = [
     ("https://site.example/b2", "2024-01-01"),
     ("https://site.example/c1", "2024-01-01"),
 ]
+
 
 # expected (url, lastmod, needs_fetch) — hand-derived from the fixture:
 # fetch when never fetched, or when the sitemap lastmod postdates the
@@ -2048,6 +2051,7 @@ _RESOLVE_BASE_SQL = """
              THEN '?x=' || CAST(doc_id AS VARCHAR) ELSE '' END)
 """
 
+
 _RESOLVE_REF_SQL = """
         (CASE doc_id % 8
           WHEN 0 THEN 'c' || CAST(doc_id AS VARCHAR) || '.html'
@@ -2315,116 +2319,6 @@ def hreflang_alternates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SOFT404_TITLE_RE = "^(page not found|not found|error|404( |$))"
-_SOFT404_PHRASE_RE = (
-    "(page (you requested )?(does not|doesnt) exist|page not found)"
-)
-
-
-def _soft404_oracle() -> str:
-    d = "CAST(doc_id AS VARCHAR)"
-    return f"""
-    WITH pages AS (
-      SELECT doc_id,
-        CASE WHEN doc_id % 6 = 1 THEN 404 ELSE 200 END AS http_status,
-        CASE doc_id % 6
-          WHEN 1 THEN 'Not Found'
-          WHEN 2 THEN 'Page Not Found'
-          WHEN 4 THEN 'Error'
-          WHEN 5 THEN 'History of 404 Ceramics ' || {d}
-          ELSE 'Doc ' || {d} END AS title,
-        CASE doc_id % 6
-          WHEN 1 THEN 'not found'
-          WHEN 2 THEN 'gone'
-          WHEN 3 THEN 'the page you requested does not exist'
-          WHEN 4 THEN 'error'
-          WHEN 5 THEN text || ' 404 history'
-          ELSE text END AS body
-      FROM documents),
-    sig AS (
-      SELECT doc_id, http_status,
-        regexp_matches(lower(title), '{_SOFT404_TITLE_RE}') AS title_hit,
-        regexp_matches(lower(body), '{_SOFT404_PHRASE_RE}') AS phrase_hit,
-        (len(string_split(body, ' ')) < 10
-         AND regexp_matches(lower(body), '(error|not found)')) AS tiny_err
-      FROM pages)
-    SELECT doc_id, CAST(http_status AS BIGINT) AS http_status,
-      CASE WHEN http_status <> 200 THEN 'hard404'
-           WHEN title_hit OR phrase_hit OR tiny_err THEN 'soft404'
-           ELSE 'ok' END AS verdict,
-      CASE WHEN http_status <> 200 THEN 'status'
-           WHEN title_hit THEN 'title'
-           WHEN phrase_hit THEN 'phrase'
-           WHEN tiny_err THEN 'tiny-error'
-           ELSE '' END AS reason
-    FROM sig
-    """
-
-
-@query("soft404_detect", _soft404_oracle())
-def soft404_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soft-404 detection (round 4): pages that answer HTTP 200 with
-    error content — the crawl-quality trap that poisons a corpus with
-    millions of identical "page not found" bodies (and then dominates
-    dedup clusters and quality stats). The classifier is the standard
-    layered rule: non-200 is a hard 404; otherwise an ANCHORED title
-    pattern (so 'History of 404 Ceramics' does NOT flag), an error
-    phrase in the body, or a tiny body carrying an error word flags
-    soft404, with a first-match reason code for the audit trail (same
-    precedence discipline as curation_decisions). The battery plants
-    one rotation per rule plus the two negative controls.
-
-    Scale shape: pure codegen (regexp + split-size), no UDF, no
-    shuffle — rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    status = F.when(i % 6 == 1, F.lit(404)).otherwise(F.lit(200))
-    title = (
-        F.when(i % 6 == 1, F.lit("Not Found"))
-        .when(i % 6 == 2, F.lit("Page Not Found"))
-        .when(i % 6 == 4, F.lit("Error"))
-        .when(i % 6 == 5, F.concat(F.lit("History of 404 Ceramics "), s))
-        .otherwise(F.concat(F.lit("Doc "), s))
-    )
-    body = (
-        F.when(i % 6 == 1, F.lit("not found"))
-        .when(i % 6 == 2, F.lit("gone"))
-        .when(i % 6 == 3, F.lit("the page you requested does not exist"))
-        .when(i % 6 == 4, F.lit("error"))
-        .when(i % 6 == 5, F.concat(F.col("text"), F.lit(" 404 history")))
-        .otherwise(F.col("text"))
-    )
-    sig = d.select(
-        "doc_id",
-        status.alias("http_status"),
-        F.lower(title).rlike(_SOFT404_TITLE_RE).alias("title_hit"),
-        F.lower(body).rlike(_SOFT404_PHRASE_RE).alias("phrase_hit"),
-        (
-            (F.size(F.split(body, " ")) < 10)
-            & F.lower(body).rlike("(error|not found)")
-        ).alias("tiny_err"),
-    )
-    return sig.select(
-        "doc_id",
-        F.col("http_status").cast("long").alias("http_status"),
-        F.when(F.col("http_status") != 200, F.lit("hard404"))
-        .when(
-            F.col("title_hit") | F.col("phrase_hit") | F.col("tiny_err"),
-            F.lit("soft404"),
-        )
-        .otherwise(F.lit("ok"))
-        .alias("verdict"),
-        F.when(F.col("http_status") != 200, F.lit("status"))
-        .when(F.col("title_hit"), F.lit("title"))
-        .when(F.col("phrase_hit"), F.lit("phrase"))
-        .when(F.col("tiny_err"), F.lit("tiny-error"))
-        .otherwise(F.lit(""))
-        .alias("reason"),
-    )
-
-
 # RFC 9309 wildcard rule set: (rule_id, pattern, allow). '*' matches
 # any char run; a trailing '$' anchors at path end; otherwise a rule
 # matches any path it prefixes. Specificity = length of the rule
@@ -2563,95 +2457,6 @@ def robots_wildcard_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(255) - F.col("m") % 256).alias("rule_id"),
         F.floor(spec / 2).alias("rule_len"),
         ((spec % 2) == 1).alias("allowed"),
-    )
-
-
-def _revalidation_oracle() -> str:
-    d = "CAST(doc_id AS VARCHAR)"
-    return f"""
-    WITH hdrs AS (
-      SELECT doc_id,
-        CASE doc_id % 7
-          WHEN 0 THEN 'public, max-age=60'
-          WHEN 1 THEN 'max-age=60, must-revalidate'
-          WHEN 2 THEN 'no-store, max-age=60'
-          ELSE '' END AS cache_control,
-        CASE WHEN doc_id % 7 IN (2, 3, 6)
-             THEN '"etag-' || {d} || '"' ELSE '' END AS etag,
-        CASE WHEN doc_id % 7 IN (4, 6)
-             THEN 'Mon, 01 Jan 2024 00:00:00 GMT' ELSE '' END
-          AS last_modified,
-        doc_id % 120 AS age_s
-      FROM documents),
-    parsed AS (
-      SELECT *, COALESCE(TRY_CAST(regexp_extract(cache_control,
-               'max-age=([0-9]+)', 1) AS BIGINT), -1) AS max_age
-      FROM hdrs)
-    SELECT doc_id,
-      CASE
-        WHEN cache_control LIKE '%no-store%' THEN 'refetch'
-        WHEN max_age >= 0 AND age_s < max_age THEN 'fresh'
-        WHEN etag <> '' THEN 'conditional-etag'
-        WHEN last_modified <> '' THEN 'conditional-lm'
-        ELSE 'refetch' END AS strategy,
-      (NOT (max_age >= 0 AND age_s < max_age
-            AND cache_control NOT LIKE '%no-store%')) AS needs_fetch,
-      max_age, CAST(age_s AS BIGINT) AS age_s
-    FROM parsed
-    """
-
-
-@query("http_revalidation_plan", _revalidation_oracle())
-def http_revalidation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTTP revalidation planning (round 4): what a recrawl actually
-    sends per url — nothing (still fresh under max-age), a conditional
-    GET (If-None-Match when an ETag exists, else If-Modified-Since),
-    or a full refetch (no-store, or no validators). At 10^12 urls the
-    difference between unconditional refetch and 304-validated reuse
-    is most of the crawl's bandwidth, and the strategy is decidable
-    entirely from stored headers — one codegen pass. The precedence is
-    planted in the battery: no-store beats a live max-age AND a
-    present ETag; a fresh max-age beats validators; ETag beats
-    Last-Modified when both exist. Cache-Control parses from the raw
-    header string (regexp max-age extraction) on BOTH engines.
-
-    Scale shape: pure projection, no UDF, no shuffle — a frontier
-    planner fuses it into the scheduling scan (crawl_frontier_schedule
-    consumes the needs_fetch bit).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    cache_control = (
-        F.when(i % 7 == 0, F.lit("public, max-age=60"))
-        .when(i % 7 == 1, F.lit("max-age=60, must-revalidate"))
-        .when(i % 7 == 2, F.lit("no-store, max-age=60"))
-        .otherwise(F.lit(""))
-    )
-    etag = F.when(
-        (i % 7).isin(2, 3, 6), F.concat(F.lit('"etag-'), s, F.lit('"'))
-    ).otherwise(F.lit(""))
-    last_modified = F.when(
-        (i % 7).isin(4, 6), F.lit("Mon, 01 Jan 2024 00:00:00 GMT")
-    ).otherwise(F.lit(""))
-    age_s = i % 120
-    max_age_str = F.regexp_extract(cache_control, "max-age=([0-9]+)", 1)
-    max_age = F.when(max_age_str == "", F.lit(-1)).otherwise(
-        max_age_str.cast("long")
-    )
-    no_store = cache_control.contains("no-store")
-    fresh = (max_age >= 0) & (age_s < max_age) & ~no_store
-    return d.select(
-        "doc_id",
-        F.when(no_store, F.lit("refetch"))
-        .when((max_age >= 0) & (age_s < max_age), F.lit("fresh"))
-        .when(etag != "", F.lit("conditional-etag"))
-        .when(last_modified != "", F.lit("conditional-lm"))
-        .otherwise(F.lit("refetch"))
-        .alias("strategy"),
-        (~fresh).alias("needs_fetch"),
-        max_age.alias("max_age"),
-        age_s.cast("long").alias("age_s"),
     )
 
 
@@ -3460,125 +3265,6 @@ def srcset_best_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCRIPT_RANGES = [
-    ("latin", "[A-Za-z]", 0),
-    ("cyrillic", "[Ѐ-ӿ]", 1),
-    ("greek", "[Ͱ-Ͽ]", 2),
-    ("cjk", "[一-鿿]", 3),
-    ("arabic", "[؀-ۿ]", 4),
-]
-
-
-def _script_mix_oracle() -> str:
-    inj = (
-        "CASE doc_id % 5"
-        " WHEN 0 THEN repeat('ж', doc_id % 7 + 3)"
-        " WHEN 1 THEN repeat('α', doc_id % 5 + 2)"
-        " WHEN 2 THEN repeat('汉', doc_id % 4 + 1)"
-        " WHEN 3 THEN repeat('م', doc_id % 6 + 2) || ' mix'"
-        " ELSE '' END"
-    )
-    counts = ", ".join(
-        f"length(s) - length(regexp_replace(s, '{pat}', '', 'g'))"
-        f" AS {name}_n"
-        for name, pat, _ in _SCRIPT_RANGES
-    )
-    enc = ", ".join(
-        f"{name}_n * 8 + {sid}" for name, _, sid in _SCRIPT_RANGES
-    )
-    nonzero = " + ".join(
-        f"CASE WHEN {name}_n > 0 THEN 1 ELSE 0 END"
-        for name, _, _ in _SCRIPT_RANGES
-    )
-    decode = " ".join(
-        f"WHEN {sid} THEN '{name}'" for name, _, sid in _SCRIPT_RANGES
-    )
-    return f"""
-    WITH p AS (
-      SELECT doc_id, text || ' ' || {inj} AS s FROM documents),
-    c AS (
-      SELECT doc_id, {counts} FROM p),
-    e AS (
-      SELECT *, GREATEST({enc}) AS best, {nonzero} AS n_scripts FROM c)
-    SELECT doc_id,
-           CAST(latin_n AS BIGINT) AS latin_n,
-           CAST(cyrillic_n AS BIGINT) AS cyrillic_n,
-           CAST(greek_n AS BIGINT) AS greek_n,
-           CAST(cjk_n AS BIGINT) AS cjk_n,
-           CAST(arabic_n AS BIGINT) AS arabic_n,
-           CASE best % 8 {decode} END AS dominant,
-           CAST(n_scripts AS BIGINT) AS n_scripts,
-           CAST(CASE WHEN n_scripts >= 2 THEN 1 ELSE 0 END AS BIGINT)
-             AS mixed
-    FROM e
-    """
-
-
-@query("script_mix_profile", _script_mix_oracle())
-def script_mix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode script-mix profiling (round 4): per-document character
-    counts across Latin / Cyrillic / Greek / CJK / Arabic ranges, the
-    dominant script, and a mixed-script flag — the standard signals
-    for confusable-spoofing detection, mojibake triage, and per-script
-    corpus accounting. Documents get deterministic non-Latin runs
-    injected over their real text so every range and the dominance
-    tie-break are exercised.
-
-    Scale shape: pure codegen projection — each count is
-    ``length(s) - length(regexp_replace(s, class, ''))``, the dominant
-    script is a per-row GREATEST over counts encoded as
-    ``count*8 + script_id`` (no aggregate, no shuffle; ties break
-    toward the higher script id identically on both engines, and the
-    id DECODES from the winner). Rides the extraction scan at any
-    corpus size.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    inj = (
-        F.when(i % 5 == 0, F.repeat(F.lit("ж"), (i % 7 + 3).cast("int")))
-        .when(i % 5 == 1, F.repeat(F.lit("α"), (i % 5 + 2).cast("int")))
-        .when(i % 5 == 2, F.repeat(F.lit("汉"), (i % 4 + 1).cast("int")))
-        .when(
-            i % 5 == 3,
-            F.concat(
-                F.repeat(F.lit("م"), (i % 6 + 2).cast("int")),
-                F.lit(" mix"),
-            ),
-        )
-        .otherwise(F.lit(""))
-    )
-    s = F.concat(F.col("text"), F.lit(" "), inj)
-    p = d.select("doc_id", s.alias("s"))
-    counts = [
-        (
-            F.length(F.col("s"))
-            - F.length(F.regexp_replace(F.col("s"), pat, ""))
-        ).cast("long").alias(f"{name}_n")
-        for name, pat, _ in _SCRIPT_RANGES
-    ]
-    c = p.select("doc_id", *counts)
-    enc = [
-        (F.col(f"{name}_n") * 8 + sid).cast("long")
-        for name, _, sid in _SCRIPT_RANGES
-    ]
-    n_scripts = sum(
-        F.when(F.col(f"{name}_n") > 0, 1).otherwise(0)
-        for name, _, _ in _SCRIPT_RANGES
-    ).cast("long")
-    best = F.greatest(*enc)
-    dominant = F.lit(None).cast("string")
-    for name, _, sid in reversed(_SCRIPT_RANGES):
-        dominant = F.when(best % 8 == sid, F.lit(name)).otherwise(dominant)
-    return c.select(
-        "doc_id",
-        "latin_n", "cyrillic_n", "greek_n", "cjk_n", "arabic_n",
-        dominant.alias("dominant"),
-        n_scripts.alias("n_scripts"),
-        F.when(n_scripts >= 2, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("mixed"),
-    )
-
-
 def _microdata_oracle() -> str:
     from ocr_spark.functions.urlnorm import duck_resolve_reference
 
@@ -4143,256 +3829,6 @@ def truncation_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mime_sniff_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 6
-          WHEN 0 THEN '<!DOCTYPE html><html><body>doc '
-                      || CAST(doc_id AS VARCHAR) || '</body></html>'
-          WHEN 1 THEN '%PDF-1.4' || chr(10) || '1 0 obj '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 2 THEN 'GIF89a-payload-' || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN '{"title": "doc ' || CAST(doc_id AS VARCHAR) || '"}'
-          WHEN 4 THEN '<?xml version="1.0"?><urlset>u'
-                      || CAST(doc_id AS VARCHAR) || '</urlset>'
-          ELSE 'RIFF1234WAVEfmt-' || CAST(doc_id AS VARCHAR) END AS payload,
-        CASE doc_id % 6
-          WHEN 0 THEN 'text/html'
-          WHEN 1 THEN 'text/html'
-          WHEN 2 THEN 'image/gif'
-          WHEN 3 THEN 'application/json'
-          WHEN 4 THEN 'text/html'
-          ELSE 'audio/wav' END AS content_type
-      FROM documents),
-    k AS (
-      SELECT doc_id, content_type,
-        CASE WHEN starts_with(payload, '%PDF') THEN 'pdf'
-             WHEN starts_with(payload, 'GIF8') THEN 'gif'
-             WHEN starts_with(payload, 'RIFF') THEN 'wav'
-             WHEN starts_with(payload, '<?xml') THEN 'xml'
-             WHEN starts_with(payload, '<!DOCTYPE html')
-               OR starts_with(payload, '<html') THEN 'html'
-             WHEN starts_with(payload, '{') THEN 'json'
-             ELSE 'unknown' END AS sniffed,
-        CASE content_type
-          WHEN 'text/html' THEN 'html'
-          WHEN 'application/pdf' THEN 'pdf'
-          WHEN 'image/gif' THEN 'gif'
-          WHEN 'application/json' THEN 'json'
-          WHEN 'text/xml' THEN 'xml'
-          WHEN 'audio/wav' THEN 'wav'
-          ELSE 'unknown' END AS declared
-      FROM p)
-    SELECT doc_id, declared, sniffed,
-      CAST(CASE WHEN declared <> sniffed THEN 1 ELSE 0 END AS BIGINT)
-        AS mismatch,
-      CASE sniffed
-        WHEN 'html' THEN 'extract_html'
-        WHEN 'pdf' THEN 'extract_pdf'
-        WHEN 'xml' THEN 'parse_sitemap'
-        WHEN 'json' THEN 'parse_json'
-        WHEN 'gif' THEN 'decode_image'
-        WHEN 'wav' THEN 'decode_audio'
-        ELSE 'dead_letter' END AS route
-    FROM k
-    """
-
-
-@query("mime_sniff_routing", _mime_sniff_oracle())
-def mime_sniff_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-magic MIME routing (round 4): servers lie about
-    Content-Type constantly (PDFs served as text/html are the classic
-    extraction poison), so the processing route must come from the
-    payload's magic bytes with the declared header kept only for the
-    mismatch signal. Sniffs %PDF / GIF8 / RIFF / <?xml / <!DOCTYPE
-    html / JSON-brace prefixes (the ASCII magics the corpus
-    synthesizes; kernels/imageio handles the binary PNG/JPEG sniff on
-    real bytes), maps the declared type to the same kind space, and
-    routes to the pipeline stage the CONTENT requires — the dispatch
-    layer in front of extract_html / pdf_extract / decode_image /
-    parse_sitemap. Two planted mismatches (PDF-as-html, sitemap-as-
-    html) and four agreeing pairs.
-
-    Scale shape: pure codegen prefix tests — no regexp, no shuffle;
-    rides the ingestion scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 6
-    payload = (
-        F.when(v == 0, F.concat(
-            F.lit("<!DOCTYPE html><html><body>doc "), ds,
-            F.lit("</body></html>")))
-        .when(v == 1, F.concat(F.lit("%PDF-1.4\n1 0 obj "), ds))
-        .when(v == 2, F.concat(F.lit("GIF89a-payload-"), ds))
-        .when(v == 3, F.concat(F.lit('{"title": "doc '), ds, F.lit('"}')))
-        .when(v == 4, F.concat(
-            F.lit('<?xml version="1.0"?><urlset>u'), ds,
-            F.lit("</urlset>")))
-        .otherwise(F.concat(F.lit("RIFF1234WAVEfmt-"), ds))
-    )
-    content_type = (
-        F.when(v == 0, F.lit("text/html"))
-        .when(v == 1, F.lit("text/html"))
-        .when(v == 2, F.lit("image/gif"))
-        .when(v == 3, F.lit("application/json"))
-        .when(v == 4, F.lit("text/html"))
-        .otherwise(F.lit("audio/wav"))
-    )
-    p = d.select(
-        "doc_id", payload.alias("payload"), content_type.alias("ct")
-    )
-    pl = F.col("payload")
-    sniffed = (
-        F.when(pl.startswith("%PDF"), F.lit("pdf"))
-        .when(pl.startswith("GIF8"), F.lit("gif"))
-        .when(pl.startswith("RIFF"), F.lit("wav"))
-        .when(pl.startswith("<?xml"), F.lit("xml"))
-        .when(
-            pl.startswith("<!DOCTYPE html") | pl.startswith("<html"),
-            F.lit("html"),
-        )
-        .when(pl.startswith("{"), F.lit("json"))
-        .otherwise(F.lit("unknown"))
-    )
-    declared = (
-        F.when(F.col("ct") == "text/html", F.lit("html"))
-        .when(F.col("ct") == "application/pdf", F.lit("pdf"))
-        .when(F.col("ct") == "image/gif", F.lit("gif"))
-        .when(F.col("ct") == "application/json", F.lit("json"))
-        .when(F.col("ct") == "text/xml", F.lit("xml"))
-        .when(F.col("ct") == "audio/wav", F.lit("wav"))
-        .otherwise(F.lit("unknown"))
-    )
-    k = p.select(
-        "doc_id", declared.alias("declared"), sniffed.alias("sniffed")
-    )
-    return k.select(
-        "doc_id", "declared", "sniffed",
-        F.when(F.col("declared") != F.col("sniffed"), F.lit(1))
-        .otherwise(F.lit(0)).cast("long").alias("mismatch"),
-        F.when(F.col("sniffed") == "html", F.lit("extract_html"))
-        .when(F.col("sniffed") == "pdf", F.lit("extract_pdf"))
-        .when(F.col("sniffed") == "xml", F.lit("parse_sitemap"))
-        .when(F.col("sniffed") == "json", F.lit("parse_json"))
-        .when(F.col("sniffed") == "gif", F.lit("decode_image"))
-        .when(F.col("sniffed") == "wav", F.lit("decode_audio"))
-        .otherwise(F.lit("dead_letter"))
-        .alias("route"),
-    )
-
-
-def _hidden_text_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<body><p>Article text for document ' || CAST(doc_id AS VARCHAR)
-        || ' with normal visible content.</p>'
-        || CASE doc_id % 4
-             WHEN 1 THEN repeat(
-               '<span style="display:none">buy cheap casino now</span>',
-               doc_id % 5 + 2)
-             WHEN 2 THEN '<span style="font-size:0">discount pills '
-                         || CAST(doc_id AS VARCHAR) || ' here</span>'
-             WHEN 3 THEN '<span style="display:none">Skip to content</span>'
-             ELSE '' END
-        || '</body>' AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        COALESCE(list_sum(list_transform(
-          regexp_extract_all(html,
-            '<span style="(?:display:none|font-size:0)">([^<]*)</span>', 1),
-          x -> length(x))), 0) AS hidden_chars,
-        length(regexp_replace(html, '<[^>]+>', '', 'g')) AS total_chars
-      FROM p)
-    SELECT doc_id,
-      CAST(total_chars - hidden_chars AS BIGINT) AS visible_chars,
-      CAST(hidden_chars AS BIGINT) AS hidden_chars,
-      ROUND(CAST(hidden_chars AS DOUBLE) / total_chars, 4) AS hidden_ratio,
-      CAST(CASE WHEN hidden_chars >= 40 THEN 1 ELSE 0 END AS BIGINT)
-        AS stuffing
-    FROM m
-    """
-
-
-@query("hidden_text_stuffing", _hidden_text_oracle())
-def hidden_text_stuffing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hidden-text spam detection (round 4): keyword stuffing inside
-    ``display:none`` / ``font-size:0`` spans is the classic SEO
-    cloak — the text reaches a naive extractor but no reader, so a
-    training corpus wants it measured and gated. Counts hidden
-    characters (both hiding styles), visible characters (tag-stripped
-    total minus hidden), their ratio, and a stuffing flag at >= 40
-    hidden chars; the battery plants repeated stuffed spans, a single
-    hidden keyword run, a SHORT legitimate hidden span (a skip-link —
-    stays under the flag), and clean pages.
-
-    Scale shape: codegen regexp + a higher-order fold
-    (aggregate(transform(extract_all))) — no UDF, no shuffle; rides
-    the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = F.concat(
-        F.lit("<body><p>Article text for document "), ds,
-        F.lit(" with normal visible content.</p>"),
-        F.when(
-            v == 1,
-            F.repeat(
-                F.lit('<span style="display:none">buy cheap casino now'
-                      "</span>"),
-                (i % 5 + 2).cast("int"),
-            ),
-        )
-        .when(
-            v == 2,
-            F.concat(
-                F.lit('<span style="font-size:0">discount pills '), ds,
-                F.lit(" here</span>"),
-            ),
-        )
-        .when(
-            v == 3,
-            F.lit('<span style="display:none">Skip to content</span>'),
-        )
-        .otherwise(F.lit("")),
-        F.lit("</body>"),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    hidden = F.aggregate(
-        F.regexp_extract_all(
-            F.col("html"),
-            F.lit('<span style="(?:display:none|font-size:0)">'
-                  "([^<]*)</span>"),
-            1,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x),
-    )
-    total = F.length(F.regexp_replace(F.col("html"), "<[^>]+>", ""))
-    m = p.select(
-        "doc_id",
-        hidden.alias("hidden_chars"),
-        total.cast("long").alias("total_chars"),
-    )
-    return m.select(
-        "doc_id",
-        (F.col("total_chars") - F.col("hidden_chars")).cast("long")
-        .alias("visible_chars"),
-        F.col("hidden_chars").cast("long").alias("hidden_chars"),
-        F.round(
-            F.col("hidden_chars").cast("double") / F.col("total_chars"), 4
-        ).alias("hidden_ratio"),
-        F.when(F.col("hidden_chars") >= 40, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("stuffing"),
-    )
-
-
 def _nofollow_oracle() -> str:
     from ocr_spark.functions.urlnorm import duck_resolve_reference
 
@@ -4613,751 +4049,6 @@ def crawl_delay_directive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _parked_domain_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 5
-          WHEN 0 THEN '<title>example' || CAST(doc_id AS VARCHAR)
-            || '.com is for sale</title><body>This domain is for sale. '
-            || 'Buy this domain today!</body>'
-          WHEN 1 THEN '<title>Parked</title><body>Domain parking by '
-            || 'RegistrarCo. Renew or transfer.</body>'
-          WHEN 2 THEN '<title>Coming soon</title><body>Website coming '
-            || 'soon. Stay tuned ' || CAST(doc_id AS VARCHAR) || '</body>'
-          WHEN 3 THEN '<title>For Sale Signs Ltd</title><body>We sell '
-            || 'for sale signs and sign domains for your shopfront. '
-            || 'Our catalogue covers ' || CAST(doc_id % 40 + 30 AS VARCHAR)
-            || ' products across many categories with detailed specs '
-            || 'and reviews from real customers in many regions.</body>'
-          ELSE '<title>Article ' || CAST(doc_id AS VARCHAR)
-            || '</title><body>Regular editorial content about topic '
-            || CAST(doc_id AS VARCHAR) || ' with substantial discussion '
-            || 'and analysis written for readers not registrars.</body>'
-          END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id, html,
-        length(regexp_replace(html, '<[^>]+>', '', 'g')) AS text_len,
-        CASE WHEN regexp_matches(lower(regexp_extract(html,
-               '<title>(.*?)</title>', 1)),
-               '(is for sale|parked|domain parking)') THEN 1 ELSE 0 END
-          AS title_hit,
-        CASE WHEN regexp_matches(lower(html),
-               '(this domain is for sale|buy this domain|domain parking'
-               || '|renew or transfer|website coming soon)')
-             THEN 1 ELSE 0 END AS body_hit
-      FROM p)
-    SELECT doc_id, CAST(text_len AS BIGINT) AS text_len,
-      CAST(title_hit AS BIGINT) AS title_hit,
-      CAST(body_hit AS BIGINT) AS body_hit,
-      CAST(CASE WHEN title_hit = 1 OR (body_hit = 1 AND text_len < 120)
-                THEN 1 ELSE 0 END AS BIGINT) AS parked,
-      CASE WHEN title_hit = 1 THEN 'title_pattern'
-           WHEN body_hit = 1 AND text_len < 120 THEN 'body_pattern_short'
-           ELSE 'ok' END AS reason
-    FROM m
-    """
-
-
-@query("parked_domain_detect", _parked_domain_oracle())
-def parked_domain_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parked-domain detection (round 4): registrar placeholder pages
-    ("this domain is for sale", "domain parking", "coming soon") are
-    boilerplate-only hosts a crawl should drop whole — the
-    host-level sibling of soft404_detect's page-level check. Anchored
-    TITLE patterns convict outright; body phrases convict only on
-    thin pages (text < 120 chars), so the planted negative control —
-    a genuine shop selling "for sale" SIGNS with substantial copy —
-    stays clean, as does regular editorial content.
-
-    Scale shape: pure codegen regexp/length projection, no shuffle;
-    at host granularity the page verdicts roll up with a hash
-    aggregate (majority-parked host → drop the host).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 5
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<title>example"), ds,
-            F.lit(".com is for sale</title><body>This domain is for "
-                  "sale. Buy this domain today!</body>")))
-        .when(v == 1, F.lit(
-            "<title>Parked</title><body>Domain parking by RegistrarCo. "
-            "Renew or transfer.</body>"))
-        .when(v == 2, F.concat(
-            F.lit("<title>Coming soon</title><body>Website coming soon. "
-                  "Stay tuned "), ds, F.lit("</body>")))
-        .when(v == 3, F.concat(
-            F.lit("<title>For Sale Signs Ltd</title><body>We sell for "
-                  "sale signs and sign domains for your shopfront. Our "
-                  "catalogue covers "),
-            (i % 40 + 30).cast("string"),
-            F.lit(" products across many categories with detailed specs "
-                  "and reviews from real customers in many regions."
-                  "</body>")))
-        .otherwise(F.concat(
-            F.lit("<title>Article "), ds,
-            F.lit("</title><body>Regular editorial content about topic "),
-            ds,
-            F.lit(" with substantial discussion and analysis written "
-                  "for readers not registrars.</body>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    text_len = F.length(F.regexp_replace(h, "<[^>]+>", ""))
-    title = F.lower(F.regexp_extract(h, "<title>(.*?)</title>", 1))
-    title_hit = F.when(
-        title.rlike("(is for sale|parked|domain parking)"), F.lit(1)
-    ).otherwise(F.lit(0))
-    body_hit = F.when(
-        F.lower(h).rlike(
-            "(this domain is for sale|buy this domain|domain parking"
-            "|renew or transfer|website coming soon)"
-        ),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    m = p.select(
-        "doc_id",
-        text_len.cast("long").alias("text_len"),
-        title_hit.cast("long").alias("title_hit"),
-        body_hit.cast("long").alias("body_hit"),
-    )
-    return m.select(
-        "doc_id", "text_len", "title_hit", "body_hit",
-        F.when(
-            (F.col("title_hit") == 1)
-            | ((F.col("body_hit") == 1) & (F.col("text_len") < 120)),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("parked"),
-        F.when(F.col("title_hit") == 1, F.lit("title_pattern"))
-        .when(
-            (F.col("body_hit") == 1) & (F.col("text_len") < 120),
-            F.lit("body_pattern_short"),
-        )
-        .otherwise(F.lit("ok"))
-        .alias("reason"),
-    )
-
-
-def _feed_items_oracle() -> str:
-    item = (
-        "'<item><title>Story ' || CAST(doc_id * 3 + {j} AS VARCHAR)"
-        " || '</title><link>https://f' || CAST(doc_id % 19 AS VARCHAR)"
-        " || '.example.org/s' || CAST(doc_id * 3 + {j} AS VARCHAR)"
-        " || '</link><pubDate>2024-' || lpad(CAST((doc_id + {j}) % 12 + 1"
-        " AS VARCHAR), 2, '0') || '-02</pubDate></item>'"
-    )
-    entry = (
-        "'<entry><title>Post ' || CAST(doc_id * 3 + {j} AS VARCHAR)"
-        " || '</title><link href=\"https://f' || CAST(doc_id % 19 AS"
-        " VARCHAR) || '.example.org/a' || CAST(doc_id * 3 + {j} AS"
-        " VARCHAR) || '\"/><updated>2024-' || lpad(CAST((doc_id + {j})"
-        " % 12 + 1 AS VARCHAR), 2, '0') || '-03</updated></entry>'"
-    )
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-        CASE WHEN doc_id % 2 = 0 THEN 'rss' ELSE 'atom' END AS kind,
-        CASE WHEN doc_id % 2 = 0 THEN
-          '<rss><channel><title>Ch</title>' || {item.format(j=0)}
-          || CASE WHEN doc_id % 3 > 0 THEN {item.format(j=1)} ELSE '' END
-          || CASE WHEN doc_id % 3 > 1 THEN {item.format(j=2)} ELSE '' END
-          || '</channel></rss>'
-        ELSE
-          '<feed><title>F</title>' || {entry.format(j=0)}
-          || CASE WHEN doc_id % 3 > 0 THEN {entry.format(j=1)} ELSE '' END
-          || '</feed>' END AS xml
-      FROM documents),
-    it AS (
-      SELECT doc_id, kind, i - 1 AS item_idx,
-        list_extract(regexp_extract_all(xml,
-          CASE WHEN kind = 'rss' THEN '<item>(.*?)</item>'
-               ELSE '<entry>(.*?)</entry>' END, 1), i) AS body
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(xml,
-        CASE WHEN kind = 'rss' THEN '<item>(.*?)</item>'
-             ELSE '<entry>(.*?)</entry>' END, 1)))) AS g(i))
-    SELECT doc_id, kind, CAST(item_idx AS BIGINT) AS item_idx,
-      regexp_extract(body, '<title>(.*?)</title>', 1) AS title,
-      CASE WHEN kind = 'rss'
-           THEN regexp_extract(body, '<link>(.*?)</link>', 1)
-           ELSE regexp_extract(body, '<link href="([^"]*)"', 1) END AS link,
-      CASE WHEN kind = 'rss'
-           THEN regexp_extract(body, '<pubDate>(.*?)</pubDate>', 1)
-           ELSE regexp_extract(body, '<updated>(.*?)</updated>', 1)
-           END AS published
-    FROM it
-    """
-
-
-@query("feed_item_parse", _feed_items_oracle())
-def feed_item_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feed-content parsing (round 4): feed_discovery finds the feed
-    urls; this parses the FEEDS — RSS 2.0 ``<item>`` and Atom
-    ``<entry>`` blocks (both planted, 1-3 items each) exploded to
-    (item_idx, title, link, published) rows, with the per-format link
-    convention honored (RSS element text vs Atom href attribute).
-    Feeds are how a recrawl discovers new articles without
-    re-spidering the site, so the parsed rows feed the frontier
-    directly.
-
-    Scale shape: item blocks extract as whole substrings first
-    (one regexp_extract_all), fields parse per exploded block —
-    posexplode keeps the index; no shuffle, rides the fetch scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-
-    def rss_item(j: int) -> Column:
-        return F.concat(
-            F.lit("<item><title>Story "), (i * 3 + j).cast("string"),
-            F.lit("</title><link>https://f"), (i % 19).cast("string"),
-            F.lit(".example.org/s"), (i * 3 + j).cast("string"),
-            F.lit("</link><pubDate>2024-"),
-            F.lpad(((i + j) % 12 + 1).cast("string"), 2, "0"),
-            F.lit("-02</pubDate></item>"),
-        )
-
-    def atom_entry(j: int) -> Column:
-        return F.concat(
-            F.lit("<entry><title>Post "), (i * 3 + j).cast("string"),
-            F.lit('</title><link href="https://f'), (i % 19).cast("string"),
-            F.lit(".example.org/a"), (i * 3 + j).cast("string"),
-            F.lit('"/><updated>2024-'),
-            F.lpad(((i + j) % 12 + 1).cast("string"), 2, "0"),
-            F.lit("-03</updated></entry>"),
-        )
-
-    kind = F.when(i % 2 == 0, F.lit("rss")).otherwise(F.lit("atom"))
-    xml = F.when(
-        i % 2 == 0,
-        F.concat(
-            F.lit("<rss><channel><title>Ch</title>"),
-            rss_item(0),
-            F.when(i % 3 > 0, rss_item(1)).otherwise(F.lit("")),
-            F.when(i % 3 > 1, rss_item(2)).otherwise(F.lit("")),
-            F.lit("</channel></rss>"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("<feed><title>F</title>"),
-            atom_entry(0),
-            F.when(i % 3 > 0, atom_entry(1)).otherwise(F.lit("")),
-            F.lit("</feed>"),
-        )
-    )
-    p = d.select("doc_id", kind.alias("kind"), xml.alias("xml"))
-    blocks = F.when(
-        F.col("kind") == "rss",
-        F.regexp_extract_all(F.col("xml"), F.lit("<item>(.*?)</item>"), 1),
-    ).otherwise(
-        F.regexp_extract_all(F.col("xml"), F.lit("<entry>(.*?)</entry>"), 1)
-    )
-    it = p.select(
-        "doc_id", "kind",
-        F.posexplode(blocks).alias("item_idx", "body"),
-    )
-    b = F.col("body")
-    return it.select(
-        "doc_id", "kind",
-        F.col("item_idx").cast("long").alias("item_idx"),
-        F.regexp_extract(b, "<title>(.*?)</title>", 1).alias("title"),
-        F.when(
-            F.col("kind") == "rss",
-            F.regexp_extract(b, "<link>(.*?)</link>", 1),
-        ).otherwise(
-            F.regexp_extract(b, '<link href="([^"]*)"', 1)
-        ).alias("link"),
-        F.when(
-            F.col("kind") == "rss",
-            F.regexp_extract(b, "<pubDate>(.*?)</pubDate>", 1),
-        ).otherwise(
-            F.regexp_extract(b, "<updated>(.*?)</updated>", 1)
-        ).alias("published"),
-    )
-
-
-def _paywall_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<script type="application/ld+json">'
-            || '{"@type":"NewsArticle","isAccessibleForFree":false,'
-            || '"headline":"H' || CAST(doc_id AS VARCHAR) || '"}</script>'
-            || '<p>Teaser paragraph only.</p>'
-          WHEN 1 THEN '<p>First paragraph of article '
-            || CAST(doc_id AS VARCHAR) || '.</p>'
-            || '<div class="gate">Subscribe to continue reading.</div>'
-          WHEN 2 THEN '<script type="application/ld+json">'
-            || '{"@type":"Article","isAccessibleForFree":true}</script>'
-            || '<p>Full text ' || CAST(doc_id AS VARCHAR)
-            || '.</p><footer>Subscribe to our newsletter</footer>'
-          ELSE '<p>Open article ' || CAST(doc_id AS VARCHAR)
-            || ' with no gating at all.</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN contains(html, '"isAccessibleForFree":false') THEN 1
-             WHEN contains(html, '"isAccessibleForFree":true') THEN 0
-             ELSE -1 END AS meta_flag,
-        CASE WHEN regexp_matches(lower(html),
-               '(subscribe to continue|to read this article'
-               || '|already a subscriber)') THEN 1 ELSE 0 END AS phrase_hit
-      FROM p)
-    SELECT doc_id, CAST(meta_flag AS BIGINT) AS meta_flag,
-      CAST(phrase_hit AS BIGINT) AS phrase_hit,
-      CAST(CASE WHEN meta_flag = 1 OR (meta_flag = -1 AND phrase_hit = 1)
-                THEN 1 ELSE 0 END AS BIGINT) AS paywalled,
-      CASE WHEN meta_flag = 1 THEN 'metadata'
-           WHEN meta_flag = -1 AND phrase_hit = 1 THEN 'phrase'
-           WHEN meta_flag = 0 THEN 'declared_free'
-           ELSE 'ok' END AS reason
-    FROM m
-    """
-
-
-@query("paywall_detect", _paywall_oracle())
-def paywall_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paywall detection (round 4): gated articles contribute only
-    their teaser to a training corpus, so the curation gate needs the
-    flag. Two signals with schema.org metadata taking precedence:
-    JSON-LD ``isAccessibleForFree`` (false convicts, true ACQUITS —
-    an explicit free declaration beats a stray phrase) and gate
-    phrases ("Subscribe to continue...") only when metadata is
-    absent. The negative controls: a declared-free article whose
-    footer says "Subscribe to our newsletter" (must stay clean — the
-    phrase list is gate-anchored) and an unmarked open article.
-
-    Scale shape: codegen contains/regexp projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type":"NewsArticle","isAccessibleForFree":false,'
-                  '"headline":"H'), ds,
-            F.lit('"}</script><p>Teaser paragraph only.</p>')))
-        .when(v == 1, F.concat(
-            F.lit("<p>First paragraph of article "), ds,
-            F.lit('.</p><div class="gate">Subscribe to continue '
-                  "reading.</div>")))
-        .when(v == 2, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type":"Article","isAccessibleForFree":true}'
-                  "</script><p>Full text "), ds,
-            F.lit(".</p><footer>Subscribe to our newsletter</footer>")))
-        .otherwise(F.concat(
-            F.lit("<p>Open article "), ds,
-            F.lit(" with no gating at all.</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    meta_flag = (
-        F.when(h.contains('"isAccessibleForFree":false'), F.lit(1))
-        .when(h.contains('"isAccessibleForFree":true'), F.lit(0))
-        .otherwise(F.lit(-1))
-    )
-    phrase_hit = F.when(
-        F.lower(h).rlike(
-            "(subscribe to continue|to read this article"
-            "|already a subscriber)"
-        ),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    m = p.select(
-        "doc_id",
-        meta_flag.cast("long").alias("meta_flag"),
-        phrase_hit.cast("long").alias("phrase_hit"),
-    )
-    return m.select(
-        "doc_id", "meta_flag", "phrase_hit",
-        F.when(
-            (F.col("meta_flag") == 1)
-            | ((F.col("meta_flag") == -1) & (F.col("phrase_hit") == 1)),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("paywalled"),
-        F.when(F.col("meta_flag") == 1, F.lit("metadata"))
-        .when(
-            (F.col("meta_flag") == -1) & (F.col("phrase_hit") == 1),
-            F.lit("phrase"),
-        )
-        .when(F.col("meta_flag") == 0, F.lit("declared_free"))
-        .otherwise(F.lit("ok"))
-        .alias("reason"),
-    )
-
-
-def _url_page_type_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        'https://t' || CAST(doc_id % 23 AS VARCHAR) || '.example.com' ||
-        CASE doc_id % 6
-          WHEN 0 THEN '/2024/' || lpad(CAST(doc_id % 12 + 1 AS VARCHAR),
-                      2, '0') || '/story-' || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN '/category/shoes-' || CAST(doc_id % 9 AS VARCHAR)
-                      || '/'
-          WHEN 2 THEN '/product/p' || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN '/search?q=term' || CAST(doc_id % 7 AS VARCHAR)
-          WHEN 4 THEN '/tag/topic' || CAST(doc_id % 11 AS VARCHAR) || '/'
-          ELSE '/about-' || CAST(doc_id % 5 AS VARCHAR) END AS url
-      FROM documents),
-    s AS (
-      SELECT doc_id, url,
-        regexp_extract(url, 'https://[^/]+(/[^?]*)', 1) AS path,
-        CASE WHEN regexp_matches(url, '/[0-9]{4}/[0-9]{2}/') THEN 1
-             ELSE 0 END AS has_date_path,
-        CASE WHEN url LIKE '%?%' THEN 1 ELSE 0 END AS has_query
-      FROM p)
-    SELECT doc_id, url,
-      CAST(has_date_path AS BIGINT) AS has_date_path,
-      CAST(has_query AS BIGINT) AS has_query,
-      CAST(length(path) - length(replace(path, '/', '')) AS BIGINT)
-        AS depth,
-      CASE WHEN has_date_path = 1 THEN 'article'
-           WHEN regexp_matches(path, '/product/p[0-9]+') THEN 'product'
-           WHEN has_query = 1 AND regexp_matches(url, '[?&]q=')
-             THEN 'search'
-           WHEN regexp_matches(path, '^/(category|tag)/') THEN 'taxonomy'
-           ELSE 'page' END AS page_type
-    FROM s
-    """
-
-
-@query("url_page_type", _url_page_type_oracle())
-def url_page_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL page-type classification (round 4): crawl budgeting and
-    corpus mixing both want to know — BEFORE fetching — whether a url
-    is an article, a product page, a taxonomy listing, or an on-site
-    search result (search results and taxonomy pages are near-pure
-    boilerplate; articles carry the training text). Path-shape
-    heuristics with explicit precedence: /YYYY/MM/ date paths →
-    article, /product/pNNN → product, ?q= → search,
-    /category|/tag prefixes → taxonomy, else page; plus the raw
-    signals (date flag, query flag, path depth) so a downstream
-    model can re-weight them.
-
-    Scale shape: pure codegen regexp/length projection, no shuffle;
-    runs on the frontier BEFORE fetch, which is the point.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 6
-    url = F.concat(
-        F.lit("https://t"), (i % 23).cast("string"), F.lit(".example.com"),
-        F.when(v == 0, F.concat(
-            F.lit("/2024/"), F.lpad((i % 12 + 1).cast("string"), 2, "0"),
-            F.lit("/story-"), ds))
-        .when(v == 1, F.concat(
-            F.lit("/category/shoes-"), (i % 9).cast("string"), F.lit("/")))
-        .when(v == 2, F.concat(F.lit("/product/p"), ds))
-        .when(v == 3, F.concat(F.lit("/search?q=term"),
-                               (i % 7).cast("string")))
-        .when(v == 4, F.concat(
-            F.lit("/tag/topic"), (i % 11).cast("string"), F.lit("/")))
-        .otherwise(F.concat(F.lit("/about-"), (i % 5).cast("string"))),
-    )
-    p = d.select("doc_id", url.alias("url"))
-    u = F.col("url")
-    path = F.regexp_extract(u, "https://[^/]+(/[^?]*)", 1)
-    has_date = F.when(u.rlike("/[0-9]{4}/[0-9]{2}/"), F.lit(1)).otherwise(
-        F.lit(0)
-    )
-    has_query = F.when(u.contains("?"), F.lit(1)).otherwise(F.lit(0))
-    s = p.select(
-        "doc_id", "url",
-        path.alias("path"),
-        has_date.cast("long").alias("has_date_path"),
-        has_query.cast("long").alias("has_query"),
-    )
-    return s.select(
-        "doc_id", "url", "has_date_path", "has_query",
-        (
-            F.length("path")
-            - F.length(F.replace(F.col("path"), F.lit("/"), F.lit("")))
-        ).cast("long").alias("depth"),
-        F.when(F.col("has_date_path") == 1, F.lit("article"))
-        .when(F.col("path").rlike("/product/p[0-9]+"), F.lit("product"))
-        .when(
-            (F.col("has_query") == 1) & F.col("url").rlike("[?&]q="),
-            F.lit("search"),
-        )
-        .when(F.col("path").rlike("^/(category|tag)/"), F.lit("taxonomy"))
-        .otherwise(F.lit("page"))
-        .alias("page_type"),
-    )
-
-
-def _dir_index_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<html><head><title>Index of /pub/data'
-            || CAST(doc_id AS VARCHAR) || '</title></head><body>'
-            || '<h1>Index of /pub/data' || CAST(doc_id AS VARCHAR)
-            || '</h1><pre><a href="../">../</a>' || chr(10)
-            || '<a href="f1.txt">f1.txt</a> 2024-01-01 123' || chr(10)
-            || '<a href="f2.csv">f2.csv</a> 2024-01-02 456' || chr(10)
-            || '</pre></body></html>'
-          WHEN 1 THEN '<html><head><title>Index of /mirror'
-            || CAST(doc_id AS VARCHAR) || '/</title></head><body>'
-            || '<h1>Index of /mirror' || CAST(doc_id AS VARCHAR)
-            || '/</h1><hr><pre><a href="../">../</a>' || chr(10)
-            || '<a href="iso/">iso/</a>' || chr(10) || '</pre><hr>'
-            || '</body></html>'
-          WHEN 2 THEN '<html><head><title>Index of economic indicators'
-            || '</title></head><body><p>The index of economic '
-            || 'indicators rose ' || CAST(doc_id % 9 AS VARCHAR)
-            || ' points this quarter.</p></body></html>'
-          ELSE '<html><head><title>Article ' || CAST(doc_id AS VARCHAR)
-            || '</title></head><body><p>Normal page.</p></body></html>'
-          END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN regexp_matches(regexp_extract(html,
-               '<title>(.*?)</title>', 1), '^Index of /') THEN 1
-             ELSE 0 END AS title_hit,
-        CASE WHEN contains(html, '<a href="../">../</a>') THEN 1
-             ELSE 0 END AS parent_link,
-        len(regexp_extract_all(html, '<a href="[^"]+">', 0)) AS n_links
-      FROM p)
-    SELECT doc_id, CAST(title_hit AS BIGINT) AS title_hit,
-      CAST(parent_link AS BIGINT) AS parent_link,
-      CAST(CASE WHEN title_hit = 1 THEN n_links - 1 ELSE 0 END AS BIGINT)
-        AS n_entries,
-      CAST(CASE WHEN title_hit = 1 AND parent_link = 1 THEN 1 ELSE 0 END
-           AS BIGINT) AS is_autoindex
-    FROM m
-    """
-
-
-@query("directory_index_detect", _dir_index_oracle())
-def directory_index_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directory-listing detection (round 4): server autoindex pages
-    ("Index of /...") are link scaffolding with zero training text
-    but rich FILE discovery — a crawl wants them routed to the
-    frontier expander, not the text extractor. Convicts on the
-    ANCHORED title pattern ("^Index of /") plus the parent-directory
-    link every autoindex carries; the planted negative control — an
-    article titled "Index of economic indicators" — fails both the
-    anchor (no slash) and the parent link. n_entries counts the
-    listed links minus the parent.
-
-    Scale shape: codegen regexp/contains projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<html><head><title>Index of /pub/data"), ds,
-            F.lit("</title></head><body><h1>Index of /pub/data"), ds,
-            F.lit('</h1><pre><a href="../">../</a>\n'
-                  '<a href="f1.txt">f1.txt</a> 2024-01-01 123\n'
-                  '<a href="f2.csv">f2.csv</a> 2024-01-02 456\n'
-                  "</pre></body></html>")))
-        .when(v == 1, F.concat(
-            F.lit("<html><head><title>Index of /mirror"), ds,
-            F.lit("/</title></head><body><h1>Index of /mirror"), ds,
-            F.lit('/</h1><hr><pre><a href="../">../</a>\n'
-                  '<a href="iso/">iso/</a>\n</pre><hr></body></html>')))
-        .when(v == 2, F.concat(
-            F.lit("<html><head><title>Index of economic indicators"
-                  "</title></head><body><p>The index of economic "
-                  "indicators rose "), (i % 9).cast("string"),
-            F.lit(" points this quarter.</p></body></html>")))
-        .otherwise(F.concat(
-            F.lit("<html><head><title>Article "), ds,
-            F.lit("</title></head><body><p>Normal page.</p>"
-                  "</body></html>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    title_hit = F.when(
-        F.regexp_extract(h, "<title>(.*?)</title>", 1).rlike("^Index of /"),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    parent = F.when(
-        h.contains('<a href="../">../</a>'), F.lit(1)
-    ).otherwise(F.lit(0))
-    n_links = F.size(
-        F.regexp_extract_all(h, F.lit('<a href="[^"]+">'), 0)
-    )
-    m = p.select(
-        "doc_id",
-        title_hit.cast("long").alias("title_hit"),
-        parent.cast("long").alias("parent_link"),
-        n_links.alias("n_links"),
-    )
-    return m.select(
-        "doc_id", "title_hit", "parent_link",
-        F.when(F.col("title_hit") == 1, F.col("n_links") - 1)
-        .otherwise(F.lit(0)).cast("long").alias("n_entries"),
-        F.when(
-            (F.col("title_hit") == 1) & (F.col("parent_link") == 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("is_autoindex"),
-    )
-
-
-def _amp_cache_oracle() -> str:
-    return r"""
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN 'https://example-com.cdn.ampproject.org/c/s/'
-            || 'example.com/art' || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN 'https://ex' || CAST(doc_id % 7 AS VARCHAR)
-            || '-org.cdn.ampproject.org/c/ex' || CAST(doc_id % 7 AS VARCHAR)
-            || '.org/p' || CAST(doc_id AS VARCHAR)
-          ELSE 'https://img-example-com.cdn.ampproject.org/i/s/'
-            || 'img.example.com/pic' || CAST(doc_id AS VARCHAR) || '.jpg'
-          END AS cache_url
-      FROM documents),
-    m AS (
-      SELECT doc_id, cache_url,
-        regexp_extract(cache_url, 'ampproject\.org/([cir])/', 1) AS kind,
-        CASE WHEN regexp_matches(cache_url, 'ampproject\.org/[cir]/s/')
-             THEN 1 ELSE 0 END AS secure,
-        regexp_extract(cache_url,
-          'ampproject\.org/[cir]/(?:s/)?(.*)$', 1) AS rest
-      FROM p)
-    SELECT doc_id, cache_url, kind,
-      CAST(secure AS BIGINT) AS secure,
-      (CASE WHEN secure = 1 THEN 'https://' ELSE 'http://' END) || rest
-        AS origin_url
-    FROM m
-    """
-
-
-@query("amp_cache_url_decode", _amp_cache_oracle())
-def amp_cache_url_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMP-cache URL decoding (round 4): Common Crawl is full of
-    ``*.cdn.ampproject.org`` cache urls — the SAME document as its
-    origin url, so url-level dedup undercounts unless the cache form
-    decodes back to the origin it proxies. The public cache url
-    grammar: ``/c/`` content, ``/i/`` image, ``/r/`` resource, with
-    ``s/`` marking an https origin (absent = http); everything after
-    is the origin host + path. All three kinds and both schemes
-    planted; pairs with amp_canonical_pairs (in-page pointers) —
-    this is the url-only path when the page body isn't fetched.
-
-    Scale shape: pure codegen regexp projection, no shuffle; runs on
-    the frontier url stream.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 3
-    cache_url = (
-        F.when(v == 0, F.concat(
-            F.lit("https://example-com.cdn.ampproject.org/c/s/"
-                  "example.com/art"), ds))
-        .when(v == 1, F.concat(
-            F.lit("https://ex"), (i % 7).cast("string"),
-            F.lit("-org.cdn.ampproject.org/c/ex"), (i % 7).cast("string"),
-            F.lit(".org/p"), ds))
-        .otherwise(F.concat(
-            F.lit("https://img-example-com.cdn.ampproject.org/i/s/"
-                  "img.example.com/pic"), ds, F.lit(".jpg")))
-    )
-    p = d.select("doc_id", cache_url.alias("cache_url"))
-    u = F.col("cache_url")
-    kind = F.regexp_extract(u, r"ampproject\.org/([cir])/", 1)
-    secure = F.when(
-        u.rlike(r"ampproject\.org/[cir]/s/"), F.lit(1)
-    ).otherwise(F.lit(0))
-    rest = F.regexp_extract(u, r"ampproject\.org/[cir]/(?:s/)?(.*)$", 1)
-    return p.select(
-        "doc_id", "cache_url",
-        kind.alias("kind"),
-        secure.cast("long").alias("secure"),
-        F.concat(
-            F.when(secure == 1, F.lit("https://")).otherwise(
-                F.lit("http://")
-            ),
-            rest,
-        ).alias("origin_url"),
-    )
-
-
-_INVISIBLE_CLASS = "[​‌‍﻿­]"
-
-
-def _zero_width_oracle() -> str:
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 5
-          WHEN 0 THEN 'zero' || chr(8203) || 'width '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN 'hy' || chr(173) || 'phen' || chr(173) || 'ated '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 2 THEN chr(65279) || 'bom-prefixed doc '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN 'joined' || chr(8205) || 'pair' || chr(8204)
-                      || ' ' || CAST(doc_id AS VARCHAR)
-          ELSE 'clean text ' || CAST(doc_id AS VARCHAR) END AS s
-      FROM documents),
-    m AS (
-      SELECT doc_id, s,
-        regexp_replace(s, '{_INVISIBLE_CLASS}', '', 'g') AS cleaned
-      FROM p)
-    SELECT doc_id,
-      CAST(length(s) - length(cleaned) AS BIGINT) AS n_invisible,
-      cleaned
-    FROM m
-    """
-
-
-@query("zero_width_scrub", _zero_width_oracle())
-def zero_width_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Invisible-character scrubbing (round 4): zero-width spaces/
-    joiners, BOMs, and soft hyphens survive extraction invisibly,
-    then poison tokenization (one word becomes three tokens), exact
-    dedup (visually identical docs hash apart), and string matching
-    — and are a known watermark/evasion channel. Strips the
-    five-codepoint class (ZWSP/ZWNJ/ZWJ/BOM/SHY) and counts what was
-    removed; each codepoint planted separately plus a clean control.
-
-    Scale shape: one codegen regexp_replace + length fold, no
-    shuffle; rides the extraction scan before token counting.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 5
-    s = (
-        F.when(v == 0, F.concat(
-            F.lit("zero​width "), ds))
-        .when(v == 1, F.concat(
-            F.lit("hy­phen­ated "), ds))
-        .when(v == 2, F.concat(
-            F.lit("﻿bom-prefixed doc "), ds))
-        .when(v == 3, F.concat(
-            F.lit("joined‍pair‌ "), ds))
-        .otherwise(F.concat(F.lit("clean text "), ds))
-    )
-    p = d.select("doc_id", s.alias("s"))
-    cleaned = F.regexp_replace(F.col("s"), _INVISIBLE_CLASS, "")
-    return p.select(
-        "doc_id",
-        (F.length("s") - F.length(cleaned)).cast("long")
-        .alias("n_invisible"),
-        cleaned.alias("cleaned"),
-    )
-
-
 def _pct_normalize_oracle() -> str:
     # construction-derived: the EXPECTED normalized url assembles
     # directly from the same doc_id formula (unreserved escapes decode,
@@ -5430,230 +4121,6 @@ def percent_encoding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select(
         "doc_id", "url",
         pct_normalize_udf(F.col("url")).alias("normalized"),
-    )
-
-
-def _vtt_oracle() -> str:
-    cue = (
-        "'00:0' || CAST((doc_id + {j}) % 9 AS VARCHAR) || ':0'"
-        " || CAST({j} AS VARCHAR) || '.500 --> 00:0'"
-        " || CAST((doc_id + {j}) % 9 AS VARCHAR) || ':0'"
-        " || CAST({j} + 2 AS VARCHAR) || '.000'"
-        " || CASE WHEN {j} = 1 THEN ' align:start' ELSE '' END"
-        " || chr(10) || 'Caption line ' || CAST(doc_id * 3 + {j}"
-        " AS VARCHAR)"
-    )
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-        'WEBVTT' || chr(10) || chr(10) || {cue.format(j=0)}
-        || CASE WHEN doc_id % 3 > 0
-                THEN chr(10) || chr(10) || {cue.format(j=1)} ELSE '' END
-        || CASE WHEN doc_id % 3 > 1
-                THEN chr(10) || chr(10) || {cue.format(j=2)} ELSE '' END
-          AS vtt
-      FROM documents),
-    blocks AS (
-      SELECT doc_id, i - 1 AS block_idx,
-        list_extract(string_split(vtt, chr(10) || chr(10)), i) AS b
-      FROM p, unnest(generate_series(1,
-        len(string_split(vtt, chr(10) || chr(10))))) AS g(i)),
-    cues AS (
-      -- block 0 is the WEBVTT header; cue index = block index - 1
-      SELECT doc_id, block_idx - 1 AS cue_idx, b,
-        regexp_extract(b,
-          '([0-9]{{2}}):([0-9]{{2}}):([0-9]{{2}})\\.([0-9]{{3}}) -->', 0)
-          AS start_raw,
-        regexp_extract(b,
-          '--> ([0-9]{{2}}):([0-9]{{2}}):([0-9]{{2}})\\.([0-9]{{3}})', 0)
-          AS end_raw
-      FROM blocks WHERE contains(b, '-->')),
-    t AS (
-      SELECT doc_id, cue_idx, b,
-        CAST(regexp_extract(start_raw,
-          '([0-9]+):[0-9]+:[0-9]+\\.[0-9]+', 1) AS BIGINT) * 3600000
-        + CAST(regexp_extract(start_raw,
-          '[0-9]+:([0-9]+):[0-9]+\\.[0-9]+', 1) AS BIGINT) * 60000
-        + CAST(regexp_extract(start_raw,
-          '[0-9]+:[0-9]+:([0-9]+)\\.[0-9]+', 1) AS BIGINT) * 1000
-        + CAST(regexp_extract(start_raw,
-          '[0-9]+:[0-9]+:[0-9]+\\.([0-9]+)', 1) AS BIGINT) AS start_ms,
-        CAST(regexp_extract(end_raw,
-          '([0-9]+):[0-9]+:[0-9]+\\.[0-9]+', 1) AS BIGINT) * 3600000
-        + CAST(regexp_extract(end_raw,
-          '[0-9]+:([0-9]+):[0-9]+\\.[0-9]+', 1) AS BIGINT) * 60000
-        + CAST(regexp_extract(end_raw,
-          '[0-9]+:[0-9]+:([0-9]+)\\.[0-9]+', 1) AS BIGINT) * 1000
-        + CAST(regexp_extract(end_raw,
-          '[0-9]+:[0-9]+:[0-9]+\\.([0-9]+)', 1) AS BIGINT) AS end_ms
-      FROM cues)
-    SELECT doc_id, CAST(cue_idx AS BIGINT) AS cue_idx, start_ms, end_ms,
-      end_ms - start_ms AS duration_ms,
-      regexp_extract(b, chr(10) || '(.*)$', 1) AS text,
-      CASE WHEN contains(b, ' align:start') THEN 'align:start' ELSE ''
-        END AS settings
-    FROM t
-    """
-
-
-@query("vtt_caption_parse", _vtt_oracle())
-def vtt_caption_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebVTT caption parsing (round 4): subtitle tracks are aligned
-    speech-text pairs — prime multimodal training data — and they
-    arrive as WebVTT cue blocks. Blocks split on blank lines, cues
-    keep their index, HH:MM:SS.mmm timestamps fold to integer
-    milliseconds (exact on both engines), cue settings (align:...)
-    separate from the caption text, and the header block (no '-->')
-    drops. 1-3 cues per document with a planted settings rotation.
-
-    Scale shape: split + posexplode + codegen regexp/arithmetic, no
-    shuffle, no UDF; rides the media-sidecar scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-
-    def cue(j: int) -> Column:
-        return F.concat(
-            F.lit("00:0"), ((i + j) % 9).cast("string"),
-            F.lit(":0"), F.lit(str(j)),
-            F.lit(".500 --> 00:0"), ((i + j) % 9).cast("string"),
-            F.lit(":0"), F.lit(str(j + 2)), F.lit(".000"),
-            F.lit(" align:start") if j == 1 else F.lit(""),
-            F.lit("\nCaption line "), (i * 3 + j).cast("string"),
-        )
-
-    vtt = F.concat(
-        F.lit("WEBVTT\n\n"), cue(0),
-        F.when(i % 3 > 0, F.concat(F.lit("\n\n"), cue(1)))
-        .otherwise(F.lit("")),
-        F.when(i % 3 > 1, F.concat(F.lit("\n\n"), cue(2)))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", vtt.alias("vtt"))
-    blocks = p.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("vtt"), "\n\n")).alias("bi", "b"),
-    )
-    cues = blocks.where(F.col("b").contains("-->")).select(
-        "doc_id",
-        (F.col("bi") - 1).cast("long").alias("cue_idx"),
-        "b",
-    )
-
-    def ts_ms(raw: Column) -> Column:
-        # one regex pass per timestamp: HH:MM:SS.mmm splits on [:.]
-        f = F.split(raw, r"[:.]")
-        return (
-            F.element_at(f, 1).cast("long") * 3600000
-            + F.element_at(f, 2).cast("long") * 60000
-            + F.element_at(f, 3).cast("long") * 1000
-            + F.element_at(f, 4).cast("long")
-        )
-
-    start_raw = F.regexp_extract(
-        F.col("b"), r"([0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{3}) -->", 1
-    )
-    end_raw = F.regexp_extract(
-        F.col("b"), r"--> ([0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{3})", 1
-    )
-    t = cues.select(
-        "doc_id", "cue_idx", "b",
-        ts_ms(start_raw).alias("start_ms"),
-        ts_ms(end_raw).alias("end_ms"),
-    )
-    return t.select(
-        "doc_id", "cue_idx", "start_ms", "end_ms",
-        (F.col("end_ms") - F.col("start_ms")).alias("duration_ms"),
-        F.regexp_extract(F.col("b"), "\n(.*)$", 1).alias("text"),
-        F.when(F.col("b").contains(" align:start"), F.lit("align:start"))
-        .otherwise(F.lit(""))
-        .alias("settings"),
-    )
-
-
-def _data_url_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN 'data:image/png;base64,'
-            || to_base64(CAST('fakepng-' || CAST(doc_id AS VARCHAR)
-                              AS BLOB))
-          WHEN 1 THEN 'data:text/plain,Hello%20doc%20'
-            || CAST(doc_id AS VARCHAR)
-          ELSE 'data:application/json;base64,'
-            || to_base64(CAST('{"id":' || CAST(doc_id AS VARCHAR) || '}'
-                              AS BLOB)) END AS src
-      FROM documents),
-    m AS (
-      SELECT doc_id, src,
-        regexp_extract(src, '^data:([^;,]+)', 1) AS mime,
-        CASE WHEN contains(src, ';base64,') THEN 1 ELSE 0 END AS is_base64,
-        regexp_extract(src, ',(.*)$', 1) AS payload
-      FROM p),
-    dec AS (
-      SELECT doc_id, mime, is_base64,
-        CASE WHEN is_base64 = 1 THEN from_base64(payload)
-             ELSE CAST(replace(payload, '%20', ' ') AS BLOB) END AS bytes_
-      FROM m)
-    SELECT doc_id, mime, CAST(is_base64 AS BIGINT) AS is_base64,
-      CAST(octet_length(bytes_) AS BIGINT) AS decoded_len,
-      md5(lower(hex(bytes_))) AS decoded_md5
-    FROM dec
-    """
-
-
-@query("data_url_media", _data_url_oracle())
-def data_url_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline data-url decoding (round 4): pages embed small media as
-    ``data:`` urls — base64 payloads (images, fonts) and
-    percent-encoded text forms — which a media pipeline must route
-    like fetched bytes (the decoded payload feeds the same magic
-    sniff + codec dispatch as a network response). Parses the RFC
-    2397 grammar (mime, optional ;base64 marker, payload after the
-    first comma), decodes both forms, and emits byte length + md5 so
-    the decode is value-checked end-to-end against DuckDB's
-    independent base64/blob machinery.
-
-    Scale shape: codegen regexp + unbase64/md5 projection, no UDF, no
-    shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 3
-    src = (
-        F.when(v == 0, F.concat(
-            F.lit("data:image/png;base64,"),
-            F.base64(F.encode(F.concat(F.lit("fakepng-"), ds), "utf-8"))))
-        .when(v == 1, F.concat(
-            F.lit("data:text/plain,Hello%20doc%20"), ds))
-        .otherwise(F.concat(
-            F.lit("data:application/json;base64,"),
-            F.base64(F.encode(
-                F.concat(F.lit('{"id":'), ds, F.lit("}")), "utf-8"))))
-    )
-    p = d.select("doc_id", src.alias("src"))
-    s = F.col("src")
-    mime = F.regexp_extract(s, "^data:([^;,]+)", 1)
-    is_b64 = F.when(s.contains(";base64,"), F.lit(1)).otherwise(F.lit(0))
-    payload = F.regexp_extract(s, ",(.*)$", 1)
-    bytes_ = F.when(is_b64 == 1, F.unbase64(payload)).otherwise(
-        F.encode(F.replace(payload, F.lit("%20"), F.lit(" ")), "utf-8")
-    )
-    m = p.select(
-        "doc_id",
-        mime.alias("mime"),
-        is_b64.cast("long").alias("is_base64"),
-        bytes_.alias("bytes_"),
-    )
-    # md5 over the lowercase hex of the bytes: DuckDB's md5 is
-    # VARCHAR-only, and the hex transport makes the comparison
-    # byte-encoding-agnostic on both engines
-    return m.select(
-        "doc_id", "mime", "is_base64",
-        F.length("bytes_").cast("long").alias("decoded_len"),
-        F.md5(F.lower(F.hex(F.col("bytes_")))).alias("decoded_md5"),
     )
 
 
@@ -5934,1986 +4401,6 @@ def doi_citation_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dois.unionByName(arx)
 
 
-def _license_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 5
-          WHEN 0 THEN '<link rel="license" '
-            || 'href="https://creativecommons.org/licenses/by/4.0/">'
-            || '<p>Article ' || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<p>Post ' || CAST(doc_id AS VARCHAR) || '</p>'
-            || '<a rel="license" '
-            || 'href="https://creativecommons.org/licenses/by-sa/3.0/">'
-            || 'CC BY-SA</a>'
-          WHEN 2 THEN '<meta name="license" content="MIT"><p>Readme '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 3 THEN '<p>Story ' || CAST(doc_id AS VARCHAR)
-            || '</p><footer>© 2024 Example. All rights reserved.'
-            || '</footer>'
-          ELSE '<p>Unmarked page ' || CAST(doc_id AS VARCHAR) || '</p>'
-          END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        regexp_extract(html,
-          'rel="license" href="([^"]+)"', 1) AS lic_url,
-        regexp_extract(html,
-          '<meta name="license" content="([^"]+)"', 1) AS lic_meta,
-        CASE WHEN contains(html, 'All rights reserved') THEN 1 ELSE 0 END
-          AS arr
-      FROM p),
-    c AS (
-      SELECT doc_id,
-        CASE WHEN lic_url <> '' THEN 'link'
-             WHEN lic_meta <> '' THEN 'meta'
-             WHEN arr = 1 THEN 'phrase'
-             ELSE 'none' END AS source,
-        CASE WHEN lic_url <> '' THEN
-               'cc-' || regexp_extract(lic_url,
-                 'licenses/([a-z-]+)/([0-9.]+)', 1)
-               || '-' || regexp_extract(lic_url,
-                 'licenses/([a-z-]+)/([0-9.]+)', 2)
-             WHEN lic_meta <> '' THEN lower(lic_meta)
-             WHEN arr = 1 THEN 'all-rights-reserved'
-             ELSE 'unknown' END AS license
-      FROM m)
-    SELECT doc_id, source, license,
-      CAST(CASE WHEN license LIKE 'cc-%' OR license = 'mit'
-                THEN 1 ELSE 0 END AS BIGINT) AS permissive
-    FROM c
-    """
-
-
-@query("license_detect", _license_oracle())
-def license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-license detection (round 4): the curation signal legal
-    review actually asks for — pages declaring Creative Commons (the
-    ``rel="license"`` link with the license family+version parsed
-    out of the url), an explicit license meta, or an "All rights
-    reserved" footer, with declared markup beating footer phrases
-    and a conservative ``unknown`` for unmarked pages. The
-    ``permissive`` bit is the mixture-building filter (CC-* / MIT
-    here; the policy table is the caller's).
-
-    Scale shape: pure codegen regexp/contains projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 5
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<link rel="license" href="https://creativecommons.org'
-                  '/licenses/by/4.0/"><p>Article '), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit("<p>Post "), ds,
-            F.lit('</p><a rel="license" href="https://creativecommons.org'
-                  '/licenses/by-sa/3.0/">CC BY-SA</a>')))
-        .when(v == 2, F.concat(
-            F.lit('<meta name="license" content="MIT"><p>Readme '), ds,
-            F.lit("</p>")))
-        .when(v == 3, F.concat(
-            F.lit("<p>Story "), ds,
-            F.lit("</p><footer>© 2024 Example. All rights reserved."
-                  "</footer>")))
-        .otherwise(F.concat(F.lit("<p>Unmarked page "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    lic_url = F.regexp_extract(h, 'rel="license" href="([^"]+)"', 1)
-    lic_meta = F.regexp_extract(
-        h, '<meta name="license" content="([^"]+)"', 1
-    )
-    arr = F.when(h.contains("All rights reserved"), F.lit(1)).otherwise(
-        F.lit(0)
-    )
-    m = p.select(
-        "doc_id",
-        lic_url.alias("lic_url"),
-        lic_meta.alias("lic_meta"),
-        arr.alias("arr"),
-    )
-    fam = F.regexp_extract(
-        F.col("lic_url"), "licenses/([a-z-]+)/([0-9.]+)", 1
-    )
-    ver = F.regexp_extract(
-        F.col("lic_url"), "licenses/([a-z-]+)/([0-9.]+)", 2
-    )
-    c = m.select(
-        "doc_id",
-        F.when(F.col("lic_url") != "", F.lit("link"))
-        .when(F.col("lic_meta") != "", F.lit("meta"))
-        .when(F.col("arr") == 1, F.lit("phrase"))
-        .otherwise(F.lit("none"))
-        .alias("source"),
-        F.when(
-            F.col("lic_url") != "",
-            F.concat(F.lit("cc-"), fam, F.lit("-"), ver),
-        )
-        .when(F.col("lic_meta") != "", F.lower(F.col("lic_meta")))
-        .when(F.col("arr") == 1, F.lit("all-rights-reserved"))
-        .otherwise(F.lit("unknown"))
-        .alias("license"),
-    )
-    return c.select(
-        "doc_id", "source", "license",
-        F.when(
-            F.col("license").startswith("cc-")
-            | (F.col("license") == "mit"),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("permissive"),
-    )
-
-
-def _embed_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<p>Watch this:</p>'
-        || CASE doc_id % 4
-             WHEN 0 THEN '<iframe src="https://www.youtube.com/embed/vid'
-               || CAST(doc_id AS VARCHAR) || 'x"></iframe>'
-             WHEN 1 THEN '<iframe src="https://player.vimeo.com/video/'
-               || CAST(doc_id * 7 AS VARCHAR) || '"></iframe>'
-             WHEN 2 THEN '<iframe src="https://www.youtube-nocookie.com'
-               || '/embed/nc' || CAST(doc_id AS VARCHAR) || '"></iframe>'
-               || '<iframe src="https://maps.example.com/widget'
-               || CAST(doc_id AS VARCHAR) || '"></iframe>'
-             ELSE '' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i - 1 AS embed_idx,
-        list_extract(regexp_extract_all(html,
-          '<iframe src="([^"]+)"', 1), i) AS src
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<iframe src="([^"]+)"', 1)))) AS g(i))
-    SELECT doc_id, CAST(embed_idx AS BIGINT) AS embed_idx, src,
-      CASE WHEN regexp_matches(src,
-             'youtube(-nocookie)?\\.com/embed/') THEN 'youtube'
-           WHEN contains(src, 'player.vimeo.com/video/') THEN 'vimeo'
-           ELSE 'other' END AS provider,
-      CASE WHEN regexp_matches(src,
-             'youtube(-nocookie)?\\.com/embed/')
-           THEN regexp_extract(src, '/embed/([^?/"]+)', 1)
-           WHEN contains(src, 'player.vimeo.com/video/')
-           THEN regexp_extract(src, '/video/([0-9]+)', 1)
-           ELSE '' END AS video_id
-    FROM fr
-    """
-
-
-@query("embed_extract", _embed_oracle())
-def embed_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-embed extraction (round 4): iframe embeds are the
-    text-video pairing source — the page supplies the caption-rich
-    context, the provider/video-id supplies the media key for the
-    multimodal join. Extracts every iframe src in order, classifies
-    the provider (YouTube incl. the nocookie domain, Vimeo, other),
-    and parses the provider-specific video id; a non-video iframe
-    (an embedded map) is planted to land in 'other' with no id.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    classification, no shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = F.concat(
-        F.lit("<p>Watch this:</p>"),
-        F.when(v == 0, F.concat(
-            F.lit('<iframe src="https://www.youtube.com/embed/vid'), ds,
-            F.lit('x"></iframe>')))
-        .when(v == 1, F.concat(
-            F.lit('<iframe src="https://player.vimeo.com/video/'),
-            (i * 7).cast("string"), F.lit('"></iframe>')))
-        .when(v == 2, F.concat(
-            F.lit('<iframe src="https://www.youtube-nocookie.com/embed/nc'),
-            ds,
-            F.lit('"></iframe>'
-                  '<iframe src="https://maps.example.com/widget'),
-            ds, F.lit('"></iframe>')))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit('<iframe src="([^"]+)"'), 1
-            )
-        ).alias("embed_idx", "src"),
-    )
-    s = F.col("src")
-    is_yt = s.rlike(r"youtube(-nocookie)?\.com/embed/")
-    is_vm = s.contains("player.vimeo.com/video/")
-    return fr.select(
-        "doc_id",
-        F.col("embed_idx").cast("long").alias("embed_idx"),
-        "src",
-        F.when(is_yt, F.lit("youtube"))
-        .when(is_vm, F.lit("vimeo"))
-        .otherwise(F.lit("other"))
-        .alias("provider"),
-        F.when(is_yt, F.regexp_extract(s, '/embed/([^?/"]+)', 1))
-        .when(is_vm, F.regexp_extract(s, "/video/([0-9]+)", 1))
-        .otherwise(F.lit(""))
-        .alias("video_id"),
-    )
-
-
-def _byline_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<meta name="author" content="Meta Writer '
-            || CAST(doc_id % 31 AS VARCHAR) || '"><span class="byline">'
-            || 'By Span Writer</span><p>body</p>'
-          WHEN 1 THEN '<span class="byline">By Byline Writer '
-            || CAST(doc_id % 17 AS VARCHAR) || '</span><p>body</p>'
-          WHEN 2 THEN '<a rel="author" href="/staff/a'
-            || CAST(doc_id AS VARCHAR) || '">Rel Author '
-            || CAST(doc_id % 13 AS VARCHAR) || '</a><p>body</p>'
-          ELSE '<p>anonymous wire copy ' || CAST(doc_id AS VARCHAR)
-            || '</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        regexp_extract(html,
-          '<meta name="author" content="([^"]+)"', 1) AS meta_a,
-        regexp_extract(html,
-          '<a rel="author"[^>]*>([^<]+)</a>', 1) AS rel_a,
-        regexp_extract(html,
-          '<span class="byline">(?:By )?([^<]+)</span>', 1) AS span_a
-      FROM p)
-    SELECT doc_id,
-      CASE WHEN meta_a <> '' THEN 'meta'
-           WHEN rel_a <> '' THEN 'rel_author'
-           WHEN span_a <> '' THEN 'byline_class'
-           ELSE 'none' END AS source,
-      CASE WHEN meta_a <> '' THEN meta_a
-           WHEN rel_a <> '' THEN rel_a
-           WHEN span_a <> '' THEN span_a
-           ELSE '' END AS author
-    FROM m
-    """
-
-
-@query("author_byline_extract", _byline_oracle())
-def author_byline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Author-byline extraction (round 4): attribution metadata feeds
-    dedup across syndication (same author+title on many hosts),
-    quality priors, and per-author opt-out compliance. Declared
-    metadata beats presentation markup: ``<meta name=author>`` >
-    ``rel="author"`` anchors > byline-class spans (the "By " prefix
-    stripped at the span tier only — metadata is already clean); a
-    page carrying BOTH meta and a span is planted to pin the
-    precedence, and wire copy with no attribution stays 'none'.
-
-    Scale shape: pure codegen regexp projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<meta name="author" content="Meta Writer '),
-            (i % 31).cast("string"),
-            F.lit('"><span class="byline">By Span Writer</span>'
-                  "<p>body</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<span class="byline">By Byline Writer '),
-            (i % 17).cast("string"), F.lit("</span><p>body</p>")))
-        .when(v == 2, F.concat(
-            F.lit('<a rel="author" href="/staff/a'), ds,
-            F.lit('">Rel Author '), (i % 13).cast("string"),
-            F.lit("</a><p>body</p>")))
-        .otherwise(F.concat(
-            F.lit("<p>anonymous wire copy "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    meta_a = F.regexp_extract(h, '<meta name="author" content="([^"]+)"', 1)
-    rel_a = F.regexp_extract(h, '<a rel="author"[^>]*>([^<]+)</a>', 1)
-    span_a = F.regexp_extract(
-        h, '<span class="byline">(?:By )?([^<]+)</span>', 1
-    )
-    m = p.select(
-        "doc_id",
-        meta_a.alias("meta_a"),
-        rel_a.alias("rel_a"),
-        span_a.alias("span_a"),
-    )
-    return m.select(
-        "doc_id",
-        F.when(F.col("meta_a") != "", F.lit("meta"))
-        .when(F.col("rel_a") != "", F.lit("rel_author"))
-        .when(F.col("span_a") != "", F.lit("byline_class"))
-        .otherwise(F.lit("none"))
-        .alias("source"),
-        F.when(F.col("meta_a") != "", F.col("meta_a"))
-        .when(F.col("rel_a") != "", F.col("rel_a"))
-        .when(F.col("span_a") != "", F.col("span_a"))
-        .otherwise(F.lit(""))
-        .alias("author"),
-    )
-
-
-def _dublin_core_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<head>'
-        || CASE WHEN doc_id % 2 = 0
-                THEN '<meta name="DC.title" content="Archive Item '
-                     || CAST(doc_id AS VARCHAR) || '">' ELSE '' END
-        || CASE WHEN doc_id % 3 = 0
-                THEN '<meta name="DC.creator" content="Curator '
-                     || CAST(doc_id % 11 AS VARCHAR) || '">' ELSE '' END
-        || CASE WHEN doc_id % 4 = 0
-                THEN '<meta name="DC.date" content="2024-'
-                     || lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0')
-                     || '-15">' ELSE '' END
-        || CASE WHEN doc_id % 5 = 0
-                THEN '<meta name="DC.language" content="'
-                     || lang || '">' ELSE '' END
-        || '<meta name="description" content="not dc">'
-        || '</head>' AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i AS i,
-        list_extract(regexp_extract_all(html,
-          '<meta name="DC\\.([a-z]+)" content="[^"]*"', 1), i) AS field,
-        list_extract(regexp_extract_all(html,
-          '<meta name="DC\\.[a-z]+" content="([^"]*)"', 1), i) AS value
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<meta name="DC\\.([a-z]+)" content="[^"]*"', 1)))) AS g(i))
-    SELECT doc_id, field, value FROM fr
-    """
-
-
-@query("dublin_core_extract", _dublin_core_oracle())
-def dublin_core_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dublin Core metadata extraction (round 4): the pre-OpenGraph
-    metadata vocabulary libraries, archives, and government sites
-    still serve (``DC.title`` / ``DC.creator`` / ``DC.date`` /
-    ``DC.language``) — exploded to (field, value) rows with the
-    field-count varying per page (each field on its own residue) and
-    a non-DC meta planted on every page that must NOT match the
-    namespaced pattern. Field names and values come from the SAME
-    anchor pattern, so positions can't skew.
-
-    Scale shape: two aligned regexp_extract_all + posexplode, no
-    shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    html = F.concat(
-        F.lit("<head>"),
-        F.when(i % 2 == 0, F.concat(
-            F.lit('<meta name="DC.title" content="Archive Item '), ds,
-            F.lit('">'))).otherwise(F.lit("")),
-        F.when(i % 3 == 0, F.concat(
-            F.lit('<meta name="DC.creator" content="Curator '),
-            (i % 11).cast("string"), F.lit('">'))).otherwise(F.lit("")),
-        F.when(i % 4 == 0, F.concat(
-            F.lit('<meta name="DC.date" content="2024-'),
-            F.lpad((i % 12 + 1).cast("string"), 2, "0"),
-            F.lit('-15">'))).otherwise(F.lit("")),
-        F.when(i % 5 == 0, F.concat(
-            F.lit('<meta name="DC.language" content="'), F.col("lang"),
-            F.lit('">'))).otherwise(F.lit("")),
-        F.lit('<meta name="description" content="not dc"></head>'),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fields = F.regexp_extract_all(
-        F.col("html"),
-        F.lit('<meta name="DC\\.([a-z]+)" content="[^"]*"'), 1,
-    )
-    values = F.regexp_extract_all(
-        F.col("html"),
-        F.lit('<meta name="DC\\.[a-z]+" content="([^"]*)"'), 1,
-    )
-    return (
-        p.select(
-            "doc_id", values.alias("values"),
-            F.posexplode(fields).alias("pos", "field"),
-        )
-        .select(
-            "doc_id", "field",
-            F.element_at(F.col("values"), F.col("pos") + 1).alias("value"),
-        )
-    )
-
-
-def _figcap_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<figure><img src="https://img.example/a'
-            || CAST(doc_id AS VARCHAR) || '.jpg" alt="Alt A '
-            || CAST(doc_id % 23 AS VARCHAR) || '"><figcaption>Figure '
-            || CAST(doc_id % 19 AS VARCHAR)
-            || ' caption</figcaption></figure>'
-          WHEN 1 THEN '<figure><img src="https://img.example/b'
-            || CAST(doc_id AS VARCHAR) || '.png" alt="Alt only '
-            || CAST(doc_id % 23 AS VARCHAR) || '"></figure>'
-          WHEN 2 THEN '<figure><img src="https://img.example/c'
-            || CAST(doc_id AS VARCHAR) || '.webp" alt="Alt C '
-            || CAST(doc_id % 23 AS VARCHAR) || '"><figcaption>Lead '
-            || CAST(doc_id % 19 AS VARCHAR) || '</figcaption></figure>'
-            || '<figure><img src="https://img.example/d'
-            || CAST(doc_id AS VARCHAR) || '.gif"></figure>'
-          ELSE '<p>no figures ' || CAST(doc_id AS VARCHAR) || '</p>'
-        END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i - 1 AS fig_idx,
-        list_extract(regexp_extract_all(html,
-          '<figure>(.*?)</figure>', 1), i) AS block
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<figure>(.*?)</figure>', 1)))) AS g(i))
-    SELECT doc_id, CAST(fig_idx AS BIGINT) AS fig_idx,
-      regexp_extract(block, '<img src="([^"]+)"', 1) AS src,
-      CASE WHEN contains(block, '<figcaption>')
-           THEN regexp_extract(block,
-             '<figcaption>([^<]*)</figcaption>', 1)
-           WHEN contains(block, 'alt="')
-           THEN regexp_extract(block, 'alt="([^"]*)"', 1)
-           ELSE '' END AS caption,
-      CASE WHEN contains(block, '<figcaption>') THEN 'figcaption'
-           WHEN contains(block, 'alt="') THEN 'alt'
-           ELSE 'none' END AS caption_source
-    FROM fr
-    """
-
-
-@query("figure_caption_pairs", _figcap_oracle())
-def figure_caption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-text pair mining (round 4): <figure> blocks are the
-    highest-precision caption source for image-text multimodal
-    training pairs. Extracts each figure in document order, parses the
-    img src, and resolves the caption with the standard precedence —
-    <figcaption> beats the img alt text, alt beats nothing — tagging
-    the provenance so a mixture builder can weight figcaption pairs
-    (human-written captions) above alt pairs (often filenames). A
-    caption-less figure is planted on every %4==2 page as the 'none'
-    control; %4==3 pages carry no figure at all (zero rows).
-
-    Scale shape: one regexp_extract_all + posexplode, per-block fields
-    via codegen regexp_extract/CASE — no shuffle, no Python; rides the
-    extraction scan like embed_extract.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    m23 = (i % 23).cast("string")
-    m19 = (i % 19).cast("string")
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<figure><img src="https://img.example/a'), ds,
-            F.lit('.jpg" alt="Alt A '), m23,
-            F.lit('"><figcaption>Figure '), m19,
-            F.lit(" caption</figcaption></figure>")))
-        .when(v == 1, F.concat(
-            F.lit('<figure><img src="https://img.example/b'), ds,
-            F.lit('.png" alt="Alt only '), m23,
-            F.lit('"></figure>')))
-        .when(v == 2, F.concat(
-            F.lit('<figure><img src="https://img.example/c'), ds,
-            F.lit('.webp" alt="Alt C '), m23,
-            F.lit('"><figcaption>Lead '), m19,
-            F.lit('</figcaption></figure>'
-                  '<figure><img src="https://img.example/d'),
-            ds, F.lit('.gif"></figure>')))
-        .otherwise(F.concat(F.lit("<p>no figures "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit("<figure>(.*?)</figure>"), 1
-            )
-        ).alias("fig_idx", "block"),
-    )
-    b = F.col("block")
-    has_cap = b.contains("<figcaption>")
-    has_alt = b.contains('alt="')
-    return fr.select(
-        "doc_id",
-        F.col("fig_idx").cast("long").alias("fig_idx"),
-        F.regexp_extract(b, '<img src="([^"]+)"', 1).alias("src"),
-        F.when(has_cap,
-               F.regexp_extract(b, "<figcaption>([^<]*)</figcaption>", 1))
-        .when(has_alt, F.regexp_extract(b, 'alt="([^"]*)"', 1))
-        .otherwise(F.lit(""))
-        .alias("caption"),
-        F.when(has_cap, F.lit("figcaption"))
-        .when(has_alt, F.lit("alt"))
-        .otherwise(F.lit("none"))
-        .alias("caption_source"),
-    )
-
-
-def _rdfa_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN '<meta property="schema:name" content="RDFa Name '
-            || CAST(doc_id % 29 AS VARCHAR) || '">'
-            || '<meta property="schema:datePublished" content="2024-0'
-            || CAST(1 + doc_id % 9 AS VARCHAR) || '-15">'
-          WHEN 1 THEN '<span property="schema:author">Author '
-            || CAST(doc_id % 13 AS VARCHAR) || '</span>'
-            || '<meta property="schema:inLanguage" content="lang'
-            || CAST(doc_id % 5 AS VARCHAR) || '">'
-          ELSE '<meta property="og:title" content="not rdfa">'
-            || '<meta property="schema:headline" content="Headline '
-            || CAST(doc_id % 17 AS VARCHAR) || '">'
-        END AS html
-      FROM documents),
-    metas AS (
-      SELECT doc_id,
-        list_extract(regexp_extract_all(html,
-          '<meta property="schema:([A-Za-z]+)" content="[^"]*"', 1), i)
-          AS prop,
-        list_extract(regexp_extract_all(html,
-          '<meta property="schema:[A-Za-z]+" content="([^"]*)"', 1), i)
-          AS value,
-        'meta' AS node_kind
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<meta property="schema:([A-Za-z]+)" content="[^"]*"',
-        1)))) AS g(i)),
-    spans AS (
-      SELECT doc_id,
-        list_extract(regexp_extract_all(html,
-          '<span property="schema:([A-Za-z]+)">[^<]*</span>', 1), i)
-          AS prop,
-        list_extract(regexp_extract_all(html,
-          '<span property="schema:[A-Za-z]+">([^<]*)</span>', 1), i)
-          AS value,
-        'span' AS node_kind
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<span property="schema:([A-Za-z]+)">[^<]*</span>',
-        1)))) AS g(i))
-    SELECT doc_id, prop, value, node_kind FROM metas
-    UNION ALL
-    SELECT doc_id, prop, value, node_kind FROM spans
-    """
-
-
-@query("rdfa_extract", _rdfa_oracle())
-def rdfa_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDFa-lite extraction (round 4): completes the structured-data
-    trio (microdata_extract, jsonld_extract, dublin_core_extract) with
-    the property= vocabulary. Schema.org-prefixed properties are
-    pulled from both carrier shapes — <meta property content=...>
-    (attribute value) and <span property>text</span> (element text) —
-    tagged with node_kind; a non-schema property (og:title) is planted
-    on every %3==2 page and must NOT appear.
-
-    Scale shape: two regexp_extract_all projections unioned — both
-    sides of the union are narrow scans of the same cached page
-    construction, no shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 3
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<meta property="schema:name" content="RDFa Name '),
-            (i % 29).cast("string"),
-            F.lit('"><meta property="schema:datePublished" '
-                  'content="2024-0'),
-            (1 + i % 9).cast("string"), F.lit('-15">')))
-        .when(v == 1, F.concat(
-            F.lit('<span property="schema:author">Author '),
-            (i % 13).cast("string"),
-            F.lit('</span><meta property="schema:inLanguage" '
-                  'content="lang'),
-            (i % 5).cast("string"), F.lit('">')))
-        .otherwise(F.concat(
-            F.lit('<meta property="og:title" content="not rdfa">'
-                  '<meta property="schema:headline" content="Headline '),
-            (i % 17).cast("string"), F.lit('">')))
-    )
-    p = d.select("doc_id", html.alias("html"))
-
-    def _kind(attr_pat: str, val_pat: str, kind: str) -> DataFrame:
-        props = F.regexp_extract_all(F.col("html"), F.lit(attr_pat), 1)
-        vals = F.regexp_extract_all(F.col("html"), F.lit(val_pat), 1)
-        return (
-            p.select(
-                "doc_id", vals.alias("vals"),
-                F.posexplode(props).alias("pos", "prop"),
-            )
-            .select(
-                "doc_id", "prop",
-                F.element_at(F.col("vals"), F.col("pos") + 1)
-                .alias("value"),
-                F.lit(kind).alias("node_kind"),
-            )
-        )
-
-    metas = _kind(
-        '<meta property="schema:([A-Za-z]+)" content="[^"]*"',
-        '<meta property="schema:[A-Za-z]+" content="([^"]*)"',
-        "meta",
-    )
-    spans = _kind(
-        '<span property="schema:([A-Za-z]+)">[^<]*</span>',
-        '<span property="schema:[A-Za-z]+">([^<]*)</span>',
-        "span",
-    )
-    return metas.unionAll(spans)
-
-
-def _breadcrumb_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<nav class="breadcrumb">'
-        || CASE WHEN doc_id % 3 >= 1
-             THEN '<a href="/">Home</a>' ELSE '' END
-        || CASE WHEN doc_id % 3 = 2
-             THEN '<a href="/sec' || CAST(doc_id % 7 AS VARCHAR)
-               || '">Section ' || CAST(doc_id % 7 AS VARCHAR) || '</a>'
-             ELSE '' END
-        || '<span class="current">Page '
-        || CAST(doc_id % 19 AS VARCHAR) || '</span></nav>'
-        || '<nav class="other"><a href="/x">not a crumb</a></nav>'
-          AS html
-      FROM documents),
-    nav AS (
-      SELECT doc_id, regexp_extract(html,
-        '<nav class="breadcrumb">(.*?)</nav>', 1) AS trail
-      FROM p),
-    fr AS (
-      SELECT doc_id, i - 1 AS pos,
-        list_extract(regexp_extract_all(trail,
-          '(<a href="[^"]*">[^<]*</a>|<span class="current">[^<]*</span>)',
-          1), i) AS el
-      FROM nav, unnest(generate_series(1, len(regexp_extract_all(trail,
-        '(<a href="[^"]*">[^<]*</a>|<span class="current">[^<]*</span>)',
-        1)))) AS g(i))
-    SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-      regexp_extract(el, '>([^<]*)<', 1) AS label,
-      CASE WHEN contains(el, 'href="')
-           THEN regexp_extract(el, 'href="([^"]*)"', 1)
-           ELSE '' END AS href,
-      CAST(CASE WHEN contains(el, '<span') THEN 1 ELSE 0 END AS INT)
-        AS is_leaf
-    FROM fr
-    """
-
-
-@query("breadcrumb_extract", _breadcrumb_oracle())
-def breadcrumb_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breadcrumb-trail extraction (round 4): the breadcrumb nav is the
-    page's own statement of where it sits in the site taxonomy — the
-    trail feeds topic clustering and URL-pattern mining. Locates the
-    breadcrumb nav (a second non-breadcrumb nav is planted on every
-    page and must be ignored), splits the trail into crumbs in order,
-    and emits position, label, href (empty for the current-page leaf
-    span), and the leaf flag. Trail depth varies 1..3 by doc_id%3.
-
-    Scale shape: one anchored regexp_extract to isolate the nav, one
-    regexp_extract_all + posexplode over the trail, codegen field
-    parsing — no shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    m7 = (i % 7).cast("string")
-    html = F.concat(
-        F.lit('<nav class="breadcrumb">'),
-        F.when(i % 3 >= 1, F.lit('<a href="/">Home</a>'))
-        .otherwise(F.lit("")),
-        F.when(i % 3 == 2, F.concat(
-            F.lit('<a href="/sec'), m7, F.lit('">Section '), m7,
-            F.lit("</a>")))
-        .otherwise(F.lit("")),
-        F.lit('<span class="current">Page '),
-        (i % 19).cast("string"),
-        F.lit('</span></nav>'
-              '<nav class="other"><a href="/x">not a crumb</a></nav>'),
-    )
-    crumb_pat = (
-        '(<a href="[^"]*">[^<]*</a>|<span class="current">[^<]*</span>)'
-    )
-    nav = d.select(
-        "doc_id",
-        F.regexp_extract(
-            html, '<nav class="breadcrumb">(.*?)</nav>', 1
-        ).alias("trail"),
-    )
-    fr = nav.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("trail"), F.lit(crumb_pat), 1)
-        ).alias("pos", "el"),
-    )
-    e = F.col("el")
-    return fr.select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.regexp_extract(e, ">([^<]*)<", 1).alias("label"),
-        F.when(e.contains('href="'),
-               F.regexp_extract(e, 'href="([^"]*)"', 1))
-        .otherwise(F.lit(""))
-        .alias("href"),
-        F.when(e.contains("<span"), F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_leaf"),
-    )
-
-
-def _url_date_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        'https://ex.com/'
-        || CASE doc_id % 4
-             WHEN 0 THEN '2023/' || lpad(CAST(1 + doc_id % 12 AS
-               VARCHAR), 2, '0') || '/' || lpad(CAST(1 + doc_id % 28
-               AS VARCHAR), 2, '0') || '/'
-             WHEN 1 THEN '2022/' || lpad(CAST(1 + doc_id % 12 AS
-               VARCHAR), 2, '0') || '/' || lpad(CAST(1 + doc_id % 28
-               AS VARCHAR), 2, '0') || '/'
-             WHEN 2 THEN '2021/' || lpad(CAST(1 + doc_id % 12 AS
-               VARCHAR), 2, '0') || '/'
-             ELSE 'evergreen/' END
-        || 'post' || CAST(doc_id AS VARCHAR) AS url,
-        CASE WHEN doc_id % 4 = 0
-          THEN '<meta property="article:published_time" content="2023-'
-            || lpad(CAST(1 + doc_id % 9 AS VARCHAR), 2, '0')
-            || '-09T10:00:00Z">'
-          ELSE '<p>no meta date</p>' END AS html
-      FROM documents),
-    f AS (
-      SELECT doc_id, url,
-        regexp_extract(html, 'article:published_time" content="'
-          || '([0-9]{4}-[0-9]{2}-[0-9]{2})', 1) AS meta_d,
-        regexp_extract(url, '/([0-9]{4})/([0-9]{2})/([0-9]{2})/',
-          ['y', 'm', 'd']) AS ymd,
-        regexp_extract(url, '/([0-9]{4})/([0-9]{2})/', ['y', 'm'])
-          AS ym,
-        regexp_matches(url, '/[0-9]{4}/[0-9]{2}/[0-9]{2}/') AS has_ymd,
-        regexp_matches(url, '/[0-9]{4}/[0-9]{2}/') AS has_ym
-      FROM p)
-    SELECT doc_id, url,
-      CASE WHEN meta_d <> '' THEN meta_d
-           WHEN has_ymd THEN ymd.y || '-' || ymd.m || '-' || ymd.d
-           WHEN has_ym THEN ym.y || '-' || ym.m || '-01'
-           ELSE '' END AS pub_date,
-      CASE WHEN meta_d <> '' THEN 'meta'
-           WHEN has_ymd OR has_ym THEN 'url'
-           ELSE 'none' END AS date_source
-    FROM f
-    """
-
-
-@query("url_date_extract", _url_date_oracle())
-def url_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Publication-date inference (round 4): temporal filtering and
-    dedup-tie-breaking both need a per-document date, and most pages
-    carry one in the URL path even when metadata is absent. Resolves
-    with the standard precedence — article:published_time meta beats
-    a /YYYY/MM/DD/ path segment beats /YYYY/MM/ (day defaults to 01)
-    beats nothing — and tags the provenance. %4==0 pages carry BOTH a
-    meta date and a conflicting URL date to pin the precedence.
-
-    Scale shape: three codegen regexp_extracts and a CASE — no
-    shuffle, no Python; date strings stay lexicographic-sortable.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    mm = F.lpad((1 + i % 12).cast("string"), 2, "0")
-    dd = F.lpad((1 + i % 28).cast("string"), 2, "0")
-    url = F.concat(
-        F.lit("https://ex.com/"),
-        F.when(v == 0, F.concat(F.lit("2023/"), mm, F.lit("/"), dd,
-                                F.lit("/")))
-        .when(v == 1, F.concat(F.lit("2022/"), mm, F.lit("/"), dd,
-                               F.lit("/")))
-        .when(v == 2, F.concat(F.lit("2021/"), mm, F.lit("/")))
-        .otherwise(F.lit("evergreen/")),
-        F.lit("post"), i.cast("string"),
-    )
-    html = F.when(v == 0, F.concat(
-        F.lit('<meta property="article:published_time" content="2023-'),
-        F.lpad((1 + i % 9).cast("string"), 2, "0"),
-        F.lit('-09T10:00:00Z">'),
-    )).otherwise(F.lit("<p>no meta date</p>"))
-    p = d.select("doc_id", url.alias("url"), html.alias("html"))
-    u = F.col("url")
-    meta_d = F.regexp_extract(
-        F.col("html"),
-        'article:published_time" content="([0-9]{4}-[0-9]{2}-[0-9]{2})',
-        1,
-    )
-    ymd_pat = "/([0-9]{4})/([0-9]{2})/([0-9]{2})/"
-    ym_pat = "/([0-9]{4})/([0-9]{2})/"
-    has_ymd = u.rlike("/[0-9]{4}/[0-9]{2}/[0-9]{2}/")
-    has_ym = u.rlike("/[0-9]{4}/[0-9]{2}/")
-    ymd = F.concat(
-        F.regexp_extract(u, ymd_pat, 1), F.lit("-"),
-        F.regexp_extract(u, ymd_pat, 2), F.lit("-"),
-        F.regexp_extract(u, ymd_pat, 3),
-    )
-    ym = F.concat(
-        F.regexp_extract(u, ym_pat, 1), F.lit("-"),
-        F.regexp_extract(u, ym_pat, 2), F.lit("-01"),
-    )
-    return p.select(
-        "doc_id", "url",
-        F.when(meta_d != "", meta_d)
-        .when(has_ymd, ymd)
-        .when(has_ym, ym)
-        .otherwise(F.lit(""))
-        .alias("pub_date"),
-        F.when(meta_d != "", F.lit("meta"))
-        .when(has_ymd | has_ym, F.lit("url"))
-        .otherwise(F.lit("none"))
-        .alias("date_source"),
-    )
-
-
-def _script_profile_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        repeat('lorem ipsum dolor ', 1 + doc_id % 3)
-        || CASE WHEN doc_id % 3 = 1
-             THEN repeat('привет мир ', 1 + doc_id % 4)
-             ELSE '' END
-        || CASE WHEN doc_id % 5 = 0
-             THEN repeat('漢字文章', 1 + doc_id % 2) ELSE '' END
-        || CASE WHEN doc_id % 7 = 0 THEN 'αβγδε ' ELSE '' END
-          AS text
-      FROM documents),
-    c AS (
-      SELECT doc_id,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Latin}]', '', 'g')) AS latin_chars,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Cyrillic}]', '', 'g')) AS cyrillic_chars,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Han}]', '', 'g')) AS han_chars,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Greek}]', '', 'g')) AS greek_chars
-      FROM p)
-    SELECT doc_id,
-      CAST(latin_chars AS BIGINT) AS latin_chars,
-      CAST(cyrillic_chars AS BIGINT) AS cyrillic_chars,
-      CAST(han_chars AS BIGINT) AS han_chars,
-      CAST(greek_chars AS BIGINT) AS greek_chars,
-      CASE WHEN latin_chars >= cyrillic_chars
-             AND latin_chars >= han_chars
-             AND latin_chars >= greek_chars THEN 'latin'
-           WHEN cyrillic_chars >= han_chars
-             AND cyrillic_chars >= greek_chars THEN 'cyrillic'
-           WHEN han_chars >= greek_chars THEN 'han'
-           ELSE 'greek' END AS dominant_script,
-      round(1.0 * (cyrillic_chars + han_chars + greek_chars)
-        / (latin_chars + cyrillic_chars + han_chars + greek_chars), 4)
-        AS non_latin_ratio
-    FROM c
-    """
-
-
-@query("unicode_script_profile", _script_profile_oracle())
-def unicode_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode-script profiling (round 4): script composition is the
-    cheap upstream signal for language routing — a Cyrillic-dominant
-    page never reaches the English quality classifier, and mixed-
-    script pages (Latin boilerplate around CJK body) are exactly the
-    ones n-gram langid gets wrong. Counts letters per script
-    (Latin/Cyrillic/Han/Greek) via strip-and-diff, picks the dominant
-    script with a fixed tie order, and reports the non-Latin ratio.
-
-    Scale shape: four codegen regexp_replaces over one projection —
-    no shuffle, no Python. Java and RE2 spell the script class
-    differently (\\p{IsCyrillic} vs \\p{Cyrillic}); counts agree
-    because every planted char is BMP (code points == UTF-16 units).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    text = F.concat(
-        F.repeat(F.lit("lorem ipsum dolor "), (1 + i % 3).cast("int")),
-        F.when(i % 3 == 1,
-               F.repeat(F.lit("привет "
-                              "мир "),
-                        (1 + i % 4).cast("int")))
-        .otherwise(F.lit("")),
-        F.when(i % 5 == 0,
-               F.repeat(F.lit("漢字文章"),
-                        (1 + i % 2).cast("int")))
-        .otherwise(F.lit("")),
-        F.when(i % 7 == 0, F.lit("αβγδε "))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", text.alias("text"))
-    t = F.col("text")
-
-    def _n(java_class: str) -> Column:
-        return (
-            F.length(t)
-            - F.length(F.regexp_replace(t, f"[\\p{{{java_class}}}]", ""))
-        ).cast("long")
-
-    c = p.select(
-        "doc_id",
-        _n("IsLatin").alias("latin_chars"),
-        _n("IsCyrillic").alias("cyrillic_chars"),
-        _n("IsHan").alias("han_chars"),
-        _n("IsGreek").alias("greek_chars"),
-    )
-    la, cy, ha, gr = (F.col(x) for x in
-                      ("latin_chars", "cyrillic_chars", "han_chars",
-                       "greek_chars"))
-    return c.select(
-        "doc_id", "latin_chars", "cyrillic_chars", "han_chars",
-        "greek_chars",
-        F.when((la >= cy) & (la >= ha) & (la >= gr), F.lit("latin"))
-        .when((cy >= ha) & (cy >= gr), F.lit("cyrillic"))
-        .when(ha >= gr, F.lit("han"))
-        .otherwise(F.lit("greek"))
-        .alias("dominant_script"),
-        F.round((cy + ha + gr) / (la + cy + ha + gr), 4)
-        .alias("non_latin_ratio"),
-    )
-
-
-def _consent_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN '<div id="onetrust-banner-sdk">We use cookies '
-            || 'to improve your experience ' || CAST(doc_id % 11 AS
-            VARCHAR) || '</div>'
-          WHEN 1 THEN '<div class="cookie-banner">This site uses '
-            || 'cookies ' || CAST(doc_id % 9 AS VARCHAR) || '</div>'
-          ELSE '' END
-        || '<p>body paragraph ' || CAST(doc_id AS VARCHAR)
-        || ' with real content</p>' AS html
-      FROM documents),
-    f AS (
-      SELECT doc_id, html,
-        regexp_extract(html, '<div (?:id="onetrust-banner-sdk"'
-          || '|class="cookie-banner")>([^<]*)</div>', 1) AS banner
-      FROM p)
-    SELECT doc_id,
-      CAST(CASE WHEN banner <> '' THEN 1 ELSE 0 END AS INT)
-        AS has_banner,
-      CASE WHEN contains(html, 'onetrust-banner-sdk') THEN 'onetrust'
-           WHEN contains(html, 'class="cookie-banner"') THEN 'generic'
-           ELSE 'none' END AS vendor,
-      CAST(length(banner) AS BIGINT) AS banner_chars,
-      CAST(length(regexp_replace(regexp_replace(html,
-        '<div (?:id="onetrust-banner-sdk"|class="cookie-banner")>'
-        || '[^<]*</div>', '', 'g'), '<[^>]+>', '', 'g')) AS BIGINT)
-        AS text_chars_clean
-    FROM f
-    """
-
-
-@query("cookie_consent_detect", _consent_oracle())
-def cookie_consent_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consent-overlay detection and strip (round 4): cookie banners
-    are the highest-frequency boilerplate in post-GDPR crawls and leak
-    identical legalese into millions of extractions — a dedup poison
-    and a quality-score distorter. Detects the banner by vendor
-    signature (OneTrust id, generic cookie-banner class), measures it,
-    and reports the cleaned text length after stripping the banner
-    div then all remaining tags.
-
-    Scale shape: codegen regexp_extract + two regexp_replaces — no
-    shuffle, no Python; the strip composes with with_main_text
-    upstream of quality scoring.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 3
-    html = F.concat(
-        F.when(v == 0, F.concat(
-            F.lit('<div id="onetrust-banner-sdk">We use cookies '
-                  "to improve your experience "),
-            (i % 11).cast("string"), F.lit("</div>")))
-        .when(v == 1, F.concat(
-            F.lit('<div class="cookie-banner">This site uses cookies '),
-            (i % 9).cast("string"), F.lit("</div>")))
-        .otherwise(F.lit("")),
-        F.lit("<p>body paragraph "), i.cast("string"),
-        F.lit(" with real content</p>"),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    banner_pat = (
-        '<div (?:id="onetrust-banner-sdk"|class="cookie-banner")>'
-        "[^<]*</div>"
-    )
-    banner = F.regexp_extract(
-        h,
-        '<div (?:id="onetrust-banner-sdk"|class="cookie-banner")>'
-        "([^<]*)</div>",
-        1,
-    )
-    return p.select(
-        "doc_id",
-        F.when(banner != "", F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("has_banner"),
-        F.when(h.contains("onetrust-banner-sdk"), F.lit("onetrust"))
-        .when(h.contains('class="cookie-banner"'), F.lit("generic"))
-        .otherwise(F.lit("none"))
-        .alias("vendor"),
-        F.length(banner).cast("long").alias("banner_chars"),
-        F.length(
-            F.regexp_replace(
-                F.regexp_replace(h, banner_pat, ""), "<[^>]+>", ""
-            )
-        ).cast("long").alias("text_chars_clean"),
-    )
-
-
-def _spa_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<div id="root"></div><script src="/static/js/'
-            || 'main.' || CAST(doc_id % 97 AS VARCHAR)
-            || '.js"></script><noscript>You need to enable JavaScript'
-            || ' to run this app.</noscript>'
-          WHEN 1 THEN '<div id="app"></div><script src="/bundle.'
-            || CAST(doc_id % 89 AS VARCHAR) || '.js"></script>'
-          WHEN 2 THEN '<div id="root"><p>server rendered content '
-            || CAST(doc_id AS VARCHAR) || '</p></div>'
-            || '<script src="/hydrate.js"></script>'
-          ELSE '<p>classic page ' || CAST(doc_id AS VARCHAR)
-            || ' with plenty of words</p>' END AS html
-      FROM documents),
-    f AS (
-      SELECT doc_id, html,
-        CASE WHEN regexp_matches(html, '<div id="(root|app)"></div>')
-          THEN 1 ELSE 0 END AS root_empty,
-        CASE WHEN contains(html, '<noscript>') THEN 1 ELSE 0 END
-          AS has_noscript,
-        len(regexp_extract_all(html, '<script src=', 0))
-          AS script_count,
-        length(regexp_replace(regexp_replace(html,
-          '<noscript>[^<]*</noscript>', '', 'g'), '<[^>]+>', '', 'g'))
-          AS visible_chars
-      FROM p)
-    SELECT doc_id, CAST(root_empty AS INT) AS root_empty,
-      CAST(has_noscript AS INT) AS has_noscript,
-      CAST(script_count AS BIGINT) AS script_count,
-      CAST(visible_chars AS BIGINT) AS visible_chars,
-      CASE WHEN root_empty = 1 THEN 'render' ELSE 'extract' END
-        AS route
-    FROM f
-    """
-
-
-@query("spa_shell_detect", _spa_oracle())
-def spa_shell_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPA app-shell detection (round 4): a crawler that extracts the
-    raw HTML of a client-rendered app gets an empty root div and a
-    "enable JavaScript" noscript — routing those to a headless-render
-    queue instead of the extractor is the standard split. Flags the
-    empty root (#root / #app), the noscript fallback, counts script
-    bundles, measures visible text with noscript legalese excluded,
-    and emits the render/extract routing decision. Variant %4==2 has
-    a NON-empty root (server-side hydration) and must route extract.
-
-    Scale shape: codegen regexps over one projection — no shuffle, no
-    Python; the route column is a partition-pruning key downstream.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<div id="root"></div><script src="/static/js/main.'),
-            (i % 97).cast("string"),
-            F.lit('.js"></script><noscript>You need to enable '
-                  "JavaScript to run this app.</noscript>")))
-        .when(v == 1, F.concat(
-            F.lit('<div id="app"></div><script src="/bundle.'),
-            (i % 89).cast("string"), F.lit('.js"></script>')))
-        .when(v == 2, F.concat(
-            F.lit('<div id="root"><p>server rendered content '),
-            i.cast("string"),
-            F.lit('</p></div><script src="/hydrate.js"></script>')))
-        .otherwise(F.concat(
-            F.lit("<p>classic page "), i.cast("string"),
-            F.lit(" with plenty of words</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    root_empty = F.when(
-        h.rlike('<div id="(root|app)"></div>'), F.lit(1)
-    ).otherwise(F.lit(0))
-    return p.select(
-        "doc_id",
-        root_empty.cast("int").alias("root_empty"),
-        F.when(h.contains("<noscript>"), F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("has_noscript"),
-        F.size(F.regexp_extract_all(h, F.lit("<script src="), 0))
-        .cast("long").alias("script_count"),
-        F.length(
-            F.regexp_replace(
-                F.regexp_replace(h, "<noscript>[^<]*</noscript>", ""),
-                "<[^>]+>", "",
-            )
-        ).cast("long").alias("visible_chars"),
-        F.when(root_empty == 1, F.lit("render"))
-        .otherwise(F.lit("extract"))
-        .alias("route"),
-    )
-
-
-def _quote_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN '<blockquote cite="https://src.example/q'
-            || CAST(doc_id % 37 AS VARCHAR) || '"><p>Quoted passage '
-            || CAST(doc_id % 19 AS VARCHAR)
-            || '</p></blockquote><cite>Author '
-            || CAST(doc_id % 13 AS VARCHAR) || '</cite>'
-          WHEN 1 THEN '<blockquote><p>Anonymous quote '
-            || CAST(doc_id % 19 AS VARCHAR) || '</p></blockquote>'
-            || '<q>aside one ' || CAST(doc_id % 7 AS VARCHAR)
-            || '</q> text <q>aside two ' || CAST(doc_id % 5 AS VARCHAR)
-            || '</q>'
-          ELSE '<p>prose only ' || CAST(doc_id AS VARCHAR) || '</p>'
-        END AS html
-      FROM documents),
-    blocks AS (
-      SELECT doc_id, 0 AS quote_idx,
-        regexp_extract(html,
-          '<blockquote[^>]*><p>([^<]*)</p></blockquote>', 1)
-          AS quote_text,
-        regexp_extract(html, '<blockquote cite="([^"]*)"', 1)
-          AS cite_url,
-        regexp_extract(html, '<cite>([^<]*)</cite>', 1) AS author,
-        'block' AS kind
-      FROM p
-      WHERE contains(html, '<blockquote')),
-    inl AS (
-      SELECT doc_id, i - 1 AS quote_idx,
-        list_extract(regexp_extract_all(html, '<q>([^<]*)</q>', 1), i)
-          AS quote_text,
-        '' AS cite_url, '' AS author, 'inline' AS kind
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<q>([^<]*)</q>', 1)))) AS g(i))
-    SELECT doc_id, CAST(quote_idx AS BIGINT) AS quote_idx, quote_text,
-      cite_url, author, kind
-    FROM blocks
-    UNION ALL
-    SELECT doc_id, CAST(quote_idx AS BIGINT) AS quote_idx, quote_text,
-      cite_url, author, kind
-    FROM inl
-    """
-
-
-@query("blockquote_cite_extract", _quote_oracle())
-def blockquote_cite_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quotation extraction (round 4): quoted passages with source
-    attribution are both a provenance signal (the cite URL joins into
-    the link graph) and a dedup hazard (the same quote syndicated
-    across hosts). Extracts block quotes with their cite attribute
-    and trailing <cite> attribution, plus inline <q> asides indexed
-    in document order; %3==1 pages carry an attribution-less block
-    quote AND two inline quotes to pin the kind split.
-
-    Scale shape: one filtered projection for blocks, one
-    regexp_extract_all + posexplode for inlines, unioned — no
-    shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 3
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<blockquote cite="https://src.example/q'),
-            (i % 37).cast("string"), F.lit('"><p>Quoted passage '),
-            (i % 19).cast("string"),
-            F.lit("</p></blockquote><cite>Author "),
-            (i % 13).cast("string"), F.lit("</cite>")))
-        .when(v == 1, F.concat(
-            F.lit("<blockquote><p>Anonymous quote "),
-            (i % 19).cast("string"),
-            F.lit("</p></blockquote><q>aside one "),
-            (i % 7).cast("string"), F.lit("</q> text <q>aside two "),
-            (i % 5).cast("string"), F.lit("</q>")))
-        .otherwise(F.concat(
-            F.lit("<p>prose only "), i.cast("string"), F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    blocks = (
-        p.where(h.contains("<blockquote"))
-        .select(
-            "doc_id",
-            F.lit(0).cast("long").alias("quote_idx"),
-            F.regexp_extract(
-                h, "<blockquote[^>]*><p>([^<]*)</p></blockquote>", 1
-            ).alias("quote_text"),
-            F.regexp_extract(h, '<blockquote cite="([^"]*)"', 1)
-            .alias("cite_url"),
-            F.regexp_extract(h, "<cite>([^<]*)</cite>", 1)
-            .alias("author"),
-            F.lit("block").alias("kind"),
-        )
-    )
-    inl = (
-        p.select(
-            "doc_id",
-            F.posexplode(
-                F.regexp_extract_all(h, F.lit("<q>([^<]*)</q>"), 1)
-            ).alias("quote_idx", "quote_text"),
-        )
-        .select(
-            "doc_id",
-            F.col("quote_idx").cast("long").alias("quote_idx"),
-            "quote_text",
-            F.lit("").alias("cite_url"),
-            F.lit("").alias("author"),
-            F.lit("inline").alias("kind"),
-        )
-    )
-    return blocks.unionAll(inl)
-
-
-def _navdensity_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<nav><a href="/1">Home</a><a href="/2">About '
-        || CAST(doc_id % 7 AS VARCHAR) || '</a></nav>'
-        || '<p>long body text ' || CAST(doc_id AS VARCHAR)
-        || ' with many words <a href="/r">ref</a> trailing words</p>'
-        || CASE WHEN doc_id % 2 = 0
-             THEN '<p>second paragraph ' || CAST(doc_id % 11 AS
-               VARCHAR) || ' pure text</p>'
-             ELSE '' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i - 1 AS block_idx,
-        list_extract(regexp_extract_all(html,
-          '(<nav>.*?</nav>|<p>.*?</p>)', 1), i) AS block
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '(<nav>.*?</nav>|<p>.*?</p>)', 1)))) AS g(i)),
-    m AS (
-      SELECT doc_id, block_idx,
-        CASE WHEN starts_with(block, '<nav') THEN 'nav' ELSE 'p' END
-          AS tag,
-        length(regexp_replace(block, '<[^>]+>', '', 'g'))
-          AS total_chars,
-        coalesce(length(array_to_string(regexp_extract_all(block,
-          '<a [^>]*>([^<]*)</a>', 1), '')), 0) AS link_chars
-      FROM fr)
-    SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, tag,
-      CAST(total_chars AS BIGINT) AS total_chars,
-      CAST(link_chars AS BIGINT) AS link_chars,
-      round(1.0 * link_chars / total_chars, 4) AS link_density,
-      CAST(CASE WHEN link_chars * 10 > total_chars * 6 THEN 1 ELSE 0
-        END AS INT) AS is_boilerplate
-    FROM m
-    """
-
-
-@query("nav_link_density", _navdensity_oracle())
-def nav_link_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-level link-density boilerplate scoring (round 4): the
-    classic content/boilerplate discriminator (Boilerpipe/jusText
-    family) — navigation blocks are nearly all anchor text, content
-    blocks nearly none. Splits the page into block elements in
-    document order, measures text vs anchor-text chars per block, and
-    flags blocks past the 0.6 density threshold with exact integer
-    arithmetic (no float compare at the decision boundary).
-
-    Scale shape: one regexp_extract_all + posexplode, per-block
-    codegen regexps and array_join — no shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    html = F.concat(
-        F.lit('<nav><a href="/1">Home</a><a href="/2">About '),
-        (i % 7).cast("string"), F.lit("</a></nav>"),
-        F.lit("<p>long body text "), i.cast("string"),
-        F.lit(' with many words <a href="/r">ref</a> trailing'
-              " words</p>"),
-        F.when(i % 2 == 0, F.concat(
-            F.lit("<p>second paragraph "), (i % 11).cast("string"),
-            F.lit(" pure text</p>")))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit("(<nav>.*?</nav>|<p>.*?</p>)"), 1
-            )
-        ).alias("block_idx", "block"),
-    )
-    b = F.col("block")
-    m = fr.select(
-        "doc_id",
-        F.col("block_idx").cast("long").alias("block_idx"),
-        F.when(b.startswith("<nav"), F.lit("nav")).otherwise(F.lit("p"))
-        .alias("tag"),
-        F.length(F.regexp_replace(b, "<[^>]+>", "")).cast("long")
-        .alias("total_chars"),
-        F.length(
-            F.array_join(
-                F.regexp_extract_all(
-                    b, F.lit("<a [^>]*>([^<]*)</a>"), 1
-                ),
-                "",
-            )
-        ).cast("long").alias("link_chars"),
-    )
-    lc, tc = F.col("link_chars"), F.col("total_chars")
-    return m.select(
-        "doc_id", "block_idx", "tag", "total_chars", "link_chars",
-        F.round(lc / tc, 4).alias("link_density"),
-        F.when(lc * 10 > tc * 6, F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_boilerplate"),
-    )
-
-
-def _form_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<form action="/search"><input name="q">'
-            || '<button>Go</button></form><p>Results '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<p>Account ' || CAST(doc_id AS VARCHAR)
-            || '</p><form action="/login" method="POST">'
-            || '<input name="user"><input type="password" name="pw">'
-            || '</form>'
-          WHEN 2 THEN '<form action="https://news.example.com/sub'
-            || CAST(doc_id % 9 AS VARCHAR) || '" method="post">'
-            || '<input type="email" name="em"></form>'
-            || '<form action="/search"><input name="q"></form>'
-          ELSE '<article>No forms here ' || CAST(doc_id AS VARCHAR)
-            || '</article>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS form_idx,
-        list_extract(regexp_extract_all(html,
-          '<form[^>]*>.*?</form>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<form[^>]*>.*?</form>', 0)))) AS g(i)),
-    m AS (
-      SELECT doc_id, form_idx,
-        regexp_extract(blk, 'action="([^"]*)"', 1) AS action,
-        lower(regexp_extract(blk, 'method="([^"]*)"', 1)) AS meth,
-        CAST(len(regexp_extract_all(blk, '<input', 0)) AS BIGINT)
-          AS n_inputs,
-        CASE WHEN contains(blk, 'type="password"') THEN 1 ELSE 0 END
-          AS has_password,
-        CASE WHEN contains(blk, 'type="email"') THEN 1 ELSE 0 END
-          AS has_email,
-        CASE WHEN contains(blk, 'name="q"') THEN 1 ELSE 0 END AS has_q
-      FROM fr)
-    SELECT doc_id, form_idx, action,
-      CASE WHEN meth = '' THEN 'get' ELSE meth END AS method,
-      n_inputs, CAST(has_password AS INT) AS has_password,
-      CASE WHEN has_password = 1 THEN 'login'
-           WHEN has_email = 1 THEN 'newsletter'
-           WHEN has_q = 1 THEN 'search'
-           ELSE 'other' END AS kind
-    FROM m
-    """
-
-
-@query("form_field_extract", _form_oracle())
-def form_field_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML-form extraction (round 4): forms are both a crawl signal
-    (a search form is a query-able endpoint; a login form marks
-    gated content whose body text is usually chrome) and a curation
-    signal (login/checkout shells are near-empty boilerplate).
-    Extracts every ``<form>`` block in order with its action url,
-    lower-cased method (HTML default ``get`` when the attribute is
-    absent), input count, and a password-input flag, then classifies
-    the form: password input => login, email input => newsletter,
-    a ``q`` input => search. A two-form page (newsletter + inline
-    search) pins multi-form ordering; an article page pins zero rows.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    classification, no shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<form action="/search"><input name="q">'
-                  "<button>Go</button></form><p>Results "),
-            ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit("<p>Account "), ds,
-            F.lit('</p><form action="/login" method="POST">'
-                  '<input name="user"><input type="password" name="pw">'
-                  "</form>")))
-        .when(v == 2, F.concat(
-            F.lit('<form action="https://news.example.com/sub'),
-            (i % 9).cast("string"),
-            F.lit('" method="post"><input type="email" name="em">'
-                  '</form><form action="/search"><input name="q">'
-                  "</form>")))
-        .otherwise(F.concat(
-            F.lit("<article>No forms here "), ds, F.lit("</article>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit("<form[^>]*>.*?</form>"), 0
-            )
-        ).alias("form_idx", "blk"),
-    )
-    b = F.col("blk")
-    meth = F.lower(F.regexp_extract(b, 'method="([^"]*)"', 1))
-    has_pw = b.contains('type="password"')
-    has_em = b.contains('type="email"')
-    has_q = b.contains('name="q"')
-    return fr.select(
-        "doc_id",
-        F.col("form_idx").cast("long").alias("form_idx"),
-        F.regexp_extract(b, 'action="([^"]*)"', 1).alias("action"),
-        F.when(meth == "", F.lit("get")).otherwise(meth).alias("method"),
-        F.size(F.regexp_extract_all(b, F.lit("<input"), 0))
-        .cast("long").alias("n_inputs"),
-        F.when(has_pw, F.lit(1)).otherwise(F.lit(0)).cast("int")
-        .alias("has_password"),
-        F.when(has_pw, F.lit("login"))
-        .when(has_em, F.lit("newsletter"))
-        .when(has_q, F.lit("search"))
-        .otherwise(F.lit("other"))
-        .alias("kind"),
-    )
-
-
-def _hints_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<link rel="preconnect" href="https://cdn'
-            || CAST(doc_id % 7 AS VARCHAR) || '.example.com">'
-            || '<link rel="dns-prefetch" href="//stats.example.net">'
-            || '<p>Body ' || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<link rel="preload" href="/fonts/f'
-            || CAST(doc_id % 5 AS VARCHAR) || '.woff2" as="font">'
-            || '<p>Body ' || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 2 THEN '<p>Body ' || CAST(doc_id AS VARCHAR)
-            || '</p><link rel="prefetch" href="/page/'
-            || CAST(doc_id + 1 AS VARCHAR) || '" as="document">'
-          ELSE '<link rel="stylesheet" href="/s.css"><p>Body '
-            || CAST(doc_id AS VARCHAR) || '</p>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS hint_idx,
-        list_extract(regexp_extract_all(html,
-          '<link rel="(?:preload|prefetch|preconnect|dns-prefetch)"[^>]*>',
-          0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<link rel="(?:preload|prefetch|preconnect|dns-prefetch)"[^>]*>',
-        0)))) AS g(i)),
-    m AS (
-      SELECT doc_id, hint_idx,
-        regexp_extract(blk, 'rel="([^"]+)"', 1) AS rel,
-        regexp_extract(blk, 'href="([^"]+)"', 1) AS href,
-        regexp_extract(blk, ' as="([^"]+)"', 1) AS as_attr
-      FROM fr)
-    SELECT doc_id, hint_idx, rel, href, as_attr,
-      CAST(CASE WHEN href LIKE 'http%' OR href LIKE '//%'
-                THEN 1 ELSE 0 END AS INT) AS is_external
-    FROM m
-    """
-
-
-@query("resource_hints", _hints_oracle())
-def resource_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resource-hint extraction (round 4): ``preconnect`` /
-    ``dns-prefetch`` / ``preload`` / ``prefetch`` links are the
-    page's own declaration of its critical third-party origins and
-    its likely next navigation — a crawler uses the origin set for
-    politeness-bucket warmup and the ``prefetch``ed document as a
-    high-prior frontier edge. Extracts every hint link in order with
-    rel, href, the ``as`` type, and an is_external flag (absolute or
-    protocol-relative href); a stylesheet link is planted to pin that
-    non-hint rels emit nothing.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    attribute parses, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<link rel="preconnect" href="https://cdn'),
-            (i % 7).cast("string"),
-            F.lit('.example.com">'
-                  '<link rel="dns-prefetch" href="//stats.example.net">'
-                  "<p>Body "), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<link rel="preload" href="/fonts/f'),
-            (i % 5).cast("string"),
-            F.lit('.woff2" as="font"><p>Body '), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>Body "), ds,
-            F.lit('</p><link rel="prefetch" href="/page/'),
-            (i + 1).cast("string"), F.lit('" as="document">')))
-        .otherwise(F.concat(
-            F.lit('<link rel="stylesheet" href="/s.css"><p>Body '),
-            ds, F.lit("</p>")))
-    )
-    rx = '<link rel="(?:preload|prefetch|preconnect|dns-prefetch)"[^>]*>'
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit(rx), 0)
-        ).alias("hint_idx", "blk"),
-    )
-    b = F.col("blk")
-    href = F.regexp_extract(b, 'href="([^"]+)"', 1)
-    m = fr.select(
-        "doc_id",
-        F.col("hint_idx").cast("long").alias("hint_idx"),
-        F.regexp_extract(b, 'rel="([^"]+)"', 1).alias("rel"),
-        href.alias("href"),
-        F.regexp_extract(b, ' as="([^"]+)"', 1).alias("as_attr"),
-    )
-    h = F.col("href")
-    return m.select(
-        "doc_id", "hint_idx", "rel", "href", "as_attr",
-        F.when(h.startswith("http") | h.startswith("//"), F.lit(1))
-        .otherwise(F.lit(0)).cast("int").alias("is_external"),
-    )
-
-
-def _lazyload_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<img src="/img/a' || CAST(doc_id AS VARCHAR)
-            || '.jpg" alt="hero"><p>Post ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 1 THEN '<img src="/1x1.gif" data-src="/img/b'
-            || CAST(doc_id AS VARCHAR) || '.jpg" class="lazy"><p>Post '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 2 THEN '<p>Post ' || CAST(doc_id AS VARCHAR)
-            || '</p><img loading="lazy" src="/img/c'
-            || CAST(doc_id % 11 AS VARCHAR) || '.png">'
-          ELSE '<img data-src="/img/d' || CAST(doc_id AS VARCHAR)
-            || '.webp" loading="lazy"><img src="/img/logo.png">'
-            || '<p>Post ' || CAST(doc_id AS VARCHAR) || '</p>'
-          END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS img_idx,
-        list_extract(regexp_extract_all(html, '<img[^>]*>', 0), i)
-          AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<img[^>]*>', 0)))) AS g(i)),
-    m AS (
-      SELECT doc_id, img_idx,
-        regexp_extract(blk, ' src="([^"]+)"', 1) AS declared_src,
-        regexp_extract(blk, 'data-src="([^"]+)"', 1) AS data_src,
-        CASE WHEN contains(blk, 'loading="lazy"') THEN 1 ELSE 0 END
-          AS native_lazy
-      FROM fr)
-    SELECT doc_id, img_idx, declared_src, data_src,
-      CASE WHEN data_src <> '' THEN data_src ELSE declared_src END
-        AS effective_src,
-      CASE WHEN data_src <> '' THEN 'data-src'
-           WHEN native_lazy = 1 THEN 'native'
-           ELSE 'eager' END AS lazy_mode
-    FROM m
-    """
-
-
-@query("lazyload_image_extract", _lazyload_oracle())
-def lazyload_image_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy-loaded-image resolution (round 4): image-text pairing
-    over real pages must look past the 1x1 placeholder ``src`` that
-    JS lazy-loaders leave behind — the actual asset lives in
-    ``data-src``. Extracts every ``<img>`` in order, resolves the
-    effective source (``data-src`` wins over ``src``), and labels
-    the loading mode: ``data-src`` (JS lazy), ``native``
-    (``loading="lazy"`` with a real src), or ``eager``. The regexes
-    are anchored so ``data-src=`` never false-matches the bare
-    `` src=`` parse; a page mixing a data-src-only img with an eager
-    logo pins per-image independence.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    parses, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<img src="/img/a'), ds,
-            F.lit('.jpg" alt="hero"><p>Post '), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<img src="/1x1.gif" data-src="/img/b'), ds,
-            F.lit('.jpg" class="lazy"><p>Post '), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>Post "), ds,
-            F.lit('</p><img loading="lazy" src="/img/c'),
-            (i % 11).cast("string"), F.lit('.png">')))
-        .otherwise(F.concat(
-            F.lit('<img data-src="/img/d'), ds,
-            F.lit('.webp" loading="lazy"><img src="/img/logo.png">'
-                  "<p>Post "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit("<img[^>]*>"), 0)
-        ).alias("img_idx", "blk"),
-    )
-    b = F.col("blk")
-    declared = F.regexp_extract(b, ' src="([^"]+)"', 1)
-    dsrc = F.regexp_extract(b, 'data-src="([^"]+)"', 1)
-    m = fr.select(
-        "doc_id",
-        F.col("img_idx").cast("long").alias("img_idx"),
-        declared.alias("declared_src"),
-        dsrc.alias("data_src"),
-        b.contains('loading="lazy"').alias("_native"),
-    )
-    dc = F.col("data_src")
-    return m.select(
-        "doc_id", "img_idx", "declared_src", "data_src",
-        F.when(dc != "", dc).otherwise(F.col("declared_src"))
-        .alias("effective_src"),
-        F.when(dc != "", F.lit("data-src"))
-        .when(F.col("_native"), F.lit("native"))
-        .otherwise(F.lit("eager"))
-        .alias("lazy_mode"),
-    )
-
-
-def _comment_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<!-- wp:paragraph --><p>Body '
-            || CAST(doc_id AS VARCHAR) || '</p><!-- /wp:paragraph -->'
-          WHEN 1 THEN '<!--[if lt IE 9]><script src="/html5shiv.js">'
-            || '</script><![endif]--><p>Old ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 2 THEN '<p>Plain ' || CAST(doc_id AS VARCHAR)
-            || '</p><!-- analytics slot ' || CAST(doc_id % 13 AS VARCHAR)
-            || ' -->'
-          ELSE '<p>Untouched ' || CAST(doc_id AS VARCHAR) || '</p>'
-          END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS comment_idx,
-        trim(list_extract(regexp_extract_all(html, '<!--(.*?)-->', 1),
-          i)) AS body
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<!--(.*?)-->', 1)))) AS g(i))
-    SELECT doc_id, comment_idx, body,
-      CASE WHEN body LIKE '[if%' THEN 'conditional'
-           WHEN body LIKE 'wp:%' OR body LIKE '/wp:%'
-             THEN 'block_marker'
-           ELSE 'plain' END AS kind
-    FROM fr
-    """
-
-
-@query("html_comment_extract", _comment_oracle())
-def html_comment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML-comment extraction (round 4): comments never render but
-    carry high-value structure — CMS block markers (Gutenberg's
-    ``<!-- wp:paragraph -->`` delimits the actual article body),
-    IE conditional blocks (markup that must NOT leak into extracted
-    text), and ad/analytics slot boundaries. Extracts every comment
-    in order, trimmed, and classifies it: ``conditional``
-    (``[if ...]`` downlevel blocks), ``block_marker`` (``wp:`` /
-    ``/wp:`` CMS delimiters), else ``plain``.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    classification, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<!-- wp:paragraph --><p>Body "), ds,
-            F.lit("</p><!-- /wp:paragraph -->")))
-        .when(v == 1, F.concat(
-            F.lit('<!--[if lt IE 9]><script src="/html5shiv.js">'
-                  "</script><![endif]--><p>Old "), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>Plain "), ds, F.lit("</p><!-- analytics slot "),
-            (i % 13).cast("string"), F.lit(" -->")))
-        .otherwise(F.concat(
-            F.lit("<p>Untouched "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit("<!--(.*?)-->"), 1)
-        ).alias("comment_idx", "raw"),
-    )
-    body = F.trim(F.col("raw"))
-    m = fr.select(
-        "doc_id",
-        F.col("comment_idx").cast("long").alias("comment_idx"),
-        body.alias("body"),
-    )
-    b = F.col("body")
-    return m.select(
-        "doc_id", "comment_idx", "body",
-        F.when(b.startswith("[if"), F.lit("conditional"))
-        .when(b.startswith("wp:") | b.startswith("/wp:"),
-              F.lit("block_marker"))
-        .otherwise(F.lit("plain"))
-        .alias("kind"),
-    )
-
-
-def _css_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<style>body{margin:0}p{color:#222}</style>'
-            || '<link rel="stylesheet" href="/a.css"><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<style>@media (max-width:600px)'
-            || '{nav{display:none}}</style><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 2 THEN '<style>@import url("/base'
-            || CAST(doc_id % 7 AS VARCHAR)
-            || '.css");h1{font-size:2em}</style><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          ELSE '<link rel="stylesheet" href="/s1.css">'
-            || '<link rel="stylesheet" href="/s2.css"><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CAST(len(regexp_extract_all(html, '<style>', 0)) AS BIGINT)
-          AS n_style_blocks,
-        coalesce(array_to_string(regexp_extract_all(html,
-          '<style>(.*?)</style>', 1), ''), '') AS css,
-        CAST(len(regexp_extract_all(html, 'rel="stylesheet"', 0))
-          AS BIGINT) AS n_external_sheets
-      FROM p)
-    SELECT doc_id, n_style_blocks,
-      CAST(length(css) - length(replace(css, '{', '')) AS BIGINT)
-        AS n_rules,
-      CAST(len(regexp_extract_all(css, '@media', 0)) AS BIGINT)
-        AS n_media_queries,
-      regexp_extract(css, '@import url\\("([^"]+)"\\)', 1)
-        AS import_url,
-      n_external_sheets
-    FROM m
-    """
-
-
-@query("css_rules_profile", _css_oracle())
-def css_rules_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline-CSS profiling (round 4): the style surface is a crawl
-    and template signal — ``@import`` urls are fetchable resources
-    the link graph misses, media-query count separates responsive
-    templates from legacy ones, and a high inline-rule count with
-    zero external sheets marks generated/parked pages. Per document:
-    style-block count, brace-counted rule count across all blocks,
-    media-query count, the first ``@import url(...)``, and the
-    external-stylesheet link count.
-
-    Scale shape: codegen regexp/replace projection, no explode, no
-    shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<style>body{margin:0}p{color:#222}</style>"
-                  '<link rel="stylesheet" href="/a.css"><p>Doc '),
-            ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit("<style>@media (max-width:600px)"
-                  "{nav{display:none}}</style><p>Doc "),
-            ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit('<style>@import url("/base'),
-            (i % 7).cast("string"),
-            F.lit('.css");h1{font-size:2em}</style><p>Doc '),
-            ds, F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit('<link rel="stylesheet" href="/s1.css">'
-                  '<link rel="stylesheet" href="/s2.css"><p>Doc '),
-            ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    m = p.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(h, F.lit("<style>"), 0))
-        .cast("long").alias("n_style_blocks"),
-        F.array_join(
-            F.regexp_extract_all(h, F.lit("<style>(.*?)</style>"), 1), ""
-        ).alias("css"),
-        F.size(F.regexp_extract_all(h, F.lit('rel="stylesheet"'), 0))
-        .cast("long").alias("n_external_sheets"),
-    )
-    css = F.col("css")
-    return m.select(
-        "doc_id", "n_style_blocks",
-        (F.length(css) - F.length(F.regexp_replace(css, "\\{", "")))
-        .cast("long").alias("n_rules"),
-        F.size(F.regexp_extract_all(css, F.lit("@media"), 0))
-        .cast("long").alias("n_media_queries"),
-        F.regexp_extract(css, '@import url\\("([^"]+)"\\)', 1)
-        .alias("import_url"),
-        "n_external_sheets",
-    )
-
-
-def _contact_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<a href="mailto:info@ex'
-            || CAST(doc_id % 7 AS VARCHAR)
-            || '.com">Email us</a><p>Contact ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 1 THEN '<a href="mailto:Sales@example.com?subject=Quote'
-            || CAST(doc_id AS VARCHAR) || '">Sales</a>'
-            || '<a href="tel:+1-555-01' || CAST(doc_id % 90 AS VARCHAR)
-            || '">Call</a>'
-          WHEN 2 THEN '<p>Support ' || CAST(doc_id AS VARCHAR)
-            || '</p><a href="tel:0800-' || CAST(doc_id % 1000 AS VARCHAR)
-            || '">Ring</a>'
-          ELSE '<a href="/about">About ' || CAST(doc_id AS VARCHAR)
-            || '</a>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS link_idx,
-        list_extract(regexp_extract_all(html,
-          '<a href="(?:mailto|tel):[^"]*"[^>]*>[^<]*</a>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<a href="(?:mailto|tel):[^"]*"[^>]*>[^<]*</a>', 0))))
-        AS g(i)),
-    m AS (
-      SELECT doc_id, link_idx,
-        regexp_extract(blk, 'href="(mailto|tel):([^"]*)"', 1) AS scheme,
-        regexp_extract(blk, 'href="(mailto|tel):([^"]*)"', 2) AS rest,
-        regexp_extract(blk, '>([^<]*)</a>', 1) AS anchor_text
-      FROM fr)
-    SELECT doc_id, link_idx, scheme,
-      CASE WHEN scheme = 'mailto'
-           THEN lower(regexp_replace(rest, '\\?.*$', ''))
-           ELSE regexp_replace(rest, '[^0-9+]', '', 'g') END AS target,
-      anchor_text
-    FROM m
-    """
-
-
-@query("contact_link_extract", _contact_oracle())
-def contact_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contact-link extraction (round 4): ``mailto:`` / ``tel:``
-    anchors identify the page's owning entity — the join key for
-    host->organization rollups, opt-out routing, and PII-aware
-    handling downstream. Extracts every contact anchor in order with
-    its scheme, a normalized target (mailto: lower-cased address,
-    ``?subject=`` query stripped; tel: digits + leading ``+`` only),
-    and the anchor text; a plain navigation link pins zero rows.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    normalization, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<a href="mailto:info@ex'), (i % 7).cast("string"),
-            F.lit('.com">Email us</a><p>Contact '), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<a href="mailto:Sales@example.com?subject=Quote'),
-            ds, F.lit('">Sales</a><a href="tel:+1-555-01'),
-            (i % 90).cast("string"), F.lit('">Call</a>')))
-        .when(v == 2, F.concat(
-            F.lit("<p>Support "), ds,
-            F.lit('</p><a href="tel:0800-'),
-            (i % 1000).cast("string"), F.lit('">Ring</a>')))
-        .otherwise(F.concat(
-            F.lit('<a href="/about">About '), ds, F.lit("</a>")))
-    )
-    rx = '<a href="(?:mailto|tel):[^"]*"[^>]*>[^<]*</a>'
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit(rx), 0)
-        ).alias("link_idx", "blk"),
-    )
-    b = F.col("blk")
-    scheme = F.regexp_extract(b, 'href="(mailto|tel):([^"]*)"', 1)
-    rest = F.regexp_extract(b, 'href="(mailto|tel):([^"]*)"', 2)
-    m = fr.select(
-        "doc_id",
-        F.col("link_idx").cast("long").alias("link_idx"),
-        scheme.alias("scheme"),
-        rest.alias("rest"),
-        F.regexp_extract(b, ">([^<]*)</a>", 1).alias("anchor_text"),
-    )
-    r = F.col("rest")
-    return m.select(
-        "doc_id", "link_idx", "scheme",
-        F.when(
-            F.col("scheme") == "mailto",
-            F.lower(F.regexp_replace(r, "\\?.*$", "")),
-        )
-        .otherwise(F.regexp_replace(r, "[^0-9+]", ""))
-        .alias("target"),
-        "anchor_text",
-    )
-
-
 def _ico_oracle() -> str:
     """Literal-VALUES oracle from the corpus construction (expected
     per-entry RGB pixels + AND-mask popcounts exist before encode —
@@ -7958,63 +4445,284 @@ def ico_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ico_features(base.repartition(8, "img_id"))
 
 
-def _svg_oracle() -> str:
+_SHORTENER_HOSTS = ["bit.ly", "t.co", "tinyurl.com", "goo.gl"]
+
+
+def _shortlink_oracle() -> str:
+    dim = ", ".join(f"('{h}')" for h in _SHORTENER_HOSTS)
+    return f"""
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 4
+          WHEN 0 THEN 'https://bit.ly/x' || CAST(doc_id AS VARCHAR)
+          WHEN 1 THEN 'https://t.co/y' || CAST(doc_id % 999 AS VARCHAR)
+          WHEN 2 THEN 'https://example.com/page'
+            || CAST(doc_id AS VARCHAR)
+          ELSE 'https://tinyurl.com/z' || CAST(doc_id % 77 AS VARCHAR)
+          END AS link
+      FROM documents),
+    m AS (
+      SELECT doc_id, link,
+        regexp_extract(link, '^https?://([^/]+)/', 1) AS host
+      FROM p),
+    dim AS (SELECT * FROM (VALUES {dim}) AS t(sh_host))
+    SELECT m.doc_id, m.link, m.host,
+      CAST(CASE WHEN dim.sh_host IS NULL THEN 0 ELSE 1 END AS INT)
+        AS is_shortener,
+      coalesce(dim.sh_host, '') AS provider
+    FROM m LEFT JOIN dim ON m.host = dim.sh_host
+    """
+
+
+@query("shortlink_detect", _shortlink_oracle())
+def shortlink_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shortener-link detection (round 4): shortened outlinks hide
+    the real target host from the link graph and spam scoring, so
+    the frontier marks them for expansion-time resolution. Joins
+    outlink hosts against the shortener dimension with an EXPLICIT
+    broadcast (the dim is tiny and static — this must never shuffle
+    the corpus side); left join keeps non-shortened links with a
+    zero flag.
+
+    Scale shape: codegen host parse + one BroadcastHashJoin (corpus
+    side streams, no shuffle, no sort).
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 4
+    link = (
+        F.when(v == 0, F.concat(
+            F.lit("https://bit.ly/x"), i.cast("string")))
+        .when(v == 1, F.concat(
+            F.lit("https://t.co/y"), (i % 999).cast("string")))
+        .when(v == 2, F.concat(
+            F.lit("https://example.com/page"), i.cast("string")))
+        .otherwise(F.concat(
+            F.lit("https://tinyurl.com/z"), (i % 77).cast("string")))
+    )
+    m = d.select("doc_id", link.alias("link")).withColumn(
+        "host", F.regexp_extract(F.col("link"), "^https?://([^/]+)/", 1)
+    )
+    dim = F.broadcast(
+        m.sparkSession.createDataFrame(
+            [(h,) for h in _SHORTENER_HOSTS], "sh_host string"
+        )
+    )
+    j = m.join(dim, m.host == dim.sh_host, "left")
+    return j.select(
+        "doc_id", "link", "host",
+        F.when(F.col("sh_host").isNull(), F.lit(0)).otherwise(F.lit(1))
+        .cast("int").alias("is_shortener"),
+        F.coalesce(F.col("sh_host"), F.lit("")).alias("provider"),
+    )
+
+
+def _domdepth_oracle() -> str:
     return """
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 4
-          WHEN 0 THEN '<svg viewBox="0 0 24 24"><path d="M0 0h24v24z"/>'
-            || '<path d="M2 2l3 3"/></svg><p>Icon doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<svg viewBox="0 0 100 50">'
-            || '<rect width="100" height="50"/><circle r="5"/>'
-            || '<text>Chart ' || CAST(doc_id % 9 AS VARCHAR)
-            || '</text></svg><p>Report ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 2 THEN '<p>No vector art ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          ELSE '<svg viewBox="0 0 ' || CAST(8 + doc_id % 5 AS VARCHAR)
-            || ' ' || CAST(6 + doc_id % 3 AS VARCHAR)
-            || '"><circle r="2"/><circle r="3"/></svg><p>Badge '
-            || CAST(doc_id AS VARCHAR) || '</p>' END AS html
+          WHEN 0 THEN '<div><p>a</p><div><span>b'
+            || CAST(doc_id AS VARCHAR) || '</span></div></div>'
+          WHEN 1 THEN '<p>x' || CAST(doc_id AS VARCHAR)
+            || '</p><p>y</p>'
+          WHEN 2 THEN repeat('<div>', CAST(1 + doc_id % 4 AS INT))
+            || '<b>deep ' || CAST(doc_id AS VARCHAR) || '</b>'
+            || repeat('</div>', CAST(1 + doc_id % 4 AS INT))
+          ELSE '<p>only ' || CAST(doc_id AS VARCHAR) || '</p>'
+          END AS html
       FROM documents),
-    m AS (
-      SELECT doc_id, html,
-        regexp_extract(html,
-          'viewBox="0 0 ([0-9]+) ([0-9]+)"', 1) AS vw,
-        regexp_extract(html,
-          'viewBox="0 0 ([0-9]+) ([0-9]+)"', 2) AS vh
-      FROM p)
+    tags AS (
+      SELECT doc_id, CAST(i - 1 AS BIGINT) AS tag_idx,
+        list_extract(regexp_extract_all(html, '</?[a-z]+>', 0), i)
+          AS tag
+      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
+        '</?[a-z]+>', 0)))) AS g(i)),
+    d AS (
+      SELECT doc_id, tag_idx,
+        sum(CASE WHEN tag LIKE '</%' THEN -1 ELSE 1 END)
+          OVER (PARTITION BY doc_id ORDER BY tag_idx
+                ROWS UNBOUNDED PRECEDING) AS depth
+      FROM tags)
     SELECT doc_id,
-      CAST(CASE WHEN contains(html, '<svg ') THEN 1 ELSE 0 END AS INT)
-        AS has_svg,
-      CAST(CASE WHEN vw = '' THEN 0 ELSE CAST(vw AS BIGINT) END
-        AS BIGINT) AS viewbox_w,
-      CAST(CASE WHEN vh = '' THEN 0 ELSE CAST(vh AS BIGINT) END
-        AS BIGINT) AS viewbox_h,
-      CAST(len(regexp_extract_all(html, '<path ', 0)) AS BIGINT)
-        AS n_paths,
-      CAST(len(regexp_extract_all(html, '<rect ', 0)) AS BIGINT)
-        AS n_rects,
-      CAST(len(regexp_extract_all(html, '<circle ', 0)) AS BIGINT)
-        AS n_circles,
-      regexp_extract(html, '<text>([^<]*)</text>', 1) AS svg_text
-    FROM m
+      CAST(max(depth) AS BIGINT) AS max_depth,
+      CAST(count(*) AS BIGINT) AS n_tags
+    FROM d GROUP BY doc_id
     """
 
 
-@query("svg_features", _svg_oracle())
-def svg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline-SVG profiling (round 4): vector markup is text the
-    extractor must NOT emit (the shared SKIP_TAGS fence already drops
-    it from body text — functions/html_extract.py) but is itself a
-    signal: icon-only SVGs mark template chrome, chart-like SVGs
-    (rects + a <text> label) mark data figures worth pairing with
-    their caption. Per document: svg presence, viewBox dimensions,
-    path/rect/circle shape counts, and the first ``<text>`` content.
+@query("dom_depth_profile", _domdepth_oracle())
+def dom_depth_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DOM nesting-depth profiling (round 4): maximum tag-nesting
+    depth is a classic template/quality discriminator — hand-written
+    article pages sit around depth 10-15 while framework-generated
+    chrome nests 30+ — and a balance check (the running depth) flags
+    truncated fetches. Computes the running open-minus-close depth
+    per document in tag order and reduces to (max_depth, n_tags);
+    a repeat-built variable-depth chain pins depths beyond the
+    literal fixtures.
 
-    Scale shape: pure codegen regexp/contains projection, no explode,
-    no shuffle.
+    Scale shape: tag explode -> running sum over a PER-DOCUMENT
+    window (keys uniform, each partition is one page's tag list —
+    bounded) -> hash aggregation on doc_id; one shuffle on the
+    window/group key.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    ds = i.cast("string")
+    v = i % 4
+    k = (1 + i % 4).cast("int")
+    html = (
+        F.when(v == 0, F.concat(
+            F.lit("<div><p>a</p><div><span>b"), ds,
+            F.lit("</span></div></div>")))
+        .when(v == 1, F.concat(
+            F.lit("<p>x"), ds, F.lit("</p><p>y</p>")))
+        .when(v == 2, F.concat(
+            F.repeat(F.lit("<div>"), k),
+            F.lit("<b>deep "), ds, F.lit("</b>"),
+            F.repeat(F.lit("</div>"), k)))
+        .otherwise(F.concat(F.lit("<p>only "), ds, F.lit("</p>")))
+    )
+    p = d.select("doc_id", html.alias("html"))
+    tags = p.select(
+        "doc_id",
+        F.posexplode(
+            F.regexp_extract_all(F.col("html"), F.lit("</?[a-z]+>"), 0)
+        ).alias("tag_idx", "tag"),
+    )
+    from pyspark.sql import Window
+
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("tag_idx")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    delta = F.when(F.col("tag").startswith("</"), F.lit(-1)).otherwise(
+        F.lit(1)
+    )
+    depths = tags.select(
+        "doc_id", F.sum(delta).over(w).alias("depth")
+    )
+    return depths.groupBy("doc_id").agg(
+        F.max("depth").cast("long").alias("max_depth"),
+        F.count("*").cast("long").alias("n_tags"),
+    )
+
+
+def _synd_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN 'Wire story ' || CAST(doc_id % 37 AS VARCHAR)
+          WHEN 1 THEN 'Unique take ' || CAST(doc_id AS VARCHAR)
+          ELSE 'Local news ' || CAST(doc_id % 91 AS VARCHAR)
+          END AS title,
+        'h' || CAST(doc_id % 50 AS VARCHAR) || '.ex.com' AS host
+      FROM documents)
+    SELECT title,
+      CAST(count(*) AS BIGINT) AS n_docs,
+      CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
+      CAST(min(doc_id) AS BIGINT) AS min_doc
+    FROM p GROUP BY title HAVING count(*) > 1
+    """
+
+
+@query("syndication_title_groups", _synd_oracle())
+def syndication_title_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Syndication grouping (round 4): wire copy republishes the SAME
+    headline across dozens of hosts — the exact-title group with its
+    distinct-host spread separates syndication (many hosts) from a
+    prolific single site (one host), feeding the dedup keeper policy
+    and per-host originality priors. Groups titles with doc counts,
+    distinct-host counts, and a stable min-doc representative,
+    keeping only actual groups.
+
+    Scale shape: ONE hash aggregation on title; the distinct-host
+    count plans the standard two-phase partial-distinct expand —
+    map-side combine still collapses duplicate (title, host) pairs
+    before the shuffle; HAVING prunes singletons post-agg.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 3
+    title = (
+        F.when(v == 0, F.concat(
+            F.lit("Wire story "), (i % 37).cast("string")))
+        .when(v == 1, F.concat(F.lit("Unique take "), i.cast("string")))
+        .otherwise(F.concat(
+            F.lit("Local news "), (i % 91).cast("string")))
+    )
+    host = F.concat(
+        F.lit("h"), (i % 50).cast("string"), F.lit(".ex.com")
+    )
+    p = d.select(
+        "doc_id", title.alias("title"), host.alias("host")
+    )
+    g = p.groupBy("title").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.countDistinct("host").cast("long").alias("n_hosts"),
+        F.min("doc_id").cast("long").alias("min_doc"),
+    )
+    return g.filter(F.col("n_docs") > 1)
+
+
+def _footnote_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 4
+          WHEN 0 THEN '<p>Claim A<sup><a href="#fn1">1</a></sup> and '
+            || 'claim B<sup><a href="#fn2">2</a></sup>.</p>'
+            || '<li id="fn1">Source alpha '
+            || CAST(doc_id % 9 AS VARCHAR) || '</li>'
+            || '<li id="fn2">Source beta</li>'
+          WHEN 1 THEN '<p>One claim<sup><a href="#fn1">1</a></sup>.'
+            || '</p><li id="fn1">Lone source '
+            || CAST(doc_id % 5 AS VARCHAR) || '</li>'
+          WHEN 2 THEN '<p>Footnote-free text '
+            || CAST(doc_id AS VARCHAR) || '</p>'
+          ELSE '<p>Dangling ref<sup><a href="#fn9">9</a></sup>.</p>'
+            || '<li id="fn1">Orphan note '
+            || CAST(doc_id AS VARCHAR) || '</li>' END AS html
+      FROM documents),
+    refs AS (
+      SELECT doc_id, CAST(i - 1 AS BIGINT) AS ref_idx,
+        list_extract(regexp_extract_all(html,
+          '<a href="#(fn[0-9]+)">', 1), i) AS fn_id
+      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
+        '<a href="#(fn[0-9]+)">', 1)))) AS g(i)),
+    defs AS (
+      SELECT doc_id,
+        list_extract(regexp_extract_all(html,
+          '<li id="(fn[0-9]+)">', 1), i) AS fn_id,
+        list_extract(regexp_extract_all(html,
+          '<li id="fn[0-9]+">([^<]*)</li>', 1), i) AS note
+      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
+        '<li id="(fn[0-9]+)">', 1)))) AS g(i))
+    SELECT r.doc_id, r.ref_idx, r.fn_id,
+      coalesce(d.note, '') AS note,
+      CAST(CASE WHEN d.note IS NULL THEN 0 ELSE 1 END AS INT)
+        AS resolved
+    FROM refs r LEFT JOIN defs d
+      ON r.doc_id = d.doc_id AND r.fn_id = d.fn_id
+    """
+
+
+@query("footnote_extract", _footnote_oracle())
+def footnote_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Footnote resolution (round 4): superscript references and
+    their note definitions live far apart in the DOM — flat
+    extraction orphans both; joining them restores (claim-site,
+    citation) pairs, the provenance structure attribution pipelines
+    want. Extracts in-page ``#fnN`` references and ``<li id=fnN>``
+    definitions separately and LEFT-joins on (doc, footnote id);
+    a dangling reference pins the unresolved row.
+
+    Scale shape: two explodes off the same scan + one equi-join on
+    the composite (doc_id, fn_id) key — co-partitioned, uniform,
+    per-doc groups are tiny; no window, no skew.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
@@ -8022,517 +4730,214 @@ def svg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = i % 4
     html = (
         F.when(v == 0, F.concat(
-            F.lit('<svg viewBox="0 0 24 24"><path d="M0 0h24v24z"/>'
-                  '<path d="M2 2l3 3"/></svg><p>Icon doc '),
-            ds, F.lit("</p>")))
+            F.lit('<p>Claim A<sup><a href="#fn1">1</a></sup> and '
+                  'claim B<sup><a href="#fn2">2</a></sup>.</p>'
+                  '<li id="fn1">Source alpha '),
+            (i % 9).cast("string"),
+            F.lit('</li><li id="fn2">Source beta</li>')))
         .when(v == 1, F.concat(
-            F.lit('<svg viewBox="0 0 100 50">'
-                  '<rect width="100" height="50"/><circle r="5"/>'
-                  "<text>Chart "), (i % 9).cast("string"),
-            F.lit("</text></svg><p>Report "), ds, F.lit("</p>")))
+            F.lit('<p>One claim<sup><a href="#fn1">1</a></sup>.</p>'
+                  '<li id="fn1">Lone source '),
+            (i % 5).cast("string"), F.lit("</li>")))
         .when(v == 2, F.concat(
-            F.lit("<p>No vector art "), ds, F.lit("</p>")))
+            F.lit("<p>Footnote-free text "), ds, F.lit("</p>")))
         .otherwise(F.concat(
-            F.lit('<svg viewBox="0 0 '), (8 + i % 5).cast("string"),
-            F.lit(" "), (6 + i % 3).cast("string"),
-            F.lit('"><circle r="2"/><circle r="3"/></svg><p>Badge '),
-            ds, F.lit("</p>")))
+            F.lit('<p>Dangling ref<sup><a href="#fn9">9</a></sup>.'
+                  '</p><li id="fn1">Orphan note '), ds,
+            F.lit("</li>")))
     )
     p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    vw = F.regexp_extract(h, 'viewBox="0 0 ([0-9]+) ([0-9]+)"', 1)
-    vh = F.regexp_extract(h, 'viewBox="0 0 ([0-9]+) ([0-9]+)"', 2)
-    return p.select(
-        "doc_id",
-        F.when(h.contains("<svg "), F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("has_svg"),
-        F.when(vw == "", F.lit(0)).otherwise(vw.cast("long"))
-        .cast("long").alias("viewbox_w"),
-        F.when(vh == "", F.lit(0)).otherwise(vh.cast("long"))
-        .cast("long").alias("viewbox_h"),
-        F.size(F.regexp_extract_all(h, F.lit("<path "), 0))
-        .cast("long").alias("n_paths"),
-        F.size(F.regexp_extract_all(h, F.lit("<rect "), 0))
-        .cast("long").alias("n_rects"),
-        F.size(F.regexp_extract_all(h, F.lit("<circle "), 0))
-        .cast("long").alias("n_circles"),
-        F.regexp_extract(h, "<text>([^<]*)</text>", 1).alias("svg_text"),
-    )
-
-
-def _link_header_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'Link: </page/' || CAST(doc_id + 1 AS VARCHAR)
-            || '>; rel="next", </page/' || CAST(doc_id - 1 AS VARCHAR)
-            || '>; rel="prev"'
-          WHEN 1 THEN 'Link: <https://example.com/canon/'
-            || CAST(doc_id % 50 AS VARCHAR) || '>; rel="canonical"'
-          WHEN 2 THEN 'Link: </api/items?page='
-            || CAST(doc_id % 7 AS VARCHAR) || '>; rel="next"; title="p'
-            || CAST(doc_id % 7 AS VARCHAR) || '"'
-          ELSE 'Content-Type: text/html' END AS headers
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS link_idx,
-        list_extract(regexp_extract_all(headers,
-          '<[^>]+>; rel="[a-z]+"', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(headers,
-        '<[^>]+>; rel="[a-z]+"', 0)))) AS g(i))
-    SELECT doc_id, link_idx,
-      regexp_extract(blk, '<([^>]+)>', 1) AS href,
-      regexp_extract(blk, 'rel="([a-z]+)"', 1) AS rel
-    FROM fr
-    """
-
-
-@query("http_link_header_parse", _link_header_oracle())
-def http_link_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 8288 ``Link:`` response-header parsing (round 4): the
-    transport-level twin of the HTML ``rel=next/prev`` chain — API
-    endpoints and many CMSes declare pagination and canonical urls
-    ONLY in headers, so the frontier and canonical-election stages
-    need this parse alongside the DOM one. Extracts every
-    ``<target>; rel="..."`` pair in header order (extra parameters
-    like ``title=`` tolerated); a header block with no Link line pins
-    zero rows.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen parses,
-    no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    headers = (
-        F.when(v == 0, F.concat(
-            F.lit("Link: </page/"), (i + 1).cast("string"),
-            F.lit('>; rel="next", </page/'), (i - 1).cast("string"),
-            F.lit('>; rel="prev"')))
-        .when(v == 1, F.concat(
-            F.lit("Link: <https://example.com/canon/"),
-            (i % 50).cast("string"), F.lit('>; rel="canonical"')))
-        .when(v == 2, F.concat(
-            F.lit("Link: </api/items?page="), (i % 7).cast("string"),
-            F.lit('>; rel="next"; title="p'), (i % 7).cast("string"),
-            F.lit('"')))
-        .otherwise(F.lit("Content-Type: text/html"))
-    )
-    p = d.select("doc_id", headers.alias("headers"))
-    fr = p.select(
+    refs = p.select(
         "doc_id",
         F.posexplode(
             F.regexp_extract_all(
-                F.col("headers"), F.lit('<[^>]+>; rel="[a-z]+"'), 0
+                F.col("html"), F.lit('<a href="#(fn[0-9]+)">'), 1
             )
-        ).alias("link_idx", "blk"),
-    )
-    b = F.col("blk")
-    return fr.select(
+        ).alias("ref_idx", "fn_id"),
+    ).select(
         "doc_id",
-        F.col("link_idx").cast("long").alias("link_idx"),
-        F.regexp_extract(b, "<([^>]+)>", 1).alias("href"),
-        F.regexp_extract(b, 'rel="([a-z]+)"', 1).alias("rel"),
+        F.col("ref_idx").cast("long").alias("ref_idx"),
+        "fn_id",
+    )
+    defs = p.select(
+        "doc_id",
+        F.explode(
+            F.arrays_zip(
+                F.regexp_extract_all(
+                    F.col("html"), F.lit('<li id="(fn[0-9]+)">'), 1
+                ),
+                F.regexp_extract_all(
+                    F.col("html"),
+                    F.lit('<li id="fn[0-9]+">([^<]*)</li>'), 1
+                ),
+            )
+        ).alias("z"),
+    ).select(
+        F.col("doc_id").alias("d_doc_id"),
+        F.col("z.0").alias("d_fn_id"),
+        F.col("z.1").alias("note"),
+    )
+    j = refs.join(
+        defs,
+        (refs.doc_id == defs.d_doc_id) & (refs.fn_id == defs.d_fn_id),
+        "left",
+    )
+    return j.select(
+        "doc_id", "ref_idx", "fn_id",
+        F.coalesce(F.col("note"), F.lit("")).alias("note"),
+        F.when(F.col("note").isNull(), F.lit(0)).otherwise(F.lit(1))
+        .cast("int").alias("resolved"),
     )
 
 
-def _price_oracle() -> str:
-    return """
+def _isbn_oracle() -> str:
+    terms = " + ".join(
+        f"CAST(substr(d12, {k}, 1) AS INT) * {1 if k % 2 == 1 else 3}"
+        for k in range(1, 13)
+    )
+    return f"""
     WITH p AS (
       SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'Now only $12.'
-            || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0')
-            || ' was $20.00 today'
-          WHEN 1 THEN 'Price: ' || chr(8364) || '1.299,'
-            || CAST(doc_id % 10 AS VARCHAR) || '9 incl. VAT'
-          WHEN 2 THEN 'Just ' || chr(163)
-            || CAST(doc_id % 90 + 5 AS VARCHAR) || ' flat'
-          ELSE 'costs nothing, item ' || CAST(doc_id AS VARCHAR)
-          END AS text
+        CASE doc_id % 3
+          WHEN 0 THEN 'Buy ISBN 978-'
+            || lpad(CAST((doc_id * 7) % 1000000000 AS VARCHAR), 9, '0')
+            || '-' || CAST(doc_id % 10 AS VARCHAR) || ' today.'
+          WHEN 1 THEN 'Journal ISBN 979-'
+            || lpad(CAST((doc_id * 13) % 1000000000 AS VARCHAR), 9, '0')
+            || '-' || CAST(doc_id % 10 AS VARCHAR) || ' print.'
+          ELSE 'No identifier in doc ' || CAST(doc_id AS VARCHAR) || '.'
+        END AS text
       FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS price_idx,
-        list_extract(regexp_extract_all(text,
-          '[$' || chr(8364) || chr(163) || '][0-9][0-9.,]*', 0), i)
-          AS raw
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(text,
-        '[$' || chr(8364) || chr(163) || '][0-9][0-9.,]*', 0))))
-        AS g(i)),
     m AS (
-      SELECT doc_id, price_idx, raw,
-        CASE WHEN raw LIKE '$%' THEN 'USD'
-             WHEN raw LIKE chr(8364) || '%' THEN 'EUR'
-             ELSE 'GBP' END AS currency,
-        CASE WHEN raw LIKE chr(8364) || '%'
-             THEN replace(replace(substr(raw, 2), '.', ''), ',', '.')
-             ELSE replace(substr(raw, 2), ',', '') END AS norm
-      FROM fr)
-    SELECT doc_id, price_idx, raw, currency,
-      CAST(CAST(norm AS DECIMAL(18,2)) * 100 AS BIGINT) AS amount_cents
-    FROM m
+      SELECT doc_id,
+        regexp_extract(text, 'ISBN ([0-9]{{3}})-([0-9]{{9}})-([0-9])', 1)
+          AS g1,
+        regexp_extract(text, 'ISBN ([0-9]{{3}})-([0-9]{{9}})-([0-9])', 2)
+          AS g2,
+        regexp_extract(text, 'ISBN ([0-9]{{3}})-([0-9]{{9}})-([0-9])', 3)
+          AS g3
+      FROM p),
+    d AS (
+      SELECT doc_id, g1 || g2 AS d12, CAST(g3 AS INT) AS claimed_check
+      FROM m WHERE g1 <> '')
+    SELECT doc_id, d12 || CAST(claimed_check AS VARCHAR) AS isbn13,
+      claimed_check,
+      CAST((10 - ({terms}) % 10) % 10 AS INT) AS computed_check,
+      CAST(CASE WHEN (10 - ({terms}) % 10) % 10 = claimed_check
+           THEN 1 ELSE 0 END AS INT) AS valid
+    FROM d
     """
 
 
-@query("price_extract", _price_oracle())
-def price_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price extraction (round 4): commerce pages dominate the crawl
-    tail, and a normalized price is both a boilerplate cue (price
-    grids mark listing chrome) and the join key for product-dedup
-    across mirrors. Extracts every currency-symbol amount in order
-    and normalizes locale: US/UK ``1,299.99`` (comma thousands) and
-    EU ``1.299,99`` (dot thousands, comma decimals) both land in
-    exact integer cents via a DECIMAL cast — no float rounding. A
-    two-price sentence (sale vs was) pins multi-match order.
+@query("isbn_validate_extract", _isbn_oracle())
+def isbn_validate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ISBN-13 extraction + checksum audit (round 4): book/journal
+    identifiers in prose anchor citation graphs and catalog joins,
+    but scraped pages carry typos — the mod-10 weighted checksum
+    (weights 1,3 alternating; ISO 2108) separates usable identifiers
+    from corrupted ones without any external catalog. The corpus
+    plants 978-/979- prefixed candidates whose claimed check digit is
+    the doc_id residue, so valid and invalid rows interleave
+    deterministically; an identifier-free page pins zero rows.
 
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    normalization, no shuffle.
+    Scale shape: one regexp + a 12-term fixed projection, no shuffle;
+    rides the extraction scan.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
-    v = i % 4
-    eur, gbp = "€", "£"
+    ds = i.cast("string")
+    v = i % 3
     text = (
         F.when(v == 0, F.concat(
-            F.lit("Now only $12."),
-            F.lpad((i % 100).cast("string"), 2, "0"),
-            F.lit(" was $20.00 today")))
+            F.lit("Buy ISBN 978-"),
+            F.lpad(((i * 7) % 1000000000).cast("string"), 9, "0"),
+            F.lit("-"), (i % 10).cast("string"), F.lit(" today.")))
         .when(v == 1, F.concat(
-            F.lit("Price: " + eur + "1.299,"),
-            (i % 10).cast("string"), F.lit("9 incl. VAT")))
-        .when(v == 2, F.concat(
-            F.lit("Just " + gbp), (i % 90 + 5).cast("string"),
-            F.lit(" flat")))
+            F.lit("Journal ISBN 979-"),
+            F.lpad(((i * 13) % 1000000000).cast("string"), 9, "0"),
+            F.lit("-"), (i % 10).cast("string"), F.lit(" print.")))
         .otherwise(F.concat(
-            F.lit("costs nothing, item "), i.cast("string")))
+            F.lit("No identifier in doc "), ds, F.lit(".")))
     )
+    rx = "ISBN ([0-9]{3})-([0-9]{9})-([0-9])"
     p = d.select("doc_id", text.alias("text"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("text"),
-                F.lit("[$" + eur + gbp + "][0-9][0-9.,]*"), 0
-            )
-        ).alias("price_idx", "raw"),
-    )
-    raw = F.col("raw")
-    body = F.substring(raw, 2, 1000)
-    m = fr.select(
-        "doc_id",
-        F.col("price_idx").cast("long").alias("price_idx"),
-        "raw",
-        F.when(raw.startswith("$"), F.lit("USD"))
-        .when(raw.startswith(eur), F.lit("EUR"))
-        .otherwise(F.lit("GBP"))
-        .alias("currency"),
-        F.when(
-            raw.startswith(eur),
-            F.regexp_replace(
-                F.regexp_replace(body, "\\.", ""), ",", "."
-            ),
-        )
-        .otherwise(F.regexp_replace(body, ",", ""))
-        .alias("norm"),
-    )
-    return m.select(
-        "doc_id", "price_idx", "raw", "currency",
-        (F.col("norm").cast("decimal(18,2)") * 100)
-        .cast("long").alias("amount_cents"),
-    )
-
-
-def _faq_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<details><summary>What is plan '
-            || CAST(doc_id % 9 AS VARCHAR) || '?</summary><p>It is tier '
-            || CAST(doc_id % 9 AS VARCHAR) || '.</p></details>'
-            || '<details><summary>How to cancel?</summary>'
-            || '<p>Email support ' || CAST(doc_id % 7 AS VARCHAR)
-            || '.</p></details>'
-          WHEN 1 THEN '<div itemtype="https://schema.org/Question">'
-            || '<h3 itemprop="name">Why ' || CAST(doc_id % 13 AS VARCHAR)
-            || '?</h3><div itemprop="acceptedAnswer"><p>Because '
-            || CAST(doc_id % 13 AS VARCHAR) || '.</p></div></div>'
-          WHEN 2 THEN '<p>No questions here '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          ELSE '<details><summary>Is item '
-            || CAST(doc_id AS VARCHAR) || ' in stock?</summary>'
-            || '<p>Ships in ' || CAST(doc_id % 5 AS VARCHAR)
-            || ' days.</p></details>' END AS html
-      FROM documents),
-    det AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS pair_idx,
-        list_extract(regexp_extract_all(html,
-          '<details><summary>.*?</p></details>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<details><summary>.*?</p></details>', 0)))) AS g(i)),
-    d_pairs AS (
-      SELECT doc_id, pair_idx,
-        regexp_extract(blk, '<summary>([^<]+)</summary>', 1)
-          AS question,
-        regexp_extract(blk, '<p>([^<]+)</p>', 1) AS answer,
-        'details' AS source
-      FROM det),
-    s_pairs AS (
-      SELECT doc_id, CAST(0 AS BIGINT) AS pair_idx,
-        regexp_extract(html,
-          '<h3 itemprop="name">([^<]+)</h3>', 1) AS question,
-        regexp_extract(html,
-          'acceptedAnswer"><p>([^<]+)</p>', 1) AS answer,
-        'schema' AS source
-      FROM p
-      WHERE contains(html, 'schema.org/Question'))
-    SELECT * FROM d_pairs UNION ALL SELECT * FROM s_pairs
-    """
-
-
-@query("faq_pair_mining", _faq_oracle())
-def faq_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FAQ question-answer mining (round 4): explicit Q/A markup is
-    the highest-precision instruction-tuning pair source on the open
-    web. Mines two declarations — ``<details>/<summary>`` disclosure
-    blocks (per-block, in order) and schema.org ``Question`` /
-    ``acceptedAnswer`` microdata — into (question, answer, source)
-    rows; a multi-details page pins pair ordering and a no-question
-    page pins zero rows.
-
-    Scale shape: regexp explode for details + a filtered projection
-    for schema, unioned; union is narrow (no shuffle), everything
-    codegen.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<details><summary>What is plan "),
-            (i % 9).cast("string"),
-            F.lit("?</summary><p>It is tier "), (i % 9).cast("string"),
-            F.lit(".</p></details><details><summary>How to cancel?"
-                  "</summary><p>Email support "), (i % 7).cast("string"),
-            F.lit(".</p></details>")))
-        .when(v == 1, F.concat(
-            F.lit('<div itemtype="https://schema.org/Question">'
-                  '<h3 itemprop="name">Why '), (i % 13).cast("string"),
-            F.lit('?</h3><div itemprop="acceptedAnswer"><p>Because '),
-            (i % 13).cast("string"), F.lit(".</p></div></div>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>No questions here "), ds, F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit("<details><summary>Is item "), ds,
-            F.lit(" in stock?</summary><p>Ships in "),
-            (i % 5).cast("string"), F.lit(" days.</p></details>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    det = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"),
-                F.lit("<details><summary>.*?</p></details>"), 0
-            )
-        ).alias("pair_idx", "blk"),
-    )
-    b = F.col("blk")
-    d_pairs = det.select(
-        "doc_id",
-        F.col("pair_idx").cast("long").alias("pair_idx"),
-        F.regexp_extract(b, "<summary>([^<]+)</summary>", 1)
-        .alias("question"),
-        F.regexp_extract(b, "<p>([^<]+)</p>", 1).alias("answer"),
-        F.lit("details").alias("source"),
-    )
-    h = F.col("html")
-    s_pairs = p.filter(h.contains("schema.org/Question")).select(
-        "doc_id",
-        F.lit(0).cast("long").alias("pair_idx"),
-        F.regexp_extract(h, '<h3 itemprop="name">([^<]+)</h3>', 1)
-        .alias("question"),
-        F.regexp_extract(h, 'acceptedAnswer"><p>([^<]+)</p>', 1)
-        .alias("answer"),
-        F.lit("schema").alias("source"),
-    )
-    return d_pairs.unionByName(s_pairs)
-
-
-def _ogcard_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<meta property="og:type" content="article">'
-            || '<meta property="og:image" content="https://img.ex.com/o'
-            || CAST(doc_id AS VARCHAR) || '.jpg">'
-            || '<meta name="twitter:card" content="summary_large_image">'
-            || '<meta property="og:site_name" content="Example News">'
-          WHEN 1 THEN '<meta property="og:type" content="video.other">'
-            || '<meta name="twitter:card" content="player">'
-          WHEN 2 THEN '<meta property="og:image" content="/rel/img'
-            || CAST(doc_id % 11 AS VARCHAR) || '.png">'
-          ELSE '<p>No social card ' || CAST(doc_id AS VARCHAR)
-            || '</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        regexp_extract(html,
-          '<meta property="og:type" content="([^"]+)"', 1) AS og_type,
-        regexp_extract(html,
-          '<meta property="og:image" content="([^"]+)"', 1) AS og_image,
-        regexp_extract(html,
-          '<meta name="twitter:card" content="([^"]+)"', 1)
-          AS twitter_card,
-        regexp_extract(html,
-          '<meta property="og:site_name" content="([^"]+)"', 1)
-          AS og_site_name
-      FROM p)
-    SELECT doc_id, og_type, og_image, twitter_card, og_site_name,
-      CAST((CASE WHEN og_type <> '' THEN 1 ELSE 0 END)
-         + (CASE WHEN og_image <> '' THEN 1 ELSE 0 END)
-         + (CASE WHEN twitter_card <> '' THEN 1 ELSE 0 END)
-         + (CASE WHEN og_site_name <> '' THEN 1 ELSE 0 END) AS BIGINT)
-        AS completeness,
-      CAST(CASE WHEN og_image LIKE 'http%' THEN 1 ELSE 0 END AS INT)
-        AS image_absolute
-    FROM m
-    """
-
-
-@query("opengraph_card_extract", _ogcard_oracle())
-def opengraph_card_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Social-card metadata (round 4): OpenGraph/Twitter-card tags are
-    curated-by-the-publisher summaries — og:image is the page's own
-    pick of its representative image (the image-text pairing prior),
-    og:type separates articles from video/product shells, and card
-    completeness correlates with editorial quality. Extracts the four
-    card fields, a completeness count, and whether og:image is an
-    absolute url (relative ones need base resolution before fetch).
-
-    Scale shape: pure codegen regexp projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<meta property="og:type" content="article">'
-                  '<meta property="og:image" '
-                  'content="https://img.ex.com/o'), ds,
-            F.lit('.jpg"><meta name="twitter:card" '
-                  'content="summary_large_image">'
-                  '<meta property="og:site_name" '
-                  'content="Example News">')))
-        .when(v == 1, F.lit(
-            '<meta property="og:type" content="video.other">'
-            '<meta name="twitter:card" content="player">'))
-        .when(v == 2, F.concat(
-            F.lit('<meta property="og:image" content="/rel/img'),
-            (i % 11).cast("string"), F.lit('.png">')))
-        .otherwise(F.concat(
-            F.lit("<p>No social card "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    og_type = F.regexp_extract(
-        h, '<meta property="og:type" content="([^"]+)"', 1
-    )
-    og_image = F.regexp_extract(
-        h, '<meta property="og:image" content="([^"]+)"', 1
-    )
-    tw = F.regexp_extract(
-        h, '<meta name="twitter:card" content="([^"]+)"', 1
-    )
-    site = F.regexp_extract(
-        h, '<meta property="og:site_name" content="([^"]+)"', 1
-    )
     m = p.select(
         "doc_id",
-        og_type.alias("og_type"),
-        og_image.alias("og_image"),
-        tw.alias("twitter_card"),
-        site.alias("og_site_name"),
-    )
-
-    def present(c):
-        return F.when(F.col(c) != "", F.lit(1)).otherwise(F.lit(0))
-
+        F.regexp_extract("text", rx, 1).alias("g1"),
+        F.regexp_extract("text", rx, 2).alias("g2"),
+        F.regexp_extract("text", rx, 3).alias("g3"),
+    ).where(F.col("g1") != "")
+    d12 = F.concat("g1", "g2")
+    wsum = None
+    for k in range(1, 13):
+        term = F.substring(d12, k, 1).cast("int") * (1 if k % 2 == 1 else 3)
+        wsum = term if wsum is None else wsum + term
+    computed = (10 - wsum % 10) % 10
     return m.select(
-        "doc_id", "og_type", "og_image", "twitter_card", "og_site_name",
-        (present("og_type") + present("og_image")
-         + present("twitter_card") + present("og_site_name"))
-        .cast("long").alias("completeness"),
-        F.when(F.col("og_image").startswith("http"), F.lit(1))
-        .otherwise(F.lit(0)).cast("int").alias("image_absolute"),
+        "doc_id",
+        F.concat(d12, F.col("g3")).alias("isbn13"),
+        F.col("g3").cast("int").alias("claimed_check"),
+        computed.cast("int").alias("computed_check"),
+        F.when(computed == F.col("g3").cast("int"), F.lit(1))
+        .otherwise(F.lit(0)).cast("int").alias("valid"),
     )
 
 
-def _forum_oracle() -> str:
+def _analytics_oracle() -> str:
     return """
     WITH p AS (
       SELECT doc_id,
         CASE doc_id % 4
-          WHEN 0 THEN '<div class="comment" data-depth="0" '
-            || 'data-author="u' || CAST(doc_id % 17 AS VARCHAR)
-            || '"><p>First take ' || CAST(doc_id AS VARCHAR)
-            || '.</p></div><div class="comment" data-depth="1" '
-            || 'data-author="u' || CAST((doc_id + 5) % 17 AS VARCHAR)
-            || '"><p>Replying to you.</p></div>'
-            || '<div class="comment" data-depth="0" data-author="u'
-            || CAST((doc_id + 11) % 17 AS VARCHAR)
-            || '"><p>Second thread root.</p></div>'
-          WHEN 1 THEN '<div class="comment" data-depth="0" '
-            || 'data-author="u' || CAST(doc_id % 23 AS VARCHAR)
-            || '"><p>Lone comment ' || CAST(doc_id % 7 AS VARCHAR)
-            || '.</p></div>'
-          WHEN 2 THEN '<article>No comment section '
-            || CAST(doc_id AS VARCHAR) || '</article>'
-          ELSE '<div class="comment" data-depth="0" data-author="u'
-            || CAST(doc_id % 13 AS VARCHAR) || '"><p>Q about item '
-            || CAST(doc_id AS VARCHAR) || '?</p></div>'
-            || '<div class="comment" data-depth="1" data-author="u'
-            || CAST((doc_id + 1) % 13 AS VARCHAR)
-            || '"><p>A: see the docs.</p></div>'
-            || '<div class="comment" data-depth="2" data-author="u'
-            || CAST(doc_id % 13 AS VARCHAR)
-            || '"><p>Thanks, that worked.</p></div>' END AS html
+          WHEN 0 THEN '<script>ga(''create'',''UA-'
+            || CAST(doc_id % 50 AS VARCHAR)
+            || '-1'');</script><script src="gtm.js?id=GTM-A'
+            || CAST(doc_id % 30 AS VARCHAR) || 'Z"></script>'
+          WHEN 1 THEN '<script>fbq(''init'', '''
+            || CAST(100000 + doc_id % 70 AS VARCHAR)
+            || ''');</script><ins data-ad-client="ca-pub-'
+            || CAST(doc_id % 40 AS VARCHAR) || '"></ins>'
+          WHEN 2 THEN '<p>No trackers in doc '
+            || CAST(doc_id AS VARCHAR) || '</p>'
+          ELSE '<script>ga(''create'',''UA-7-1'');</script>'
+        END AS html
       FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS turn_idx,
-        list_extract(regexp_extract_all(html,
-          '<div class="comment"[^>]*><p>[^<]*</p></div>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<div class="comment"[^>]*><p>[^<]*</p></div>', 0)))) AS g(i))
-    SELECT doc_id, turn_idx,
-      regexp_extract(blk, 'data-author="([^"]+)"', 1) AS author,
-      CAST(regexp_extract(blk, 'data-depth="([0-9]+)"', 1) AS BIGINT)
-        AS depth,
-      regexp_extract(blk, '<p>([^<]*)</p>', 1) AS body,
-      CAST(CASE WHEN regexp_extract(blk, 'data-depth="([0-9]+)"', 1)
-                     <> '0' THEN 1 ELSE 0 END AS INT) AS is_reply
-    FROM fr
+    rows_ AS (
+      SELECT doc_id, 'ga' AS kind,
+        regexp_extract(html, 'ga\\(''create'',''(UA-[0-9]+-[0-9])''',
+          1) AS tracker_id FROM p
+      UNION ALL
+      SELECT doc_id, 'gtm',
+        regexp_extract(html, 'id=(GTM-[A-Z0-9]+)', 1) FROM p
+      UNION ALL
+      SELECT doc_id, 'fbpixel',
+        regexp_extract(html, 'fbq\\(''init'', ''([0-9]+)''', 1) FROM p
+      UNION ALL
+      SELECT doc_id, 'adsense',
+        regexp_extract(html, '(ca-pub-[0-9]+)', 1) FROM p),
+    f AS (SELECT * FROM rows_ WHERE tracker_id <> '')
+    SELECT doc_id, kind, tracker_id,
+      CAST(COUNT(*) OVER (PARTITION BY kind, tracker_id) AS BIGINT)
+        AS n_docs_with_id
+    FROM f
     """
 
 
-@query("forum_thread_extract", _forum_oracle())
-def forum_thread_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forum/comment-thread mining (round 4): threaded discussion is
-    the open web's largest natural-dialogue source — the turn
-    sequence (author, reply depth, body) is exactly the record a
-    conversation-tuning pipeline ingests, and the same rows feed the
-    boilerplate side (comment sections are stripped from article
-    text, mined separately here). Extracts every comment block in
-    DOM order with its author handle and declared depth; a
-    three-turn Q/A/thanks thread pins depth nesting and a
-    same-author-returns turn.
+@query("analytics_id_extract", _analytics_oracle())
+def analytics_id_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Analytics/tracker-ID extraction + co-ownership counts (round
+    4): GA property ids (UA-x-y), GTM containers, Facebook pixel ids
+    and AdSense publisher ids are site-ownership fingerprints — two
+    hosts sharing a UA property are one publisher, which collapses
+    host-level dedup/quality decisions across mirror networks. One
+    page plants a SHARED id (UA-7-1) across many docs to pin the
+    fan-in count; a tracker-free page pins zero rows.
 
-    Scale shape: one regexp_extract_all + posexplode, codegen parses,
-    no shuffle.
+    Scale shape: four regexp branches unioned off one scan, then one
+    hash-agg on (kind, tracker_id) — tracker ids are near-uniform
+    except deliberate publisher fan-in, which AQE skew-split absorbs;
+    the count rejoins on the same uniform key — AQE broadcasts
+    while the id dim fits and shuffle-joins past that (the dim
+    scales with the corpus, so no forced broadcast).
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
@@ -8540,216 +4945,3607 @@ def forum_thread_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = i % 4
     html = (
         F.when(v == 0, F.concat(
-            F.lit('<div class="comment" data-depth="0" data-author="u'),
-            (i % 17).cast("string"), F.lit('"><p>First take '), ds,
-            F.lit('.</p></div><div class="comment" data-depth="1" '
-                  'data-author="u'), ((i + 5) % 17).cast("string"),
-            F.lit('"><p>Replying to you.</p></div>'
-                  '<div class="comment" data-depth="0" data-author="u'),
-            ((i + 11) % 17).cast("string"),
-            F.lit('"><p>Second thread root.</p></div>')))
+            F.lit("<script>ga('create','UA-"), (i % 50).cast("string"),
+            F.lit("-1');</script><script src=\"gtm.js?id=GTM-A"),
+            (i % 30).cast("string"), F.lit('Z"></script>')))
         .when(v == 1, F.concat(
-            F.lit('<div class="comment" data-depth="0" data-author="u'),
-            (i % 23).cast("string"), F.lit('"><p>Lone comment '),
-            (i % 7).cast("string"), F.lit(".</p></div>")))
+            F.lit("<script>fbq('init', '"),
+            (i % 70 + 100000).cast("string"),
+            F.lit("');</script><ins data-ad-client=\"ca-pub-"),
+            (i % 40).cast("string"), F.lit('"></ins>')))
         .when(v == 2, F.concat(
-            F.lit("<article>No comment section "), ds,
-            F.lit("</article>")))
-        .otherwise(F.concat(
-            F.lit('<div class="comment" data-depth="0" data-author="u'),
-            (i % 13).cast("string"), F.lit('"><p>Q about item '), ds,
-            F.lit('?</p></div>'
-                  '<div class="comment" data-depth="1" data-author="u'),
-            ((i + 1) % 13).cast("string"),
-            F.lit('"><p>A: see the docs.</p></div>'
-                  '<div class="comment" data-depth="2" data-author="u'),
-            (i % 13).cast("string"),
-            F.lit('"><p>Thanks, that worked.</p></div>')))
+            F.lit("<p>No trackers in doc "), ds, F.lit("</p>")))
+        .otherwise(F.lit("<script>ga('create','UA-7-1');</script>"))
     )
-    rx = '<div class="comment"[^>]*><p>[^<]*</p></div>'
     p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit(rx), 0)
-        ).alias("turn_idx", "blk"),
+    h = F.col("html")
+    branches = [
+        ("ga", "ga\\('create','(UA-[0-9]+-[0-9])'"),
+        ("gtm", "id=(GTM-[A-Z0-9]+)"),
+        ("fbpixel", "fbq\\('init', '([0-9]+)'"),
+        ("adsense", "(ca-pub-[0-9]+)"),
+    ]
+    parts = [
+        p.select(
+            "doc_id", F.lit(kind).alias("kind"),
+            F.regexp_extract(h, rx, 1).alias("tracker_id"),
+        )
+        for kind, rx in branches
+    ]
+    rows = parts[0]
+    for part in parts[1:]:
+        rows = rows.unionByName(part)
+    rows = rows.where(F.col("tracker_id") != "")
+    counts = rows.groupBy("kind", "tracker_id").agg(
+        F.count("*").cast("long").alias("n_docs_with_id")
     )
-    b = F.col("blk")
-    depth_s = F.regexp_extract(b, 'data-depth="([0-9]+)"', 1)
-    return fr.select(
-        "doc_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        F.regexp_extract(b, 'data-author="([^"]+)"', 1).alias("author"),
-        depth_s.cast("long").alias("depth"),
-        F.regexp_extract(b, "<p>([^<]*)</p>", 1).alias("body"),
-        F.when(depth_s != "0", F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_reply"),
+    # counts has one row per DISTINCT tracker id — a dim that SCALES
+    # with the corpus (~1e8 GA properties on the real web), so no
+    # forced broadcast: AQE broadcasts when it fits and falls back to
+    # a uniform-key shuffle join when it doesn't.
+    return rows.join(counts, ["kind", "tracker_id"]).select(
+        "doc_id", "kind", "tracker_id", "n_docs_with_id"
     )
 
 
-def _stacktrace_oracle() -> str:
+def _uuid_oracle() -> str:
     return """
     WITH p AS (
       SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'Traceback (most recent call last):' || chr(10)
-            || '  File "app' || CAST(doc_id % 7 AS VARCHAR)
-            || '.py", line ' || CAST(doc_id % 90 + 1 AS VARCHAR)
-            || ', in main' || chr(10)
-            || '  File "lib.py", line 4, in helper' || chr(10)
-            || 'ValueError: bad input ' || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN 'java.lang.NullPointerException: oops '
-            || CAST(doc_id AS VARCHAR) || chr(10) || chr(9)
-            || 'at com.ex.Svc.run(Svc.java:'
-            || CAST(doc_id % 200 AS VARCHAR) || ')' || chr(10) || chr(9)
-            || 'at com.ex.Main.main(Main.java:7)'
-          WHEN 2 THEN 'A normal paragraph about files and lines, doc '
-            || CAST(doc_id AS VARCHAR) || '.'
-          ELSE 'Forum answer ' || CAST(doc_id AS VARCHAR)
-            || ': run it again.' END AS text
+        CASE doc_id % 3
+          WHEN 0 THEN 'Session id '
+            || printf('%08x', (doc_id * 2654435761) % 4294967296)
+            || '-' || printf('%04x', (doc_id * 31) % 65536)
+            || '-4' || printf('%03x', doc_id % 4096)
+            || '-' || printf('%x', 8 + (doc_id % 2) * 4)
+            || printf('%03x', (doc_id * 7) % 4096)
+            || '-' || printf('%012x', (doc_id * 99991) % 281474976710656)
+            || ' assigned.'
+          WHEN 1 THEN 'Legacy token '
+            || printf('%08x', (doc_id * 69069) % 4294967296)
+            || '-' || printf('%04x', (doc_id * 17) % 65536)
+            || '-1' || printf('%03x', (doc_id * 3) % 4096)
+            || '-' || printf('%x', 8 + (doc_id % 2) * 4)
+            || printf('%03x', (doc_id * 11) % 4096)
+            || '-' || printf('%012x', (doc_id * 65537) % 281474976710656)
+            || ' in log.'
+          ELSE 'No token in doc ' || CAST(doc_id AS VARCHAR) || '.'
+        END AS text
       FROM documents),
     m AS (
       SELECT doc_id,
-        CASE WHEN contains(text, 'Traceback (most recent call last):')
-               THEN 'python'
-             WHEN regexp_matches(text,
-               '[a-z.]+\\.[A-Za-z]+Exception') THEN 'java'
-             ELSE 'none' END AS kind,
-        CAST(len(regexp_extract_all(text, '  File "', 0)) AS BIGINT)
-          AS py_frames,
-        CAST(len(regexp_extract_all(text, chr(9) || 'at ', 0))
-          AS BIGINT) AS java_frames,
-        regexp_extract(text,
-          '([A-Za-z][A-Za-z0-9_.]*(?:Error|Exception))', 1) AS exc
-      FROM p)
-    SELECT doc_id, kind,
-      CASE WHEN kind = 'python' THEN py_frames
-           WHEN kind = 'java' THEN java_frames
-           ELSE CAST(0 AS BIGINT) END AS n_frames,
-      CASE WHEN kind = 'none' THEN '' ELSE exc END AS exception_type,
-      CAST(CASE WHEN kind <> 'none' THEN 1 ELSE 0 END AS INT)
-        AS is_stacktrace
-    FROM m
+        regexp_extract(text, '([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-'
+          || '[0-9a-f]{4}-[0-9a-f]{12})', 1) AS uuid
+      FROM p),
+    f AS (SELECT doc_id, uuid FROM m WHERE uuid <> '')
+    SELECT doc_id, uuid,
+      CAST(substr(uuid, 15, 1) AS INT) AS version,
+      CASE WHEN substr(uuid, 20, 1) IN ('8', '9', 'a', 'b')
+           THEN 'rfc4122' ELSE 'other' END AS variant
+    FROM f
     """
 
 
-@query("stacktrace_detect", _stacktrace_oracle())
-def stacktrace_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stack-trace detection (round 4): raw tracebacks pasted into
-    pastebins, CI logs, and forum posts are a curation fork — noise
-    for a prose corpus, signal for a code corpus — so the filter must
-    label rather than just drop. Detects Python (``Traceback`` header,
-    ``File "..."`` frames) and Java (``package.SomeException`` plus
-    tab-``at`` frames) traces, counts frames with the
-    language-appropriate frame marker, and extracts the exception
-    type; prose mentioning "files and lines" pins the negative.
+@query("uuid_version_profile", _uuid_oracle())
+def uuid_version_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UUID extraction with version/variant decode (round 4): session
+    tokens and API keys embedded in scraped text are PII-adjacent
+    leakage AND near-duplicate poison (two snapshots differing only
+    in a session UUID should dedup together) — the curation pipeline
+    wants them found and classified. The version nibble (char 15) and
+    variant nibble (char 20) are decoded structurally: v4/random vs
+    v1/time-based, RFC-4122 variant (8/9/a/b) vs other; a token-free
+    page pins zero rows.
 
-    Scale shape: pure codegen contains/regexp projection, no shuffle.
+    Scale shape: one regexp + fixed substring decodes, no shuffle.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
     ds = i.cast("string")
-    v = i % 4
+    v = i % 3
+
+    def hx(width: int, col: Column) -> Column:
+        return F.format_string(f"%0{width}x", col)
+
+    u4 = F.concat(
+        hx(8, (i * 2654435761) % 4294967296), F.lit("-"),
+        hx(4, (i * 31) % 65536), F.lit("-4"),
+        hx(3, i % 4096), F.lit("-"),
+        hx(1, 8 + (i % 2) * 4), hx(3, (i * 7) % 4096), F.lit("-"),
+        hx(12, (i * 99991) % 281474976710656),
+    )
+    u1 = F.concat(
+        hx(8, (i * 69069) % 4294967296), F.lit("-"),
+        hx(4, (i * 17) % 65536), F.lit("-1"),
+        hx(3, (i * 3) % 4096), F.lit("-"),
+        hx(1, 8 + (i % 2) * 4), hx(3, (i * 11) % 4096), F.lit("-"),
+        hx(12, (i * 65537) % 281474976710656),
+    )
     text = (
         F.when(v == 0, F.concat(
-            F.lit("Traceback (most recent call last):\n"
-                  '  File "app'), (i % 7).cast("string"),
-            F.lit('.py", line '), (i % 90 + 1).cast("string"),
-            F.lit(", in main\n"
-                  '  File "lib.py", line 4, in helper\n'
-                  "ValueError: bad input "), ds))
+            F.lit("Session id "), u4, F.lit(" assigned.")))
         .when(v == 1, F.concat(
-            F.lit("java.lang.NullPointerException: oops "), ds,
-            F.lit("\n\tat com.ex.Svc.run(Svc.java:"),
-            (i % 200).cast("string"),
-            F.lit(")\n\tat com.ex.Main.main(Main.java:7)")))
-        .when(v == 2, F.concat(
-            F.lit("A normal paragraph about files and lines, doc "),
-            ds, F.lit(".")))
+            F.lit("Legacy token "), u1, F.lit(" in log.")))
+        .otherwise(F.concat(F.lit("No token in doc "), ds, F.lit(".")))
+    )
+    rx = (
+        "([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-"
+        "[0-9a-f]{4}-[0-9a-f]{12})"
+    )
+    p = d.select("doc_id", text.alias("text"))
+    m = p.select(
+        "doc_id", F.regexp_extract("text", rx, 1).alias("uuid")
+    ).where(F.col("uuid") != "")
+    vn = F.substring("uuid", 20, 1)
+    return m.select(
+        "doc_id", "uuid",
+        F.substring("uuid", 15, 1).cast("int").alias("version"),
+        F.when(vn.isin("8", "9", "a", "b"), F.lit("rfc4122"))
+        .otherwise(F.lit("other")).alias("variant"),
+    )
+
+
+def _metakw_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN '<meta name="keywords" content="alpha,beta,word'
+            || CAST(doc_id % 7 AS VARCHAR)
+            || '"><body>The alpha and beta guide to word'
+            || CAST(doc_id % 7 AS VARCHAR) || ' usage.</body>'
+          WHEN 1 THEN '<meta name="keywords" content="spam0,spam1,'
+            || 'spam2,spam3,spam4,spam5,spam6,spam7,spam8,spam9,'
+            || 'spam10,spam11"><body>Only spam0 appears, doc '
+            || CAST(doc_id AS VARCHAR) || '.</body>'
+          ELSE '<body>No keywords meta in doc '
+            || CAST(doc_id AS VARCHAR) || '.</body>'
+        END AS html
+      FROM documents),
+    m AS (
+      SELECT doc_id,
+        regexp_extract(html,
+          '<meta name="keywords" content="([^"]*)"', 1) AS kw,
+        regexp_extract(html, '<body>(.*)</body>', 1) AS body
+      FROM p),
+    s AS (
+      SELECT doc_id,
+        string_split(kw, ',') AS kws, body
+      FROM m WHERE kw <> ''),
+    c AS (
+      SELECT doc_id,
+        len(kws) AS n_keywords,
+        len(list_filter(kws, x -> contains(body, x))) AS n_matched
+      FROM s)
+    SELECT doc_id, CAST(n_keywords AS BIGINT) AS n_keywords,
+      CAST(n_matched AS BIGINT) AS n_matched,
+      ROUND(CAST(n_matched AS DOUBLE) / n_keywords, 4) AS coverage,
+      CAST(CASE WHEN n_keywords > 8
+             AND n_matched * 2 < n_keywords THEN 1 ELSE 0 END AS INT)
+        AS stuffed
+    FROM c
+    """
+
+
+@query("meta_keywords_stuffing", _metakw_oracle())
+def meta_keywords_stuffing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Meta-keyword stuffing audit (round 4): the keywords meta tag
+    is pure SEO surface — honest pages declare few terms that DO
+    appear in the body, stuffed pages declare many that don't. Each
+    declared keyword is checked against the body with an array-level
+    containment filter (JVM higher-order function, not N regexps);
+    low coverage over a long list flags stuffing. A meta-free page
+    pins zero rows.
+
+    Scale shape: split + one HOF filter per row, no shuffle, no
+    Python.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    ds = i.cast("string")
+    v = i % 3
+    html = (
+        F.when(v == 0, F.concat(
+            F.lit('<meta name="keywords" content="alpha,beta,word'),
+            (i % 7).cast("string"),
+            F.lit('"><body>The alpha and beta guide to word'),
+            (i % 7).cast("string"), F.lit(" usage.</body>")))
+        .when(v == 1, F.concat(
+            F.lit('<meta name="keywords" content="spam0,spam1,spam2,'
+                  'spam3,spam4,spam5,spam6,spam7,spam8,spam9,spam10,'
+                  'spam11"><body>Only spam0 appears, doc '),
+            ds, F.lit(".</body>")))
         .otherwise(F.concat(
-            F.lit("Forum answer "), ds, F.lit(": run it again.")))
+            F.lit("<body>No keywords meta in doc "), ds,
+            F.lit(".</body>")))
+    )
+    p = d.select("doc_id", html.alias("html"))
+    m = p.select(
+        "doc_id",
+        F.regexp_extract(
+            "html", '<meta name="keywords" content="([^"]*)"', 1
+        ).alias("kw"),
+        F.regexp_extract("html", "<body>(.*)</body>", 1).alias("body"),
+    ).where(F.col("kw") != "")
+    s = m.select(
+        "doc_id", F.split("kw", ",").alias("kws"), "body"
+    )
+    body = F.col("body")
+    n_kw = F.size("kws")
+    n_matched = F.size(
+        F.filter(F.col("kws"), lambda x: body.contains(x))
+    )
+    c = s.select(
+        "doc_id",
+        n_kw.cast("long").alias("n_keywords"),
+        n_matched.cast("long").alias("n_matched"),
+    )
+    return c.select(
+        "doc_id", "n_keywords", "n_matched",
+        F.round(
+            F.col("n_matched").cast("double") / F.col("n_keywords"), 4
+        ).alias("coverage"),
+        F.when(
+            (F.col("n_keywords") > 8)
+            & (F.col("n_matched") * 2 < F.col("n_keywords")),
+            F.lit(1),
+        ).otherwise(F.lit(0)).cast("int").alias("stuffed"),
+    )
+
+
+def _exif_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (EXIF fields
+    exist before serialization — the parser is never consulted)."""
+    from ocr_spark.operators.multimodal import synth_exif_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, '{r['byte_order']}', {r['orientation']}, "
+        f"'{r['make']}', '{r['datetime']}', "
+        f"CAST({r['exif_w']} AS BIGINT), CAST({r['exif_h']} AS BIGINT), "
+        f"CAST({r['n_ifd0_entries']} AS BIGINT))"
+        for r in synth_exif_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, byte_order, orientation, make, datetime, "
+        "exif_w, exif_h, n_ifd0_entries)"
+    )
+
+
+@query("jpeg_exif_extract", _exif_oracle())
+def jpeg_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF metadata extraction (round 4): camera make, capture
+    timestamp, orientation and declared pixel dimensions ride in the
+    JPEG APP1 segment as a TIFF IFD — provenance for image-text
+    corpora (camera vs screenshot vs generated), the orientation flag
+    real renderers must honor, and a capture-time axis no HTML field
+    carries. The corpus splices spec-layout APP1s (both byte orders,
+    all 8 orientations) into native-encoder JPEGs; the segment walk
+    stops at SOS, so metadata never pays the entropy-decode cost.
+
+    Scale shape: Arrow-batched mapInPandas over binary payloads, same
+    stage shape as the other codec extractors; EXIF-free images drop
+    inside the batch.
+    """
+    from ocr_spark.operators.multimodal import (
+        exif_features,
+        synth_exif_corpus,
+    )
+
+    corpus = synth_exif_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return exif_features(base.repartition(8, "img_id"))
+
+
+def _pngmeta_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (chunk
+    rows exist before the container is assembled)."""
+    from ocr_spark.operators.multimodal import synth_png_meta_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {k}, '{kind}', '{kw}', '{val}')"
+        for r in synth_png_meta_corpus()
+        for k, (kind, kw, val) in enumerate(r["expected"])
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, chunk_idx, kind, keyword, value)"
+    )
+
+
+@query("png_text_chunks", _pngmeta_oracle())
+def png_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PNG ancillary-chunk extraction (round 4): tEXt/iTXt carry
+    Title/Author/Comment metadata (screenshot tools and export
+    pipelines stamp provenance here) and pHYs carries physical DPI —
+    all invisible to a pixel decoder. The chunk walk reads the
+    length-prefixed container directly and never inflates IDAT, so
+    metadata harvest over an image corpus costs I/O, not decode.
+
+    Scale shape: Arrow-batched mapInPandas; per-image fan-out to
+    chunk rows happens inside the batch, no explode in the plan.
+    """
+    from ocr_spark.operators.multimodal import (
+        png_meta_features,
+        synth_png_meta_corpus,
+    )
+
+    corpus = synth_png_meta_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return png_meta_features(base.repartition(8, "img_id"))
+
+
+def _ldbreadcrumb_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        '<script type="application/ld+json">'
+        || '{"@type":"BreadcrumbList","itemListElement":['
+        || '{"@type":"ListItem","position":1,"name":"Home",'
+        || '"item":"https://host' || CAST(doc_id % 97 AS VARCHAR)
+        || '.example/"},'
+        || '{"@type":"ListItem","position":2,"name":"Section '
+        || CAST(doc_id % 12 AS VARCHAR) || '","item":"https://host'
+        || CAST(doc_id % 97 AS VARCHAR) || '.example/s'
+        || CAST(doc_id % 12 AS VARCHAR) || '"}'
+        || CASE WHEN doc_id % 2 = 0
+           THEN ',{"@type":"ListItem","position":3,"name":"Leaf '
+             || CAST(doc_id % 40 AS VARCHAR) || '"}'
+           ELSE '' END
+        || ']}</script>' AS html
+      FROM documents),
+    j AS (
+      SELECT doc_id,
+        regexp_extract(html,
+          '<script type="application/ld\\+json">(.*)</script>', 1)
+          AS payload
+      FROM p),
+    u AS (
+      SELECT doc_id, payload, i AS pos0 FROM j,
+        unnest(generate_series(0, 2)) AS g(i)),
+    e AS (
+      SELECT doc_id,
+        CAST(json_extract_string(payload, '$.itemListElement['
+          || CAST(pos0 AS VARCHAR) || '].position') AS BIGINT)
+          AS position,
+        json_extract_string(payload, '$.itemListElement['
+          || CAST(pos0 AS VARCHAR) || '].name') AS name,
+        COALESCE(json_extract_string(payload, '$.itemListElement['
+          || CAST(pos0 AS VARCHAR) || '].item'), '') AS item_url
+      FROM u)
+    SELECT doc_id, position, name, item_url
+    FROM e WHERE position IS NOT NULL
+    """
+
+
+@query("ld_breadcrumblist_extract", _ldbreadcrumb_oracle())
+def ld_breadcrumblist_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BreadcrumbList JSON-LD extraction (round 4): the structured
+    twin of the DOM breadcrumb trail (breadcrumb_extract) — ordered
+    ListItems with explicit position numbers and item URLs give the
+    site's own taxonomy path per page, the strongest category
+    supervision a crawl carries. The leaf item legitimately omits
+    "item" (the page itself), pinning the empty-URL branch; 2- and
+    3-level trails interleave.
+
+    Scale shape: one regexp + three fixed JSON-path probes per row
+    (bounded trail depth), filtered after a row-explode of the index
+    space — no per-row Python, no shuffle.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    h97 = (i % 97).cast("string")
+    html = F.concat(
+        F.lit('<script type="application/ld+json">'
+              '{"@type":"BreadcrumbList","itemListElement":['
+              '{"@type":"ListItem","position":1,"name":"Home",'
+              '"item":"https://host'), h97, F.lit('.example/"},'
+              '{"@type":"ListItem","position":2,"name":"Section '),
+        (i % 12).cast("string"),
+        F.lit('","item":"https://host'), h97, F.lit(".example/s"),
+        (i % 12).cast("string"), F.lit('"}'),
+        F.when(i % 2 == 0, F.concat(
+            F.lit(',{"@type":"ListItem","position":3,"name":"Leaf '),
+            (i % 40).cast("string"), F.lit('"}'))).otherwise(F.lit("")),
+        F.lit("]}</script>"),
+    )
+    p = d.select("doc_id", html.alias("html"))
+    payload = F.regexp_extract(
+        "html", '<script type="application/ld\\+json">(.*)</script>', 1
+    )
+    j = p.select("doc_id", payload.alias("payload"))
+    u = j.select(
+        "doc_id", "payload",
+        F.explode(F.sequence(F.lit(0), F.lit(2))).alias("pos0"),
+    )
+    e = u.select(
+        "doc_id",
+        F.expr(
+            "CAST(get_json_object(payload, concat('$.itemListElement[',"
+            " CAST(pos0 AS STRING), '].position')) AS BIGINT)"
+        ).alias("position"),
+        F.expr(
+            "get_json_object(payload, concat('$.itemListElement[',"
+            " CAST(pos0 AS STRING), '].name'))"
+        ).alias("name"),
+        F.expr(
+            "coalesce(get_json_object(payload, concat("
+            "'$.itemListElement[', CAST(pos0 AS STRING), '].item')), '')"
+        ).alias("item_url"),
+    )
+    return e.where(F.col("position").isNotNull())
+
+
+def _ipcolo_oracle() -> str:
+    return """
+    WITH hosts AS (
+      SELECT DISTINCT 'host' || CAST(doc_id % 97 AS VARCHAR)
+        || '.example' AS host, doc_id % 97 AS hnum
+      FROM documents),
+    a AS (
+      SELECT host,
+        '10.0.' || CAST(hnum % 23 AS VARCHAR) || '.1' AS ip
+      FROM hosts),
+    g AS (
+      SELECT ip, CAST(COUNT(*) AS BIGINT) AS colo_size
+      FROM a GROUP BY ip)
+    SELECT a.host, a.ip, g.colo_size,
+      CAST(CASE WHEN g.colo_size > 1 THEN 1 ELSE 0 END AS INT)
+        AS shared_hosting
+    FROM a JOIN g ON a.ip = g.ip
+    """
+
+
+@query("ip_colocation_groups", _ipcolo_oracle())
+def ip_colocation_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IP co-location grouping (round 4): hosts resolving to one
+    address are one hosting decision — parked-domain farms, mirror
+    networks and shared-CMS fleets collapse here before any content
+    comparison runs, the infrastructure-level twin of the
+    analytics-ID co-ownership signal. The synthetic A-record map
+    derives deterministically from the host; group sizes flag shared
+    hosting.
+
+    Scale shape: distinct on host (hash-agg), one hash-agg on ip,
+    and a rejoin of the ip dim back to hosts — AQE broadcasts while
+    the dim fits (host cardinality is web-scale, so the hint is NOT
+    forced); ip groups stay small and uniform.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    hosts = d.select(
+        F.concat(
+            F.lit("host"), (i % 97).cast("string"), F.lit(".example")
+        ).alias("host"),
+        (i % 97).alias("hnum"),
+    ).distinct()
+    a = hosts.select(
+        "host",
+        F.concat(
+            F.lit("10.0."), (F.col("hnum") % 23).cast("string"),
+            F.lit(".1"),
+        ).alias("ip"),
+    )
+    g = a.groupBy("ip").agg(F.count("*").cast("long").alias("colo_size"))
+    # the ip dim is O(distinct addresses) and grows with the host
+    # population — AQE picks broadcast only while it fits
+    return a.join(g, "ip").select(
+        "host", "ip", "colo_size",
+        F.when(F.col("colo_size") > 1, F.lit(1)).otherwise(F.lit(0))
+        .cast("int").alias("shared_hosting"),
+    )
+
+
+def _gifanim_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (frame
+    counts, delays and loop counts exist before encode)."""
+    from ocr_spark.operators.multimodal import synth_gif_anim_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {r['n_frames']}, {r['loop_count']}, "
+        f"CAST({sum(r['delays'])} AS BIGINT), "
+        f"CAST({min(r['delays'])} AS BIGINT), "
+        f"CAST({max(r['delays'])} AS BIGINT))"
+        for r in synth_gif_anim_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, n_frames, loop_count, total_delay_cs, "
+        "min_delay_cs, max_delay_cs)"
+    )
+
+
+@query("gif_animation_features", _gifanim_oracle())
+def gif_animation_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GIF animation timing (round 4): frame count, per-frame Graphic
+    Control delays and the NETSCAPE loop count separate static images
+    from animations — an image-corpus router treats them differently
+    (animations become frame-sampled video-like media, statics stay
+    images), and total duration is the sampling budget. The corpus
+    cycles 1-4 frames, finite and infinite loops, and a timing-free
+    static GIF pinning the -1/no-extension branch; reference parity:
+    the reference's GIF path (via netpbm) drops animation entirely.
+
+    Scale shape: Arrow-batched mapInPandas over binary payloads —
+    timing parses from extension blocks, LZW inflates only to count
+    frames (bounded per batch).
+    """
+    from ocr_spark.operators.multimodal import (
+        gif_anim_features,
+        synth_gif_anim_corpus,
+    )
+
+    corpus = synth_gif_anim_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return gif_anim_features(base.repartition(8, "img_id"))
+
+
+def _trackedge_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        'host' || CAST(doc_id % 97 AS VARCHAR) || '.example' AS host,
+        CASE doc_id % 4
+          WHEN 0 THEN 'UA-' || CAST(doc_id % 50 AS VARCHAR) || '-1'
+          WHEN 1 THEN 'ca-pub-' || CAST(doc_id % 40 AS VARCHAR)
+          WHEN 2 THEN ''
+          ELSE 'UA-7-1'
+        END AS tracker_id
+      FROM documents),
+    ht AS (
+      SELECT DISTINCT host, tracker_id FROM p WHERE tracker_id <> ''),
+    fan AS (
+      SELECT tracker_id, COUNT(*) AS n_hosts FROM ht GROUP BY 1),
+    keep AS (
+      SELECT ht.host, ht.tracker_id FROM ht
+      JOIN fan ON ht.tracker_id = fan.tracker_id
+      WHERE fan.n_hosts <= 32),
+    e AS (
+      SELECT a.host AS host_a, b.host AS host_b
+      FROM keep a JOIN keep b
+        ON a.tracker_id = b.tracker_id AND a.host < b.host)
+    SELECT host_a, host_b,
+      CAST(COUNT(*) AS BIGINT) AS n_shared_trackers
+    FROM e GROUP BY host_a, host_b
+    """
+
+
+@query("tracker_coownership_edges", _trackedge_oracle())
+def tracker_coownership_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tracker co-ownership graph (round 4): projecting the
+    host↔tracker bipartite graph onto host-host edges turns the
+    per-page tracker ids (analytics_id_extract) into a publisher
+    graph — hosts sharing an analytics property are one operator,
+    and edge weight (shared trackers) is the merge confidence for
+    host-level dedup. The projection self-joins on tracker_id, the
+    classic quadratic-blowup shape, so a FAN-OUT CAP (trackers on
+    >32 hosts are public/agency containers, not ownership evidence)
+    is applied BEFORE the join — the planted UA-7-1 near-clique (97
+    hosts → ~4.6k pairs from one key) is exactly what the cap
+    removes, pinning the guard.
+
+    Scale shape: distinct (hash-agg) → fan-count hash-agg →
+    cap-filter rejoin (AQE broadcasts while the tracker dim fits;
+    it scales with the corpus, so not forced) → capped
+    equi-self-join on uniform keys → final hash-agg; no window, no sort, skew fenced by the
+    cap rather than salted.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 4
+    host = F.concat(
+        F.lit("host"), (i % 97).cast("string"), F.lit(".example")
+    )
+    tracker = (
+        F.when(v == 0, F.concat(
+            F.lit("UA-"), (i % 50).cast("string"), F.lit("-1")))
+        .when(v == 1, F.concat(
+            F.lit("ca-pub-"), (i % 40).cast("string")))
+        .when(v == 2, F.lit(""))
+        .otherwise(F.lit("UA-7-1"))
+    )
+    ht = d.select(
+        host.alias("host"), tracker.alias("tracker_id")
+    ).where(F.col("tracker_id") != "").distinct()
+    fan = ht.groupBy("tracker_id").agg(F.count("*").alias("n_hosts"))
+    # fan is one row per distinct tracker — corpus-scaled, so no
+    # forced broadcast (AQE converts while it fits; at web scale the
+    # filter join shuffles on the same uniform tracker key)
+    keep = ht.join(
+        fan.where(F.col("n_hosts") <= 32), "tracker_id"
+    ).select("host", "tracker_id")
+    a = keep.alias("a")
+    b = keep.alias("b")
+    e = a.join(
+        b,
+        (F.col("a.tracker_id") == F.col("b.tracker_id"))
+        & (F.col("a.host") < F.col("b.host")),
+    ).select(
+        F.col("a.host").alias("host_a"), F.col("b.host").alias("host_b")
+    )
+    return e.groupBy("host_a", "host_b").agg(
+        F.count("*").cast("long").alias("n_shared_trackers")
+    )
+
+
+def _sectionrollup_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id, n_chars,
+        'host' || CAST(doc_id % 11 AS VARCHAR) || '.example' AS host,
+        CASE doc_id % 5
+          WHEN 0 THEN 'blog' WHEN 1 THEN 'docs' WHEN 2 THEN 'shop'
+          WHEN 3 THEN 'news' ELSE 'about' END AS section
+      FROM documents)
+    SELECT
+      COALESCE(host, '') AS host,
+      COALESCE(section, '') AS section,
+      CAST(COUNT(*) AS BIGINT) AS n_docs,
+      ROUND(AVG(n_chars), 4) AS avg_chars,
+      CAST(GROUPING(host) * 2 + GROUPING(section) AS INT) AS gid
+    FROM p GROUP BY ROLLUP (host, section)
+    """
+
+
+@query("site_section_rollup", _sectionrollup_oracle())
+def site_section_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Site-section rollup (round 4): corpus accounting wants doc
+    counts and mean length at THREE grains at once — per (host,
+    section), per host, and global — and ROLLUP computes all three
+    in one pass instead of three scans (the webtext twin of
+    rollup_lineitem_status). Sections derive from the URL's first
+    path segment; avg_chars aggregates the table's REAL n_chars
+    column, so the numbers are corpus facts, not synthesis.
+
+    Scale shape: one partial-aggregated Expand+HashAggregate — the
+    rollup multiplies rows 3x at the map side but each grain
+    combines before the single shuffle; no join, no window.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    host = F.concat(
+        F.lit("host"), (i % 11).cast("string"), F.lit(".example")
+    )
+    section = (
+        F.when(i % 5 == 0, F.lit("blog"))
+        .when(i % 5 == 1, F.lit("docs"))
+        .when(i % 5 == 2, F.lit("shop"))
+        .when(i % 5 == 3, F.lit("news"))
+        .otherwise(F.lit("about"))
+    )
+    p = d.select(
+        host.alias("host"), section.alias("section"), "n_chars"
+    )
+    r = p.rollup("host", "section").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
+        (F.grouping("host") * 2 + F.grouping("section"))
+        .cast("int").alias("gid"),
+    )
+    return r.select(
+        F.coalesce(F.col("host"), F.lit("")).alias("host"),
+        F.coalesce(F.col("section"), F.lit("")).alias("section"),
+        "n_docs", "avg_chars", "gid",
+    )
+
+
+def _pricerange_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN 'Plans cost $' || CAST(doc_id % 40 + 10
+            AS VARCHAR) || '-$' || CAST(doc_id % 40 + 35 AS VARCHAR)
+            || ' per month.'
+          WHEN 1 THEN 'Tickets from EUR ' || CAST(doc_id % 15 + 5
+            AS VARCHAR) || ' to EUR ' || CAST(doc_id % 15 + 29
+            AS VARCHAR) || ' at the door.'
+          ELSE 'Single price $' || CAST(doc_id % 90 + 10 AS VARCHAR)
+            || ' only.'
+        END AS text
+      FROM documents),
+    a AS (
+      SELECT doc_id, 'USD' AS currency,
+        regexp_extract(text, '\\$([0-9]+)-\\$([0-9]+)', 1) AS lo,
+        regexp_extract(text, '\\$([0-9]+)-\\$([0-9]+)', 2) AS hi
+      FROM p
+      UNION ALL
+      SELECT doc_id, 'EUR',
+        regexp_extract(text,
+          'from EUR ([0-9]+) to EUR ([0-9]+)', 1),
+        regexp_extract(text,
+          'from EUR ([0-9]+) to EUR ([0-9]+)', 2)
+      FROM p),
+    f AS (SELECT * FROM a WHERE lo <> '')
+    SELECT doc_id, currency,
+      CAST(lo AS BIGINT) AS low, CAST(hi AS BIGINT) AS high,
+      CAST(CAST(hi AS BIGINT) - CAST(lo AS BIGINT) AS BIGINT)
+        AS spread
+    FROM f
+    """
+
+
+@query("price_range_extract", _pricerange_oracle())
+def price_range_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Price-range extraction (round 4): "$10-$35" and "from EUR 5 to
+    EUR 29" declare bounded price INTERVALS — different supervision
+    than the point prices price_extract captures (a range is an
+    offer structure: tiers, seasons, options), and the spread is a
+    market-dispersion feature. Both syntactic families parse through
+    their own anchored pattern; a single-price page pins zero rows
+    (it belongs to price_extract).
+
+    Scale shape: two regexp branches unioned off one scan, no
+    shuffle.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 3
+    text = (
+        F.when(v == 0, F.concat(
+            F.lit("Plans cost $"), (i % 40 + 10).cast("string"),
+            F.lit("-$"), (i % 40 + 35).cast("string"),
+            F.lit(" per month.")))
+        .when(v == 1, F.concat(
+            F.lit("Tickets from EUR "), (i % 15 + 5).cast("string"),
+            F.lit(" to EUR "), (i % 15 + 29).cast("string"),
+            F.lit(" at the door.")))
+        .otherwise(F.concat(
+            F.lit("Single price $"), (i % 90 + 10).cast("string"),
+            F.lit(" only.")))
+    )
+    p = d.select("doc_id", text.alias("text"))
+    usd = p.select(
+        "doc_id", F.lit("USD").alias("currency"),
+        F.regexp_extract("text", "\\$([0-9]+)-\\$([0-9]+)", 1)
+        .alias("lo"),
+        F.regexp_extract("text", "\\$([0-9]+)-\\$([0-9]+)", 2)
+        .alias("hi"),
+    )
+    eur = p.select(
+        "doc_id", F.lit("EUR").alias("currency"),
+        F.regexp_extract("text", "from EUR ([0-9]+) to EUR ([0-9]+)", 1)
+        .alias("lo"),
+        F.regexp_extract("text", "from EUR ([0-9]+) to EUR ([0-9]+)", 2)
+        .alias("hi"),
+    )
+    f = usd.unionByName(eur).where(F.col("lo") != "")
+    return f.select(
+        "doc_id", "currency",
+        F.col("lo").cast("long").alias("low"),
+        F.col("hi").cast("long").alias("high"),
+        (F.col("hi").cast("long") - F.col("lo").cast("long"))
+        .cast("long").alias("spread"),
+    )
+
+
+def _hreflangrecip_oracle() -> str:
+    return """
+    WITH e AS (
+      SELECT doc_id AS src_doc,
+        CASE
+          WHEN doc_id % 2 = 0 THEN doc_id + 1
+          WHEN (doc_id // 2) % 3 <> 0 THEN doc_id - 1
+          ELSE NULL END AS dst_doc
+      FROM documents),
+    edges AS (SELECT src_doc, dst_doc FROM e WHERE dst_doc IS NOT NULL)
+    SELECT a.src_doc, a.dst_doc,
+      CAST(CASE WHEN b.src_doc IS NULL THEN 0 ELSE 1 END AS INT)
+        AS reciprocal
+    FROM edges a LEFT JOIN edges b
+      ON a.src_doc = b.dst_doc AND a.dst_doc = b.src_doc
+    """
+
+
+@query("hreflang_reciprocity_audit", _hreflangrecip_oracle())
+def hreflang_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """hreflang reciprocity audit (round 4): the hreflang contract
+    requires RETURN links — if A names B as its French alternate, B
+    must name A back, or search engines (and our bitext pairing)
+    must distrust the edge. Declared alternate edges self-join on
+    the reversed (src, dst) pair; the planted every-third-pair
+    missing backlink pins the broken branch. One-directional edges
+    are exactly the ones bitext_mine_pairs should downweight.
+
+    Scale shape: edge list from the scan, one equi-self-join on the
+    composite reversed key — co-partitioned by the same hash, unique
+    keys, no skew, no window.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    dst = (
+        F.when(i % 2 == 0, i + 1)
+        .when((i / 2).cast("long") % 3 != 0, i - 1)
+        .otherwise(F.lit(None).cast("long"))
+    )
+    edges = d.select(
+        i.alias("src_doc"), dst.cast("long").alias("dst_doc")
+    ).where(F.col("dst_doc").isNotNull())
+    a = edges.alias("a")
+    b = edges.alias("b")
+    j = a.join(
+        b,
+        (F.col("a.src_doc") == F.col("b.dst_doc"))
+        & (F.col("a.dst_doc") == F.col("b.src_doc")),
+        "left",
+    )
+    return j.select(
+        F.col("a.src_doc").alias("src_doc"),
+        F.col("a.dst_doc").alias("dst_doc"),
+        F.when(F.col("b.src_doc").isNull(), F.lit(0))
+        .otherwise(F.lit(1)).cast("int").alias("reciprocal"),
+    )
+
+
+def _wavsil_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (segment
+    runs exist before the PCM is assembled)."""
+    from ocr_spark.operators.multimodal import synth_silence_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {j}, '{kind}', CAST({start} AS BIGINT), "
+        f"CAST({ln} AS BIGINT))"
+        for r in synth_silence_corpus()
+        for j, (kind, start, ln) in enumerate(r["expected"])
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(clip_id, seg_idx, kind, start_sample, n_samples)"
+    )
+
+
+@query("wav_silence_segments", _wavsil_oracle())
+def wav_silence_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PCM silence segmentation (round 4): pause structure is the
+    first cut a speech pipeline makes — utterance boundaries for ASR
+    alignment, VAD supervision, and the dead-air trim that saves
+    decode budget downstream. Run-length segmentation over decoded
+    samples (|x| <= threshold on channel 0) is pure numpy inside the
+    Arrow batch; all-silence and all-tone clips pin the single-run
+    branches.
+
+    Scale shape: Arrow-batched mapInPandas over binary payloads;
+    per-clip fan-out to segment rows happens inside the batch.
+    """
+    from ocr_spark.operators.multimodal import (
+        synth_silence_corpus,
+        wav_silence_segments,
+    )
+
+    corpus = synth_silence_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return wav_silence_segments(base.repartition(8, "clip_id"))
+
+
+def _jpegq_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (the
+    quality factor and table count exist before encode; pytest pins
+    that the estimator recovers them from the DQT bytes alone)."""
+    from ocr_spark.operators.multimodal import synth_jpeg_quality_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {r['quality']}, {r['n_tables']}, 1)"
+        for r in synth_jpeg_quality_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, quality_est, n_tables, is_standard)"
+    )
+
+
+@query("jpeg_quality_estimate", _jpegq_oracle())
+def jpeg_quality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JPEG quality-factor forensics (round 4): the DQT tables name
+    the LAST encoder's quality setting — provenance a multimodal
+    corpus filters on (q<50 thumbnails out; recompression chains keep
+    the lowest q's tables) — recovered by exhaustive match against
+    the 100 jcparam.c scalings of the Annex K base table, from the
+    segment headers alone (no entropy decode). Gray (1 table), RGB
+    (2 tables) and progressive streams all resolve; non-standard
+    tables would flag is_standard=0 rather than guess.
+
+    Scale shape: Arrow-batched mapInPandas; per-image work is a
+    segment walk + 100 vectorized 64-element diffs.
+    """
+    from ocr_spark.operators.multimodal import (
+        jpeg_quality_features,
+        synth_jpeg_quality_corpus,
+    )
+
+    corpus = synth_jpeg_quality_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return jpeg_quality_features(base.repartition(8, "img_id"))
+
+
+def _id3_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (tag fields
+    exist before the container is assembled)."""
+    from ocr_spark.operators.multimodal import synth_id3_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {r['has_id3']}, '{r['title']}', "
+        f"'{r['artist']}', '{r['album']}', {r['track_no']}, '{r['enc']}')"
+        for r in synth_id3_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(clip_id, has_id3, title, artist, album, track_no, enc)"
+    )
+
+
+@query("mp3_id3_tags", _id3_oracle())
+def mp3_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ID3v2 tag extraction (round 4): title/artist/album/track
+    metadata rides ahead of the MPEG audio in a self-describing tag —
+    harvestable with ZERO audio decode, which matters because
+    compressed-audio decode itself stays behind the named production
+    call (multimodal.py's soundfile gate). Latin-1 and UTF-16 text
+    encodings both decode per the frame's encoding byte; a tagless
+    clip pins the has_id3=0 branch.
+
+    Scale shape: Arrow-batched mapInPandas reading only the tag
+    header bytes — the audio body never crosses into Python memory
+    churn.
+    """
+    from ocr_spark.operators.multimodal import (
+        id3_features,
+        synth_id3_corpus,
+    )
+
+    corpus = synth_id3_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return id3_features(base.repartition(8, "clip_id"))
+
+
+def _postal_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN 'Visit us at ' || CAST(doc_id % 900 + 100
+            AS VARCHAR) || ' Main St, Springfield, IL '
+            || lpad(CAST(doc_id % 100000 AS VARCHAR), 5, '0')
+            || ' today.'
+          WHEN 1 THEN 'Office: ' || CAST(doc_id % 80 + 1 AS VARCHAR)
+            || ' High Road, London SW1A '
+            || CAST(doc_id % 9 AS VARCHAR) || 'AA, UK.'
+          ELSE 'No street address in doc ' || CAST(doc_id AS VARCHAR)
+            || '.'
+        END AS text
+      FROM documents),
+    us AS (
+      SELECT doc_id, 'US' AS country,
+        regexp_extract(text,
+          '([0-9]+ [A-Z][a-z]+ (?:St|Road|Ave))', 1) AS street,
+        regexp_extract(text, ', ([A-Z][a-z]+), [A-Z]{2} ', 1)
+          AS city,
+        regexp_extract(text, ' ([0-9]{5}) ', 1) AS postal_code
+      FROM p WHERE regexp_matches(text, ' [A-Z]{2} [0-9]{5} ')
+      UNION ALL
+      SELECT doc_id, 'UK',
+        regexp_extract(text,
+          '([0-9]+ [A-Z][a-z]+ (?:St|Road|Ave))', 1),
+        regexp_extract(text, ', ([A-Z][a-z]+) [A-Z]{2}[0-9]', 1),
+        regexp_extract(text,
+          '([A-Z]{2}[0-9][A-Z]? [0-9][A-Z]{2})', 1)
+      FROM p WHERE regexp_matches(text,
+        '[A-Z]{2}[0-9][A-Z]? [0-9][A-Z]{2}'))
+    SELECT doc_id, country, street, city, postal_code
+    FROM us WHERE postal_code <> ''
+    """
+
+
+@query("postal_address_extract", _postal_oracle())
+def postal_address_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Postal-address extraction (round 4): street + city + postal
+    code grounds a page to a place (local-business corpora, geo
+    supervision next to geo_meta_extract's machine-readable coords)
+    — and the POSTAL CODE GRAMMAR is country-specific, so each
+    country parses with its own pattern (US 5-digit vs UK AN NAA)
+    instead of one leaky regex. An address-free page pins zero rows.
+
+    Scale shape: two pattern branches unioned off one scan, no
+    shuffle.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    ds = i.cast("string")
+    v = i % 3
+    text = (
+        F.when(v == 0, F.concat(
+            F.lit("Visit us at "), (i % 900 + 100).cast("string"),
+            F.lit(" Main St, Springfield, IL "),
+            F.lpad((i % 100000).cast("string"), 5, "0"),
+            F.lit(" today.")))
+        .when(v == 1, F.concat(
+            F.lit("Office: "), (i % 80 + 1).cast("string"),
+            F.lit(" High Road, London SW1A "),
+            (i % 9).cast("string"), F.lit("AA, UK.")))
+        .otherwise(F.concat(
+            F.lit("No street address in doc "), ds, F.lit(".")))
     )
     p = d.select("doc_id", text.alias("text"))
     t = F.col("text")
-    kind = (
-        F.when(t.contains("Traceback (most recent call last):"),
-               F.lit("python"))
-        .when(t.rlike(r"[a-z.]+\.[A-Za-z]+Exception"), F.lit("java"))
-        .otherwise(F.lit("none"))
+    street = F.regexp_extract(
+        t, "([0-9]+ [A-Z][a-z]+ (?:St|Road|Ave))", 1
     )
-    m = p.select(
-        "doc_id",
-        kind.alias("kind"),
-        F.size(F.regexp_extract_all(t, F.lit('  File "'), 0))
-        .cast("long").alias("py_frames"),
-        F.size(F.regexp_extract_all(t, F.lit("\tat "), 0))
-        .cast("long").alias("java_frames"),
+    us = p.where(t.rlike(" [A-Z]{2} [0-9]{5} ")).select(
+        "doc_id", F.lit("US").alias("country"),
+        street.alias("street"),
+        F.regexp_extract(t, ", ([A-Z][a-z]+), [A-Z]{2} ", 1)
+        .alias("city"),
+        F.regexp_extract(t, " ([0-9]{5}) ", 1).alias("postal_code"),
+    )
+    uk = p.where(t.rlike("[A-Z]{2}[0-9][A-Z]? [0-9][A-Z]{2}")).select(
+        "doc_id", F.lit("UK").alias("country"),
+        street.alias("street"),
+        F.regexp_extract(t, ", ([A-Z][a-z]+) [A-Z]{2}[0-9]", 1)
+        .alias("city"),
         F.regexp_extract(
-            t, "([A-Za-z][A-Za-z0-9_.]*(?:Error|Exception))", 1
-        ).alias("exc"),
+            t, "([A-Z]{2}[0-9][A-Z]? [0-9][A-Z]{2})", 1
+        ).alias("postal_code"),
     )
-    k = F.col("kind")
-    return m.select(
-        "doc_id", "kind",
-        F.when(k == "python", F.col("py_frames"))
-        .when(k == "java", F.col("java_frames"))
-        .otherwise(F.lit(0))
-        .cast("long").alias("n_frames"),
-        F.when(k == "none", F.lit("")).otherwise(F.col("exc"))
-        .alias("exception_type"),
-        F.when(k != "none", F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_stacktrace"),
+    return us.unionByName(uk).where(F.col("postal_code") != "")
+
+
+def _webimg_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (kind and
+    dims exist before the container bytes are assembled)."""
+    from ocr_spark.operators.multimodal import synth_webimg_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, '{r['kind']}', '{r['variant']}', "
+        f"{r['width']}, {r['height']})"
+        for r in synth_webimg_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, kind, variant, width, height)"
     )
 
 
-def _recipe_oracle() -> str:
+@query("webp_avif_sniff", _webimg_oracle())
+def webp_avif_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Modern-image container sniffing (round 4): WebP and AVIF now
+    dominate new crawls, and their DIMENSIONS live in container
+    headers (VP8X 24-bit canvas, VP8L 14-bit packed, ISOBMFF ftyp
+    brand) — so routing and size filtering run header-only while
+    pixel decode stays behind the named production calls. Extended
+    and lossless WebP, avif and heic brands, and a JPEG negative all
+    plant; reference parity: the reference dispatches .png/.jpg/PNM
+    only (image.c:271-336) and has no modern-container path at all.
+
+    Scale shape: Arrow-batched mapInPandas reading <=30 header
+    bytes per image.
+    """
+    from ocr_spark.operators.multimodal import (
+        synth_webimg_corpus,
+        webimg_features,
+    )
+
+    corpus = synth_webimg_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return webimg_features(base.repartition(8, "img_id"))
+
+
+def _epub_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (member
+    lists exist before the ZIP is assembled)."""
+    from ocr_spark.operators.multimodal import synth_epub_corpus
+
+    rows = ", ".join(
+        f"({r['doc_id']}, {r['is_zip']}, {r['is_epub']}, "
+        f"{r['n_members']}, {r['n_chapters']}, "
+        f"CAST({r['total_uncompressed']} AS BIGINT))"
+        for r in synth_epub_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(doc_id, is_zip, is_epub, n_members, n_chapters, "
+        "total_uncompressed)"
+    )
+
+
+@query("epub_container_list", _epub_oracle())
+def epub_container_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EPUB/ZIP container listing (round 4): books, DOCX and ODT are
+    ZIP archives, and the central directory names every member with
+    its UNCOMPRESSED size — so the pipeline can identify an EPUB
+    (stored-first mimetype member), count its chapters and budget
+    the inflation before decompressing anything. Real EPUB shapes,
+    a plain data zip and a non-zip payload all plant.
+
+    Scale shape: Arrow-batched mapInPandas over the central
+    directory only (plus the tiny STORED mimetype read); member
+    bodies never inflate.
+    """
+    from ocr_spark.operators.multimodal import (
+        epub_features,
+        synth_epub_corpus,
+    )
+
+    corpus = synth_epub_corpus()
+    base = spark.createDataFrame(
+        [(r["doc_id"], bytearray(r["payload"])) for r in corpus],
+        "doc_id int, media binary",
+    )
+    return epub_features(base.repartition(4, "doc_id"))
+
+
+def _anchor_consensus_oracle() -> str:
+    return """
+    WITH v AS (
+      SELECT * FROM (VALUES
+        (0, 'click here'), (1, 'home'), (2, 'official site'),
+        (3, 'product page'), (4, 'read more')) AS t(k, anchor)),
+    e AS (
+      SELECT (doc_id * 3 + 1) % 17 AS target, doc_id % 5 AS k
+      FROM documents
+      UNION ALL
+      SELECT (doc_id * 5 + 2) % 17 AS target, (doc_id + 3) % 5 AS k
+      FROM documents),
+    c AS (
+      SELECT e.target, v.anchor, COUNT(*) AS cnt
+      FROM e JOIN v ON e.k = v.k
+      GROUP BY e.target, v.anchor),
+    m AS (
+      SELECT target, MAX(cnt) AS top_count, SUM(cnt) AS n_links,
+        COUNT(*) AS n_anchors
+      FROM c GROUP BY target),
+    w AS (
+      SELECT c.target, MIN(c.anchor) AS consensus_anchor
+      FROM c JOIN m ON c.target = m.target AND c.cnt = m.top_count
+      GROUP BY c.target)
+    SELECT CAST(m.target AS BIGINT) AS target_host,
+      w.consensus_anchor,
+      CAST(m.top_count AS BIGINT) AS top_count,
+      CAST(m.n_anchors AS BIGINT) AS n_anchors,
+      CAST(m.n_links AS BIGINT) AS n_links
+    FROM m JOIN w ON m.target = w.target
+    """
+
+
+@query("anchor_text_consensus", _anchor_consensus_oracle())
+def anchor_text_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inbound anchor-text consensus per target host (round 4): the
+    most frequent anchor text pointing at a host is a crowd-sourced
+    label for what the host IS — classic ranking evidence and a
+    retrieval-training signal (anchor→target pairs are weak query→
+    doc supervision). Computed in two corpus-scaled hash aggregates:
+    (target, anchor) counts, then per-target max/sum/count — and the
+    STRING winner is picked by joining the counts back on
+    cnt == top_count and min()-ing only the tied rows, so no
+    string-buffered aggregate ever runs over corpus-sized input (the
+    min(anchor) group input is bounded by the tie set, not the link
+    count; the struct-min/window forms both sort the corpus —
+    SKILL §8's gotcha).
+
+    Scale shape: union of two projections → hash-agg on (target,
+    anchor) → hash-agg on target → equi-join back. All shuffles key
+    on target (uniform by construction); no window, no sort, no
+    broadcast of the corpus-scaled host dim.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    vocab = ["click here", "home", "official site",
+             "product page", "read more"]
+    amap = F.array(*[F.lit(a) for a in vocab])
+    e1 = d.select(((i * 3 + 1) % 17).alias("target"),
+                  amap[(i % 5).cast("int")].alias("anchor"))
+    e2 = d.select(((i * 5 + 2) % 17).alias("target"),
+                  amap[((i + 3) % 5).cast("int")].alias("anchor"))
+    # c staged (r5): it feeds the rollup AND the tie join-back side —
+    # un-staged, the corpus union+count replans per consumer
+    c = e1.unionAll(e2).groupBy("target", "anchor").count() \
+        .withColumnRenamed("count", "cnt").localCheckpoint(eager=False)
+    m = c.groupBy("target").agg(
+        F.max("cnt").alias("top_count"),
+        F.sum("cnt").alias("n_links"),
+        F.count(F.lit(1)).alias("n_anchors"),
+    )
+    ca, ma = c.alias("ca"), m.alias("ma")
+    w = (
+        ca.join(ma, (F.col("ca.target") == F.col("ma.target"))
+                & (F.col("ca.cnt") == F.col("ma.top_count")))
+        .select(F.col("ca.target").alias("t"), F.col("ca.anchor"))
+        .groupBy("t").agg(F.min("anchor").alias("consensus_anchor"))
+    )
+    return m.join(w, F.col("target") == F.col("t")).select(
+        F.col("target").cast("long").alias("target_host"),
+        "consensus_anchor",
+        F.col("top_count").cast("long").alias("top_count"),
+        F.col("n_anchors").cast("long").alias("n_anchors"),
+        F.col("n_links").cast("long").alias("n_links"),
+    )
+
+
+def _host_boilerplate_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id, doc_id % 7 AS host FROM documents),
+    lines AS (
+      SELECT host, 'nav home about contact' AS line FROM p
+      UNION ALL
+      SELECT host, 'copyright site ' || CAST(host AS VARCHAR) FROM p
+      UNION ALL
+      SELECT host, 'unique content ' || CAST(doc_id AS VARCHAR) FROM p
+      UNION ALL
+      SELECT host, 'promo banner week ' || CAST(doc_id % 3 AS VARCHAR)
+      FROM p WHERE doc_id % 2 = 0),
+    hp AS (
+      SELECT host, COUNT(*) AS host_pages FROM p GROUP BY host),
+    df AS (
+      SELECT host, line, COUNT(*) AS line_df
+      FROM lines GROUP BY host, line)
+    SELECT CAST(df.host AS BIGINT) AS host, df.line,
+      CAST(line_df AS BIGINT) AS line_df,
+      CAST(host_pages AS BIGINT) AS host_pages,
+      CAST(1000 * line_df // host_pages AS BIGINT) AS df_permille,
+      CAST(CASE WHEN 2 * line_df >= host_pages THEN 1 ELSE 0 END
+        AS INT) AS is_boilerplate
+    FROM df JOIN hp ON df.host = hp.host
+    WHERE line_df >= 2
+    """
+
+
+@query("host_boilerplate_lines", _host_boilerplate_oracle())
+def host_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host-scoped boilerplate-line detection (round 4): the
+    production main-content recipe ccnet_line_dedup does NOT cover —
+    a line is boilerplate relative to ITS OWN HOST (nav, footer,
+    promo strips appearing on ≥50% of the host's pages) and should
+    be removed from every page, not kept-first like corpus-global
+    dedup does. Per-host line document frequency joins back to the
+    per-host page count; the promo line (df high but host-dependent)
+    and the unique-content lines pin both sides of the threshold.
+
+    Scale shape: two hash-aggs — (host, line) DF with map-side
+    combine (a footer on 10^6 pages enters the shuffle once per
+    partition) and host page counts — joined on host. The host dim
+    scales with the corpus, so no broadcast hint (AQE converts while
+    it fits); the df>=2 filter prunes the unique-line long tail
+    before the join.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    p = d.select("doc_id", (i % 7).alias("host"))
+    hh = (F.col("host")).cast("string")
+    l1 = p.select("host", F.lit("nav home about contact").alias("line"))
+    l2 = p.select(
+        "host", F.concat(F.lit("copyright site "), hh).alias("line"))
+    l3 = p.select(
+        "host",
+        F.concat(F.lit("unique content "), F.col("doc_id").cast("string"))
+        .alias("line"))
+    l4 = p.where(i % 2 == 0).select(
+        "host",
+        F.concat(F.lit("promo banner week "),
+                 (i % 3).cast("string")).alias("line"))
+    lines = l1.unionAll(l2).unionAll(l3).unionAll(l4)
+    hp = p.groupBy("host").agg(F.count(F.lit(1)).alias("host_pages"))
+    df = lines.groupBy("host", "line").agg(
+        F.count(F.lit(1)).alias("line_df"))
+    j = df.where(F.col("line_df") >= 2).join(hp, "host")
+    return j.select(
+        F.col("host").cast("long").alias("host"), "line",
+        F.col("line_df").cast("long").alias("line_df"),
+        F.col("host_pages").cast("long").alias("host_pages"),
+        F.floor(F.lit(1000) * F.col("line_df") / F.col("host_pages"))
+        .cast("long").alias("df_permille"),
+        F.when(2 * F.col("line_df") >= F.col("host_pages"), F.lit(1))
+        .otherwise(F.lit(0)).cast("int").alias("is_boilerplate"),
+    )
+
+
+def _session_param_oracle() -> str:
+    return """
+    WITH kv AS (
+      SELECT doc_id % 11 AS host, 'sessionid' AS param,
+        md5(CAST(doc_id AS VARCHAR)) AS val
+      FROM documents
+      UNION ALL
+      SELECT doc_id % 11 AS host, 'page' AS param,
+        CAST(doc_id % 5 AS VARCHAR) AS val
+      FROM documents
+      UNION ALL
+      SELECT doc_id % 11 AS host, 'lang' AS param, 'en' AS val
+      FROM documents WHERE doc_id % 3 = 0),
+    c AS (
+      SELECT host, param, COUNT(*) AS n_occurrences,
+        COUNT(DISTINCT val) AS n_values
+      FROM kv GROUP BY host, param)
+    SELECT CAST(host AS BIGINT) AS host, param,
+      CAST(n_occurrences AS BIGINT) AS n_occurrences,
+      CAST(n_values AS BIGINT) AS n_values,
+      CAST(1000 * n_values // n_occurrences AS BIGINT)
+        AS uniq_permille,
+      CAST(CASE WHEN 10 * n_values >= 9 * n_occurrences
+        THEN 1 ELSE 0 END AS INT) AS is_session_param
+    FROM c
+    """
+
+
+@query("session_param_entropy", _session_param_oracle())
+def session_param_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-parameter detection by value entropy (round 4): a URL
+    parameter whose value is distinct on (nearly) every occurrence is
+    a session/tracking token — stripping it collapses crawl aliases —
+    while low-cardinality params (page, lang) are content-bearing.
+    query_param_mining learns WHICH params are frequent; this learns
+    which are STRIPPABLE, from the distinct-value ratio per (host,
+    param). The md5 session value, a 5-ary pagination value and a
+    constant locale pin the three regimes.
+
+    Scale shape: one hash-agg on (host, param) with an exact distinct
+    (two-phase partial under AQE); at production the distinct swaps
+    for the grouped-HLL surface. No window, no sort.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    host = (i % 11).alias("host")
+    k1 = d.select(host, F.lit("sessionid").alias("param"),
+                  F.md5(i.cast("string")).alias("val"))
+    k2 = d.select(host, F.lit("page").alias("param"),
+                  (i % 5).cast("string").alias("val"))
+    k3 = d.where(i % 3 == 0).select(
+        host, F.lit("lang").alias("param"), F.lit("en").alias("val"))
+    kv = k1.unionAll(k2).unionAll(k3)
+    c = kv.groupBy("host", "param").agg(
+        F.count(F.lit(1)).alias("n_occurrences"),
+        F.countDistinct("val").alias("n_values"),
+    )
+    return c.select(
+        F.col("host").cast("long").alias("host"), "param",
+        F.col("n_occurrences").cast("long").alias("n_occurrences"),
+        F.col("n_values").cast("long").alias("n_values"),
+        F.floor(F.lit(1000) * F.col("n_values") / F.col("n_occurrences"))
+        .cast("long").alias("uniq_permille"),
+        F.when(10 * F.col("n_values") >= 9 * F.col("n_occurrences"),
+               F.lit(1)).otherwise(F.lit(0)).cast("int")
+        .alias("is_session_param"),
+    )
+
+
+def _url_alias_oracle() -> str:
+    return """
+    WITH u AS (
+      SELECT doc_id,
+        'https://h' || CAST(doc_id % 5 AS VARCHAR) || '.ex/p/'
+        || CAST(doc_id % 50 AS VARCHAR)
+        || CASE doc_id % 4
+             WHEN 0 THEN ''
+             WHEN 1 THEN '/'
+             WHEN 2 THEN '/index.html'
+             ELSE '?utm_source=feed'
+           END AS url
+      FROM documents),
+    n AS (
+      SELECT url,
+        regexp_replace(regexp_replace(regexp_replace(url,
+          '[?]utm_[a-z]+=[^&]*$', '', 'g'),
+          '/index[.]html$', '', 'g'),
+          '/$', '', 'g') AS norm_url
+      FROM u),
+    g AS (
+      SELECT norm_url, COUNT(*) AS n_fetches,
+        COUNT(DISTINCT url) AS n_variants
+      FROM n GROUP BY norm_url)
+    SELECT norm_url,
+      CAST(n_fetches AS BIGINT) AS n_fetches,
+      CAST(n_variants AS BIGINT) AS n_variants
+    FROM g WHERE n_variants >= 2
+    """
+
+
+@query("url_alias_groups", _url_alias_oracle())
+def url_alias_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL alias grouping (round 4): the same resource reached as
+    ``/p/7``, ``/p/7/``, ``/p/7/index.html`` and
+    ``/p/7?utm_source=feed`` wastes crawl budget 4× and pollutes
+    URL-keyed dedup. url_canonicalize normalizes one URL; this
+    aggregates the corpus to MEASURE the aliasing — groups whose
+    variant count exceeds one are refetch waste, and the group table
+    is the input for a host-level alias-rate metric.
+
+    Scale shape: per-row normalize (three anchored replaces) → one
+    hash-agg on the normalized URL (uniform key) with exact distinct;
+    no window, no sort.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    url = F.concat(
+        F.lit("https://h"), (i % 5).cast("string"), F.lit(".ex/p/"),
+        (i % 50).cast("string"),
+        F.when(i % 4 == 0, F.lit(""))
+        .when(i % 4 == 1, F.lit("/"))
+        .when(i % 4 == 2, F.lit("/index.html"))
+        .otherwise(F.lit("?utm_source=feed")),
+    )
+    u = d.select("doc_id", url.alias("url"))
+    norm = F.regexp_replace(F.regexp_replace(F.regexp_replace(
+        F.col("url"),
+        r"[?]utm_[a-z]+=[^&]*$", ""),
+        r"/index[.]html$", ""),
+        "/$", "")
+    n = u.select("url", norm.alias("norm_url"))
+    g = n.groupBy("norm_url").agg(
+        F.count(F.lit(1)).alias("n_fetches"),
+        F.countDistinct("url").alias("n_variants"),
+    )
+    return g.where(F.col("n_variants") >= 2).select(
+        "norm_url",
+        F.col("n_fetches").cast("long").alias("n_fetches"),
+        F.col("n_variants").cast("long").alias("n_variants"),
+    )
+
+
+def _span_grid_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id, doc_id % 3 AS v,
+        'a' || CAST(doc_id % 7 AS VARCHAR) AS av,
+        'y' || CAST(doc_id % 5 AS VARCHAR) AS yv
+      FROM documents)
+    SELECT doc_id, CAST(r AS BIGINT) AS r, CAST(c AS BIGINT) AS c,
+      txt, CAST(is_header AS INT) AS is_header,
+      CAST(is_origin AS INT) AS is_origin
+    FROM (
+      SELECT doc_id, 0 AS r, 0 AS c, av AS txt, 0 AS is_header,
+        1 AS is_origin FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 0, 1, 'b', 0, 1 FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 1, 0, av, 0, 0 FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 1, 1, 'c', 0, 1 FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 0, 0, 'h', 1, 1 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 0, 1, 'h', 1, 0 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 1, 0, 'x', 0, 1 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 1, 1, yv, 0, 1 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 0, 0, 'p', 0, 1 FROM p WHERE v = 2
+      UNION ALL SELECT doc_id, 0, 1, 'q', 0, 1 FROM p WHERE v = 2
+      UNION ALL SELECT doc_id, 1, 0, 'r', 0, 1 FROM p WHERE v = 2
+      UNION ALL SELECT doc_id, 1, 1, 's', 0, 1 FROM p WHERE v = 2)
+    """
+
+
+@query("table_span_grid", _span_grid_oracle())
+def table_span_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Span-normalized table grids (round 4): rowspan/colspan cells
+    claim rectangles of the logical grid, so occurrence-ordered cell
+    indices (html_table_cells' contract) misalign columns the moment
+    a span appears — joining a "price" column across rows needs the
+    browser's grid model, with the spanned value REPLICATED into
+    every slot it covers. extract_grid implements the table-model
+    filling algorithm (later cells skip slots claimed from above,
+    spans clamped to the spec's cap); rowspan, colspan and plain
+    tables are synthesized and the full expected grid is the oracle.
+
+    Scale shape: one Arrow-batched mapInPandas over the page rows —
+    per-row fan-out to grid slots, no shuffle, no per-row Python.
+    """
+    from typing import Iterator as _It
+
+    import pandas as _pd
+
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 3
+    html = (
+        F.when(v == 0, F.concat(
+            F.lit('<table><tr><td rowspan="2">a'),
+            (i % 7).cast("string"),
+            F.lit("</td><td>b</td></tr><tr><td>c</td></tr></table>")))
+        .when(v == 1, F.concat(
+            F.lit('<table><tr><th colspan="2">h</th></tr>'
+                  "<tr><td>x</td><td>y"),
+            (i % 5).cast("string"),
+            F.lit("</td></tr></table>")))
+        .otherwise(F.lit(
+            "<table><tr><td>p</td><td>q</td></tr>"
+            "<tr><td>r</td><td>s</td></tr></table>"))
+    )
+    p = d.select("doc_id", html.alias("html"))
+
+    def run(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+        from ocr_spark.functions.html_extract import extract_grid
+
+        cols = ["doc_id", "r", "c", "txt", "is_header", "is_origin"]
+        for pdf in batches:
+            rows = []
+            for doc_id, page in zip(pdf["doc_id"], pdf["html"]):
+                for (_t, r, c, txt, hdr, org) in extract_grid(page):
+                    rows.append(
+                        (doc_id, r, c, txt, int(hdr), int(org)))
+            yield _pd.DataFrame(rows, columns=cols)
+
+    return p.mapInPandas(
+        run,
+        "doc_id long, r long, c long, txt string, "
+        "is_header int, is_origin int",
+    )
+
+
+def _outlink_fanout_oracle() -> str:
+    return """
+    WITH j AS (
+      SELECT * FROM (VALUES (0), (1), (2), (3)) AS t(j)),
+    e AS (
+      SELECT d.doc_id % 9 AS src_host, d.doc_id,
+        (d.doc_id * 7 + j.j * 11) % 37 AS target_host
+      FROM documents d CROSS JOIN j
+      WHERE j.j < d.doc_id % 4),
+    g AS (
+      SELECT src_host,
+        COUNT(DISTINCT doc_id) AS n_pages,
+        COUNT(*) AS n_edges,
+        COUNT(DISTINCT target_host) AS n_targets
+      FROM e GROUP BY src_host)
+    SELECT CAST(src_host AS BIGINT) AS src_host,
+      CAST(n_pages AS BIGINT) AS n_pages,
+      CAST(n_edges AS BIGINT) AS n_edges,
+      CAST(n_targets AS BIGINT) AS n_targets,
+      CAST(1000 * n_targets // n_edges AS BIGINT)
+        AS target_diversity_permille
+    FROM g
+    """
+
+
+@query("host_outlink_fanout", _outlink_fanout_oracle())
+def host_outlink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-host outlink fan-out profile (round 4): a host whose
+    external edges spread across maximally many target hosts (high
+    target diversity at high volume) matches the link-farm /
+    directory-spam shape, while an editorial site repeats a small
+    citation neighborhood — the aggregate prior that PageRank-family
+    scoring (host_pagerank, trustrank_hosts) wants for damping
+    seed selection. Edge multiplicity varies per page (0–3 links).
+
+    Scale shape: a 4-row literal dimension joined in (constant build
+    side — the one broadcast that is CORRECT at every scale), then
+    one hash-agg on src_host with two exact distincts; the at-scale
+    variant swaps those for the grouped-HLL surface.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    jd = spark.range(4).withColumnRenamed("id", "j")
+    e = (
+        d.crossJoin(F.broadcast(jd))
+        .where(F.col("j") < i % 4)
+        .select(
+            (i % 9).alias("src_host"), "doc_id",
+            ((i * 7 + F.col("j") * 11) % 37).alias("target_host"),
+        )
+    )
+    g = e.groupBy("src_host").agg(
+        F.countDistinct("doc_id").alias("n_pages"),
+        F.count(F.lit(1)).alias("n_edges"),
+        F.countDistinct("target_host").alias("n_targets"),
+    )
+    return g.select(
+        F.col("src_host").cast("long").alias("src_host"),
+        F.col("n_pages").cast("long").alias("n_pages"),
+        F.col("n_edges").cast("long").alias("n_edges"),
+        F.col("n_targets").cast("long").alias("n_targets"),
+        F.floor(F.lit(1000) * F.col("n_targets") / F.col("n_edges"))
+        .cast("long").alias("target_diversity_permille"),
+    )
+
+
+def _burst_hours_oracle() -> str:
+    return """
+    WITH h AS (
+      SELECT event_type, strftime(ts, '%Y-%m-%d %H') AS hour,
+        COUNT(*) AS cnt
+      FROM events GROUP BY event_type, hour),
+    t AS (
+      SELECT event_type, SUM(cnt) AS total, COUNT(*) AS n_hours
+      FROM h GROUP BY event_type)
+    SELECT h.event_type, h.hour,
+      CAST(h.cnt AS BIGINT) AS cnt,
+      CAST(t.total AS BIGINT) AS total,
+      CAST(t.n_hours AS BIGINT) AS n_hours,
+      CAST(CASE WHEN h.cnt * t.n_hours > 2 * t.total THEN 1 ELSE 0
+        END AS INT) AS is_burst
+    FROM h JOIN t ON h.event_type = t.event_type
+    WHERE h.cnt * t.n_hours > 2 * t.total
+    """
+
+
+@query("event_burst_hours", _burst_hours_oracle())
+def event_burst_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-type burst-hour detection (round 4): hours where an event
+    type runs at more than twice its own average rate — crawl-ops
+    reads these as incident windows (error bursts), fetch-scheduler
+    feedback (politeness violations cluster), or bot-traffic spikes.
+    The burst criterion is the INTEGER cross-multiplication
+    ``cnt * n_hours > 2 * total`` — no float mean ever computed, so
+    the comparison is exact on both engines.
+
+    Scale shape: hash-agg on (type, hour) → hash-agg on type →
+    equi-join back on type (tiny key space, AQE broadcasts the
+    totals side). Timestamps compare via formatted strings only.
+    """
+    e = load_table(spark, sf_dir, "events")
+    h = e.groupBy(
+        "event_type",
+        F.date_format("ts", "yyyy-MM-dd HH").alias("hour"),
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    t = h.groupBy("event_type").agg(
+        F.sum("cnt").alias("total"),
+        F.count(F.lit(1)).alias("n_hours"),
+    )
+    ha, ta = h.alias("ha"), t.alias("ta")
+    j = ha.join(ta, F.col("ha.event_type") == F.col("ta.event_type"))
+    return (
+        j.where(F.col("ha.cnt") * F.col("ta.n_hours")
+                > 2 * F.col("ta.total"))
+        .select(
+            F.col("ha.event_type").alias("event_type"),
+            F.col("ha.hour").alias("hour"),
+            F.col("ha.cnt").cast("long").alias("cnt"),
+            F.col("ta.total").cast("long").alias("total"),
+            F.col("ta.n_hours").cast("long").alias("n_hours"),
+            F.lit(1).cast("int").alias("is_burst"),
+        )
+    )
+
+
+def _transition_oracle() -> str:
+    return """
+    WITH o AS (
+      SELECT user_id, event_type,
+        LAG(event_type) OVER (PARTITION BY user_id
+          ORDER BY ts, event_id) AS prev_type
+      FROM events),
+    c AS (
+      SELECT prev_type, event_type AS next_type, COUNT(*) AS cnt
+      FROM o WHERE prev_type IS NOT NULL
+      GROUP BY prev_type, next_type),
+    t AS (
+      SELECT prev_type, SUM(cnt) AS out_total FROM c GROUP BY prev_type)
+    SELECT c.prev_type, c.next_type,
+      CAST(c.cnt AS BIGINT) AS cnt,
+      CAST(1000 * c.cnt // t.out_total AS BIGINT) AS prob_permille
+    FROM c JOIN t ON c.prev_type = t.prev_type
+    """
+
+
+@query("event_transition_matrix", _transition_oracle())
+def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event-type transition matrix (round 4): first-order Markov
+    transition counts over each user's event sequence — the
+    session-model behind sessionize-style analytics (view→click vs
+    view→error transition mass separates healthy funnels from broken
+    ones). The per-user LAG orders by (ts, event_id) so ties are
+    deterministic.
+
+    Scale shape: one window partitioned on user_id (keyed sort,
+    scales with users, never a global sort) → hash-agg on the
+    transition pair → totals join for the integer permille. The
+    at-scale alternative — self-join on consecutive sequence
+    numbers — costs an extra shuffle; the keyed window is cheaper.
+    """
+    from pyspark.sql.window import Window
+
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    o = e.select(
+        "user_id", "event_type",
+        F.lag("event_type").over(w).alias("prev_type"),
+    )
+    c = (
+        o.where(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    t = c.groupBy("prev_type").agg(F.sum("cnt").alias("out_total"))
+    ca, ta = c.alias("ca"), t.alias("ta")
+    j = ca.join(ta, F.col("ca.prev_type") == F.col("ta.prev_type"))
+    return j.select(
+        F.col("ca.prev_type").alias("prev_type"),
+        F.col("ca.next_type").alias("next_type"),
+        F.col("ca.cnt").cast("long").alias("cnt"),
+        F.floor(F.lit(1000) * F.col("ca.cnt") / F.col("ta.out_total"))
+        .cast("long").alias("prob_permille"),
+    )
+
+
+def _ai_agent_matrix_oracle() -> str:
+    return """
+    WITH a AS (
+      SELECT * FROM (VALUES ('GPTBot'), ('CCBot'),
+        ('Google-Extended'), ('Applebot-Extended')) AS t(agent)),
+    p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN 'User-agent: GPTBot' || chr(10) || 'Disallow: /'
+            || chr(10) || chr(10) || 'User-agent: CCBot' || chr(10)
+            || 'Disallow: /' || chr(10) || chr(10)
+            || 'User-agent: *' || chr(10) || 'Disallow: /private/'
+          WHEN 1 THEN 'User-agent: Google-Extended' || chr(10)
+            || 'Disallow: /' || chr(10) || chr(10)
+            || 'User-agent: *' || chr(10) || 'Allow: /'
+          ELSE 'User-agent: *' || chr(10) || 'Disallow: /admin/'
+        END AS txt
+      FROM documents)
+    SELECT p.doc_id, a.agent,
+      CAST(CASE WHEN contains(p.txt,
+        'User-agent: ' || a.agent || chr(10) || 'Disallow: /'
+        || chr(10)) OR p.txt LIKE
+        '%User-agent: ' || a.agent || chr(10) || 'Disallow: /'
+        THEN 1 ELSE 0 END AS INT) AS blocked_fully,
+      CAST(CASE WHEN contains(p.txt, 'User-agent: ' || a.agent
+        || chr(10)) THEN 0 ELSE 1 END AS INT) AS inherits_star
+    FROM p CROSS JOIN a
+    """
+
+
+@query("robots_ai_agent_matrix", _ai_agent_matrix_oracle())
+def robots_ai_agent_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AI-crawler robots matrix (round 4): per (site, AI agent) —
+    GPTBot, CCBot, Google-Extended, Applebot-Extended — whether the
+    is fully blocked by a named group or inherits the ``*`` group.
+    This is the fleet-level view a training-data crawler needs
+    (robots_prefix_filter answers per-URL path questions; this
+    answers "may agent X use this site at all"), and the named-block
+    census is the industry's opt-out adoption metric. The
+    full-block test requires ``Disallow: /`` as the WHOLE rule
+    (newline- or end-anchored) so ``/private/`` doesn't false-match.
+
+    Scale shape: corpus × 4-row literal agent dim (constant
+    broadcast) → per-row flags; no aggregation, no shuffle beyond
+    the broadcast.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 3
+    txt = (
+        F.when(v == 0, F.lit(
+            "User-agent: GPTBot\nDisallow: /\n\n"
+            "User-agent: CCBot\nDisallow: /\n\n"
+            "User-agent: *\nDisallow: /private/"))
+        .when(v == 1, F.lit(
+            "User-agent: Google-Extended\nDisallow: /\n\n"
+            "User-agent: *\nAllow: /"))
+        .otherwise(F.lit("User-agent: *\nDisallow: /admin/"))
+    )
+    p = d.select("doc_id", txt.alias("txt"))
+    agents = spark.createDataFrame(
+        [("GPTBot",), ("CCBot",), ("Google-Extended",),
+         ("Applebot-Extended",)], "agent string")
+    j = p.crossJoin(F.broadcast(agents))
+    t, a = F.col("txt"), F.col("agent")
+    named = F.concat(F.lit("User-agent: "), a, F.lit("\n"))
+    full_block_nl = F.concat(named, F.lit("Disallow: /\n"))
+    full_block_end = F.concat(named, F.lit("Disallow: /"))
+    return j.select(
+        "doc_id", "agent",
+        F.when(t.contains(full_block_nl) | t.endswith(full_block_end),
+               F.lit(1)).otherwise(F.lit(0)).cast("int")
+        .alias("blocked_fully"),
+        F.when(t.contains(named), F.lit(0)).otherwise(F.lit(1))
+        .cast("int").alias("inherits_star"),
+    )
+
+
+def _lang_length_oracle() -> str:
+    return """
+    WITH g AS (
+      SELECT lang, COUNT(*) AS n_docs, SUM(n_chars) AS total_chars
+      FROM documents GROUP BY lang),
+    o AS (
+      SELECT d.lang, COUNT(*) AS n_outliers
+      FROM documents d JOIN g ON d.lang = g.lang
+      WHERE d.n_chars * g.n_docs > 2 * g.total_chars
+      GROUP BY d.lang)
+    SELECT g.lang,
+      CAST(g.n_docs AS BIGINT) AS n_docs,
+      CAST(g.total_chars AS BIGINT) AS total_chars,
+      CAST(g.total_chars // g.n_docs AS BIGINT) AS mean_chars,
+      CAST(COALESCE(o.n_outliers, 0) AS BIGINT) AS n_outliers
+    FROM g LEFT JOIN o ON g.lang = o.lang
+    """
+
+
+@query("lang_length_outliers", _lang_length_oracle())
+def lang_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language length norms + outliers (round 4): document
+    length distributions differ BY LANGUAGE (zh chars ≠ en chars),
+    so length-based quality cuts must be language-relative — this
+    computes each language's mean from the REAL n_chars column and
+    counts the >2x-mean outliers with the integer cross-multiplied
+    predicate ``n_chars * n_docs > 2 * total_chars`` (no float mean
+    materialized anywhere).
+
+    Scale shape: hash-agg on lang → join back to the corpus on lang
+    (tiny dim side broadcast by AQE) → second hash-agg; two passes,
+    both keyed on lang.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    g = d.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+    )
+    da, ga = d.alias("da"), g.alias("ga")
+    o = (
+        da.join(ga, F.col("da.lang") == F.col("ga.lang"))
+        .where(F.col("da.n_chars") * F.col("ga.n_docs")
+               > 2 * F.col("ga.total_chars"))
+        .groupBy(F.col("da.lang").alias("olang"))
+        .agg(F.count(F.lit(1)).alias("n_outliers"))
+    )
+    j = g.join(o, g.lang == o.olang, "left")
+    return j.select(
+        "lang",
+        F.col("n_docs").cast("long").alias("n_docs"),
+        F.col("total_chars").cast("long").alias("total_chars"),
+        F.floor(F.col("total_chars") / F.col("n_docs")).cast("long")
+        .alias("mean_chars"),
+        F.coalesce(F.col("n_outliers"), F.lit(0)).cast("long")
+        .alias("n_outliers"),
+    )
+
+
+def _knn_label_oracle() -> str:
+    return f"""
+    WITH q AS (
+      SELECT vec_id AS qid, embedding AS qv, label AS qlabel
+      FROM embeddings WHERE vec_id % 50 = 0),
+    c AS (
+      SELECT q.qid, q.qlabel, e.vec_id AS nid, e.label AS nlabel,
+        FLOOR({_duck_cosine('e.embedding', 'q.qv')} * 1000000 + 0.5)
+          / 1000000 AS cos
+      FROM q JOIN embeddings e ON e.vec_id <> q.qid),
+    r AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY qid ORDER BY cos DESC, nid) AS rn
+      FROM c)
+    SELECT CAST(qid AS BIGINT) AS query_id,
+      CAST(qlabel AS INT) AS query_label,
+      CAST(nid AS BIGINT) AS neighbor_id,
+      CAST(nlabel AS INT) AS neighbor_label,
+      CAST(CASE WHEN qlabel = nlabel THEN 1 ELSE 0 END AS INT)
+        AS same_label
+    FROM r WHERE rn = 1
+    """
+
+
+@query("knn_label_agreement", _knn_label_oracle())
+def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-NN label agreement (round 4): the standard intrinsic quality
+    check for an embedding space — if nearest neighbors don't share
+    labels, every downstream consumer (SemDeDup, IVF clustering,
+    similarity search) inherits a broken geometry, so this metric
+    gates embedding-model upgrades before the expensive reindex. A
+    FIXED 2% query sample keeps the evaluation corpus-scale-safe
+    (sample × corpus, never all-pairs; production uses the IVF index
+    for the neighbor lookup — this exact form is the eval oracle).
+    Cosines use the exact-fold + deterministic-floor discipline of
+    ann_cosine_topk; the keyed per-query window picks top-1 with a
+    vec_id tie-break.
+
+    Scale shape: broadcast sample × partition-parallel corpus (BNLJ
+    on a tiny build side), keyed window over per-query groups.
+    """
+    from ocr_spark.operators.dedup import cosine, round_det
+    from pyspark.sql.window import Window
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qv"),
+        F.col("label").alias("qlabel"),
+    )
+    joined = e.crossJoin(F.broadcast(q)).where(
+        F.col("vec_id") != F.col("qid"))
+    c = joined.select(
+        "qid", "qlabel",
+        F.col("vec_id").alias("nid"),
+        F.col("label").alias("nlabel"),
+        round_det(cosine(F.col("embedding"), F.col("qv")), 6)
+        .alias("cos"),
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.desc("cos"), F.asc("nid"))
+    r = c.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") == 1)
+    return r.select(
+        F.col("qid").cast("long").alias("query_id"),
+        F.col("qlabel").cast("int").alias("query_label"),
+        F.col("nid").cast("long").alias("neighbor_id"),
+        F.col("nlabel").cast("int").alias("neighbor_label"),
+        F.when(F.col("qlabel") == F.col("nlabel"), F.lit(1))
+        .otherwise(F.lit(0)).cast("int").alias("same_label"),
+    )
+
+
+def _label_distribution_oracle() -> str:
+    return """
+    WITH g AS (
+      SELECT label, COUNT(*) AS n FROM embeddings GROUP BY label),
+    t AS (SELECT SUM(n) AS total FROM g)
+    SELECT CAST(g.label AS INT) AS label,
+      CAST(g.n AS BIGINT) AS n,
+      CAST(1000 * g.n // t.total AS BIGINT) AS share_permille
+    FROM g CROSS JOIN t
+    """
+
+
+@query("label_distribution", _label_distribution_oracle())
+def label_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-distribution profile (round 4): class balance of the
+    embedding corpus — the prior every label-conditioned operation
+    (stratified sampling, per-class dedup thresholds, the
+    knn_label_agreement baseline: agreement must beat the majority
+    share to mean anything) reads first. Integer permille against a
+    single-row total (scalar broadcast).
+
+    Scale shape: hash-agg on label → cross join with the one-row
+    total (constant build side).
+    """
+    d = load_table(spark, sf_dir, "embeddings")
+    g = d.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
+    t = g.agg(F.sum("n").alias("total"))
+    j = g.crossJoin(F.broadcast(t))
+    return j.select(
+        F.col("label").cast("int").alias("label"),
+        F.col("n").cast("long").alias("n"),
+        F.floor(F.lit(1000) * F.col("n") / F.col("total"))
+        .cast("long").alias("share_permille"),
+    )
+
+
+def _error_streaks_oracle() -> str:
+    return """
+    WITH o AS (
+      SELECT user_id, event_id, event_type,
+        row_number() OVER (PARTITION BY user_id
+          ORDER BY ts, event_id) AS rn_all
+      FROM events),
+    e AS (
+      SELECT user_id, event_id, rn_all,
+        row_number() OVER (PARTITION BY user_id
+          ORDER BY rn_all) AS rn_err
+      FROM o WHERE event_type = 'error'),
+    s AS (
+      SELECT user_id, rn_all - rn_err AS grp,
+        COUNT(*) AS streak_len,
+        MIN(event_id) AS first_event, MAX(event_id) AS last_event
+      FROM e GROUP BY user_id, grp)
+    SELECT CAST(user_id AS BIGINT) AS user_id,
+      CAST(streak_len AS BIGINT) AS streak_len,
+      CAST(first_event AS BIGINT) AS first_event,
+      CAST(last_event AS BIGINT) AS last_event
+    FROM s WHERE streak_len >= 3
+    """
+
+
+@query("error_streaks", _error_streaks_oracle())
+def error_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Consecutive-error streaks (round 4): maximal runs of
+    back-to-back errors per entity via the gaps-and-islands
+    row-number-difference construction — in the crawl reading a
+    3+-fetch error streak is a hard host outage (distinct from
+    error_ratio_by_host's rate: ten scattered errors ≠ ten in a
+    row), the signal that pauses the host rather than demoting it.
+
+    Scale shape: two keyed windows (both partitioned on user_id —
+    the second sorts only the error subset) → hash-agg on the
+    island key. No global sort anywhere.
+    """
+    from pyspark.sql.window import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    o = ev.select(
+        "user_id", "event_id", "event_type",
+        F.row_number().over(w_all).alias("rn_all"),
+    )
+    w_err = Window.partitionBy("user_id").orderBy("rn_all")
+    e = o.where(F.col("event_type") == "error").select(
+        "user_id", "event_id", "rn_all",
+        F.row_number().over(w_err).alias("rn_err"),
+    )
+    s = (
+        e.groupBy("user_id",
+                  (F.col("rn_all") - F.col("rn_err")).alias("grp"))
+        .agg(
+            F.count(F.lit(1)).alias("streak_len"),
+            F.min("event_id").alias("first_event"),
+            F.max("event_id").alias("last_event"),
+        )
+    )
+    return s.where(F.col("streak_len") >= 3).select(
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("streak_len").cast("long").alias("streak_len"),
+        F.col("first_event").cast("long").alias("first_event"),
+        F.col("last_event").cast("long").alias("last_event"),
+    )
+
+
+def _value_quantiles_oracle() -> str:
+    return """
+    WITH g AS (
+      SELECT event_type,
+        quantile_cont(value, 0.5) AS p50,
+        quantile_cont(value, 0.95) AS p95,
+        COUNT(*) AS n
+      FROM events GROUP BY event_type)
+    SELECT event_type,
+      FLOOR(p50 * 10000 + 0.5) / 10000 AS p50,
+      FLOOR(p95 * 10000 + 0.5) / 10000 AS p95,
+      CAST(n AS BIGINT) AS n
+    FROM g
+    """
+
+
+@query("value_quantiles_by_type", _value_quantiles_oracle())
+def value_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-type value quantiles (round 4): p50/p95 of the event value
+    (crawl reading: fetch latency) per type — the tail percentile is
+    what politeness budgets and timeout tuning read, not the mean
+    (one slow host poisons a mean, not a p95). Exact
+    linear-interpolation percentiles on both engines with the
+    deterministic-floor rounding discipline; production swaps exact
+    percentile for an approx sketch at corpus scale (the documented
+    trade, same as countDistinct→HLL).
+
+    Scale shape: one hash-agg on event_type (exact percentile
+    buffers values per small group).
+    """
+    from ocr_spark.operators.dedup import round_det
+
+    ev = load_table(spark, sf_dir, "events")
+    g = ev.groupBy("event_type").agg(
+        F.percentile("value", F.lit(0.5)).alias("p50_raw"),
+        F.percentile("value", F.lit(0.95)).alias("p95_raw"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    return g.select(
+        "event_type",
+        round_det(F.col("p50_raw"), 4).alias("p50"),
+        round_det(F.col("p95_raw"), 4).alias("p95"),
+        F.col("n").cast("long").alias("n"),
+    )
+
+
+def _flac_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (fields
+    exist before the container bytes are assembled)."""
+    from ocr_spark.operators.multimodal import synth_flac_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {r['is_flac']}, {r['sample_rate']}, "
+        f"{r['channels']}, {r['bits_per_sample']}, {r['total_samples']}, "
+        f"{r['duration_ms']}, {r['n_blocks']}, {r['has_tags']})"
+        for r in synth_flac_corpus()
+    )
+    return (
+        "SELECT clip_id, is_flac, sample_rate, channels,"
+        " bits_per_sample, CAST(total_samples AS BIGINT) AS"
+        " total_samples, CAST(duration_ms AS BIGINT) AS duration_ms,"
+        " n_blocks, has_tags FROM (VALUES " + rows
+        + ") AS t(clip_id, is_flac, sample_rate, channels,"
+        " bits_per_sample, total_samples, duration_ms, n_blocks,"
+        " has_tags)"
+    )
+
+
+@query("flac_streaminfo_parse", _flac_oracle())
+def flac_streaminfo_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FLAC STREAMINFO harvest (round 4): sample rate, channels, bit
+    depth and total samples ride in the mandatory first metadata
+    block — so duration and quality filters (drop <16-bit, resample
+    ≠48k) run with ZERO frame decode, which matters because FLAC
+    frame decoding stays behind the named production call like the
+    rest of the compressed-audio family (mp3_id3_tags is the tag
+    sibling; this is the properties sibling). The packed 64-bit
+    word decodes bit-exactly; VORBIS_COMMENT presence routes clips
+    to the tag harvester; a non-FLAC clip pins the sentinel branch.
+
+    Scale shape: Arrow-batched mapInPandas over header bytes only.
+    """
+    from ocr_spark.operators.multimodal import (
+        flac_features,
+        synth_flac_corpus,
+    )
+
+    corpus = synth_flac_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return flac_features(base.repartition(8, "clip_id"))
+
+
+def _mp4_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction."""
+    from ocr_spark.operators.multimodal import synth_mp4_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {r['is_bmff']}, '{r['major_brand']}', "
+        f"{r['timescale']}, {r['duration_ms']}, {r['n_traks']}, "
+        f"{r['has_mdat']}, '{r['top_boxes']}')"
+        for r in synth_mp4_corpus()
+    )
+    return (
+        "SELECT clip_id, is_bmff, major_brand, timescale,"
+        " CAST(duration_ms AS BIGINT) AS duration_ms, n_traks,"
+        " has_mdat, top_boxes FROM (VALUES " + rows
+        + ") AS t(clip_id, is_bmff, major_brand, timescale,"
+        " duration_ms, n_traks, has_mdat, top_boxes)"
+    )
+
+
+@query("mp4_container_boxes", _mp4_oracle())
+def mp4_container_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MP4/ISO-BMFF box walk (round 4): the container structure —
+    brand, movie-header timescale/duration, track count, mdat
+    presence — is everything multimodal ROUTING needs from a video
+    payload, and none of it requires the (gated) codec decode:
+    duration gates clip-length filters, track count separates
+    video+audio from audio-only, and a missing mdat marks
+    fragmented/streaming files that need their segments fetched.
+    Two timescales (1000 and 90000) pin the integer duration
+    normalization; a RIFF payload pins the non-BMFF sentinel.
+
+    Scale shape: Arrow-batched mapInPandas over box headers only.
+    """
+    from ocr_spark.operators.multimodal import (
+        mp4_features,
+        synth_mp4_corpus,
+    )
+
+    corpus = synth_mp4_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return mp4_features(base.repartition(8, "clip_id"))
+
+
+def _stickiness_oracle() -> str:
+    return """
+    WITH triples AS (
+      SELECT DISTINCT
+        strftime(ts, '%Y-%m') AS month,
+        strftime(ts, '%Y-%m-%d') AS day,
+        user_id
+      FROM events),
+    s AS (
+      SELECT month,
+        COUNT(*) AS sum_dau,
+        COUNT(DISTINCT day) AS n_days,
+        COUNT(DISTINCT user_id) AS mau
+      FROM triples GROUP BY month)
+    SELECT month,
+      CAST(sum_dau AS BIGINT) AS sum_dau,
+      CAST(n_days AS BIGINT) AS n_days,
+      CAST(mau AS BIGINT) AS mau,
+      CAST(FLOOR(1000.0 * sum_dau / (n_days * mau)) AS BIGINT)
+        AS stickiness_permille
+    FROM s ORDER BY month
+    """
+
+
+@query("active_user_stickiness", _stickiness_oracle())
+def active_user_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAU/MAU stickiness (round 4): the classic engagement ratio —
+    average daily actives over monthly actives — computed EXACTLY as
+    integers: one distinct pass over (month, day, user) triples,
+    then counts per month (sum of per-day DAU is the triple count —
+    no per-day intermediate materializes). The permille folds the
+    average and the ratio into one integer division so neither
+    engine ever compares floats.
+
+    Scale shape: dropDuplicates is a hash aggregate with map-side
+    partial dedup on (month, day, user) — uniform keys; the second
+    aggregate is month-cardinality. Two exchanges total, both tiny
+    after the map-side combine; countDistinct at 100 TB swaps to the
+    grouped-HLL surface per the house convention.
+    """
+    _utc(spark)
+    e = load_table(spark, sf_dir, "events")
+    triples = e.select(
+        F.date_format("ts", "yyyy-MM").alias("month"),
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        "user_id",
+    ).dropDuplicates()
+    s = triples.groupBy("month").agg(
+        F.count(F.lit(1)).alias("sum_dau"),
+        F.countDistinct("day").alias("n_days"),
+        F.countDistinct("user_id").alias("mau"),
+    )
+    return s.select(
+        "month",
+        F.col("sum_dau").cast("long").alias("sum_dau"),
+        F.col("n_days").cast("long").alias("n_days"),
+        F.col("mau").cast("long").alias("mau"),
+        F.floor(
+            F.lit(1000.0) * F.col("sum_dau")
+            / (F.col("n_days") * F.col("mau"))).cast("long")
+        .alias("stickiness_permille"),
+    ).orderBy("month")
+
+
+def _pdf_info_oracle() -> str:
+    return """
+    SELECT doc_id,
+      CAST(CASE WHEN doc_id % 3 IN (0, 1) THEN 1 ELSE 0 END AS INT)
+        AS has_info,
+      CASE doc_id % 3
+        WHEN 0 THEN 'Report ' || CAST(doc_id % 7 AS VARCHAR)
+        WHEN 1 THEN 'Untitled Draft'
+        ELSE '' END AS title,
+      CASE doc_id % 3
+        WHEN 0 THEN 'Author ' || CAST(doc_id % 5 AS VARCHAR)
+        ELSE '' END AS author,
+      CASE doc_id % 3
+        WHEN 0 THEN '2024-03-15T12:'
+          || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':00'
+        ELSE '' END AS creation_iso
+    FROM documents
+    """
+
+
+@query("pdf_info_metadata", _pdf_info_oracle())
+def pdf_info_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PDF /Info metadata harvest (round 4): title, author and
+    creation date ride in the trailer's /Info dictionary — document-
+    level provenance readable WITHOUT parsing a single page (the
+    metadata face of the pdf_extract family, the same zero-decode
+    argument as the codec-metadata queries). The writer gained an
+    /Info emitter (byte-identical output when absent, so every
+    existing PDF fixture holds); the reader resolves the trailer
+    reference and normalizes the ``D:YYYYMMDDHHmmSS`` date form to
+    ISO. Rotation: full info / title-only / no dictionary.
+
+    Scale shape: two Arrow stages over a binary column (writer +
+    parser), no shuffle.
+    """
+    import pandas as pd
+
+    from ocr_spark.functions.pdf_extract import make_pdf, parse_pdf_info
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                i = int(doc_id)
+                v = i % 3
+                if v == 0:
+                    info = {
+                        "Title": f"Report {i % 7}",
+                        "Author": f"Author {i % 5}",
+                        "CreationDate": f"D:2024031512{i % 60:02d}00",
+                    }
+                elif v == 1:
+                    info = {"Title": "Untitled Draft"}
+                else:
+                    info = None
+                blob = make_pdf([["body text"]], info=info)
+                m = parse_pdf_info(blob)
+                rows.append(
+                    (i, m["has_info"], m["title"], m["author"],
+                     m["creation_iso"]))
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "has_info", "title", "author",
+                    "creation_iso",
+                ])
+
+    return d.mapInPandas(
+        run,
+        "doc_id long, has_info int, title string, author string,"
+        " creation_iso string",
+    )
+
+
+def _ogg_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction."""
+    from ocr_spark.operators.multimodal import synth_ogg_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, '{r['kind']}', {r['channels']}, "
+        f"{r['sample_rate']}, {r['pre_skip']}, {r['serial']})"
+        for r in synth_ogg_corpus()
+    )
+    return (
+        "SELECT clip_id, kind, channels, sample_rate, pre_skip,"
+        " CAST(serial AS BIGINT) AS serial FROM (VALUES " + rows
+        + ") AS t(clip_id, kind, channels, sample_rate, pre_skip,"
+        " serial)"
+    )
+
+
+@query("ogg_opus_head_parse", _ogg_oracle())
+def ogg_opus_head_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ogg identification-header harvest (round 4): OpusHead and
+    Vorbis id packets ride in the stream's FIRST page — channels,
+    sample rate and Opus pre-skip are everything audio routing and
+    duration estimation need before deciding whether to spend the
+    (gated) audio decode; the serial number keys multiplexed streams.
+    Completes the audio-metadata family: WAV decodes natively, MP3
+    surfaces ID3, FLAC surfaces STREAMINFO, and Ogg surfaces its id
+    headers — every major audio container now harvests without a
+    codec call.
+
+    Scale shape: Arrow-batched mapInPandas over first-page bytes.
+    """
+    from ocr_spark.operators.multimodal import (
+        ogg_features,
+        synth_ogg_corpus,
+    )
+
+    corpus = synth_ogg_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return ogg_features(base.repartition(8, "clip_id"))
+
+
+def _gps_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (exact
+    integer DMS fold computed before any bytes are assembled)."""
+    from ocr_spark.operators.multimodal import synth_gps_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {r['has_gps']}, '{r['byte_order']}', "
+        f"{r['lat_microdeg']}, {r['lon_microdeg']})"
+        for r in synth_gps_corpus()
+    )
+    return (
+        "SELECT img_id, has_gps, byte_order,"
+        " CAST(lat_microdeg AS BIGINT) AS lat_microdeg,"
+        " CAST(lon_microdeg AS BIGINT) AS lon_microdeg,"
+        " CAST(CASE WHEN has_gps = 1 THEN 1 ELSE 0 END AS INT)"
+        " AS strip_before_publish FROM (VALUES " + rows
+        + ") AS t(img_id, has_gps, byte_order, lat_microdeg,"
+        " lon_microdeg)"
+    )
+
+
+@query("jpeg_exif_gps", _gps_oracle())
+def jpeg_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF GPS harvest (round 4): camera-written GPS IFDs put the
+    photographer's POSITION in every unstripped upload — location
+    PII at building precision (coordinate_precision_audit grades
+    the text channel; this is the metadata channel, and the
+    sub-second rationals in the planted corpus are the ~10 m case).
+    The DMS rationals fold to signed integer micro-degrees with
+    floor division — bit-exact on both engines — and every GPS
+    carrier flags strip_before_publish: a corpus that republishes
+    image bytes must scrub the IFD, not just the caption.
+
+    Scale shape: Arrow-batched mapInPandas over segment headers; no
+    entropy decode.
+    """
+    from ocr_spark.operators.multimodal import (
+        gps_features,
+        synth_gps_corpus,
+    )
+
+    corpus = synth_gps_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    out = gps_features(base.repartition(8, "img_id"))
+    return out.select(
+        "img_id", "has_gps", "byte_order",
+        F.col("lat_microdeg").cast("long").alias("lat_microdeg"),
+        F.col("lon_microdeg").cast("long").alias("lon_microdeg"),
+        F.when(F.col("has_gps") == 1, 1).otherwise(0).cast("int")
+        .alias("strip_before_publish"),
+    )
+
+
+def _typosquat_oracle() -> str:
+    return """
+    WITH brands AS (
+      SELECT unnest(['paypal', 'google', 'amazon', 'microsoft'])
+        AS brand),
+    p AS (
+      SELECT doc_id,
+        CASE doc_id % 4
+          WHEN 0 THEN 'paypa1'
+          WHEN 1 THEN 'goggle'
+          WHEN 2 THEN 'amazon'
+          ELSE 'quarterly-report' || CAST(doc_id % 7 AS VARCHAR)
+        END AS host_label
+      FROM documents),
+    j AS (
+      SELECT doc_id, host_label, brand,
+        levenshtein(host_label, brand) AS dist
+      FROM p CROSS JOIN brands),
+    best AS (
+      SELECT doc_id,
+        MIN(dist * 16 + len(brand)) AS enc
+      FROM j GROUP BY doc_id),
+    r AS (
+      SELECT b.doc_id, j.host_label, j.brand, j.dist
+      FROM best b JOIN j
+        ON j.doc_id = b.doc_id
+        AND j.dist * 16 + len(j.brand) = b.enc)
+    SELECT doc_id, host_label,
+      brand AS nearest_brand,
+      CAST(dist AS INT) AS edit_distance,
+      CAST(CASE WHEN dist = 1 THEN 1 ELSE 0 END AS INT)
+        AS is_typosquat,
+      CAST(CASE WHEN dist = 0 THEN 1 ELSE 0 END AS INT)
+        AS is_genuine
+    FROM r
+    """
+
+
+@query("typosquat_host_detect", _typosquat_oracle())
+def typosquat_host_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Typosquat host detection (round 4): edit-distance-1
+    neighbors of high-value brands ('paypa1', 'goggle') are the
+    phishing channel homograph_host_detect's script check cannot
+    see — same-script, one keystroke off. The brand dim is a
+    4-element literal (genuinely fixed-size — the broadcast that IS
+    correct at every scale, per the host_outlink_fanout precedent);
+    each host keeps its NEAREST brand via the single-BIGINT argmin
+    house pattern (dist*16+len encodes the (dist, brand-length)
+    order), distance 0 is the genuine brand itself, distance 1
+    convicts.
+
+    Scale shape: corpus × 4-row literal broadcast, HashAggregate
+    argmin, join-back on the tiny key — no sort, no window.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 4
+    host_label = (
+        F.when(v == 0, F.lit("paypa1"))
+        .when(v == 1, F.lit("goggle"))
+        .when(v == 2, F.lit("amazon"))
+        .otherwise(F.concat(
+            F.lit("quarterly-report"), (i % 7).cast("string")))
+    )
+    p = d.select("doc_id", host_label.alias("host_label"))
+    brands = spark.createDataFrame(
+        [("paypal",), ("google",), ("amazon",), ("microsoft",)],
+        "brand string")
+    j = p.crossJoin(F.broadcast(brands)).select(
+        "doc_id", "host_label", "brand",
+        F.levenshtein("host_label", "brand").alias("dist"))
+    j = j.withColumn("enc", F.col("dist") * 16 + F.length("brand"))
+    best = j.groupBy("doc_id").agg(F.min("enc").alias("enc"))
+    r = j.join(best, on=["doc_id", "enc"])
+    return r.select(
+        "doc_id", "host_label",
+        F.col("brand").alias("nearest_brand"),
+        F.col("dist").cast("int").alias("edit_distance"),
+        F.when(F.col("dist") == 1, 1).otherwise(0).cast("int")
+        .alias("is_typosquat"),
+        F.when(F.col("dist") == 0, 1).otherwise(0).cast("int")
+        .alias("is_genuine"),
+    )
+
+
+def _makefile_oracle() -> str:
+    return r"""
+    WITH p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN '.PHONY: all clean test' || chr(10)
+            || 'all: build test' || chr(10) || chr(10)
+            || 'build: src/main' || CAST(doc_id % 9 AS VARCHAR)
+            || '.c' || chr(10) || chr(9) || 'cc -o app src/main.c'
+            || chr(10) || chr(10) || 'clean:' || chr(10) || chr(9)
+            || 'rm -f app' || chr(10) || chr(10) || 'test: build'
+            || chr(10) || chr(9) || './run_tests.sh'
+          WHEN 1 THEN 'install:' || chr(10) || chr(9)
+            || 'pip install -e .'
+          ELSE 'note: this is not a makefile target list'
+        END AS txt
+      FROM documents),
+    g AS (
+      SELECT doc_id, txt,
+        COALESCE(regexp_extract(txt,
+          '(?m)^\.PHONY: (.*)$', 1), '') AS phony
+      FROM p
+      WHERE regexp_matches(txt, '(?m)^' || chr(9))),
+    b AS (
+      SELECT doc_id, phony,
+        generate_subscripts(ls, 1) - 1 AS target_idx,
+        unnest(ls) AS line
+      FROM (SELECT doc_id, phony, regexp_extract_all(txt,
+              '(?m)^[A-Za-z][A-Za-z0-9_/.-]*:.*$') AS ls
+            FROM g)),
+    t AS (
+      SELECT doc_id, phony,
+        CAST(target_idx AS INT) AS target_idx,
+        regexp_extract(line, '^([A-Za-z][A-Za-z0-9_/.-]*):', 1)
+          AS target,
+        trim(regexp_extract(line, ':(.*)$', 1)) AS prereq_str
+      FROM b)
+    SELECT doc_id, target_idx, target,
+      CAST(CASE WHEN prereq_str = '' THEN 0
+        ELSE len(string_split(prereq_str, ' ')) END AS INT)
+        AS n_prereqs,
+      CAST(CASE WHEN list_contains(string_split(phony, ' '), target)
+        THEN 1 ELSE 0 END AS INT) AS is_phony
+    FROM t
+    """
+
+
+@query("makefile_targets", _makefile_oracle())
+def makefile_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Makefile target extraction (round 4): raw Makefiles crawled
+    from repo hosts are build-graph edges — 'target: prereqs' lines
+    at column zero name the DAG, .PHONY separates commands from
+    artifacts. The document gate is a TAB-indented recipe line
+    ('note: this is...' prose has target-shaped lines but no
+    tab-recipe, so it never parses) — the same
+    shape-plus-confirmation discipline as shell_transcript_extract.
+
+    Scale shape: line-anchored extract_all + posexplode.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 3
+    txt = (
+        F.when(v == 0, F.concat(
+            F.lit(".PHONY: all clean test\nall: build test\n\n"
+                  "build: src/main"),
+            (i % 9).cast("string"),
+            F.lit(".c\n\tcc -o app src/main.c\n\nclean:\n\t"
+                  "rm -f app\n\ntest: build\n\t./run_tests.sh")))
+        .when(v == 1, F.lit("install:\n\tpip install -e ."))
+        .otherwise(F.lit("note: this is not a makefile target list"))
+    )
+    p = d.select("doc_id", txt.alias("txt"))
+    g = p.where(F.regexp_like(F.col("txt"), F.lit("(?m)^\t"))).select(
+        "doc_id", "txt",
+        F.regexp_extract("txt", "(?m)^\\.PHONY: (.*)$", 1)
+        .alias("phony"),
+    )
+    b = g.select(
+        "doc_id", "phony",
+        F.posexplode(F.regexp_extract_all(
+            F.col("txt"),
+            F.lit("(?m)^[A-Za-z][A-Za-z0-9_/.-]*:.*$"), 0))
+        .alias("target_idx", "line"))
+    t = b.select(
+        "doc_id", "phony",
+        F.col("target_idx").cast("int").alias("target_idx"),
+        F.regexp_extract("line", "^([A-Za-z][A-Za-z0-9_/.-]*):", 1)
+        .alias("target"),
+        F.trim(F.regexp_extract("line", ":(.*)$", 1))
+        .alias("prereq_str"))
+    return t.select(
+        "doc_id", "target_idx", "target",
+        F.when(F.col("prereq_str") == "", 0)
+        .otherwise(F.size(F.split("prereq_str", " ")))
+        .cast("int").alias("n_prereqs"),
+        F.when(F.array_contains(F.split("phony", " "),
+                                F.col("target")), 1)
+        .otherwise(0).cast("int").alias("is_phony"),
+    )
+
+
+def _email_thread_oracle() -> str:
+    return """
+    WITH RECURSIVE p AS (
+      SELECT doc_id,
+        '<m' || CAST(doc_id AS VARCHAR) || '@list.example>' AS mid,
+        CASE WHEN doc_id % 5 > 0 THEN '<m'
+          || CAST(doc_id - 1 AS VARCHAR) || '@list.example>'
+          ELSE '' END AS irt
+      FROM documents
+      WHERE doc_id % 7 <> 3),
+    e AS (
+      SELECT c.doc_id, c.mid, c.irt, par.mid AS pmid
+      FROM p c LEFT JOIN p par ON c.irt = par.mid),
+    walk AS (
+      SELECT doc_id, mid, mid AS root, 0 AS depth
+      FROM e WHERE pmid IS NULL
+      UNION ALL
+      SELECT e.doc_id, e.mid, w.root, w.depth + 1
+      FROM e JOIN walk w ON e.pmid = w.mid),
+    sz AS (SELECT root, COUNT(*) AS n FROM walk GROUP BY root)
+    SELECT w.doc_id, w.mid AS message_id, w.root AS root_id,
+      CAST(w.depth AS INT) AS depth,
+      CAST(CASE WHEN w.depth = 0 AND e.irt <> '' THEN 1 ELSE 0 END
+        AS INT) AS is_orphan,
+      CAST(sz.n AS INT) AS thread_size
+    FROM walk w
+    JOIN e ON w.mid = e.mid
+    JOIN sz ON w.root = sz.root
+    """
+
+
+@query("email_thread_graph", _email_thread_oracle())
+def email_thread_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Email-thread reconstruction from In-Reply-To headers (round
+    4): mailing-list archives carry the reply GRAPH in their
+    headers — Message-ID / In-Reply-To edges assemble multi-turn
+    dialogue trees the way rel=next assembles article chains, and
+    thread depth/size are the dialogue-quality priors the forum
+    extractor reads off DOM nesting. Dangling references (the
+    parent message never archived, or its page failed the gate)
+    make the child an ORPHAN root — pinned here by prose pages
+    breaking real chains — instead of dropping the subtree.
+
+    Scale shape: header parse is per-row; root/depth resolve via
+    the shared log-bounded _pointer_jump doubling (ceil(log2(h))
+    equi-joins on uniform message-id keys, same discipline as
+    pagination_rel_chains); thread sizes are one hash-agg joined
+    back. No window, no quadratic walk.
+    """
+    from ocr_spark.operators.crawl import _pointer_jump
+
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    txt = F.when(i % 7 == 3, F.lit(
+        "the message id of this thread was lost to time")).otherwise(
+        F.concat(
+            F.lit("Message-ID: <m"), i.cast("string"),
+            F.lit("@list.example>\n"),
+            F.when(i % 5 > 0, F.concat(
+                F.lit("In-Reply-To: <m"), (i - 1).cast("string"),
+                F.lit("@list.example>\n"))).otherwise(F.lit("")),
+            F.lit("Subject: "),
+            F.when(i % 5 > 0, F.lit("Re: ")).otherwise(F.lit("")),
+            F.lit("topic "), (i / 5).cast("long").cast("string"),
+            F.lit("\n\nbody text")))
+    p = d.select("doc_id", txt.alias("txt"))
+    msgs = p.where(F.regexp_like(F.col("txt"), F.lit(
+        "(?m)^Message-ID: <[^>]+>$"))).select(
+        "doc_id",
+        F.regexp_extract("txt", "(?m)^Message-ID: (<[^>]+>)$", 1)
+        .alias("mid"),
+        F.regexp_extract("txt", "(?m)^In-Reply-To: (<[^>]+>)$", 1)
+        .alias("irt"))
+    parents = msgs.select(F.col("mid").alias("pmid"))
+    edges = (
+        msgs.where(F.col("irt") != "")
+        .join(parents, F.col("irt") == F.col("pmid"), "inner")
+        .select(F.col("mid").alias("src"), F.col("irt").alias("dst"))
+    )
+    f, _rounds = _pointer_jump(edges, 8, with_distance=True)
+    res = msgs.join(f, msgs["mid"] == f["src"], "left").select(
+        "doc_id",
+        msgs["mid"].alias("message_id"),
+        F.coalesce(f["dst"], msgs["mid"]).alias("root_id"),
+        F.coalesce(f["d"], F.lit(0).cast("long")).cast("int")
+        .alias("depth"),
+        F.when((F.coalesce(f["dst"], msgs["mid"]) == msgs["mid"])
+               & (msgs["irt"] != ""), 1)
+        .otherwise(0).cast("int").alias("is_orphan"),
+    )
+    sz = res.groupBy("root_id").agg(
+        F.count("*").cast("int").alias("thread_size"))
+    return res.join(sz, "root_id", "inner").select(
+        "doc_id", "message_id", "root_id", "depth", "is_orphan",
+        "thread_size")
+
+
+def _zipf_oracle() -> str:
+    return """
+    WITH uni AS (
+      SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
+        SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+      GROUP BY w),
+    top AS (
+      SELECT w, c,
+        CAST(row_number() OVER (ORDER BY c DESC, w) AS BIGINT)
+          AS rank
+      FROM uni ORDER BY c DESC, w LIMIT 100),
+    xy AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        SUM(ln(CAST(rank AS DOUBLE))) AS sx,
+        SUM(ln(CAST(c AS DOUBLE))) AS sy,
+        SUM(ln(CAST(rank AS DOUBLE)) * ln(CAST(c AS DOUBLE)))
+          AS sxy,
+        SUM(ln(CAST(rank AS DOUBLE)) * ln(CAST(rank AS DOUBLE)))
+          AS sxx
+      FROM top)
+    SELECT n AS n_ranks,
+      round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4)
+        AS zipf_slope,
+      round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
+        / n, 4) AS log_intercept
+    FROM xy
+    """
+
+
+@query("zipf_slope_estimate", _zipf_oracle())
+def zipf_slope_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf-slope estimation (round 4): the log-log regression of
+    frequency on rank over the top-100 vocabulary — natural
+    corpora sit near slope -1, and deviation is a corpus-health
+    diagnostic (too shallow = boilerplate-flooded vocabulary,
+    too steep = template domination), complementing
+    vocab_coverage_curve's cumulative view with a single
+    comparable statistic. Least squares via the closed-form sums
+    so the heavy part stays one token hash-agg plus a bounded
+    top-100 TakeOrdered; ln/round 4dp agree across engines well
+    beyond ulp noise (pinned by the gate itself).
+
+    Scale shape: corpus hash-agg -> top-k -> 100-row bounded
+    window + scalar aggregate. No corpus-sized sort or window.
+    """
+    from pyspark.sql import Window
+
+    from ocr_spark.operators.dedup import tokens
+
+    d = load_table(spark, sf_dir, "documents")
+    uni = (
+        d.select(F.explode(tokens(F.col("text"))).alias("w"))
+        .groupBy("w").agg(F.count("*").cast("long").alias("c"))
+    )
+    top = uni.orderBy(F.desc("c"), "w").limit(100)
+    w_r = Window.orderBy(F.desc("c"), "w")
+    ranked = top.select(
+        "c", F.row_number().over(w_r).cast("long").alias("rank"))
+    x = F.log(F.col("rank").cast("double"))
+    y = F.log(F.col("c").cast("double"))
+    xy = ranked.agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * y).alias("sxy"),
+        F.sum(x * x).alias("sxx"))
+    n = F.col("n")
+    slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        n * F.col("sxx") - F.col("sx") * F.col("sx"))
+    return xy.select(
+        n.alias("n_ranks"),
+        F.round(slope, 4).alias("zipf_slope"),
+        F.round((F.col("sy") - slope * F.col("sx")) / n, 4)
+        .alias("log_intercept"),
+    )
+
+
+def _lei_check(base18: str) -> str:
+    # ISO 17442: append '00', expand base-36 chars to digits, the
+    # check pair is 98 - (that number mod 97)
+    s = "".join(str(int(c, 36)) for c in base18 + "00")
+    return f"{98 - int(s) % 97:02d}"
+
+
+_PMI_SENTENCES = [
+    "strong coffee beats weak tea every morning",
+    "strong coffee fuels the night shift crew",
+    "weak tea calms the long evening hours",
+    "the night crew brews strong coffee again",
+    "every morning the kettle sings for tea",
+    "shift change brings fresh coffee and tea",
+    "long hours demand strong coffee not weak tea",
+]
+
+
+def _bigram_pmi_oracle() -> str:
+    case = "\n".join(
+        f"          WHEN {k} THEN '{s}'"
+        for k, s in enumerate(_PMI_SENTENCES)
+    )
+    return f"""
+    WITH p AS (
+      SELECT doc_id, CASE doc_id % 7
+{case}
+        END AS body
+      FROM documents),
+    tok AS (SELECT string_split(body, ' ') AS ts FROM p),
+    uni AS (SELECT unnest(ts) AS w FROM tok),
+    ucnt AS (SELECT w, COUNT(*) AS cw FROM uni GROUP BY w),
+    big AS (
+      SELECT unnest(list_transform(range(1, len(ts)),
+        j -> ts[j] || ' ' || ts[j + 1])) AS bg
+      FROM tok),
+    bcnt AS (SELECT bg, COUNT(*) AS cxy FROM big GROUP BY bg),
+    tot AS (SELECT
+      (SELECT COUNT(*) FROM p) AS nd,
+      (SELECT CAST(SUM(cw) AS BIGINT) FROM ucnt) AS tu,
+      (SELECT CAST(SUM(cxy) AS BIGINT) FROM bcnt) AS tb)
+    SELECT
+      split_part(bg, ' ', 1) AS w1,
+      split_part(bg, ' ', 2) AS w2,
+      CAST(cxy AS BIGINT) AS cnt_xy,
+      CAST((1000 * cxy * ((tu * tu) // (u1.cw * u2.cw))) // tb
+        AS BIGINT) AS lift_permille
+    FROM bcnt
+    CROSS JOIN tot
+    JOIN ucnt u1 ON u1.w = split_part(bg, ' ', 1)
+    JOIN ucnt u2 ON u2.w = split_part(bg, ' ', 2)
+    WHERE cxy * 5 >= nd
+    """
+
+
+@query("bigram_pmi_mining", _bigram_pmi_oracle())
+def bigram_pmi_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus bigram-association mining (round 4): the collocation
+    statistic behind phrase vocabularies and tokenizer merge
+    candidates — bigram counts against their unigram marginals,
+    with the PMI exponent kept as an exact integer lift
+    (1000·c_xy·T_u² div c_x·c_y·T_b — the log is monotone, so
+    ranking and thresholds need only the ratio). The df floor is
+    corpus-relative (c_xy·5 ≥ n_docs), so no absolute count is
+    baked in. Integer overflow bound: marginals divide in before
+    the count multiplies (lift = 1000·c_xy·(T_u² div c_x·c_y)
+    div T_b), bounding every intermediate by max(T_u², 1000·T_u)
+    — safe to ~3·10^9 tokens per aggregation scope; beyond that
+    the swap is per-shard lift with log-space merge, documented
+    here rather than silently approximated (ANSI mode throws on
+    the overflow instead of wrapping, so the bound is loud).
+
+    Scale shape: one explode → two corpus HashAggregates with
+    map-side partials; the unigram marginals join back on word
+    keys (AQE broadcasts while the vocab fits); totals ride a
+    single-row cross join — no window, no sort.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 7
+    body = F.when(v == 0, F.lit(_PMI_SENTENCES[0]))
+    for k in range(1, 7):
+        body = body.when(v == k, F.lit(_PMI_SENTENCES[k]))
+    p = d.select("doc_id", body.alias("body"))
+    # tok staged (r5): the tokenized corpus feeds the unigram and
+    # bigram passes; ucnt feeds the marginal join sides u1/u2 AND the
+    # totals — staged so each corpus pass runs once (the un-staged
+    # plan carried 6 corpus scans)
+    tok = p.select(F.split("body", " ").alias("ts")) \
+        .localCheckpoint(eager=False)
+    uni = tok.select(F.explode("ts").alias("w"))
+    ucnt = uni.groupBy("w").agg(F.count("*").alias("cw")) \
+        .localCheckpoint(eager=False)
+    # single-token bodies: sequence(1, 0) defaults to step -1 and
+    # yields [1, 0], whose element_at(ts, 0) throws — guard to the
+    # empty array (matching the oracle's empty range(1, 1))
+    big_idx = F.when(
+        F.size("ts") >= 2, F.sequence(F.lit(1), F.size("ts") - 1)
+    ).otherwise(F.array().cast("array<int>"))
+    bigs = tok.select(F.explode(F.transform(
+        big_idx,
+        lambda j: F.concat(
+            F.element_at(F.col("ts"), j), F.lit(" "),
+            F.element_at(F.col("ts"), j + 1)))).alias("bg"))
+    bcnt = bigs.groupBy("bg").agg(F.count("*").alias("cxy")) \
+        .localCheckpoint(eager=False)
+    tot = (
+        p.agg(F.count("*").alias("nd"))
+        .crossJoin(ucnt.agg(F.sum("cw").alias("tu")))
+        .crossJoin(bcnt.agg(F.sum("cxy").alias("tb")))
+    )
+    u1 = ucnt.select(F.col("w").alias("w1_k"), F.col("cw").alias("cw1"))
+    u2 = ucnt.select(F.col("w").alias("w2_k"), F.col("cw").alias("cw2"))
+    w1 = F.element_at(F.split("bg", " "), 1)
+    w2 = F.element_at(F.split("bg", " "), 2)
+    j = (
+        bcnt.select("bg", "cxy", w1.alias("w1"), w2.alias("w2"))
+        .crossJoin(tot)
+        .join(u1, F.col("w1") == F.col("w1_k"))
+        .join(u2, F.col("w2") == F.col("w2_k"))
+        .where(F.col("cxy") * 5 >= F.col("nd"))
+    )
+    # divide the marginals in BEFORE multiplying by counts: the naive
+    # 1000*cxy*tu^2 numerator overflows BIGINT once tu exceeds ~3e6 on
+    # a dense vocab (found by the scale smoke's 50k track under ANSI,
+    # which throws instead of silently wrapping). The reordered form
+    # is bounded by 1000*tu (cxy <= min(cx, cy)). Floor division uses
+    # Spark's integer `div` operator (exact on longs, matching
+    # DuckDB's `//` on BIGINT); the earlier subtract-mod-then-`/`
+    # form routed through a DOUBLE and silently lost exactness once
+    # tu^2 passed 2^53 (~9.5e7 tokens) — far below the loud ANSI
+    # BIGINT overflow at ~3e9 this query's bound is stated against.
+    tu2 = F.col("tu") * F.col("tu")
+    cxcy = F.col("cw1") * F.col("cw2")
+    core = F.expr("tu2 div cxcy")
+    num = F.lit(1000) * F.col("cxy") * core
+    return j.withColumn("tu2", tu2).withColumn("cxcy", cxcy).select(
+        "w1", "w2",
+        F.col("cxy").cast("long").alias("cnt_xy"),
+        F.col("tb"), num.alias("num"),
+    ).selectExpr(
+        "w1", "w2", "cnt_xy",
+        "CAST(num div tb AS BIGINT) AS lift_permille",
+    )
+
+
+def _rare_term_oracle() -> str:
     return """
     WITH p AS (
       SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<div itemtype="https://schema.org/Recipe">'
-            || '<h1 itemprop="name">Stew ' || CAST(doc_id % 9 AS VARCHAR)
-            || '</h1><span itemprop="recipeYield">4 servings</span>'
-            || '<meta itemprop="cookTime" content="PT'
-            || CAST(doc_id % 3 AS VARCHAR) || 'H'
-            || CAST(doc_id % 60 AS VARCHAR) || 'M">'
-            || '<li itemprop="recipeIngredient">beans</li>'
-            || '<li itemprop="recipeIngredient">salt</li>'
-            || '<li itemprop="recipeIngredient">stock</li></div>'
-          WHEN 1 THEN '<div itemtype="https://schema.org/Recipe">'
-            || '<h1 itemprop="name">Toast ' || CAST(doc_id % 5 AS VARCHAR)
-            || '</h1><li itemprop="recipeIngredient">bread</li></div>'
-          WHEN 2 THEN '<p>Not a recipe, doc ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          ELSE '<div itemtype="https://schema.org/Recipe">'
-            || '<h1 itemprop="name">Soup ' || CAST(doc_id % 7 AS VARCHAR)
-            || '</h1><meta itemprop="cookTime" content="PT'
-            || CAST(doc_id % 90 + 1 AS VARCHAR) || 'M">'
-            || '<li itemprop="recipeIngredient">water</li>'
-            || '<li itemprop="recipeIngredient">misc</li></div>'
-          END AS html
+        'the quick task ran fine topic'
+        || CAST(doc_id % 37 AS VARCHAR)
+        || CASE WHEN (doc_id // 37) % 2 = 1
+          THEN ' topic' || CAST(doc_id % 37 AS VARCHAR)
+          ELSE '' END AS body
       FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN contains(html, 'schema.org/Recipe') THEN 1 ELSE 0 END
-          AS has_recipe,
-        regexp_extract(html, 'itemprop="name">([^<]+)<', 1) AS name,
-        regexp_extract(html,
-          'itemprop="recipeYield">([^<]+)<', 1) AS recipe_yield,
-        regexp_extract(html,
-          'cookTime" content="PT(?:([0-9]+)H)?(?:([0-9]+)M)?"', 1)
-          AS ch,
-        regexp_extract(html,
-          'cookTime" content="PT(?:([0-9]+)H)?(?:([0-9]+)M)?"', 2)
-          AS cm,
-        CAST(len(regexp_extract_all(html,
-          'itemprop="recipeIngredient"', 0)) AS BIGINT) AS n_ingredients
-      FROM p)
-    SELECT doc_id, CAST(has_recipe AS INT) AS has_recipe, name,
-      recipe_yield,
-      CAST((CASE WHEN ch = '' THEN 0 ELSE CAST(ch AS BIGINT) END) * 60
-         + (CASE WHEN cm = '' THEN 0 ELSE CAST(cm AS BIGINT) END)
-        AS BIGINT) AS cook_minutes,
-      n_ingredients
-    FROM m
+    tok AS (
+      SELECT doc_id, unnest(string_split(body, ' ')) AS w FROM p),
+    tf AS (
+      SELECT doc_id, w, COUNT(*) AS tf FROM tok
+      GROUP BY doc_id, w),
+    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+    tot AS (SELECT COUNT(*) AS nd FROM p),
+    scored AS (
+      SELECT tf.doc_id, tf.w,
+        tf.tf * (tot.nd // df.df) AS score
+      FROM tf JOIN df ON tf.w = df.w CROSS JOIN tot),
+    mx AS (
+      SELECT doc_id, MAX(score) AS top_score FROM scored
+      GROUP BY doc_id)
+    SELECT s.doc_id, MIN(s.w) AS top_term,
+      CAST(m.top_score AS BIGINT) AS top_score
+    FROM scored s JOIN mx m
+      ON s.doc_id = m.doc_id AND s.score = m.top_score
+    GROUP BY s.doc_id, m.top_score
     """
+
+
+@query("doc_rare_term_pick", _rare_term_oracle())
+def doc_rare_term_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document rarity-weighted top term (round 4): the
+    tf·idf argmax that names what a document is ABOUT — term
+    frequency times an integer rarity weight (n_docs div df; the
+    idf log is monotone, so the argmax is unchanged and the
+    arithmetic stays exact on both engines). The corpus splits
+    into 37 topic groups whose marker token (~1/37 df) always
+    beats the universal stopwords (df = n, weight 1), and
+    alternate docs double the marker so tf participates.
+
+    Scale shape: the anchor_text_consensus aggregate discipline —
+    tf, df, and the per-doc max are all corpus HashAggregates
+    with map-side partials; the STRING winner comes from joining
+    back on score = max and MIN(term) over the (typically
+    single-row) tie set, so the only string-ordered aggregate
+    runs on pre-aggregated rows, never the corpus.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    topic = F.concat(F.lit("topic"), (i % 37).cast("string"))
+    body = F.concat(
+        F.lit("the quick task ran fine "), topic,
+        F.when((((i - i % 37) / 37).cast("long") % 2) == 1,
+               F.concat(F.lit(" "), topic)).otherwise(F.lit("")))
+    p = d.select("doc_id", body.alias("body"))
+    tok = p.select(
+        "doc_id", F.explode(F.split("body", " ")).alias("w"))
+    tf = tok.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
+    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
+    tot = p.agg(F.count("*").alias("nd"))
+    weight = ((F.col("nd") - F.col("nd") % F.col("df")) / F.col("df"))
+    # scored staged (r5): it feeds the per-doc max AND the tie join
+    # side, and its lineage carries the corpus token explode twice
+    # (tf + df) — staged, the explode computes once
+    scored = (
+        tf.join(dfreq, "w").crossJoin(tot)
+        .select("doc_id", "w",
+                (F.col("tf") * weight).cast("long").alias("score"))
+        .localCheckpoint(eager=False)
+    )
+    mx = scored.groupBy("doc_id").agg(F.max("score").alias("top_score"))
+    # alias both sides: a same-lineage join on bare columns lets the
+    # analyzer collapse doc_id == doc_id to TRUE and the join widens
+    # to score-only — correct after the group-by, but corpus fan-out
+    s_a = scored.alias("s")
+    m_a = mx.alias("m")
+    tie = s_a.join(
+        m_a, (F.col("s.doc_id") == F.col("m.doc_id"))
+        & (F.col("s.score") == F.col("m.top_score")))
+    return (
+        tie.groupBy(F.col("s.doc_id").alias("doc_id"),
+                    F.col("m.top_score").alias("top_score"))
+        .agg(F.min(F.col("s.w")).alias("top_term"))
+        .select("doc_id", "top_term",
+                F.col("top_score").cast("long").alias("top_score"))
+    )
+
+
+def _two_hop_oracle() -> str:
+    return """
+    WITH e0 AS (
+      SELECT DISTINCT
+        (doc_id * 13 + 5) % 101 AS src,
+        ((doc_id // 101) * 7 + doc_id * 3 + 1) % 101 AS dst
+      FROM documents),
+    e AS (SELECT src, dst FROM e0 WHERE src <> dst),
+    onehop AS (
+      SELECT src, COUNT(*) AS n_one_hop FROM e GROUP BY src),
+    twohop AS (
+      SELECT e1.src AS src, COUNT(DISTINCT e2.dst) AS n_two_hop
+      FROM e e1 JOIN e e2 ON e1.dst = e2.src
+      WHERE e2.dst <> e1.src
+      GROUP BY e1.src)
+    SELECT o.src AS src,
+      CAST(o.n_one_hop AS BIGINT) AS n_one_hop,
+      CAST(COALESCE(t.n_two_hop, 0) AS BIGINT) AS n_two_hop
+    FROM onehop o LEFT JOIN twohop t ON o.src = t.src
+    """
+
+
+@query("graph_two_hop_reach", _two_hop_oracle())
+def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-hop reachability census (round 4): the
+    friend-of-a-friend expansion behind crawl frontier scoring
+    and link-spam neighborhoods — for every source node, how
+    many distinct nodes are exactly one edge-join away from its
+    out-neighbors (returning to the source excluded). The edge
+    synthesis decorrelates endpoints through the div-101 term
+    (the host_link_reciprocity lesson: an affine map of one
+    variable makes dst a function of src and collapses the
+    graph to disjoint orbits).
+
+    Scale shape: DISTINCT edge dedup (hash), one equi-join on
+    the mid node, COUNT(DISTINCT) via Spark's two-level partial
+    aggregate. The node space is bounded by construction (101)
+    — the real-web shape shards this join by host-hash and caps
+    per-node degree exactly like tracker_coownership_edges'
+    fan cap; no window, no sort, no cartesian.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    src = (i * 13 + 5) % 101
+    dst = (((i - i % 101) / 101).cast("long") * 7 + i * 3 + 1) % 101
+    e = (
+        d.select(src.alias("src"), dst.alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    onehop = e.groupBy("src").agg(F.count("*").alias("n_one_hop"))
+    e2 = e.select(F.col("src").alias("mid"), F.col("dst").alias("dst2"))
+    twohop = (
+        e.join(e2, e.dst == e2.mid)
+        .where(F.col("dst2") != F.col("src"))
+        .groupBy("src")
+        .agg(F.countDistinct("dst2").alias("n_two_hop"))
+    )
+    return (
+        onehop.join(twohop, "src", "left")
+        .select(
+            "src",
+            F.col("n_one_hop").cast("long").alias("n_one_hop"),
+            F.coalesce(F.col("n_two_hop"), F.lit(0)).cast("long")
+            .alias("n_two_hop"),
+        )
+    )
+
+
+def _luhn15_check(base14: str) -> str:
+    # Luhn check digit for a 14-digit IMEI base: doubling runs over
+    # the even positions (1-indexed, left-to-right) of the 15-digit
+    # result's first 14 — i.e. positions 2,4,..,14
+    s = 0
+    for j, c in enumerate(base14, start=1):
+        v = int(c)
+        if j % 2 == 0:
+            v *= 2
+        s += v // 10 + v % 10
+    return str((10 - s % 10) % 10)
+
+
+def _aba_check(base8: str) -> str:
+    d = [int(c) for c in base8]
+    s = 3 * (d[0] + d[3] + d[6]) + 7 * (d[1] + d[4] + d[7]) + (d[2] + d[5])
+    return str((10 - s % 10) % 10)
+
+
+def _funnel_oracle() -> str:
+    return """
+    WITH e AS (
+      SELECT user_id, event_type, ts FROM events),
+    s1 AS (
+      SELECT user_id, MIN(ts) AS t1 FROM e
+      WHERE event_type = 'view' GROUP BY user_id),
+    s2 AS (
+      SELECT e.user_id, MIN(e.ts) AS t2
+      FROM e JOIN s1 ON e.user_id = s1.user_id
+      WHERE e.event_type = 'click' AND e.ts > s1.t1
+      GROUP BY e.user_id),
+    s3 AS (
+      SELECT e.user_id, MIN(e.ts) AS t3
+      FROM e JOIN s2 ON e.user_id = s2.user_id
+      WHERE e.event_type = 'purchase' AND e.ts > s2.t2
+      GROUP BY e.user_id),
+    c AS (SELECT
+      (SELECT COUNT(DISTINCT user_id) FROM e) AS n_total,
+      (SELECT COUNT(*) FROM s1) AS n_step1,
+      (SELECT COUNT(*) FROM s2) AS n_step2,
+      (SELECT COUNT(*) FROM s3) AS n_step3)
+    SELECT
+      CAST(n_total AS BIGINT) AS n_total,
+      CAST(n_step1 AS BIGINT) AS n_step1,
+      CAST(n_step2 AS BIGINT) AS n_step2,
+      CAST(n_step3 AS BIGINT) AS n_step3,
+      CAST(CASE WHEN n_step1 = 0 THEN 0
+        ELSE (1000 * n_step2) // n_step1 END AS BIGINT)
+        AS conv12_permille,
+      CAST(CASE WHEN n_step2 = 0 THEN 0
+        ELSE (1000 * n_step3) // n_step2 END AS BIGINT)
+        AS conv23_permille
+    FROM c
+    """
+
+
+@query("event_funnel_conversion", _funnel_oracle())
+def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered funnel conversion (round 4): the classic product
+    analytics shape — view → click → purchase, where each step
+    must happen strictly AFTER the user's previous step (min-ts
+    chaining, not mere type membership: a purchase before the
+    first view does not convert). Timestamps stay internal to
+    each engine (only counts and integer permille ratios are
+    emitted, with zero-denominator guards for corpora missing a
+    step type — the ANSI division discipline).
+
+    Scale shape: three per-user HashAggregates chained by
+    equi-joins on user_id (one shuffle key reused end-to-end),
+    scalar counts cross-joined at the end — no window over raw
+    events, no sort.
+    """
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts")
+    # per-stage tables staged (r5): each feeds the next stage AND its
+    # own count — un-staged, stage k's count replans stages 1..k
+    # (the funnel_counts staging discipline)
+    s1 = (e.where(F.col("event_type") == "view")
+          .groupBy("user_id").agg(F.min("ts").alias("t1"))
+          .localCheckpoint(eager=False))
+    s2 = (
+        e.where(F.col("event_type") == "click")
+        .join(s1, "user_id")
+        .where(F.col("ts") > F.col("t1"))
+        .groupBy("user_id").agg(F.min("ts").alias("t2"))
+        .localCheckpoint(eager=False))
+    s3 = (
+        e.where(F.col("event_type") == "purchase")
+        .join(s2, "user_id")
+        .where(F.col("ts") > F.col("t2"))
+        .groupBy("user_id").agg(F.min("ts").alias("t3"))
+        .localCheckpoint(eager=False))
+    c = (
+        e.agg(F.countDistinct("user_id").alias("n_total"))
+        .crossJoin(s1.agg(F.count("*").alias("n_step1")))
+        .crossJoin(s2.agg(F.count("*").alias("n_step2")))
+        .crossJoin(s3.agg(F.count("*").alias("n_step3")))
+    )
+
+    def _permille(num, den):
+        val = F.lit(1000) * num
+        return F.when(den == 0, F.lit(0)).otherwise(
+            (val - val % den) / den).cast("long")
+
+    return c.select(
+        F.col("n_total").cast("long").alias("n_total"),
+        F.col("n_step1").cast("long").alias("n_step1"),
+        F.col("n_step2").cast("long").alias("n_step2"),
+        F.col("n_step3").cast("long").alias("n_step3"),
+        _permille(F.col("n_step2"), F.col("n_step1"))
+        .alias("conv12_permille"),
+        _permille(F.col("n_step3"), F.col("n_step2"))
+        .alias("conv23_permille"),
+    )
+
+
+def _retention_oracle() -> str:
+    return """
+    WITH a AS (
+      SELECT DISTINCT user_id,
+        strftime(ts, '%Y-%m-%d') AS day FROM events),
+    f0 AS (
+      -- min over INTEGER epoch-days (hash-aggregatable), not the
+      -- date string (string-buffer min would SortAggregate)
+      SELECT user_id,
+        MIN(CAST(day AS DATE) - DATE '1970-01-01') AS cohort_int
+      FROM a GROUP BY user_id),
+    f AS (
+      SELECT user_id,
+        strftime(DATE '1970-01-01'
+          + CAST(cohort_int AS INT), '%Y-%m-%d') AS cohort_day
+      FROM f0),
+    d1 AS (
+      SELECT f.user_id FROM f JOIN a ON f.user_id = a.user_id
+      WHERE a.day = strftime(CAST(f.cohort_day AS DATE)
+        + INTERVAL 1 DAY, '%Y-%m-%d')),
+    d7 AS (
+      SELECT f.user_id FROM f JOIN a ON f.user_id = a.user_id
+      WHERE a.day = strftime(CAST(f.cohort_day AS DATE)
+        + INTERVAL 7 DAY, '%Y-%m-%d'))
+    SELECT f.cohort_day AS cohort_day,
+      CAST(COUNT(*) AS BIGINT) AS n_users,
+      CAST(COUNT(d1.user_id) AS BIGINT) AS retained_d1,
+      CAST(COUNT(d7.user_id) AS BIGINT) AS retained_d7
+    FROM f
+    LEFT JOIN d1 ON f.user_id = d1.user_id
+    LEFT JOIN d7 ON f.user_id = d7.user_id
+    GROUP BY f.cohort_day
+    """
+
+
+@query("user_retention_cohorts", _retention_oracle())
+def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Retention cohorts (round 4): users grouped by first-seen
+    day, with day-1 and day-7 return flags — the canonical
+    activity-health table, built entirely on calendar-date
+    STRINGS (the timestamp-comparison discipline: naive
+    timestamps only ever format to dates, never cross engines
+    raw; the +1/+7 offsets are DATE arithmetic, immune to
+    timezone interpretation).
+
+    Scale shape: distinct (user, day) HashAggregate, per-user
+    min, two equi-joins back on user_id, one cohort-day
+    HashAggregate — all hash, the user_id shuffle key reused;
+    no window.
+    """
+    e = load_table(spark, sf_dir, "events")
+    a = e.select(
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd").alias("day")).distinct()
+    # min over INTEGER epoch-days so the per-user aggregate hash-
+    # aggregates (a min over the date STRING has an immutable string
+    # buffer and falls to SortAggregate — the struct-buffer rule)
+    f = (
+        a.groupBy("user_id")
+        .agg(F.min(F.datediff(F.to_date("day"), F.lit("1970-01-01")))
+             .alias("cohort_int"))
+        .select(
+            "user_id",
+            F.date_format(
+                F.date_add(F.to_date(F.lit("1970-01-01")),
+                           F.col("cohort_int")),
+                "yyyy-MM-dd").alias("cohort_day"))
+    )
+
+    def _ret(offset, name):
+        shifted = F.date_format(
+            F.date_add(F.to_date("cohort_day"), offset), "yyyy-MM-dd")
+        return (
+            f.join(a.select(F.col("user_id").alias("u2"),
+                            F.col("day").alias("d2")),
+                   (F.col("user_id") == F.col("u2"))
+                   & (F.col("d2") == shifted))
+            .select(F.col("user_id").alias(name))
+        )
+
+    d1 = _ret(1, "u_d1")
+    d7 = _ret(7, "u_d7")
+    return (
+        f.join(d1, f.user_id == d1.u_d1, "left")
+        .join(d7, f.user_id == d7.u_d7, "left")
+        .groupBy("cohort_day")
+        .agg(
+            F.count("*").cast("long").alias("n_users"),
+            F.count("u_d1").cast("long").alias("retained_d1"),
+            F.count("u_d7").cast("long").alias("retained_d7"),
+        )
+    )
+
+
+def _heavy_user_oracle() -> str:
+    return """
+    WITH c AS (
+      SELECT user_id, COUNT(*) AS cnt FROM events
+      GROUP BY user_id),
+    t AS (SELECT
+      (SELECT COUNT(*) FROM c) AS n_users,
+      (SELECT CAST(SUM(cnt) AS BIGINT) FROM c) AS total_events),
+    h AS (
+      SELECT c.user_id, c.cnt FROM c CROSS JOIN t
+      WHERE c.cnt * t.n_users >= 2 * t.total_events)
+    SELECT
+      CAST(t.n_users AS BIGINT) AS n_users,
+      CAST((SELECT COUNT(*) FROM h) AS BIGINT) AS n_heavy,
+      CAST(COALESCE((SELECT SUM(cnt) FROM h), 0) AS BIGINT)
+        AS heavy_events,
+      CAST(t.total_events AS BIGINT) AS total_events,
+      CAST((1000 * COALESCE((SELECT SUM(cnt) FROM h), 0))
+        // t.total_events AS BIGINT) AS heavy_share_permille
+    FROM t
+    """
+
+
+@query("heavy_user_event_share", _heavy_user_oracle())
+def heavy_user_event_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event-concentration census (round 4): what share of all
+    traffic comes from users at ≥2× the mean event rate — the
+    bot/power-user concentration prior that decides whether
+    per-user rate caps matter, stated without materializing a
+    float mean (cnt·n_users ≥ 2·total, the integer
+    cross-multiplication discipline) and without any ranking
+    window (a top-decile formulation would sort the user table;
+    the threshold form stays hash-only).
+
+    Scale shape: one per-user HashAggregate, scalar totals
+    cross-joined, threshold filter, one more aggregate — no
+    window, no sort.
+    """
+    e = load_table(spark, sf_dir, "events")
+    c = e.groupBy("user_id").agg(F.count("*").alias("cnt"))
+    t = (
+        c.agg(F.count("*").alias("n_users"),
+              F.sum("cnt").alias("total_events")))
+    h = (
+        c.crossJoin(t)
+        .where(F.col("cnt") * F.col("n_users")
+               >= 2 * F.col("total_events")))
+    hv = h.agg(
+        F.count("*").alias("n_heavy"),
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("heavy_events"))
+    out = t.crossJoin(hv)
+    num = F.lit(1000) * F.col("heavy_events")
+    den = F.col("total_events")
+    return out.select(
+        F.col("n_users").cast("long").alias("n_users"),
+        F.col("n_heavy").cast("long").alias("n_heavy"),
+        F.col("heavy_events").cast("long").alias("heavy_events"),
+        F.col("total_events").cast("long").alias("total_events"),
+        ((num - num % den) / den).cast("long")
+        .alias("heavy_share_permille"),
+    )
+
+
+def _luhn_ok(digstr: str) -> bool:
+    total = 0
+    for j, ch in enumerate(reversed(digstr), start=1):
+        v = int(ch)
+        if j % 2 == 0:
+            v *= 2
+        total += v // 10 + v % 10
+    return total % 10 == 0
+
+
+def _isin_with_check(base11: str) -> str:
+    # ISO 6166: expand base-36 chars to digits, append the check digit
+    # that makes the whole digit string pass Luhn
+    exp = "".join(str(int(c, 36)) for c in base11)
+    for cd in range(10):
+        if _luhn_ok(exp + str(cd)):
+            return base11 + str(cd)
+    raise AssertionError("unreachable")
+
+
+def _imo_check(base6: str) -> str:
+    s = sum(int(c) * w for c, w in zip(base6, [7, 6, 5, 4, 3, 2]))
+    return str(s % 10)
+
+
+def _syndication_line_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        'h' || CAST(doc_id % 23 AS VARCHAR) AS host,
+        'Copyright Example Media Network' || chr(10)
+        || 'Quote ' || CAST(doc_id % 150 AS VARCHAR)
+        || ': the market rewards patience' || chr(10)
+        || 'Local update ' || CAST(doc_id AS VARCHAR) AS body
+      FROM documents),
+    lines AS (
+      SELECT DISTINCT host,
+        unnest(string_split(body, chr(10))) AS line
+      FROM p),
+    df AS (
+      SELECT line, COUNT(*) AS n_hosts FROM lines
+      GROUP BY line),
+    keep AS (
+      SELECT line FROM df WHERE n_hosts BETWEEN 2 AND 10),
+    kl AS (
+      SELECT l.host, l.line FROM lines l
+      JOIN keep k ON l.line = k.line)
+    SELECT a.host AS host_a, b.host AS host_b,
+      CAST(COUNT(*) AS BIGINT) AS shared_lines
+    FROM kl a JOIN kl b
+      ON a.line = b.line AND a.host < b.host
+    GROUP BY a.host, b.host
+    """
+
+
+@query("cross_host_line_syndication", _syndication_line_oracle())
+def cross_host_line_syndication(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-host line-syndication edges (round 4): a distinctive
+    sentence appearing on a SMALL set of hosts is a syndication
+    or plagiarism edge — the host-pair projection of
+    ccnet_line_dedup's span table. The df band (2..10 hosts) is
+    load-bearing twice: df=1 local lines never join, and the
+    universal copyright line (23 hosts) is excluded BEFORE the
+    self-join — the same cap-before-join discipline as
+    tracker_coownership_edges, which bounds the pair fan-out to
+    C(10,2) per line.
+
+    Scale shape: distinct (host, line) HashAggregate, df
+    HashAggregate, band filter, then the self-join runs only on
+    band-surviving lines; per-pair count is one more hash agg.
+    At corpus scale the line key becomes a 64-bit hash; the
+    string key here keeps both engines' join semantics
+    identical.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    nl = "\n"
+    body = F.concat(
+        F.lit("Copyright Example Media Network" + nl + "Quote "),
+        (i % 150).cast("string"),
+        F.lit(": the market rewards patience" + nl + "Local update "),
+        i.cast("string"))
+    p = d.select(
+        F.concat(F.lit("h"), (i % 23).cast("string")).alias("host"),
+        body.alias("body"))
+    lines = (
+        p.select("host", F.explode(F.split("body", nl)).alias("line"))
+        .distinct()
+    )
+    dfreq = lines.groupBy("line").agg(F.count("*").alias("n_hosts"))
+    keep = dfreq.where(
+        (F.col("n_hosts") >= 2) & (F.col("n_hosts") <= 10)
+    ).select("line")
+    kl = lines.join(keep, "line")
+    a = kl.select(F.col("host").alias("host_a"), "line")
+    b = kl.select(F.col("host").alias("host_b"), "line")
+    return (
+        a.join(b, "line")
+        .where(F.col("host_a") < F.col("host_b"))
+        .groupBy("host_a", "host_b")
+        .agg(F.count("*").cast("long").alias("shared_lines"))
+    )
+
+
+def _host_priors_oracle() -> str:
+    return """
+    WITH h AS (
+      SELECT doc_id,
+        'h' || CAST(doc_id % 23 AS VARCHAR) AS host,
+        lang, n_chars
+      FROM documents),
+    tot AS (
+      SELECT COUNT(*) AS nd, CAST(SUM(n_chars) AS BIGINT) AS sc
+      FROM h),
+    agg AS (
+      SELECT host,
+        COUNT(*) AS n_docs,
+        CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+        COUNT(DISTINCT lang) AS n_langs
+      FROM h GROUP BY host),
+    lng AS (
+      SELECT h.host, COUNT(*) AS n_long
+      FROM h CROSS JOIN tot
+      WHERE h.n_chars * tot.nd > 2 * tot.sc
+      GROUP BY h.host)
+    SELECT a.host AS host,
+      CAST(a.n_docs AS BIGINT) AS n_docs,
+      CAST(a.sum_chars // a.n_docs AS BIGINT) AS mean_chars,
+      CAST(a.n_langs AS INT) AS n_langs,
+      CAST((1000 * COALESCE(l.n_long, 0)) // a.n_docs AS BIGINT)
+        AS long_doc_permille
+    FROM agg a LEFT JOIN lng l ON a.host = l.host
+    """
+
+
+@query("host_quality_priors_join", _host_priors_oracle())
+def host_quality_priors_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-host quality-prior rollup (round 4): the multi-signal
+    join that crawl-budget decisions actually consume — doc
+    volume, exact integer mean length, language spread, and the
+    long-document share measured against the CORPUS mean via
+    integer cross-multiplication (n_chars·N > 2·Σchars — no
+    float mean materialized, the lang_length_outliers
+    discipline applied host-wise). Composes the real lang and
+    n_chars columns; every signal joins back on the host key.
+
+    Scale shape: two per-host HashAggregates + a scalar-
+    broadcast total + one left join on host — the shuffle key
+    reused; countDistinct plans Spark's two-level partial
+    aggregate; no window, no sort.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    h = d.select(
+        F.concat(F.lit("h"), (i % 23).cast("string")).alias("host"),
+        "lang", "n_chars")
+    tot = h.agg(
+        F.count("*").alias("nd"),
+        F.sum("n_chars").alias("sc"))
+    agg = h.groupBy("host").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_chars").alias("sum_chars"),
+        F.countDistinct("lang").alias("n_langs"))
+    lng = (
+        h.crossJoin(tot)
+        .where(F.col("n_chars") * F.col("nd") > 2 * F.col("sc"))
+        .groupBy("host").agg(F.count("*").alias("n_long")))
+    j = agg.join(lng, "host", "left")
+    mean_chars = ((F.col("sum_chars")
+                   - F.col("sum_chars") % F.col("n_docs"))
+                  / F.col("n_docs")).cast("long")
+    nl = F.lit(1000) * F.coalesce(F.col("n_long"), F.lit(0))
+    permille = ((nl - nl % F.col("n_docs")) / F.col("n_docs"))
+    return j.select(
+        "host",
+        F.col("n_docs").cast("long").alias("n_docs"),
+        mean_chars.alias("mean_chars"),
+        F.col("n_langs").cast("int").alias("n_langs"),
+        permille.cast("long").alias("long_doc_permille"),
+    )
+
+
+def _contingency_oracle() -> str:
+    return """
+    WITH j AS (
+      SELECT source, lang, COUNT(*) AS obs FROM documents
+      GROUP BY source, lang),
+    rs AS (
+      SELECT source, CAST(SUM(obs) AS BIGINT) AS row_total
+      FROM j GROUP BY source),
+    cs AS (
+      SELECT lang, CAST(SUM(obs) AS BIGINT) AS col_total
+      FROM j GROUP BY lang),
+    t AS (SELECT CAST(SUM(obs) AS BIGINT) AS grand FROM j)
+    SELECT j.source AS source, j.lang AS lang,
+      CAST(j.obs AS BIGINT) AS observed,
+      CAST(rs.row_total AS BIGINT) AS row_total,
+      CAST(cs.col_total AS BIGINT) AS col_total,
+      CAST(CASE WHEN j.obs * t.grand
+          > 2 * rs.row_total * cs.col_total THEN 1 ELSE 0 END
+        AS INT) AS over_represented,
+      CAST(CASE WHEN 2 * j.obs * t.grand
+          < rs.row_total * cs.col_total THEN 1 ELSE 0 END
+        AS INT) AS under_represented
+    FROM j
+    JOIN rs ON j.source = rs.source
+    JOIN cs ON j.lang = cs.lang
+    CROSS JOIN t
+    """
+
+
+@query("source_lang_contingency", _contingency_oracle())
+def source_lang_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Source-language contingency audit (round 4): the joint
+    (source, lang) table against its marginals — a cell whose
+    observed count is more than 2x (or under half) its
+    independence expectation marks a source with a language
+    specialization the corpus-wide mixture must account for
+    (observed·N vs row·col by integer cross-multiplication: the
+    chi-square question asked without a single float). Runs on
+    the table's REAL source and lang columns.
+
+    Scale shape: one joint HashAggregate + two marginal
+    HashAggregates re-aggregated FROM the joint (not the corpus)
+    + equi-joins back on the cell keys + a scalar grand total —
+    no window, no sort, no Python.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    j = d.groupBy("source", "lang").agg(F.count("*").alias("obs"))
+    rs = j.groupBy("source").agg(F.sum("obs").alias("row_total"))
+    cs = j.groupBy("lang").agg(F.sum("obs").alias("col_total"))
+    t = j.agg(F.sum("obs").alias("grand"))
+    out = (
+        j.join(rs, "source").join(cs, "lang").crossJoin(t))
+    return out.select(
+        "source", "lang",
+        F.col("obs").cast("long").alias("observed"),
+        F.col("row_total").cast("long").alias("row_total"),
+        F.col("col_total").cast("long").alias("col_total"),
+        (F.col("obs") * F.col("grand")
+         > 2 * F.col("row_total") * F.col("col_total"))
+        .cast("int").alias("over_represented"),
+        (2 * F.col("obs") * F.col("grand")
+         < F.col("row_total") * F.col("col_total"))
+        .cast("int").alias("under_represented"),
+    )

@@ -1,46 +1,23 @@
 """Query registry facade: one entry per engine capability, with DuckDB
 oracles.
 
-The registry itself lives in ocr_spark/qparts/part01..part09.py
-(split per VERDICT r4 next #7 — no single module above ~10k lines),
-registered in original order into the shared QUERIES/ORACLE dicts of
-ocr_spark.queries_base. This facade imports every part (registration
-side effects, sequential order), re-exports every name so existing
-``from ocr_spark.queries import X`` sites keep working, back-patches
-each part's namespace with the union of all parts (call-time forward
-references between parts resolve exactly as in the single-module
-layout), and applies the curated driver-50 ordering.
+The registry itself lives in ocr_spark/qparts/part01.py and part02.py
+(no single module above ~10k lines), registered in order into the
+shared QUERIES/ORACLE dicts of ocr_spark.queries_base. part02 starts
+from part01's namespace and no part01 code names a part02 definition,
+so plain sequential imports resolve every helper. This facade imports
+the parts (registration side effects), re-exports every name so
+existing ``from ocr_spark.queries import X`` sites keep working, and
+applies the curated first-50 ordering.
 """
 
 from __future__ import annotations
 
-import ocr_spark.queries_base as _base
+import ocr_spark.qparts.part02 as _last  # imports (registers) part01 first
 
 globals().update(
-    {k: v for k, v in vars(_base).items() if not k.startswith("__")}
+    {k: v for k, v in vars(_last).items() if not k.startswith("__")}
 )
-
-import ocr_spark.qparts.part01 as _p01
-import ocr_spark.qparts.part02 as _p02
-import ocr_spark.qparts.part03 as _p03
-import ocr_spark.qparts.part04 as _p04
-import ocr_spark.qparts.part05 as _p05
-import ocr_spark.qparts.part06 as _p06
-import ocr_spark.qparts.part07 as _p07
-import ocr_spark.qparts.part08 as _p08
-import ocr_spark.qparts.part09 as _p09
-
-_PARTS = [_p01, _p02, _p03, _p04, _p05, _p06, _p07, _p08, _p09]
-_UNION = {}
-for _p in _PARTS:
-    _UNION.update(
-        {k: v for k, v in vars(_p).items() if not k.startswith("__")}
-    )
-for _p in _PARTS:
-    for _k, _v in _UNION.items():
-        _p.__dict__[_k] = _v
-globals().update(_UNION)
-del _p, _k, _v
 
 
 _DRIVER_FIRST_50 = [

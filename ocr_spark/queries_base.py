@@ -33,7 +33,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     that ``mock.patch.object`` the facade's ``load_table`` reach every
     query regardless of which qparts module its body lives in (each
     part's globals hold a reference copied at import time — a direct
-    import would freeze the unpatched function into 9 namespaces)."""
+    import would freeze the unpatched function into every part)."""
     import ocr_spark.queries as _facade
 
     patched = getattr(_facade, "load_table", load_table)

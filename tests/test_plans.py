@@ -177,7 +177,7 @@ def test_round2_late_queries_plan_hygiene(spark):
     assert "windowspecdefinition(bucket#" in rank
 
 
-def test_no_query_duplicates_python_udfs(spark):
+def test_no_query_duplicates_python_udfs(registry_plans):
     """Systematic audit over EVERY registered query: no physical plan
     may contain more than one ArrowEvalPython node, and no plan may
     contain the SAME MapInPandas/MapInArrow stage twice (identical
@@ -188,11 +188,8 @@ def test_no_query_duplicates_python_udfs(spark):
     expensive silent plan regression this engine can have."""
     import re
 
-    from ocr_spark.queries import QUERIES
-
     offenders = {}
-    for name, fn in QUERIES.items():
-        plan = _plan(fn(spark, SF))
+    for name, plan in registry_plans(SF).items():
         n = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
         if n > 1:
             offenders[name] = f"{n} ArrowEvalPython"
@@ -320,7 +317,7 @@ _DISTINCT_PASS_COMPOSITIONS = {
 }
 
 
-def test_no_query_has_cartesian_product_or_global_window(spark):
+def test_no_query_has_cartesian_product_or_global_window(registry_plans):
     """Systematic audit over EVERY registered query (single plan
     sweep): (a) CartesianProduct must never appear (constant-build-
     side BroadcastNestedLoopJoin is allowed — single-row norm/query
@@ -338,11 +335,8 @@ def test_no_query_has_cartesian_product_or_global_window(spark):
     import collections
     import re
 
-    from ocr_spark.queries import QUERIES
-
     cartesian, windows, scans = [], {}, {}
-    for name, fn in QUERIES.items():
-        plan = _plan(fn(spark, SF))
+    for name, plan in registry_plans(SF).items():
         if "CartesianProduct" in plan:
             cartesian.append(name)
         pw = _partitionless_ordered_windows(plan)
@@ -478,13 +472,7 @@ def test_session6_distributed_shapes(spark):
     for name in (
         "isbn_validate_extract",
         "uuid_version_profile",
-        "tracking_pixel_detect",
-        "accessibility_profile",
-        "typographic_normalize",
         "meta_keywords_stuffing",
-        "serp_page_detect",
-        "x_robots_tag_parse",
-        "copyright_staleness",
     ):
         plan = _plan(QUERIES[name](spark, SF))
         assert "Python" not in plan, name
@@ -492,9 +480,7 @@ def test_session6_distributed_shapes(spark):
 
     # join-shaped session-6 queries: equi-joins only, all JVM
     for name in (
-        "toc_anchor_resolution",
         "hreflang_reciprocity_audit",
-        "canonical_chain_resolution",
         "analytics_id_extract",
         "ip_colocation_groups",
     ):
@@ -535,15 +521,8 @@ def test_session7_distributed_shapes(spark):
         "host_boilerplate_lines",
         "session_param_entropy",
         "url_alias_groups",
-        "query_param_mining",
-        "host_title_template_ratio",
-        "content_format_variants",
-        "tld_lang_consistency",
         "host_outlink_fanout",
         "event_burst_hours",
-        "user_churn_snapshot",
-        "error_ratio_by_host",
-        "noindex_sitemap_conflict",
     ):
         plan = _plan(QUERIES[name](spark, SF))
         assert "SortAggregate" not in plan, name
@@ -553,27 +532,6 @@ def test_session7_distributed_shapes(spark):
     trans = _plan(QUERIES["event_transition_matrix"](spark, SF))
     assert "CartesianProduct" not in trans
     assert "windowspecdefinition(user_id" in trans  # keyed, never empty
-
-    for name in (
-        "ads_txt_parse",
-        "security_txt_parse",
-        "rel_me_identity_links",
-        "custom_elements_detect",
-        "declarative_shadow_dom",
-        "css_custom_props_profile",
-        "aria_landmark_regions",
-        "captcha_block_detect",
-        "page_weight_breakdown",
-        "minified_js_detect",
-        "charset_declaration_conflict",
-        "ai_optout_directives",
-        "llms_txt_parse",
-        "third_party_dependency_ratio",
-        "citation_quality_profile",
-    ):
-        plan = _plan(QUERIES[name](spark, SF))
-        assert "Python" not in plan, name
-        assert "Exchange" not in plan, name  # rides the scan
 
 
 def test_session9_shapes(spark):
@@ -594,113 +552,7 @@ def test_session9_shapes(spark):
     assert "Python" not in thread
 
     for name in (
-        "env_file_leak",
         "makefile_targets",
-        "vcard_contact_parse",
-        "gpx_track_parse",
-        "htaccess_rules_parse",
-        "git_config_leak",
-        "access_log_parse",
-        "credential_dump_detect",
-        "zone_file_parse",
-        "adblock_filter_parse",
-        "robots_snippet_limits",
-        "rst_structure_parse",
-        "whois_record_parse",
-        "latex_structure_extract",
-        "mbox_message_split",
-        "m3u8_hls_manifest",
-        "kml_placemark_parse",
-        "webfinger_parse",
-        "aasa_universal_links",
-        "irc_log_parse",
-        "cms_shortcode_scrub",
-        "dot_leader_toc_parse",
-        "uuencode_block_detect",
-        "har_log_parse",
-        "pgn_game_parse",
-        "fasta_sequence_parse",
-        "user_agent_classify",
-        "ttml_caption_parse",
-        "asciidoc_structure",
-        "org_mode_structure",
-        "svg_active_content",
-        # batches 95-113 per-row extractors
-        "xml_entity_expansion_detect",
-        "debian_packages_parse",
-        "maven_pom_deps",
-        "ssh_pubkey_file_parse",
-        "dkim_record_parse",
-        "mta_sts_policy_parse",
-        "phpinfo_leak_detect",
-        "traffic_advice_parse",
-        "prometheus_metrics_parse",
-        "nginx_config_leak",
-        "ci_workflow_parse",
-        "terraform_state_leak",
-        "extension_manifest_parse",
-        "sitemap_hreflang_alternates",
-        "docker_compose_parse",
-        "k8s_manifest_parse",
-        "mediawiki_export_parse",
-        "stackexchange_dump_parse",
-        "pushshift_jsonl_parse",
-        "gutenberg_header_strip",
-        "oauth_authorize_params",
-        "saml_metadata_parse",
-        "ldif_directory_parse",
-        "passwd_file_leak",
-        "cve_reference_extract",
-        "issue_ref_extract",
-        "tracking_number_extract",
-        "bounce_dsn_parse",
-        "jwks_parse",
-        "crontab_leak_parse",
-        "shell_history_leak",
-        "wp_config_leak",
-        "ris_citation_parse",
-        "orcid_id_extract",
-        "issn_checksum_extract",
-        "cas_number_extract",
-        "netrc_leak",
-        "hosts_file_leak",
-        "package_registry_auth_leak",
-        "proxy_pac_parse",
-        "metar_weather_parse",
-        "mysql_slowlog_parse",
-        "dmesg_log_parse",
-        "traceroute_output_parse",
-        "merge_conflict_detect",
-        "rmarkdown_chunk_parse",
-        "graphviz_dot_parse",
-        "list_unsubscribe_parse",
-        "received_header_chain",
-        "cidr_block_extract",
-        "fix_protocol_log",
-        "hl7_message_detect",
-        "llm_artifact_detect",
-        "prompt_injection_detect",
-        "hexdump_parse",
-        "speakable_schema_extract",
-        "interview_transcript_parse",
-        "drama_script_parse",
-        "verse_structure_detect",
-        "xmp_packet_parse",
-        "git_log_parse",
-        "archive_listing_parse",
-        "citation_count_claims",
-        "wikidata_ref_extract",
-        "vin_checksum_validate",
-        "flight_designator_extract",
-        "bic_code_extract",
-        "sellers_json_parse",
-        "related_website_set_parse",
-        "client_hints_parse",
-        "gtag_consent_mode",
-        "memento_timemap_parse",
-        "permissions_policy_parse",
-        "nel_policy_parse",
-        "early_hints_parse",
     ):
         plan = _plan(QUERIES[name](spark, SF))
         assert "Exchange" not in plan, name
@@ -776,183 +628,6 @@ def test_session10_distributed_shapes(spark):
     assert "CartesianProduct" not in hop
     assert "EvalPython" not in hop and "PythonUDF" not in hop
 
-    for name in (
-        "pmid_pmcid_extract",
-        "patent_number_extract",
-        "rfc_reference_extract",
-        "grant_award_extract",
-        "lei_checksum_validate",
-        "cusip_checksum_validate",
-        "ticker_mention_extract",
-        "sec_accession_extract",
-        "mac_address_extract",
-        "ipv6_address_extract",
-        "asn_extract",
-        "dns_zone_record_parse",
-        "ssa_subtitle_parse",
-        "xliff_unit_parse",
-        "tmx_segment_parse",
-        "conll_token_parse",
-        "isrc_extract",
-        "imei_luhn_validate",
-        "routing_number_validate",
-        "swift_mt_field_parse",
-        "nct_trial_extract",
-        "icd10_code_extract",
-        "dosage_instruction_parse",
-        "fhir_resource_detect",
-        "wasm_usage_detect",
-        "webrtc_usage_detect",
-        "web_storage_usage",
-        "payment_request_detect",
-        "pgp_clearsign_parse",
-        "tls_cipher_suite_parse",
-        "hsts_preload_eligibility",
-        "cors_policy_audit",
-        "bencode_torrent_parse",
-        "syslog_rfc5424_parse",
-        "podcast_itunes_tags",
-        "rfc2119_keyword_census",
-        "markdown_table_parse",
-        "tsv_block_parse",
-        "nmap_port_lines",
-        "pip_requirements_parse",
-        "vast_ad_tag_parse",
-        "sitemap_index_parse",
-        "oai_pmh_record_parse",
-        "onix_product_parse",
-        "accept_language_parse",
-        "etag_strength_parse",
-        "content_range_parse",
-        "ipfs_uri_parse",
-        "fediverse_handle_extract",
-        "nostr_id_extract",
-        "matrix_id_extract",
-        "did_identifier_parse",
-        "importmap_parse",
-        "webauthn_detect",
-        "module_script_profile",
-        "x509_text_dump_parse",
-        "isin_checksum_validate",
-        "imo_ship_number_validate",
-        "olc_plus_code_parse",
-        "vat_number_extract",
-        "readability_grade_score",
-        "list_marker_normalize",
-        "unit_conversion_audit",
-        "temperature_conversion_audit",
-        "percentage_sum_audit",
-        "timezone_offset_audit",
-        "fx_conversion_audit",
-        "simple_interest_audit",
-        "tip_calculation_audit",
-        "speed_time_distance_audit",
-        "howto_schema_extract",
-        "qapage_schema_extract",
-        "softwareapp_schema_extract",
-        "course_schema_extract",
-        "avro_schema_parse",
-        "sql_query_table_refs",
-        "graphql_query_parse",
-        "protobuf_text_parse",
-        "iframe_sandbox_audit",
-        "referrer_policy_audit",
-        "fetchpriority_hints",
-        "anchor_download_attr",
-        "indian_number_parse",
-        "cjk_scale_number_parse",
-        "roman_numeral_decode",
-        "ordinal_date_normalize",
-        "appcache_manifest_parse",
-        "crossdomain_xml_audit",
-        "p3p_policy_detect",
-        "browserconfig_tile_parse",
-        "emoji_shortcode_decode",
-        "hashtag_topic_extract",
-        "social_embed_detect",
-        "spoiler_markup_extract",
-        "chess_fen_parse",
-        "crossword_clue_parse",
-        "sudoku_grid_detect",
-        "lottery_draw_parse",
-        "gtfs_stop_times_parse",
-        "flight_duration_audit",
-        "recipe_scale_audit",
-        "running_pace_audit",
-        "chemical_formula_parse",
-        "scientific_notation_parse",
-        "coordinate_dms_convert",
-        "isotope_notation_parse",
-        "csrf_token_detect",
-        "honeypot_field_detect",
-        "input_validation_attrs",
-        "multistep_form_indicator",
-        "league_table_audit",
-        "batting_average_audit",
-        "election_result_audit",
-        "fuel_economy_audit",
-        "review_star_audit",
-        "installment_price_audit",
-        "discount_stack_audit",
-        "lrc_lyrics_parse",
-        "cue_sheet_parse",
-        "video_chapters_parse",
-        "semver_bump_audit",
-        "watermark_text_detect",
-        "page_number_sequence_audit",
-        "ocr_confusion_detect",
-        "duplicate_paragraph_detect",
-        "retraction_notice_detect",
-        "erratum_correction_link",
-        "peer_review_status_detect",
-        "data_availability_statement",
-        "real_estate_listing_parse",
-        "vehicle_listing_parse",
-        "salary_range_parse",
-        "auction_bid_parse",
-        "utm_campaign_parse",
-        "received_spf_result",
-        "gdpr_dpo_contact",
-        "breach_notice_parse",
-        "arabic_indic_digit_normalize",
-        "fullwidth_form_normalize",
-        "japanese_era_convert",
-        "buddhist_era_audit",
-        "binary_size_units_audit",
-        "uptime_sla_audit",
-        "resolution_aspect_audit",
-        "file_size_sum_audit",
-        "curl_command_parse",
-        "rate_limit_doc_parse",
-        "api_deprecation_sunset",
-        "status_page_incident_parse",
-        "karma_reputation_parse",
-        "upvote_ratio_audit",
-        "poll_votes_audit",
-        "edit_history_note_parse",
-        "quiz_qa_parse",
-        "anki_cloze_parse",
-        "step_list_integrity",
-        "glossary_definition_parse",
-        "crawl_budget_arithmetic_audit",
-        "storage_projection_audit",
-        "compression_ratio_audit",
-        "dedup_savings_audit",
-        "opening_hours_parse",
-        "warranty_period_parse",
-        "allergen_statement_parse",
-        "visa_requirement_parse",
-        "coupon_code_consistency",
-        "loyalty_points_audit",
-        "returns_window_parse",
-        "booking_reference_extract",
-    ):
-        plan = _plan(QUERIES[name](spark, SF))
-        assert "Exchange" not in plan, name
-        assert "EvalPython" not in plan, name
-        assert "PythonUDF" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
 
 def test_session10_event_shapes(spark):
     """Events-table session-10 shapes: funnel/retention/heavy-user
@@ -1012,7 +687,7 @@ def test_source_lang_shapes(spark):
     SortAggregate, no cartesian, no Python."""
     from ocr_spark.queries import QUERIES
 
-    for name in ("source_lang_contingency", "source_dominant_lang"):
+    for name in ("source_lang_contingency",):
         plan = _plan(QUERIES[name](spark, SF))
         assert "HashAggregate" in plan, name
         assert "Window" not in plan, name

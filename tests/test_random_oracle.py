@@ -130,12 +130,10 @@ CRITICAL = [
     "url_canonicalize",
     "outlink_resolve_rfc",
     "idn_host_ascii",
-    "soft404_detect",
     "html_to_markdown",
     "hreflang_alternates",
     "bitext_mine_pairs",
     "robots_wildcard_filter",
-    "http_revalidation_plan",
     "pipeline_crawl_gate",
     "meta_refresh_redirects",
     "base_href_resolution",
@@ -143,327 +141,47 @@ CRITICAL = [
     # round-4 fourth-session surfaces (all doc_id/text-keyed)
     "pagination_rel_chains",
     "srcset_best_image",
-    "script_mix_profile",
     "microdata_extract",
     "amp_canonical_pairs",
     "sentence_split",
     "truncation_detect",
-    "mime_sniff_routing",
-    "hidden_text_stuffing",
     "nofollow_edge_classes",
     "crawl_delay_directive",
-    "parked_domain_detect",
-    "feed_item_parse",
-    "paywall_detect",
-    "url_page_type",
-    "directory_index_detect",
-    "amp_cache_url_decode",
-    "zero_width_scrub",
     "percent_encoding_normalize",
-    "vtt_caption_parse",
-    "data_url_media",
     "code_block_extract",
     "math_extract",
     "doi_citation_extract",
-    "license_detect",
-    "embed_extract",
-    "author_byline_extract",
-    "dublin_core_extract",
-    "figure_caption_pairs",
-    "rdfa_extract",
-    "breadcrumb_extract",
-    "url_date_extract",
-    "unicode_script_profile",
-    "cookie_consent_detect",
-    "spa_shell_detect",
-    "blockquote_cite_extract",
-    "nav_link_density",
-    "form_field_extract",
-    "resource_hints",
-    "lazyload_image_extract",
-    "html_comment_extract",
-    "css_rules_profile",
-    "contact_link_extract",
-    "svg_features",
-    "http_link_header_parse",
-    "price_extract",
-    "faq_pair_mining",
-    "opengraph_card_extract",
-    "forum_thread_extract",
-    "stacktrace_detect",
-    "recipe_extract",
-    "url_path_template_mining",
     "shortlink_detect",
-    "security_headers_profile",
     "dom_depth_profile",
-    "nextdata_state_extract",
-    "declared_lang_mismatch",
-    "js_redirect_detect",
-    "table_layout_classify",
-    "list_structure_extract",
-    "abbr_glossary_extract",
-    "cms_fingerprint",
-    "quote_attribution_extract",
-    "stat_claim_extract",
-    "download_link_classify",
-    "affiliate_link_detect",
-    "robots_sitemap_directive",
     "syndication_title_groups",
-    "video_source_extract",
-    "mailinglist_page_detect",
-    "site_capability_links",
-    "wikitext_detect",
-    "geo_meta_extract",
-    "template_tag_fence",
-    "inline_definition_extract",
-    "unit_conversion_pairs",
     "footnote_extract",
     "isbn_validate_extract",
     "analytics_id_extract",
     "uuid_version_profile",
-    "tracking_pixel_detect",
-    "accessibility_profile",
-    "microformats2_extract",
-    "dl_spec_pairs",
-    "details_summary_extract",
-    "product_offer_extract",
-    "jobposting_extract",
-    "event_schema_extract",
-    "dehyphenate_linebreaks",
-    "typographic_normalize",
-    "locale_number_parse",
-    "srt_caption_parse",
-    "email_obfuscation_decode",
-    "open_redirect_param_decode",
-    "picture_art_direction",
     "meta_keywords_stuffing",
-    "toc_anchor_resolution",
-    "comment_section_split",
     "ld_breadcrumblist_extract",
-    "noscript_fallback_extract",
-    "table_unit_headers",
-    "ol_start_continuation",
-    "favicon_link_variants",
     "ip_colocation_groups",
-    "opensearch_template_parse",
-    "rss_enclosure_extract",
-    "lorem_placeholder_detect",
-    "pem_block_detect",
-    "reading_time_claim_audit",
-    "manifest_json_parse",
-    "heading_numbering_audit",
-    "media_fragment_urls",
     "tracker_coownership_edges",
     "site_section_rollup",
-    "citation_needed_spans",
-    "infobox_keyvalue_extract",
-    "interwiki_language_links",
-    "wiki_redirect_alias",
-    "pagination_item_count_audit",
     "price_range_extract",
-    "stock_scarcity_extract",
-    "date_range_parse",
-    "modified_published_audit",
-    "copyright_staleness",
     "hreflang_reciprocity_audit",
-    "canonical_chain_resolution",
-    "meta_viewport_mobile",
-    "honeypot_form_detect",
-    "x_robots_tag_parse",
-    "link_text_url_mismatch",
-    "serp_page_detect",
-    "phone_e164_normalize",
     "postal_address_extract",
-    "strike_price_discount",
-    "cookie_attributes_audit",
-    "subdomain_apex_rollup",
-    "data_attr_profile",
-    "meter_progress_extract",
-    "iframe_srcdoc_extract",
-    "speculation_rules_prefetch",
-    "sri_integrity_audit",
-    "csp_report_endpoints",
-    "canvas_fingerprint_detect",
-    "via_cache_chain_parse",
-    "mixed_content_audit",
-    "doctype_render_mode",
-    "legacy_markup_audit",
-    "inline_event_handler_audit",
-    "jslib_version_detect",
-    "host_link_reciprocity",
-    "select_options_extract",
-    "star_rating_extract",
-    "color_scheme_audit",
-    "ads_txt_parse",
-    "security_txt_parse",
-    "webmention_endpoint_discovery",
-    "rel_me_identity_links",
-    "custom_elements_detect",
-    "declarative_shadow_dom",
-    "dialog_popover_detect",
-    "css_custom_props_profile",
-    "alt_svc_parse",
-    "server_timing_parse",
-    "sourcemap_link_detect",
-    "websocket_endpoint_detect",
-    "ruby_annotation_extract",
-    "rtl_direction_profile",
-    "map_embed_coords",
-    "page_weight_breakdown",
-    "structured_data_consistency_audit",
-    "oembed_discovery",
-    "preload_as_audit",
-    "minified_js_detect",
     "anchor_text_consensus",
-    "host_title_template_ratio",
-    "query_param_mining",
-    "app_deeplink_extract",
-    "activitypub_discovery",
-    "print_stylesheet_detect",
-    "form_autocomplete_audit",
     "host_boilerplate_lines",
     "session_param_entropy",
     "url_alias_groups",
-    "aria_landmark_regions",
-    "captcha_block_detect",
-    "age_gate_detect",
-    "share_widget_platforms",
     "table_span_grid",
-    "responsive_breakpoint_profile",
-    "noindex_sitemap_conflict",
-    "charset_declaration_conflict",
-    "rss_feed_staleness",
-    "comment_spam_profile",
-    "wayback_citation_decode",
-    "json_feed_parse",
-    "paywall_schema_declared",
-    "claimreview_extract",
-    "dataset_schema_extract",
-    "content_format_variants",
-    "form_method_security_audit",
-    "font_stack_profile",
-    "og_image_card_audit",
-    "tld_lang_consistency",
-    "heading_qa_mining",
-    "cmp_vendor_detect",
     "host_outlink_fanout",
-    "newsarticle_schema_completeness",
-    "image_license_extract",
-    "site_verification_tokens",
-    "api_key_exposure_scan",
     "event_burst_hours",
-    "user_churn_snapshot",
     "event_transition_matrix",
-    "llms_txt_parse",
-    "ai_optout_directives",
     "robots_ai_agent_matrix",
-    "error_ratio_by_host",
-    "third_party_dependency_ratio",
-    "push_prompt_detect",
-    "citation_quality_profile",
-    "locale_path_mirrors",
-    "emoji_density_profile",
-    "charset_prescan_window",
-    "content_disposition_parse",
-    "noscript_cloaking_detect",
-    "bcp47_subtag_parse",
-    "service_worker_detect",
-    "price_currency_consistency",
-    "microdata_itemref_resolution",
-    "paginated_canonical_conflict",
-    "time_element_consistency",
-    "min_fetch_gap_per_host",
-    "robots_channel_conflict",
-    "render_blocking_scripts",
-    "sitemap_media_entries",
-    "search_page_index_leak",
-    "clickbait_title_score",
-    "listicle_count_audit",
-    "crypto_address_detect",
     "lang_length_outliers",
     "knn_label_agreement",
-    "embedding_contract_audit",
     "label_distribution",
-    "homograph_host_detect",
-    "jsonld_articlebody_extract",
-    "css_generated_content",
-    "web_monetization_detect",
-    "code_repo_link_extract",
-    "api_endpoint_doc_extract",
-    "changelog_version_extract",
-    "rating_bounds_audit",
     "error_streaks",
     "value_quantiles_by_type",
-    "duplicate_id_audit",
-    "meta_description_audit",
-    "iso8601_duration_parse",
-    "breadcrumb_url_consistency",
-    "dev_server_leak_detect",
-    "alt_text_caption_quality",
-    "og_locale_alternates",
-    "data_nosnippet_extract",
-    "luhn_card_detect",
-    "gtin_checksum_validate",
-    "coordinate_precision_audit",
-    "url_secret_params",
-    "press_release_detect",
-    "ad_slot_density",
-    "text_fragment_links",
-    "page_artifact_scrub",
-    "ligature_fold",
-    "dropcap_rejoin",
-    "running_header_scrub",
-    "control_char_scrub",
-    "bidi_control_scrub",
-    "double_escape_repair",
-    "base64_blob_detect",
-    "iban_checksum_validate",
-    "toxicity_lexicon_score",
-    "spdx_license_id_extract",
-    "privacy_policy_links",
-    "retry_after_parse",
-    "vary_header_audit",
-    "content_language_channels",
-    "executable_payload_detect",
-    "texttrack_discovery",
-    "frameset_detect",
-    "imagemap_area_extract",
-    "js_obfuscation_detect",
-    "document_write_detect",
-    "iframe_sandbox_audit",
-    "mobile_alternate_pairs",
-    "article_tag_extract",
-    "heading_level_skips",
-    "code_lang_infer",
     "pdf_info_metadata",
-    "login_wall_detect",
-    "ssi_artifact_detect",
-    "php_error_leak_detect",
-    "raw_markdown_artifacts",
-    "csv_payload_sniff",
-    "text_table_detect",
-    "english_dialect_profile",
-    "citation_style_detect",
-    "websub_hub_discovery",
-    "robots_quota_directives",
-    "infinite_scroll_detect",
-    "correction_notice_detect",
-    "opening_hours_extract",
-    "howto_schema_extract",
-    "api_envelope_detect",
-    "utm_campaign_profile",
-    "video_schema_transcript",
-    "readme_badge_extract",
-    "dialogue_ratio_profile",
-    "comment_count_audit",
-    "inline_lang_switches",
-    "title_h1_consistency",
-    "slug_title_match",
-    "hashtag_mention_extract",
     "typosquat_host_detect",
-    "mixed_script_tokens",
-    "cross_host_canonical",
-    "ssn_pattern_audit",
     # NOT ogg_opus_head_parse: synthesized-corpus query,
     # construction-literal oracle (codec-metadata class).
     # NOT wav_silence_segments / jpeg_quality_estimate / mp3_id3_tags /
@@ -503,347 +221,19 @@ CRITICAL = [
     # which by design does NOT hold for sub-25-char docs (the DOM
     # extractor drops blocks below MIN_BLOCK_CHARS) — this random
     # corpus deliberately contains such docs.
-    # session-8 additions (all doc_id-constructed, documents-only)
-    "organization_schema_extract",
-    "rss_ttl_hints",
-    "twocol_table_kv",
-    "code_comment_density",
-    "notebook_cell_extract",
-    "unified_diff_stats",
-    "shell_transcript_extract",
-    "bibtex_entry_extract",
-    "robots_clean_param",
-    "ratelimit_headers_parse",
-    "humans_txt_parse",
-    "magnet_link_parse",
-    "ics_event_parse",
-    "opml_outline_parse",
-    "sitemap_news_entries",
-    "mime_encoded_word_decode",
-    "po_translation_pairs",
-    "openapi_spec_extract",
-    "package_manifest_deps",
-    "dockerfile_directives",
-    "jwt_token_scan",
-    "download_checksum_pairs",
-    "onion_address_detect",
-    "sql_dump_schema",
-    "geojson_features",
-    "turtle_triples_parse",
-    "man_page_sections",
-    "wiki_cite_template_parse",
-    "email_quote_depth",
-    "email_signature_strip",
-    "hard_wrap_rejoin",
-    "caps_shouting_profile",
-    "graphql_endpoint_detect",
-    "ftp_listing_parse",
-    "keyboard_mash_detect",
-    "http_auth_challenge_parse",
     # session-9 additions
-    "spf_record_parse",
-    "dmarc_record_parse",
-    "yaml_front_matter",
-    "toml_manifest_deps",
-    "env_file_leak",
     "makefile_targets",
-    "vcard_contact_parse",
-    "gpx_track_parse",
-    "htaccess_rules_parse",
-    "git_config_leak",
-    "access_log_parse",
-    "credential_dump_detect",
-    "zone_file_parse",
-    "adblock_filter_parse",
-    "robots_snippet_limits",
-    "rst_structure_parse",
     "email_thread_graph",
-    "whois_record_parse",
-    "latex_structure_extract",
-    "mbox_message_split",
-    "m3u8_hls_manifest",
-    "kml_placemark_parse",
-    "webfinger_parse",
-    "aasa_universal_links",
-    "irc_log_parse",
-    "cms_shortcode_scrub",
-    "dot_leader_toc_parse",
-    "uuencode_block_detect",
-    "har_log_parse",
-    "pgn_game_parse",
-    "fasta_sequence_parse",
-    "user_agent_classify",
-    "ttml_caption_parse",
-    "asciidoc_structure",
-    "org_mode_structure",
-    "svg_active_content",
-    "xml_entity_expansion_detect",
-    "debian_packages_parse",
-    "maven_pom_deps",
-    "ssh_pubkey_file_parse",
-    "dkim_record_parse",
-    "mta_sts_policy_parse",
-    "phpinfo_leak_detect",
-    "traffic_advice_parse",
-    "prometheus_metrics_parse",
-    "nginx_config_leak",
-    "ci_workflow_parse",
-    "terraform_state_leak",
-    "extension_manifest_parse",
-    "sitemap_hreflang_alternates",
-    "docker_compose_parse",
-    "k8s_manifest_parse",
-    "mediawiki_export_parse",
-    "stackexchange_dump_parse",
-    "pushshift_jsonl_parse",
-    "gutenberg_header_strip",
-    "oauth_authorize_params",
-    "saml_metadata_parse",
-    "ldif_directory_parse",
-    "passwd_file_leak",
-    "cve_reference_extract",
-    "issue_ref_extract",
-    "tracking_number_extract",
-    "bounce_dsn_parse",
-    "jwks_parse",
-    "crontab_leak_parse",
-    "shell_history_leak",
-    "wp_config_leak",
-    "ris_citation_parse",
-    "orcid_id_extract",
-    "issn_checksum_extract",
-    "cas_number_extract",
-    "netrc_leak",
-    "hosts_file_leak",
-    "package_registry_auth_leak",
-    "proxy_pac_parse",
-    "metar_weather_parse",
-    "mysql_slowlog_parse",
-    "dmesg_log_parse",
-    "traceroute_output_parse",
-    "merge_conflict_detect",
-    "rmarkdown_chunk_parse",
-    "graphviz_dot_parse",
-    "list_unsubscribe_parse",
-    "received_header_chain",
-    "cidr_block_extract",
-    "fix_protocol_log",
-    "hl7_message_detect",
-    "llm_artifact_detect",
-    "prompt_injection_detect",
-    "hexdump_parse",
-    "speakable_schema_extract",
-    "interview_transcript_parse",
-    "drama_script_parse",
-    "verse_structure_detect",
-    "xmp_packet_parse",
     "zipf_slope_estimate",
-    "git_log_parse",
-    "archive_listing_parse",
-    "citation_count_claims",
-    "wikidata_ref_extract",
-    "vin_checksum_validate",
-    "flight_designator_extract",
-    "bic_code_extract",
-    "sellers_json_parse",
-    "related_website_set_parse",
-    "client_hints_parse",
-    "gtag_consent_mode",
-    "memento_timemap_parse",
-    "permissions_policy_parse",
-    "nel_policy_parse",
-    "early_hints_parse",
-    "chord_chart_parse",
-    "sgf_game_parse",
-    "abc_notation_parse",
-    "dice_statblock_parse",
-    "asin_extract",
-    "imdb_id_extract",
-    "ecli_case_extract",
-    "uscode_cite_extract",
-    "fountain_screenplay_parse",
-    "nutrition_facts_parse",
-    "game_score_parse",
-    "quake_notice_parse",
-    "pmid_pmcid_extract",
-    "patent_number_extract",
-    "rfc_reference_extract",
-    "grant_award_extract",
-    "lei_checksum_validate",
-    "cusip_checksum_validate",
-    "ticker_mention_extract",
-    "sec_accession_extract",
-    "mac_address_extract",
-    "ipv6_address_extract",
-    "asn_extract",
-    "dns_zone_record_parse",
-    "ssa_subtitle_parse",
-    "xliff_unit_parse",
-    "tmx_segment_parse",
-    "conll_token_parse",
     "bigram_pmi_mining",
     "doc_rare_term_pick",
     "graph_two_hop_reach",
-    "isrc_extract",
-    "imei_luhn_validate",
-    "routing_number_validate",
-    "swift_mt_field_parse",
-    "nct_trial_extract",
-    "icd10_code_extract",
-    "dosage_instruction_parse",
-    "fhir_resource_detect",
-    "wasm_usage_detect",
-    "webrtc_usage_detect",
-    "web_storage_usage",
-    "payment_request_detect",
-    "pgp_clearsign_parse",
-    "tls_cipher_suite_parse",
-    "hsts_preload_eligibility",
-    "cors_policy_audit",
     "event_funnel_conversion",
     "user_retention_cohorts",
     "heavy_user_event_share",
-    "bencode_torrent_parse",
-    "syslog_rfc5424_parse",
-    "podcast_itunes_tags",
-    "rfc2119_keyword_census",
-    "markdown_table_parse",
-    "tsv_block_parse",
-    "nmap_port_lines",
-    "pip_requirements_parse",
-    "vast_ad_tag_parse",
-    "sitemap_index_parse",
-    "oai_pmh_record_parse",
-    "onix_product_parse",
-    "accept_language_parse",
-    "etag_strength_parse",
-    "content_range_parse",
-    "ipfs_uri_parse",
-    "fediverse_handle_extract",
-    "nostr_id_extract",
-    "matrix_id_extract",
-    "did_identifier_parse",
-    "importmap_parse",
-    "webauthn_detect",
-    "module_script_profile",
-    "x509_text_dump_parse",
-    "isin_checksum_validate",
-    "imo_ship_number_validate",
-    "olc_plus_code_parse",
-    "vat_number_extract",
-    "readability_grade_score",
     "cross_host_line_syndication",
-    "list_marker_normalize",
-    "unit_conversion_audit",
-    "temperature_conversion_audit",
-    "percentage_sum_audit",
-    "timezone_offset_audit",
-    "fx_conversion_audit",
-    "simple_interest_audit",
-    "tip_calculation_audit",
-    "speed_time_distance_audit",
-    "howto_schema_extract",
-    "qapage_schema_extract",
-    "softwareapp_schema_extract",
-    "course_schema_extract",
-    "avro_schema_parse",
-    "sql_query_table_refs",
-    "graphql_query_parse",
-    "protobuf_text_parse",
-    "iframe_sandbox_audit",
-    "referrer_policy_audit",
-    "fetchpriority_hints",
-    "anchor_download_attr",
-    "indian_number_parse",
-    "cjk_scale_number_parse",
-    "roman_numeral_decode",
-    "ordinal_date_normalize",
-    "appcache_manifest_parse",
-    "crossdomain_xml_audit",
-    "p3p_policy_detect",
-    "browserconfig_tile_parse",
-    "emoji_shortcode_decode",
-    "hashtag_topic_extract",
-    "social_embed_detect",
-    "spoiler_markup_extract",
-    "chess_fen_parse",
-    "crossword_clue_parse",
-    "sudoku_grid_detect",
-    "lottery_draw_parse",
-    "gtfs_stop_times_parse",
-    "flight_duration_audit",
-    "recipe_scale_audit",
-    "running_pace_audit",
-    "chemical_formula_parse",
-    "scientific_notation_parse",
-    "coordinate_dms_convert",
-    "isotope_notation_parse",
-    "csrf_token_detect",
-    "honeypot_field_detect",
-    "input_validation_attrs",
-    "multistep_form_indicator",
-    "league_table_audit",
-    "batting_average_audit",
-    "election_result_audit",
-    "fuel_economy_audit",
-    "review_star_audit",
-    "installment_price_audit",
-    "discount_stack_audit",
     "host_quality_priors_join",
-    "lrc_lyrics_parse",
-    "cue_sheet_parse",
-    "video_chapters_parse",
-    "semver_bump_audit",
-    "watermark_text_detect",
-    "page_number_sequence_audit",
-    "ocr_confusion_detect",
-    "duplicate_paragraph_detect",
-    "retraction_notice_detect",
-    "erratum_correction_link",
-    "peer_review_status_detect",
-    "data_availability_statement",
-    "real_estate_listing_parse",
-    "vehicle_listing_parse",
-    "salary_range_parse",
-    "auction_bid_parse",
-    "utm_campaign_parse",
-    "received_spf_result",
-    "gdpr_dpo_contact",
-    "breach_notice_parse",
-    "arabic_indic_digit_normalize",
-    "fullwidth_form_normalize",
-    "japanese_era_convert",
-    "buddhist_era_audit",
-    "binary_size_units_audit",
-    "uptime_sla_audit",
-    "resolution_aspect_audit",
-    "file_size_sum_audit",
-    "curl_command_parse",
-    "rate_limit_doc_parse",
-    "api_deprecation_sunset",
-    "status_page_incident_parse",
-    "karma_reputation_parse",
-    "upvote_ratio_audit",
-    "poll_votes_audit",
-    "edit_history_note_parse",
     "source_lang_contingency",
-    "source_dominant_lang",
-    "quiz_qa_parse",
-    "anki_cloze_parse",
-    "step_list_integrity",
-    "glossary_definition_parse",
-    "crawl_budget_arithmetic_audit",
-    "storage_projection_audit",
-    "compression_ratio_audit",
-    "dedup_savings_audit",
-    "opening_hours_parse",
-    "warranty_period_parse",
-    "allergen_statement_parse",
-    "visa_requirement_parse",
-    "coupon_code_consistency",
-    "loyalty_points_audit",
-    "returns_window_parse",
-    "booking_reference_extract",
 ]
 
 

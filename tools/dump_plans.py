@@ -1,12 +1,25 @@
 """Regenerate PLANS.md: formatted physical plans for the headline
 queries with the scale commentary the plans are audited against
 (tests/test_plans.py enforces these properties; this file shows them).
+
+The same pass plans every registered query once and writes CENSUS.json,
+one entry per query: its registry part, its plan signature (the
+multiset of physical operator names in the formatted plan, node ids
+and arguments stripped) and the ``ocr_spark`` modules whose functions
+the query calls while it builds its DataFrame, or hands to pyspark to
+run on the executors (registry modules and the table loader left out).
+Two queries with the same signature and no engine module exercise the
+same plan shape.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+import re
 import sys
+import types
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -416,12 +429,6 @@ COMMENTARY = {
         "unioned back, so the null join key never funnels a "
         "corpus-sized bucket through one task."
     ),
-    "url_path_template_mining": (
-        "Digit-normalized skeleton projection then ONE HashAggregate "
-        "on (host, skeleton) with map-side partial combine — the "
-        "route-table rollup collapses the corpus before its single "
-        "shuffle; keys are uniform in host, no sort."
-    ),
     "shortlink_detect": (
         "The shortener dimension is tiny and static, so the join is "
         "an EXPLICIT BroadcastHashJoin (BuildRight): the corpus side "
@@ -514,13 +521,6 @@ COMMENTARY = {
         "join back on their keys with a scalar grand total; deviation "
         "flags are integer cross-multiplications (obs*N vs 2*row*col) — "
         "the chi-square question with no float."
-    ),
-    "source_dominant_lang": (
-        "Categorical argmax via the single-BIGINT encoding (cnt*8 + "
-        "lang_id, decoded by div/mod) — the kmeans_assign fix pattern "
-        "applied to a string category: MAX over a long hash-aggregates "
-        "with map-side partials where max_by(lang, cnt) would plan a "
-        "struct-buffer SortAggregate."
     ),
     # --- round-5 additions: full coverage of bench + curated first-50 ---
     "q3_shipping_priority": (
@@ -822,26 +822,129 @@ COMMENTARY = {
 }
 
 
+_TREE_LINE = re.compile(r"^[\s:+\-*|]*(\S.*?) \(\d+\)$")
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "ocr_spark"
+) + os.sep
+
+# the registry itself and its table loader: not engine code
+_REGISTRY = ("ocr_spark.qparts.", "ocr_spark.queries", "ocr_spark.sources.tables")
+
+
+def plan_signature(plan: str) -> list[str]:
+    """Sorted operator names of every plan tree (main plan and
+    subqueries) in a formatted explain string."""
+    ops = []
+    for line in plan.splitlines():
+        m = _TREE_LINE.match(line)
+        if not m or line.lstrip().startswith("("):
+            continue
+        words = m.group(1).split()
+        ops.append(" ".join(words[:2]) if words[0] == "Scan" else words[0])
+    return sorted(ops)
+
+
+def _module_of(filename: str) -> str | None:
+    if not filename.startswith(_PKG):
+        return None
+    rel = filename[len(_PKG):-len(".py")]
+    return "ocr_spark." + rel.replace(os.sep, ".")
+
+
+def _is_engine(module: str | None) -> bool:
+    return bool(module) and module.startswith("ocr_spark.") and not (
+        module.startswith(_REGISTRY)
+    )
+
+
+def _handed_modules(fn) -> set[str]:
+    """Engine modules a function handed to pyspark runs on the
+    executors: its own module, or, for a function the registry defines,
+    the engine modules its body imports or names."""
+    fn = getattr(fn, "func", fn)  # UDF objects and functools.partial
+    code = getattr(fn, "__code__", None)
+    own = code and _module_of(code.co_filename)
+    if not own:
+        return set()
+    if _is_engine(own):
+        return {own}
+    named = [c.cell_contents for c in fn.__closure__ or ()]
+    mods, codes = set(), [code]
+    while codes:
+        c = codes.pop()
+        mods.update(n for n in c.co_names if _is_engine(n))
+        named += [fn.__globals__.get(n) for n in c.co_names]
+        codes += [k for k in c.co_consts if isinstance(k, types.CodeType)]
+    for v in named:
+        if isinstance(v, types.FunctionType):
+            mod = _module_of(v.__code__.co_filename)
+            if _is_engine(mod):
+                mods.add(mod)
+    return mods
+
+
+def build_traced(fn, spark):
+    """Run one query function; return its DataFrame and the sorted
+    engine modules whose functions it calls, directly or through
+    registry helpers, or hands to pyspark (a UDF, a mapInPandas
+    function) to run on the executors."""
+    from pyspark.sql.udf import UserDefinedFunction
+
+    handed = (types.FunctionType, functools.partial, UserDefinedFunction)
+    seen: set[str] = set()
+
+    def prof(frame, event, arg):
+        if event != "call" or frame.f_code.co_name == "<module>":
+            return
+        filename = frame.f_code.co_filename
+        mod = _module_of(filename)
+        if _is_engine(mod):
+            seen.add(mod)
+        elif os.sep + "pyspark" + os.sep in filename:
+            for v in frame.f_locals.values():
+                if isinstance(v, handed):
+                    seen.update(_handed_modules(v))
+
+    sys.setprofile(prof)
+    try:
+        df = fn(spark, SF)
+    finally:
+        sys.setprofile(None)
+    return df, sorted(seen)
+
+
 def main() -> None:
     from ocr_spark.queries import QUERIES
     from ocr_spark.session import get_spark
 
     spark = get_spark("dump-plans", cpus=4)
     spark.sparkContext.setLogLevel("ERROR")
+    plans, census = {}, {}
+    for name, fn in QUERIES.items():
+        df, modules = build_traced(fn, spark)
+        plans[name] = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        census[name] = {
+            "part": fn.__module__.rsplit(".", 1)[-1],
+            "signature": plan_signature(plans[name]),
+            "modules": modules,
+        }
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "CENSUS.json"), "w") as f:
+        json.dump(census, f, indent=1)
+        f.write("\n")
+    print(f"CENSUS.json written ({len(census)} queries)")
     out = [
         "# PLANS — physical plans of the headline queries\n",
         "Generated by `python tools/dump_plans.py` at sf0.01; the plan\n"
         "properties shown here are enforced by `tests/test_plans.py`.\n",
     ]
     for name, note in COMMENTARY.items():
-        df = QUERIES[name](spark, SF)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        tree = plan.split("\n\n")[0]  # tree section only, not node details
+        tree = plans[name].split("\n\n")[0]  # tree section only
         out.append(f"\n## {name}\n\n{note}\n\n```\n{tree}\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(repo, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
 
