@@ -5,12 +5,18 @@ a pure function of the row, so it never needs a join to recompute and
 it partition-prunes on the output table. Shards are processed in
 **waves** (a few shards per Spark job). Each wave:
 
-1. writes its data with *dynamic partition overwrite* (only the wave's
-   shard partitions are replaced — a re-run of a half-failed wave is
-   idempotent, giving exactly-once per shard);
-2. then appends one manifest row per shard
-   ``(run_id, wave, shard, n_rows, n_urls, bytes, wall_ms,
-   docs_per_sec, wrote_at)`` to the manifests table.
+1. deals its shards whole, round-robin, over at most one partition per
+   task slot (``wave_input``), so the extraction's Python runs in no
+   more tasks than slots and in no empty one;
+2. runs the extraction once, as the input of a *dynamic partition
+   overwrite* of the data table (only the wave's shard partitions are
+   replaced — a re-run of a half-failed wave is idempotent, giving
+   exactly-once per shard);
+3. counts the shard partitions it committed, read back through the
+   catalog (unless the write's observed row count is 0: then there may
+   be no file to read), and appends one manifest row per shard,
+   zero-row shards included, ``(shard, n_rows, n_urls, bytes, run_id,
+   wave, wall_ms, docs_per_sec, wrote_at)``, built on the driver.
 
 Because the manifest append happens strictly *after* the wave's data
 commit, a crash at any point leaves shards either fully recorded or
@@ -30,13 +36,26 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.pipeline import extract_pages
 from ocr_spark.sources.catalog import get_catalog
 
 N_SHARDS = 64
+
+MANIFEST_SCHEMA = pa.schema([
+    pa.field("shard", pa.int32()),
+    pa.field("n_rows", pa.int64(), nullable=False),
+    pa.field("n_urls", pa.int64(), nullable=False),
+    pa.field("bytes", pa.int64(), nullable=False),
+    pa.field("run_id", pa.string(), nullable=False),
+    pa.field("wave", pa.int32(), nullable=False),
+    pa.field("wall_ms", pa.float64(), nullable=False),
+    pa.field("docs_per_sec", pa.float64()),
+    pa.field("wrote_at", pa.string(), nullable=False),
+])
 
 
 def shard_col(n_shards: int = N_SHARDS) -> F.Column:
@@ -49,6 +68,30 @@ def completed_shards(spark: SparkSession, out_dir: str, cat=None) -> set[int]:
         return set()
     rows = cat.read("manifests").select("shard").distinct().collect()
     return {r.shard for r in rows}
+
+
+def wave_input(src: DataFrame, shards: list[int]) -> DataFrame:
+    """The rows of ``src`` (which carries ``shard``) in ``shards``, dealt
+    round-robin by the shard's position in the wave over
+    min(len(shards), slots) partitions: each shard whole in one task, no
+    empty task while every shard has rows, no more tasks than slots.
+
+    The slot count is ``defaultParallelism`` only where it is fixed: in
+    local mode, or when ``spark.default.parallelism`` is set. On a
+    cluster it otherwise counts the executor cores registered so far
+    (2 while executors start or scale under dynamic allocation), so
+    there the wave takes one partition per shard."""
+    sc = src.sparkSession.sparkContext
+    fixed = (
+        sc.master == "local"
+        or sc.master.startswith("local[")
+        or sc.getConf().contains("spark.default.parallelism")
+    )
+    n = min(len(shards), sc.defaultParallelism) if fixed else len(shards)
+    pos = F.array_position(F.array(*map(F.lit, shards)), F.col("shard")) - 1
+    return src.where(F.col("shard").isin(shards)).repartitionById(
+        n, (pos % n).cast("int")
+    )
 
 
 def _chunk(xs: list[int], n: int) -> list[list[int]]:
@@ -92,52 +135,44 @@ def checkpointed_run(
     processed: list[int] = []
     for wave_no, shards in enumerate(waves):
         t0 = time.perf_counter()
-        wave_src = src.where(F.col("shard").isin(shards)).repartition(
-            len(shards), "shard"
+        written = Observation("wave_rows")
+        out = (
+            extractor(wave_input(src, shards).drop("shard"))
+            .withColumn("shard", shard_col(n_shards))
+            .observe(written, F.count(F.lit(1)).alias("n"))
         )
-        out = extractor(wave_src.drop("shard")).withColumn(
-            "shard", shard_col(n_shards)
-        )
-        out.persist()
-        try:
-            cat.overwrite_partitions(out, "data", ["shard"])
-            wall_ms = (time.perf_counter() - t0) * 1000.0
-            # One manifest row per shard in the wave, INCLUDING shards
-            # whose wave produced zero rows — otherwise an empty shard
-            # never appears in completed_shards and every resume re-runs
-            # it forever (ADVICE r1). Left-join the wave's shard list
-            # against the per-shard aggregates, coalescing counts to 0.
-            wave_shards = spark.createDataFrame(
-                [(int(s),) for s in shards], "shard int"
-            )
-            agg = out.groupBy("shard").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("url").alias("n_urls"),
-                F.sum(F.octet_length("extracted")).alias("bytes"),
-            )
-            man = (
-                wave_shards.join(agg, "shard", "left")
-                .select(
-                    "shard",
-                    F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
-                    F.coalesce("n_urls", F.lit(0)).alias("n_urls"),
-                    F.coalesce("bytes", F.lit(0)).alias("bytes"),
-                )
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("wave", F.lit(wave_no))
-                .withColumn("wall_ms", F.lit(round(wall_ms, 1)))
-                .withColumn(
-                    "docs_per_sec",
-                    F.round(F.col("n_rows") / F.lit(wall_ms / 1000.0), 1),
-                )
-                .withColumn(
-                    "wrote_at",
-                    F.lit(datetime.now(timezone.utc).isoformat()),
+        cat.overwrite_partitions(out, "data", ["shard"])
+        wall_ms = (time.perf_counter() - t0) * 1000.0
+        # counted from the committed partitions: the extraction runs
+        # once, inside the write, and nothing is cached. A wave that
+        # wrote no row may leave the table with no file to read back.
+        counts = {}
+        if written.get["n"]:
+            agg = (
+                cat.read("data")
+                .where(F.col("shard").isin(shards))
+                .groupBy("shard")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.countDistinct("url").alias("n_urls"),
+                    F.sum(F.octet_length("extracted")).alias("bytes"),
                 )
             )
-            cat.append(man, "manifests")
-        finally:
-            out.unpersist()
+            counts = {
+                r.shard: (r.n_rows, r.n_urls, r.bytes or 0)
+                for r in agg.collect()
+            }
+        wrote_at = datetime.now(timezone.utc).isoformat()
+        rows = []
+        for s in shards:  # zero-row shards too, or every resume re-runs them
+            n_rows, n_urls, n_bytes = counts.get(s, (0, 0, 0))
+            dps = round(n_rows / (wall_ms / 1000.0), 1)
+            rows.append((s, n_rows, n_urls, n_bytes, run_id, wave_no,
+                         round(wall_ms, 1), dps, wrote_at))
+        # built in the JVM from Arrow: no Python task, and no per-wave
+        # value in generated code
+        man = pa.table(list(zip(*rows)), schema=MANIFEST_SCHEMA)
+        cat.append(spark.createDataFrame(man), "manifests")
         processed.extend(shards)
     return {
         "run_id": run_id,

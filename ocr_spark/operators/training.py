@@ -326,9 +326,11 @@ def kmeans_quantized(
     for _ in range(iters - 1):
         centroids = kmeans_recenter(assigned, dim)
         if driver_centroids:
-            rows = [(int(r["cluster"]), list(r["cv"])) for r in centroids.collect()]
+            # collected and re-created through Arrow: a list of rows
+            # would be parallelized as a Python RDD, one Python task
+            # per slot every round
             centroids = spark.createDataFrame(
-                rows, "cluster int, cv array<bigint>"
+                centroids.toArrow(), "cluster int, cv array<bigint>"
             )
         assigned = kmeans_assign(vecs, centroids, k)
     return assigned.select("vec_id", "cluster", "dist")
