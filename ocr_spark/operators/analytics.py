@@ -213,9 +213,12 @@ def two_tier_rank(
     back. Partitionless windows never touch row-scale data — the
     anti-pattern this helper exists to retire.
 
-    ``value_col`` must be integral (rank order on it is exact);
-    ``tiebreaks`` are ascending and must make the order total, or
-    row_number within a bucket is nondeterministic.
+    ``value_col`` must be integral and its range (max - min) must fit
+    a BIGINT; buckets come from integer ``DIV``, so ranks stay exact
+    past 2^53, where a double quotient would round. Rows whose
+    ``value_col`` is NULL are DROPPED before ranking, so ranks run 1..n
+    over the non-NULL rows. ``tiebreaks`` are ascending and must make
+    the order total, or row_number within a bucket is nondeterministic.
 
     The input is STAGED at entry (lazy localCheckpoint; a table write
     at warehouse scale): the helper consumes it three times (min/max
@@ -224,18 +227,14 @@ def two_tier_rank(
     single-evaluation discipline as budget_apportionment's demands
     staging.
     """
-    df = df.localCheckpoint(eager=False)
     v = F.col(value_col)
+    df = df.where(v.isNotNull()).localCheckpoint(eager=False)
     stats = df.agg(
         F.min(v).cast("long").alias("_lo"), F.max(v).cast("long").alias("_hi")
     )
     b = df.crossJoin(F.broadcast(stats))
-    width = F.greatest(
-        F.expr(f"(_hi - _lo) DIV {n_buckets}"), F.lit(1).cast("long")
-    )
-    raw_bucket = F.expr("int((_lo IS NOT NULL))") * (
-        (v.cast("long") - F.col("_lo")) / width
-    ).cast("long")
+    width = f"greatest((_hi - _lo) DIV {n_buckets}, 1L)"
+    raw_bucket = F.expr(f"(CAST(`{value_col}` AS BIGINT) - _lo) DIV {width}")
     # DESC rank: flip the bucket so bucket order matches rank order
     bucket = (-raw_bucket if desc else raw_bucket).alias("_bucket")
     bk = b.select(*df.columns, bucket)

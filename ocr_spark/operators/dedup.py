@@ -33,7 +33,10 @@ Scale notes (10^12 docs)
   dedup of the pair space is a by-product of the join condition, not a
   distinct over the cross product.
 - ``connected_components`` turns pairs into canonical-keeper clusters
-  (min-label propagation, O(diameter) rounds).
+  (min-label propagation, O(diameter) rounds). It reads the pair edges
+  once, and each round is one join and one aggregate staged with lazy
+  localCheckpoint, so no round's plan nests the rounds before it; see
+  its docstring for why a ``persist()`` loop cannot do that.
 """
 
 from __future__ import annotations
@@ -865,55 +868,56 @@ def connected_components(
     where cluster = min id reachable — the canonical-keeper assignment
     that turns pair mining into actual deduplication.
 
-    Pregel-lite min-label propagation: each iteration joins labels
-    across edges and takes the min; converges in O(diameter) rounds
-    (checked per round, early exit). Near-dup graphs are unions of
-    small cliques, so 2-3 rounds in practice; each round is one
-    shuffle on uniformly-hashed ids. At 10^12 scale this is the
-    standard large-star/small-star shape; the loop stays on the driver
-    but touches only counts, never rows.
+    Min-label propagation in at most ``max_iter`` rounds; after k rounds
+    a node's cluster is the least id within k edges of it, so the labels
+    are final once a round changes none (early exit). Near-dup graphs
+    are unions of small cliques: 2-3 rounds in practice.
+
+    - The symmetric edge set, with a self loop on every node, comes
+      from ONE read of ``edges`` (its lineage is the whole pair-mining
+      pipeline) and is staged. An edge with one NULL endpoint adds only
+      its other endpoint, as an isolated node.
+    - Round 1 needs no join: each node's least neighbour over the
+      closed neighbourhood is ``min(u) GROUP BY v``.
+    - Every later round is one join and one aggregate that yields the
+      new label and, through the self loop, the old one; the round is
+      staged (lazy localCheckpoint) and the changed-label count runs on
+      the staged rows, which the next round then reads.
+
+    Each round's plan starts from the staged frame of the round before,
+    so it does not grow with the rounds. A ``persist()`` keeps the
+    lineage: a round that joins its cached predecessor back for the
+    change count nests every earlier round's plan, and planning time
+    doubled per round (at a 2g driver heap a 6-edge chain took 22 s
+    and a 7-edge chain ran the driver out of memory).
+    The loop stays on the driver but touches only counts, never rows.
     """
-    e = edges.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    )
-    # staged (r5): sym's lineage is the whole pair-mining pipeline
-    # (minhash bands, verify joins) and every iteration's propagate
-    # join references it — un-staged, the label loop replayed that
-    # pipeline per round (32 corpus scans in dedup_clusters' plan)
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("u").alias("id"))
+    a, b = F.col(a_col), F.col(b_col)
+    arcs = [
+        F.struct(x.alias("u"), y.alias("v"))
+        for x, y in ((a, b), (b, a), (a, a), (b, b))
+    ]
+    sym = (
+        edges.select(F.inline(F.array(*arcs)))
+        .dropna()  # a NULL endpoint is no node
         .distinct()
-        .withColumn("cluster", F.col("id"))
+        .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
-        prop = (
-            sym.join(labels, sym.u == labels.id)
-            .select(F.col("v").alias("id"), F.col("cluster"))
-            .groupBy("id")
-            .agg(F.min("cluster").alias("cluster"))
-        )
-        new_labels = (
-            labels.select("id", F.col("cluster").alias("old"))
-            .join(prop.select("id", F.col("cluster").alias("new")), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("old"), F.coalesce(F.col("new"), F.col("old"))).alias(
-                    "cluster"
-                ),
+    if max_iter < 1:
+        return sym.select(F.col("v").alias("id"), F.col("v").alias("cluster")).distinct()
+    labels = sym.groupBy(F.col("v").alias("id")).agg(F.min("u").alias("cluster"))
+    for _ in range(max_iter - 1):
+        step = (
+            sym.join(labels, F.col("u") == F.col("id"))
+            .groupBy("v")
+            .agg(
+                F.min("cluster").alias("cluster"),
+                F.min(F.when(F.col("u") == F.col("v"), F.col("cluster"))).alias("old"),
             )
+            .localCheckpoint(eager=False)
         )
-        new_labels.persist()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.cluster") != F.col("o.cluster"))
-            .count()
-        )
-        labels.unpersist() if hasattr(labels, "unpersist") else None
-        labels = new_labels
+        changed = step.where(F.col("cluster") < F.col("old")).count()
+        labels = step.select(F.col("v").alias("id"), "cluster")
         if changed == 0:
             break
     return labels

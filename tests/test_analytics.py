@@ -1723,3 +1723,43 @@ def test_ttr_bounds_and_handcrafted(spark):
                    spark, "ignored").collect()}
     assert out[0] == (6, 3, 500)     # host 0: docs 0+97 pooled
     assert out[1] == (3, 3, 1000)
+
+
+# ---------------------------------------------------------------------------
+# two_tier_rank: exact ranks past 2^53, NULL values dropped
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("seed", [5, 29])
+def test_two_tier_rank_exact_past_2_53(spark, seed):
+    """Values span ~2^60, so (value - min) passes 2^53, where a double
+    quotient rounds; half of them sit one off a bucket boundary. The
+    rank must equal a Python sort on (value [DESC], id) either way."""
+    from ocr_spark.operators.analytics import two_tier_rank
+
+    rng = random.Random(seed)
+    lo, hi, n_buckets = -(1 << 59), 1 << 60, 16
+    width = (hi - lo) // n_buckets
+    vals = [lo, hi] + [rng.randrange(lo, hi) for _ in range(40)]
+    vals += [lo + k * width + d for k in range(1, n_buckets) for d in (-1, 0, 1)]
+    vals += vals[:6]  # ties, broken by id
+    rows = list(enumerate(vals))
+    df = spark.createDataFrame(rows, "id long, v long")
+    for desc in (False, True):
+        got = {
+            r.id: r.rank
+            for r in two_tier_rank(
+                df, "v", ["id"], desc=desc, n_buckets=n_buckets
+            ).collect()
+        }
+        order = sorted(rows, key=lambda r: ((-r[1] if desc else r[1]), r[0]))
+        assert got == {i: k + 1 for k, (i, _) in enumerate(order)}
+
+
+def test_two_tier_rank_drops_null_values(spark):
+    from ocr_spark.operators.analytics import two_tier_rank
+
+    df = spark.createDataFrame(
+        [(0, 30), (1, None), (2, 10), (3, 20), (4, None)], "id long, v long"
+    )
+    got = {r.id: r.rank for r in two_tier_rank(df, "v", ["id"]).collect()}
+    assert got == {2: 1, 3: 2, 0: 3}

@@ -8,6 +8,10 @@ agreement between approximate tiers and brute force.
 
 from __future__ import annotations
 
+import contextlib
+import random
+import signal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -191,6 +195,116 @@ def test_connected_components_chain_and_islands(spark):
     )
     out = {r.id: r.cluster for r in connected_components(edges).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+
+
+def _labels(df):
+    return {r.id: r.cluster for r in df.collect()}
+
+
+def test_connected_components_max_iter_truncates(spark):
+    """``max_iter`` caps the propagation rounds: after k rounds a node's
+    cluster is the least id within k edges, and 0 rounds leave every
+    node its own cluster."""
+    from ocr_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "doc_a long, doc_b long"
+    )
+    assert _labels(connected_components(edges, max_iter=3)) == {
+        i: max(0, i - 3) for i in range(10)
+    }
+    assert _labels(connected_components(edges, max_iter=0)) == {
+        i: i for i in range(10)
+    }
+
+
+def test_connected_components_duplicate_reversed_and_self_loop_edges(spark):
+    from ocr_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 3), (5, 4), (4, 5), (5, 5), (7, 6), (6, 6)],
+        "doc_a long, doc_b long",
+    )
+    assert _labels(connected_components(edges)) == {
+        1: 1, 2: 1, 3: 3, 4: 4, 5: 4, 6: 6, 7: 6,
+    }
+
+
+def test_connected_components_null_endpoint_is_no_node(spark):
+    from ocr_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, None), (None, 5), (5, 6)], "doc_a long, doc_b long"
+    )
+    assert _labels(connected_components(edges)) == {1: 1, 5: 5, 6: 5}
+
+
+def test_connected_components_empty_edges(spark):
+    from ocr_spark.operators.dedup import connected_components
+
+    out = connected_components(spark.createDataFrame([], "doc_a long, doc_b long"))
+    assert out.dtypes == [("id", "bigint"), ("cluster", "bigint")]
+    assert out.count() == 0
+
+
+@contextlib.contextmanager
+def _deadline(seconds):
+    """Raise TimeoutError in the main thread after ``seconds`` of wall
+    time, so a test whose cost grows without bound fails instead of
+    hanging the session."""
+
+    def fire(signum, frame):
+        raise TimeoutError(f"still running after {seconds} s")
+
+    prev = signal.signal(signal.SIGALRM, fire)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)
+
+
+def _union_find_min(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_long_chain_and_random_graphs(spark):
+    """Each round's plan must not grow with the rounds before it: a
+    24-edge chain needs 24 rounds, and with a plan that nests every
+    earlier round (a persisted frame joined back to its predecessor)
+    planning time doubles per round. Seeded random graphs with
+    duplicate, reversed and self-loop edges must give the clusters of
+    a union-find."""
+    from ocr_spark.operators.dedup import connected_components
+
+    chain = [(i, i + 1) for i in range(24)]
+    graphs = []
+    for seed in (3, 17, 41):
+        rng = random.Random(seed)
+        n = 60
+        base = seed * 1000
+        g = [(base + rng.randrange(n), base + rng.randrange(n)) for _ in range(50)]
+        g += [(b, a) for a, b in g[:5]] + g[5:10] + [(g[0][0],) * 2, (base + n,) * 2]
+        graphs += g
+    edges = spark.createDataFrame(chain + graphs, "doc_a long, doc_b long")
+    with _deadline(50):
+        got = _labels(connected_components(edges, max_iter=40))
+    assert {i: got[i] for i in range(25)} == {i: 0 for i in range(25)}
+    assert got == _union_find_min(chain + graphs)
 
 
 def test_cosine_neardup_candidate_volume_guard(spark):
