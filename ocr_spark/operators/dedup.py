@@ -25,10 +25,14 @@ Scale notes (10^12 docs)
   shaped (see minhash_lsh_pairs docstring for the measured
   projection-collapse blow-up that nested array HOFs cause).
 - MinHash/LSH shuffles only on uniformly-distributed hash keys (no
-  host skew survives hashing); the Jaccard inverted-index join uses
-  ppjoin prefix filtering (exact recall at the 0.5 threshold), and
-  hash-sorted prefixes decorrelate posting lists from shingle
-  frequency so no stop-shingle explodes.
+  host skew survives hashing). ``minhash_lsh_pairs`` shingles the
+  corpus once per query: one per-doc aggregate yields both the
+  signature and the shingle set, and both sides of the bucket
+  self-join read one (band, key) exchange, which Spark materializes
+  once and reuses (see its docstring). The Jaccard inverted-index
+  join uses ppjoin prefix filtering (exact recall at the 0.5
+  threshold), and hash-sorted prefixes decorrelate posting lists from
+  shingle frequency so no stop-shingle explodes.
 - The candidate self-joins emit (small_id, big_id) ordered pairs, so
   dedup of the pair space is a by-product of the join condition, not a
   distinct over the cross product.
@@ -151,32 +155,29 @@ def shingle_rows(
 ) -> DataFrame:
     """Distinct (id, h) shingle-hash rows, computed with zero HOFs.
 
-    posexplode tokens -> window lead(n-1) to form shingles -> codegen
-    md5 hash -> distinct. One shuffle (by id, uniform); every token is
-    split and hashed exactly once. This is the corpus-scale base for
-    minhash, LSH, and Jaccard verification.
+    split tokens -> zip the token array with its n-1 shifted slices ->
+    inline one (t0..t{n-1}) row per shingle start -> codegen md5 hash ->
+    distinct. One shuffle (by id, uniform); every token is split and
+    hashed exactly once. A shingle never spans two input rows, so rows
+    that share an id merge their shingle sets (a window over id would
+    interleave their tokens by position). This is the corpus-scale base
+    for minhash, LSH, and Jaccard verification.
     """
-    from pyspark.sql import Window
-
     # spread before the explode: a single-file corpus is ONE split, and
-    # everything upstream of the window's Exchange would run on one
-    # core. The window partitions by id, so pre-shuffling on id
-    # REPLACES that Exchange (no extra shuffle) and parallelizes the
-    # tokenize/explode too.
+    # the explode would run on one core. Shuffling on id also leaves
+    # the distinct below (and every per-id aggregate over it) with no
+    # exchange of its own.
     par = docs.sparkSession.sparkContext.defaultParallelism
     t = docs.repartition(par, F.col(id_col)).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(tokens(F.col(text_col))).alias("i", "tok"),
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t")
     )
-    w = Window.partitionBy("id").orderBy("i")
-    leads = [F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, n)]
+    # arrays_zip pads the shorter slices with NULL: the rows whose last
+    # token is NULL start fewer than n tokens from the end
+    shifted = [F.slice("t", j + 1, F.size("t")).alias(f"t{j}") for j in range(n)]
     sh = (
-        t.select("id", "i", "tok", *leads)
+        t.select("id", F.inline(F.arrays_zip(*shifted)))
         .where(F.col(f"t{n - 1}").isNotNull())
-        .select(
-            "id",
-            F.concat_ws(" ", "tok", *[f"t{j}" for j in range(1, n)]).alias("s"),
-        )
+        .select("id", F.concat_ws(" ", *[f"t{j}" for j in range(n)]).alias("s"))
     )
     return sh.select("id", fast_hash(F.col("s")).alias("h")).distinct()
 
@@ -227,6 +228,43 @@ def round_det(col: Column, digits: int) -> Column:
     return F.floor(col * p + F.lit(0.5)) / p
 
 
+def _minhash_sketch(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, s0..s15, hs) per doc: the MinHash minima and the sorted
+    shingle-hash set, both from ONE aggregate over shingle_rows.
+
+    shingle_rows is already partitioned by id, so the aggregate adds no
+    shuffle. Column pruning drops what a consumer does not read: the
+    band rows of the index keep only the minima, its sets only hs.
+    """
+    return (
+        shingle_rows(docs, id_col, text_col)
+        .groupBy("id")
+        .agg(
+            *[
+                F.min((F.lit(2 * j + 1) * F.col("h") + F.lit(7919 * j)) % F.lit(MOD))
+                .alias(f"s{j}")
+                for j in range(MINHASH_K)
+            ],
+            F.sort_array(F.collect_list("h")).alias("hs"),
+        )
+    )
+
+
+def _band_rows(sketch: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, band, key): one row per LSH band of each sketch, the key
+    the band's LSH_ROWS minima joined by ':'."""
+    keys = [
+        F.concat_ws(
+            ":",
+            *[F.col(f"s{b * LSH_ROWS + r}").cast("string") for r in range(LSH_ROWS)],
+        )
+        for b in range(LSH_BANDS)
+    ]
+    return sketch.select(*keep, F.posexplode(F.array(*keys)).alias("band", "key"))
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -235,9 +273,22 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified by exact Jaccard.
 
-    shingle -> hash -> explode -> K min-aggregates -> band buckets ->
-    bucket self-join -> exact-Jaccard verify. Returns
-    (doc_a, doc_b, jaccard).
+    shingle rows -> one per-doc aggregate (16 minima + sorted set hs)
+    -> (id, hs, band, key) rows -> ONE repartition on (band, key) ->
+    bucket self-join with a.id < b.id -> Jaccard of a.hs/b.hs on the
+    joined row -> threshold -> distinct (a pair sharing several bands
+    joins once per band). Returns (doc_a, doc_b, jaccard). NULL ids
+    join nothing; docs with fewer than 3 tokens have no shingles and so
+    no sketch; rows that share an id are one doc (their shingles merge).
+
+    WHY the explicit repartition: Spark reuses identical EXCHANGES, not
+    the subtree above them. Left to itself, AQE plans the small self-join
+    as a broadcast join, whose two sides are different exchanges, and
+    the shingle pipeline runs once per side. With both sides reading one
+    hash exchange on (band, key), that exchange is materialized once and
+    the second side reads it back as a reused stage. The set rides on
+    the band rows, so no verify join against a per-doc set table (the
+    third shingle pass) is needed either.
 
     WHY exploded aggregation, not array expressions: referencing an
     array column k times inside higher-order functions makes Catalyst's
@@ -249,29 +300,24 @@ def minhash_lsh_pairs(
     also the shape that scales: partial map-side mins, one shuffle by
     id, no skew (hash-distributed keys).
     """
-    buckets, sets = minhash_band_index(docs, id_col, text_col)
-    cand = (
-        buckets.alias("a")
+    sketch = _minhash_sketch(docs, id_col, text_col)
+    bands = _band_rows(sketch, "id", "hs").repartition("band", "key")
+    return (
+        bands.alias("a")
         .join(
-            buckets.alias("b"),
+            bands.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.id") < F.col("b.id")),
         )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
-    verified = (
-        cand.join(sets.alias("sa"), F.col("doc_a") == F.col("sa.id"))
-        .join(sets.alias("sb"), F.col("doc_b") == F.col("sb.id"))
         .select(
-            "doc_a",
-            "doc_b",
-            round_det(_jaccard(F.col("sa.hs"), F.col("sb.hs")), 4).alias("jaccard"),
+            F.col("a.id").alias("doc_a"),
+            F.col("b.id").alias("doc_b"),
+            round_det(_jaccard(F.col("a.hs"), F.col("b.hs")), 4).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
+        .distinct()
     )
-    return verified
 
 
 def minhash_band_index(
@@ -282,34 +328,11 @@ def minhash_band_index(
     bands: (id, band, key) bucket rows; sets: (id, hs) for exact
     verify. Both are plain tables — write them once per crawl snapshot
     and every future increment reuses them (incremental_minhash_pairs)
-    instead of re-hashing the history.
+    instead of re-hashing the history. Both come from the same per-doc
+    sketch as minhash_lsh_pairs.
     """
-    inv = shingle_rows(docs, id_col, text_col)
-    sig = inv.groupBy("id").agg(
-        *[
-            F.min((F.lit(2 * j + 1) * F.col("h") + F.lit(7919 * j)) % F.lit(MOD))
-            .alias(f"s{j}")
-            for j in range(MINHASH_K)
-        ]
-    )
-    bands = sig.select(
-        "id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        *[
-                            F.col(f"s{b * LSH_ROWS + r}").cast("string")
-                            for r in range(LSH_ROWS)
-                        ],
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("band", "key"),
-    )
-    return bands, shingle_sets(inv)
+    sketch = _minhash_sketch(docs, id_col, text_col)
+    return _band_rows(sketch, "id"), sketch.select("id", "hs")
 
 
 def incremental_minhash_pairs(

@@ -3075,7 +3075,7 @@ def doc_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 - distinct/total) and most-common-bigram mass fraction — the
     boilerplate/looping-text gates doc_gopher_filters lacks.
 
-    Shapes: the trigram side reuses shingle_rows' exploded window form
+    Shapes: the trigram side is an exploded lead-window form
     WITHOUT array_distinct (counts need duplicates); the bigram side is
     exploded rows -> two-level counts. Uniform doc_id/bigram keys,
     map-side partials, floor-form rounding both engines.

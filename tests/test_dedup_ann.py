@@ -9,6 +9,9 @@ agreement between approximate tiers and brute force.
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import itertools
+import math
 import random
 import signal
 
@@ -22,6 +25,10 @@ from ocr_spark.functions.text_analysis import (
 )
 from ocr_spark.operators.ann import ivf_topk, lsh_bucket_topk, sign_sketch
 from ocr_spark.operators.dedup import (
+    LSH_BANDS,
+    LSH_ROWS,
+    MINHASH_K,
+    MOD,
     cosine,
     cosine_neardup_pairs,
     jaccard_ngram_pairs,
@@ -54,6 +61,134 @@ def test_minhash_lsh_finds_near_pair(docs):
     assert (0, 1) in pairs
     assert pairs[(0, 1)] > 0.8
     assert all(2 not in p for p in pairs)
+
+
+def _fast_hash(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % MOD
+
+
+def _minhash_model(docs, threshold):
+    """Brute-force MinHash+LSH pairs in pure Python: per id the union of
+    its rows' word-trigram hashes, 16 minima of (2j+1)h + 7919j, 4
+    ``:``-joined band keys, candidates = pairs sharing a (band, key),
+    kept when floor(J*1e4 + 0.5)/1e4 >= threshold."""
+    sets = {}
+    for doc_id, text in docs:
+        w = text.split(" ")
+        sh = {_fast_hash(" ".join(w[i : i + 3])) for i in range(len(w) - 2)}
+        if doc_id is not None and sh:
+            sets.setdefault(doc_id, set()).update(sh)
+    keys = {}
+    for doc_id, hs in sets.items():
+        sig = [min(((2 * j + 1) * h + 7919 * j) % MOD for h in hs) for j in range(MINHASH_K)]
+        keys[doc_id] = {
+            (b, ":".join(str(s) for s in sig[b * LSH_ROWS : (b + 1) * LSH_ROWS]))
+            for b in range(LSH_BANDS)
+        }
+    shared = {
+        (a, b): len(keys[a] & keys[b])
+        for a, b in itertools.combinations(sorted(sets), 2)
+        if keys[a] & keys[b]
+    }
+    out = set()
+    for a, b in shared:
+        inter = len(sets[a] & sets[b])
+        j = math.floor(inter / (len(sets[a]) + len(sets[b]) - inter) * 1e4 + 0.5) / 1e4
+        if j >= threshold:
+            out.add((a, b, j))
+    return out, shared
+
+
+def _model_corpus(seed=7):
+    """Families of a 40-token base and variants with a growing share of
+    tokens replaced, so candidate Jaccards spread around 0.5; plus a NULL
+    id, a 2-token doc and an id whose two rows together hold a base."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    docs, next_id = [], 0
+    for _ in range(14):
+        base = [rng.choice(vocab) for _ in range(40)]
+        docs.append((next_id, " ".join(base)))
+        next_id += 1
+        for rate in (0.03, 0.06, 0.1, 0.15, 0.22):
+            var = [rng.choice(vocab) if rng.random() < rate else t for t in base]
+            docs.append((next_id, " ".join(var)))
+            next_id += 1
+    base = docs[0][1].split(" ")
+    docs += [
+        (None, docs[0][1]),
+        (next_id, "w1 w2"),
+        (next_id + 1, " ".join(base[:22])),
+        (next_id + 1, " ".join(base[18:])),
+    ]
+    return docs
+
+
+@pytest.mark.parametrize("threshold", [0.0, 0.5, 0.9])
+def test_minhash_lsh_pairs_match_brute_force_model(spark, threshold):
+    docs = _model_corpus()
+    want, shared = _minhash_model(docs, threshold)
+    # the corpus exercises what the model claims: a pair sharing several
+    # bands, candidates on both sides of 0.5, the merged repeated id
+    js = [j for *_, j in _minhash_model(docs, 0.0)[0]]
+    assert max(shared.values()) >= 2
+    assert min(js) < 0.5 <= max(js)
+    assert (0, docs[-1][0], 1.0) in want
+    rows = minhash_lsh_pairs(
+        spark.createDataFrame(docs, "doc_id long, text string"), threshold=threshold
+    ).collect()
+    got = [(r.doc_a, r.doc_b, r.jaccard) for r in rows]
+    assert len(got) == len(set(got))
+    assert set(got) == want, (set(got) ^ want)
+
+
+def _children(node):
+    """Children of a physical plan node, looking through AQE's query
+    stages and reused exchanges to the plan they stand for."""
+    name = node.getClass().getSimpleName()
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _join_sides(node):
+    """Yield the first non-wrapper node under each side of every join."""
+    wrappers = ("Exchange", "QueryStage", "AQEShuffleRead", "Project", "Filter", "Sort")
+    if "Join" in node.getClass().getSimpleName():
+        for side in _children(node):
+            while any(w in side.getClass().getSimpleName() for w in wrappers):
+                (side,) = _children(side)
+            yield side
+    for child in _children(node):
+        yield from _join_sides(child)
+
+
+def test_minhash_lsh_pairs_plan_runs_shingles_once(spark, tmp_path):
+    """Both self-join sides read ONE (band, key) exchange, which Spark
+    materializes once and reuses, so the shingle explode runs once per
+    query and no verify join reads a per-doc set aggregate."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(_model_corpus(), "doc_id long, text string").write.parquet(path)
+    df = minhash_lsh_pairs(spark.read.parquet(path))
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    final = adaptive.executedPlan()
+    plan = final.toString()
+    # token explodes over the docs' text (a posexplode of the split text
+    # or an inline of its zipped shifted slices): a second one would be a
+    # second shingle pass
+    explodes = [
+        ln for ln in plan.splitlines()
+        if "Generate posexplode(split(" in ln or "Generate inline(arrays_zip(" in ln
+    ]
+    assert len(explodes) == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    sides = [s.simpleString(100) for s in _join_sides(final)]
+    assert sides and not [s for s in sides if "collect_list" in s], plan
 
 
 def test_jaccard_ngram_exact_pair(docs):
