@@ -24,15 +24,20 @@ Scale notes (10^12 docs)
 - All pair-mining dataflows are EXPLODED-ROW + codegen-aggregate
   shaped (see minhash_lsh_pairs docstring for the measured
   projection-collapse blow-up that nested array HOFs cause).
+- Every set-similarity join reads ONE per-doc sketch
+  (``shingle_sketch``): a single aggregate over the shingle rows
+  yields the MinHash minima and the sorted shingle-hash set ``hs``.
+  LSH band keys come from the minima; a ppjoin prefix is a slice of
+  ``hs`` exploded into postings (no per-shingle rank window); every
+  verify reads ``hs`` from the same sketch (no second set aggregate).
 - MinHash/LSH shuffles only on uniformly-distributed hash keys (no
   host skew survives hashing). ``minhash_lsh_pairs`` shingles the
-  corpus once per query: one per-doc aggregate yields both the
-  signature and the shingle set, and both sides of the bucket
-  self-join read one (band, key) exchange, which Spark materializes
-  once and reuses (see its docstring). The Jaccard inverted-index
-  join uses ppjoin prefix filtering (exact recall at the 0.5
-  threshold), and hash-sorted prefixes decorrelate posting lists from
-  shingle frequency so no stop-shingle explodes.
+  corpus once per query: both sides of the bucket self-join read one
+  (band, key) exchange, which Spark materializes once and reuses (see
+  its docstring). The Jaccard inverted-index join uses ppjoin prefix
+  filtering (exact recall at thresholds >= 0.5), and hash-sorted
+  prefixes decorrelate posting lists from shingle frequency so no
+  stop-shingle explodes.
 - The candidate self-joins emit (small_id, big_id) ordered pairs, so
   dedup of the pair space is a by-product of the join condition, not a
   distinct over the cross product.
@@ -182,35 +187,6 @@ def shingle_rows(
     return sh.select("id", fast_hash(F.col("s")).alias("h")).distinct()
 
 
-def shingle_sets(inv: DataFrame) -> DataFrame:
-    """(id, hs sorted array) from shingle rows — the Jaccard-verify side."""
-    return inv.groupBy("id").agg(F.sort_array(F.collect_list("h")).alias("hs"))
-
-
-def minhash_signature(hashes: Column, k: int = MINHASH_K) -> Column:
-    """MinHash signature: array<long> of length k over a hash array."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda j: F.array_min(
-            F.transform(hashes, lambda h: ((2 * j + 1) * h + 7919 * j) % MOD)
-        ),
-    )
-
-
-def band_keys(sig: Column, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> Column:
-    """LSH band keys: array<string>, one joined key per band."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat_ws(
-            ":",
-            *[
-                F.element_at(sig, (b * rows + r + 1).cast("int")).cast("string")
-                for r in range(rows)
-            ],
-        ),
-    )
-
-
 def _jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     return inter / (F.size(a) + F.size(b) - F.size(F.array_intersect(a, b)))
@@ -228,15 +204,17 @@ def round_det(col: Column, digits: int) -> Column:
     return F.floor(col * p + F.lit(0.5)) / p
 
 
-def _minhash_sketch(
+def shingle_sketch(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, s0..s15, hs) per doc: the MinHash minima and the sorted
     shingle-hash set, both from ONE aggregate over shingle_rows.
 
-    shingle_rows is already partitioned by id, so the aggregate adds no
-    shuffle. Column pruning drops what a consumer does not read: the
-    band rows of the index keep only the minima, its sets only hs.
+    Every set-similarity join reads this sketch. shingle_rows is already
+    partitioned by id, so the aggregate adds no shuffle. Column pruning
+    drops what a consumer does not read: LSH band rows keep only the
+    minima, prefix postings and verify joins only hs. NULL ids keep a
+    sketch, but no id comparison ever matches them.
     """
     return (
         shingle_rows(docs, id_col, text_col)
@@ -249,6 +227,36 @@ def _minhash_sketch(
             ],
             F.sort_array(F.collect_list("h")).alias("hs"),
         )
+    )
+
+
+def _prefix_postings(sketch: DataFrame, num: int, den: int) -> DataFrame:
+    """(id, h) postings of each sketch's ppjoin prefix: the first
+    size(hs) * num div den + 1 hashes of hs, which is distinct and
+    sorted, so the prefix is taken in the global hash order."""
+    prefix = F.expr(f"slice(hs, 1, int(size(hs) * {num}L div {den}) + 1)")
+    return sketch.select("id", F.explode(prefix).alias("h"))
+
+
+def _posting_pairs(post: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, of the docs that share a
+    posting h: the candidates of an inverted-index self-join."""
+    return (
+        post.alias("a")
+        .join(
+            post.alias("b"),
+            (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _sketch_pairs(cand: DataFrame, sketch: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) joined to both docs' sketches,
+    readable as ``a.*`` and ``b.*``."""
+    return cand.join(sketch.alias("a"), F.col("doc_a") == F.col("a.id")).join(
+        sketch.alias("b"), F.col("doc_b") == F.col("b.id")
     )
 
 
@@ -300,7 +308,7 @@ def minhash_lsh_pairs(
     also the shape that scales: partial map-side mins, one shuffle by
     id, no skew (hash-distributed keys).
     """
-    sketch = _minhash_sketch(docs, id_col, text_col)
+    sketch = shingle_sketch(docs, id_col, text_col)
     bands = _band_rows(sketch, "id", "hs").repartition("band", "key")
     return (
         bands.alias("a")
@@ -323,7 +331,7 @@ def minhash_lsh_pairs(
 def minhash_band_index(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame]:
-    """The persistent LSH index of a corpus: (bands, shingle_sets).
+    """The persistent LSH index of a corpus: (bands, sets).
 
     bands: (id, band, key) bucket rows; sets: (id, hs) for exact
     verify. Both are plain tables — write them once per crawl snapshot
@@ -331,7 +339,7 @@ def minhash_band_index(
     instead of re-hashing the history. Both come from the same per-doc
     sketch as minhash_lsh_pairs.
     """
-    sketch = _minhash_sketch(docs, id_col, text_col)
+    sketch = shingle_sketch(docs, id_col, text_col)
     return _band_rows(sketch, "id"), sketch.select("id", "hs")
 
 
@@ -390,50 +398,29 @@ def jaccard_ngram_pairs(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram Jaccard dedup via a prefix-filtered inverted-index
-    join.
+    join. Returns (doc_a, doc_b, n_shared, jaccard) with doc_a < doc_b.
 
     Prefix filtering (the ppjoin bound): J(A,B) >= 0.5 implies
     |A∩B| >= |A|/2, so any qualifying pair shares an element within
     each side's first floor(n/2)+1 hashes in the global hash order.
-    Indexing only prefixes keeps exact recall at threshold 0.5 while
-    cutting the self-join's index (and its worst-case pair blow-up)
-    ~4x; hash order also decorrelates the prefix from shingle
-    frequency, so no stop-shingle ever dominates a posting list.
+    Indexing only prefixes keeps exact recall at thresholds >= 0.5
+    while cutting the self-join's index (and its worst-case pair
+    blow-up) ~4x; hash order also decorrelates the prefix from shingle
+    frequency, so no stop-shingle ever dominates a posting list. The
+    prefix is a slice of the sketch's sorted set, and the verify joins
+    read the same sketch.
     """
-    from pyspark.sql import Window
-
-    inv = shingle_rows(docs, id_col, text_col)
-    byid = Window.partitionBy("id")
-    pre = (
-        inv.select(
-            "id",
-            "h",
-            F.row_number().over(byid.orderBy("h")).alias("r"),
-            F.count(F.lit(1)).over(byid).alias("nsh"),
-        )
-        .where(F.col("r") <= F.floor(F.col("nsh") / 2) + 1)
-        .select("id", "h")
-    )
-    cand = (
-        pre.alias("a")
-        .join(
-            pre.alias("b"),
-            (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
-    sets = shingle_sets(inv)
+    sketch = shingle_sketch(docs, id_col, text_col)
+    cand = _posting_pairs(_prefix_postings(sketch, 1, 2))
     return (
-        cand.join(sets.alias("sa"), F.col("doc_a") == F.col("sa.id"))
-        .join(sets.alias("sb"), F.col("doc_b") == F.col("sb.id"))
+        _sketch_pairs(cand, sketch)
         .select(
             "doc_a",
             "doc_b",
-            F.size(F.array_intersect(F.col("sa.hs"), F.col("sb.hs")))
+            F.size(F.array_intersect(F.col("a.hs"), F.col("b.hs")))
             .cast("bigint")
             .alias("n_shared"),
-            round_det(_jaccard(F.col("sa.hs"), F.col("sb.hs")), 4).alias("jaccard"),
+            round_det(_jaccard(F.col("a.hs"), F.col("b.hs")), 4).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -1247,37 +1234,26 @@ def containment_pairs(
 
     Scale: posting lists are keyed by md5-ordered shingle hashes (no
     stop-shingle hot key on the prefix side); the full-index side is
-    the standard containment-join cost — cap df per shingle only if a
-    recall bound is acceptable. Verify joins fetch the two sorted
-    shingle arrays and intersect them in one codegen pass.
+    the standard containment-join cost. Both posting sides and both
+    verify joins read one per-doc sketch, and each verify intersects
+    the two sorted sets in one codegen pass.
     """
-    from pyspark.sql import Window
-
-    inv = shingle_rows(docs, id_col, text_col)
-    sets = shingle_sets(inv)
-    byid = Window.partitionBy("id").orderBy("h")
-    sized = inv.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("id")))
-    prefix_len = floor_div_expr(
-        (1000 - threshold_permille) * F.col("n"), F.lit(1000)
-    ) + 1
-    probe = sized.withColumn("r", F.row_number().over(byid)).where(
-        F.col("r") <= prefix_len
-    )
+    sketch = shingle_sketch(docs, id_col, text_col)
+    probe = _prefix_postings(sketch, 1000 - threshold_permille, 1000)
+    index = sketch.select(F.col("id").alias("doc_b"), F.explode("hs").alias("h"))
     cand = (
-        probe.select(F.col("id").alias("ida"), "h")
-        .join(inv.select(F.col("id").alias("idb"), "h"), "h")
-        .where(F.col("ida") != F.col("idb"))
-        .select("ida", "idb")
+        probe.select(F.col("id").alias("doc_a"), "h")
+        .join(index, "h")
+        .where(F.col("doc_a") != F.col("doc_b"))
+        .select("doc_a", "doc_b")
         .distinct()
     )
+    inter = F.size(F.array_intersect("a.hs", "b.hs")).cast("long")
     return (
-        cand.join(sets.select(F.col("id").alias("ida"), F.col("hs").alias("ha")), "ida")
-        .join(sets.select(F.col("id").alias("idb"), F.col("hs").alias("hb")), "idb")
+        _sketch_pairs(cand, sketch)
         .select(
-            F.col("ida").alias("doc_a"),
-            F.col("idb").alias("doc_b"),
-            F.size(F.array_intersect("ha", "hb")).cast("long").alias("inter"),
-            F.size("ha").cast("long").alias("n_a"),
+            "doc_a", "doc_b",
+            inter.alias("inter"), F.size("a.hs").cast("long").alias("n_a"),
         )
         .where(1000 * F.col("inter") >= threshold_permille * F.col("n_a"))
         .select(
@@ -1286,9 +1262,3 @@ def containment_pairs(
              / F.col("n_a")).cast("long").alias("containment_permille"),
         )
     )
-
-
-def floor_div_expr(num: Column, den: Column) -> Column:
-    """floor_div without the training-module import (positive operands
-    here, where truncation == floor on both engines)."""
-    return ((num - (num % den)) / den).cast("long")

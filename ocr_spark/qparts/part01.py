@@ -805,7 +805,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_jaccard_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard pairs via inverted-index join (df-capped)."""
+    """Exact 3-gram Jaccard pairs via a prefix-filtered inverted-index
+    join (exact recall at 0.5)."""
     from ocr_spark.operators.dedup import jaccard_ngram_pairs
 
     return jaccard_ngram_pairs(load_table(spark, sf_dir, "documents")).select(
@@ -6850,30 +6851,19 @@ def jaccard_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist as rows — worst case sum of df^2 over shingles, the standard
     similarity-join cost), then one exact verify per distinct pair;
     the oracle is the all-pairs form, DuckDB-only."""
-    from ocr_spark.operators.dedup import shingle_rows, shingle_sets
+    from ocr_spark.operators.dedup import (
+        _posting_pairs,
+        _sketch_pairs,
+        shingle_sketch,
+    )
     from ocr_spark.operators.training import floor_div
 
-    # shingle explode staged once (r5): it feeds the verify sets and
-    # both inverted-index join sides
-    inv = shingle_rows(load_table(spark, sf_dir, "documents")) \
-        .localCheckpoint(eager=False)
-    sets = shingle_sets(inv).localCheckpoint(eager=False)
-    cand = (
-        inv.select(F.col("id").alias("a"), "h")
-        .join(inv.select(F.col("id").alias("b"), "h"), "h")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    inter = F.size(F.array_intersect("ha", "hb")).cast("long")
-    uni = (F.size("ha") + F.size("hb")).cast("long") - inter
-    pairs = (
-        cand.join(sets.select(F.col("id").alias("a"), F.col("hs").alias("ha")), "a")
-        .join(sets.select(F.col("id").alias("b"), F.col("hs").alias("hb")), "b")
-        .select(
-            (floor_div(floor_div(100 * inter, uni), F.lit(5)) * 5)
-            .alias("bucket_pct")
-        )
+    sketch = shingle_sketch(load_table(spark, sf_dir, "documents"))
+    cand = _posting_pairs(sketch.select("id", F.explode("hs").alias("h")))
+    inter = F.size(F.array_intersect("a.hs", "b.hs")).cast("long")
+    uni = (F.size("a.hs") + F.size("b.hs")).cast("long") - inter
+    pairs = _sketch_pairs(cand, sketch).select(
+        (floor_div(floor_div(100 * inter, uni), F.lit(5)) * 5).alias("bucket_pct")
     )
     return pairs.groupBy("bucket_pct").agg(
         F.count(F.lit(1)).alias("n_pairs")
@@ -7481,70 +7471,30 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic given the permutation family). Shipped plan: prefix-
     filtered candidate join (exact recall at t=0.3 by the prefix
     lemma, prefix length floor(0.7*|A|)+1 on BOTH sides), signature
-    agreement as a bounded 16-element zip; the all-pairs form exists
-    only in the DuckDB oracle."""
-    from pyspark.sql import Window
-
+    agreement as 16 compares of the two sketches' minima; the all-pairs
+    form exists only in the DuckDB oracle."""
     from ocr_spark.operators.dedup import (
         MINHASH_K,
-        MOD,
-        shingle_rows,
-        shingle_sets,
+        _posting_pairs,
+        _prefix_postings,
+        _sketch_pairs,
+        shingle_sketch,
     )
     from ocr_spark.operators.training import floor_div
 
-    # the shingle explode is the corpus-scale pass and feeds SIX
-    # subtrees (sets x2, sig x2, prefix x2 across the join sides) —
-    # staged once (lazy localCheckpoint; r5: the un-staged plan
-    # carried six copies of the Scan+Generate subtree and executed
-    # them all); the derived tables are staged too so each aggregate/
-    # window over the staged rows also runs once, not per join side
-    inv = shingle_rows(load_table(spark, sf_dir, "documents"))
-    inv = inv.localCheckpoint(eager=False)
-    sets = shingle_sets(inv).localCheckpoint(eager=False)
-    sig = inv.groupBy("id").agg(
-        *[
-            F.min((F.lit(2 * j + 1) * F.col("h") + F.lit(7919 * j)) % F.lit(MOD))
-            .alias(f"s{j}")
-            for j in range(MINHASH_K)
-        ]
-    ).select(
-        "id", F.array(*[f"s{j}" for j in range(MINHASH_K)]).alias("sig")
-    ).localCheckpoint(eager=False)
-    byid = Window.partitionBy("id").orderBy("h")
-    n = F.count(F.lit(1)).over(Window.partitionBy("id"))
-    pre = (
-        inv.withColumn("n", n)
-        .withColumn("r", F.row_number().over(byid))
-        .where(
-            F.col("r")
-            <= floor_div(7 * F.col("n"), F.lit(10)) + 1
-        )
-        .localCheckpoint(eager=False)
+    sketch = shingle_sketch(load_table(spark, sf_dir, "documents"))
+    cand = _posting_pairs(_prefix_postings(sketch, 7, 10))
+    inter = F.size(F.array_intersect("a.hs", "b.hs")).cast("long")
+    uni = (F.size("a.hs") + F.size("b.hs")).cast("long") - inter
+    est = sum(
+        (F.col(f"a.s{j}") == F.col(f"b.s{j}")).cast("long") for j in range(MINHASH_K)
     )
-    cand = (
-        pre.select(F.col("id").alias("a"), "h")
-        .join(pre.select(F.col("id").alias("b"), "h"), "h")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    inter = F.size(F.array_intersect("ha", "hb")).cast("long")
-    uni = (F.size("ha") + F.size("hb")).cast("long") - inter
-    est = F.size(
-        F.filter(
-            F.zip_with("sa", "sb", lambda x, y: x == y), lambda v: v
-        )
-    ).cast("long")
     return (
-        cand.join(sets.select(F.col("id").alias("a"), F.col("hs").alias("ha")), "a")
-        .join(sets.select(F.col("id").alias("b"), F.col("hs").alias("hb")), "b")
+        _sketch_pairs(cand, sketch)
         .where(10 * inter >= 3 * uni)
-        .join(sig.select(F.col("id").alias("a"), F.col("sig").alias("sa")), "a")
-        .join(sig.select(F.col("id").alias("b"), F.col("sig").alias("sb")), "b")
         .select(
-            F.col("a").alias("doc_a"),
-            F.col("b").alias("doc_b"),
+            "doc_a",
+            "doc_b",
             floor_div(1000 * inter, uni).alias("jacc_permille"),
             est.alias("est_sixteenths"),
         )

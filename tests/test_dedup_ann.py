@@ -67,17 +67,31 @@ def _fast_hash(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % MOD
 
 
-def _minhash_model(docs, threshold):
-    """Brute-force MinHash+LSH pairs in pure Python: per id the union of
-    its rows' word-trigram hashes, 16 minima of (2j+1)h + 7919j, 4
-    ``:``-joined band keys, candidates = pairs sharing a (band, key),
-    kept when floor(J*1e4 + 0.5)/1e4 >= threshold."""
+def _model_sets(docs):
+    """Per id the union of its rows' word-trigram hashes; NULL ids and
+    docs with no trigram have no set."""
     sets = {}
     for doc_id, text in docs:
         w = text.split(" ")
         sh = {_fast_hash(" ".join(w[i : i + 3])) for i in range(len(w) - 2)}
         if doc_id is not None and sh:
             sets.setdefault(doc_id, set()).update(sh)
+    return sets
+
+
+def _model_jaccard(a, b):
+    """(|A∩B|, floor(J*1e4 + 0.5)/1e4): the shared count and round_det's
+    4-digit Jaccard."""
+    inter = len(a & b)
+    return inter, math.floor(inter / (len(a) + len(b) - inter) * 1e4 + 0.5) / 1e4
+
+
+def _minhash_model(docs, threshold):
+    """Brute-force MinHash+LSH pairs in pure Python: the model's sets,
+    16 minima of (2j+1)h + 7919j, 4 ``:``-joined band keys, candidates =
+    pairs sharing a (band, key), kept when the model's Jaccard >=
+    threshold."""
+    sets = _model_sets(docs)
     keys = {}
     for doc_id, hs in sets.items():
         sig = [min(((2 * j + 1) * h + 7919 * j) % MOD for h in hs) for j in range(MINHASH_K)]
@@ -92,8 +106,7 @@ def _minhash_model(docs, threshold):
     }
     out = set()
     for a, b in shared:
-        inter = len(sets[a] & sets[b])
-        j = math.floor(inter / (len(sets[a]) + len(sets[b]) - inter) * 1e4 + 0.5) / 1e4
+        _, j = _model_jaccard(sets[a], sets[b])
         if j >= threshold:
             out.add((a, b, j))
     return out, shared
@@ -198,6 +211,28 @@ def test_jaccard_ngram_exact_pair(docs):
     # BASE has 21 distinct shingles; only the final trigram differs, so
     # |A∩B| = 20 and |A∪B| = 22.
     assert r.jaccard == pytest.approx(20 / 22, abs=1e-4)
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.9])
+def test_jaccard_ngram_pairs_match_brute_force_model(spark, threshold):
+    """Every pair whose Jaccard reaches the threshold, from all pairs of
+    the model's sets: at thresholds >= 0.5 the floor(n/2)+1 prefix
+    bound loses none of them."""
+    docs = _model_corpus()
+    sets = _model_sets(docs)
+    want = set()
+    for a, b in itertools.combinations(sorted(sets), 2):
+        inter, j = _model_jaccard(sets[a], sets[b])
+        if j >= threshold:
+            want.add((a, b, inter, j))
+    # the repeated id's two rows merge into doc 0's set
+    assert (0, docs[-1][0], len(sets[0]), 1.0) in want
+    rows = jaccard_ngram_pairs(
+        spark.createDataFrame(docs, "doc_id long, text string"), threshold=threshold
+    ).collect()
+    got = [(r.doc_a, r.doc_b, r.n_shared, r.jaccard) for r in rows]
+    assert len(got) == len(set(got))
+    assert set(got) == want, (set(got) ^ want)
 
 
 def test_simhash_identical_and_near(spark, docs):

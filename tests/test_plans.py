@@ -357,8 +357,10 @@ def test_no_query_has_cartesian_product_or_global_window(registry_plans):
 
 def test_session5_heavy_ops_plan_hygiene(spark):
     """Session-5 pure-JVM operators: no python stage, no cartesian,
-    and the prefix-filtered containment join candidates come from a
-    hash equi-join on the shingle key."""
+    the prefix-filtered containment join candidates come from a hash
+    equi-join on the shingle key, and the prefix-filtered set joins
+    take their prefixes as slices of the per-doc sketch, not from a
+    per-shingle rank window."""
     from ocr_spark.queries import QUERIES
 
     for name in (
@@ -381,6 +383,10 @@ def test_session5_heavy_ops_plan_hygiene(spark):
     cont = _plan(QUERIES["containment_pairs"](spark, SF))
     assert "SortMergeJoin" in cont or "ShuffledHashJoin" in cont \
         or "BroadcastHashJoin" in cont
+    for name in (
+        "dedup_jaccard_ngram", "containment_pairs", "minhash_estimate_error"
+    ):
+        assert "Window" not in _plan(QUERIES[name](spark, SF)), name
 
 
 def test_kmeans_family_hash_aggregates_only(spark):

@@ -30,6 +30,7 @@ CRITICAL = [
     "temperature_resample_hosts",
     "quality_classifier_hashed",
     "dedup_minhash_lsh",
+    "dedup_jaccard_ngram",
     "doc_fingerprint",
     "doc_lang_id",
     "neardup_cosine",

@@ -264,8 +264,9 @@ COMMENTARY = {
     ),
     "containment_pairs": (
         "Asymmetric ppjoin: the probe side indexes only its first "
-        "floor(0.4*|A|)+1 hash-ordered shingles (exact recall at "
-        "t=0.6 by the prefix bound), the indexed side posts all; "
+        "floor(0.4*|A|)+1 hash-ordered shingles (a slice of the "
+        "per-doc sketch's sorted set; exact recall at t=0.6 by the "
+        "prefix bound), the indexed side posts all; "
         "candidates come from a hash equi-join on the shingle key — "
         "no cross product — and one array_intersect verify per "
         "distinct pair. Threshold compare is pure integer."
@@ -306,10 +307,11 @@ COMMENTARY = {
     ),
     "minhash_estimate_error": (
         "Sketch-QA: exact-Jaccard candidates from the prefix-filtered "
-        "inverted join (floor(0.7*|A|)+1 hash-ordered prefixes, exact "
-        "recall at t=0.3), then a bounded 16-element signature zip "
-        "per surviving pair. The all-pairs shape exists only in the "
-        "DuckDB oracle."
+        "inverted join (floor(0.7*|A|)+1 hash-ordered prefixes, slices "
+        "of the per-doc sketch's sorted set; exact recall at t=0.3), "
+        "then 16 minima compares per surviving pair, signature and set "
+        "both read from that one sketch. The all-pairs shape exists "
+        "only in the DuckDB oracle."
     ),
     "join_size_planner": (
         "Join cardinality BEFORE the join: two per-key count "
@@ -642,12 +644,6 @@ COMMENTARY = {
         "Per-host exact order statistics: row_number window "
         "PARTITIONED by host (bounded, uniform) + conditional "
         "aggregate — integer rank selection, no percentile_approx."
-    ),
-    "minhash_estimate_error": (
-        "Candidate pairs through the banded index; per-pair MinHash "
-        "estimate vs exact Jaccard both computed from the SAME "
-        "staged shingle table (scanned once via ExistingRDD), error "
-        "histogram is a tiny aggregate."
     ),
     "canonical_election": (
         "Trust join (host-keyed, broadcastable) + per-group argmax "
