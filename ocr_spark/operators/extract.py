@@ -177,6 +177,15 @@ def html_escape_expr(col: Column) -> Column:
     return F.regexp_replace(c, ">", "&gt;")
 
 
+def doc_url() -> Column:
+    """The corpus url of a `documents` row:
+    https://host{doc_id % 97}.example/d{doc_id}."""
+    return F.concat(
+        F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
+        F.lit(".example/d"), F.col("doc_id").cast("string"),
+    )
+
+
 def documents_as_pages(df: DataFrame) -> DataFrame:
     """Wrap the testdata `documents` table as a pages corpus, JVM-side.
 
@@ -189,10 +198,6 @@ def documents_as_pages(df: DataFrame) -> DataFrame:
     # page synthesis (uniform key — no skew)
     par = df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(par, "doc_id")
-    url = F.concat(
-        F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-        F.lit(".example/d"), F.col("doc_id").cast("string"),
-    )
     html = F.concat(
         F.lit(
             '<!DOCTYPE html><html><head><title>d</title><script>var x=1;</script></head>'
@@ -208,7 +213,7 @@ def documents_as_pages(df: DataFrame) -> DataFrame:
     ).cast("binary")
     return df.select(
         F.col("doc_id"),
-        url.alias("url"),
+        doc_url().alias("url"),
         html.alias("html"),
         F.col("lang"),
         F.col("text").alias("expected_text"),

@@ -3396,20 +3396,72 @@ def corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("mean_tok", F.col("mean_tok_x100") / 100).drop("mean_tok_x100")
 
 
-def _pagerank_oracle(iters: int = 3) -> str:
-    parts = [
-        "hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents)",
-        """edges AS (
+def _duck_host_graph(edges: str = "edges", ring: bool = False) -> str:
+    """The oracle side of _host_graph: the CTEs `hosts(h)` and
+    `{edges}(src, dst)`, with the +1/+2 ring peers when `ring`."""
+    peers = "(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97"
+    if ring:
+        peers += ",\n                          (h + 1) % 97, (h + 2) % 97"
+    return f"""hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents),
+    {edges} AS (
       SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97])
+        SELECT h, unnest([{peers}])
           AS dst
         FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h)""",
+      WHERE dst IN (SELECT h FROM hosts) AND dst <> h)"""
+
+
+def _host_graph(
+    spark: SparkSession, sf_dir: str, ring: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The synthesized host link graph every host-graph query reads:
+    hosts h = doc_id % 97, each linking to its affine peers 3h+1, 5h+2
+    and 7h+3 (mod 97), self-links and absent hosts dropped. `ring` adds
+    the h+1 and h+2 peers: the affine maps alone close no triangle.
+
+    Returns (hosts(h), edges(src, dst)), each staged once with a lazy
+    localCheckpoint: every caller reads them from several places (each
+    round, both sides of a self-join), and un-staged each reference
+    replanned the corpus scan and the distinct (16 to 156 scans per
+    plan, with no runtime reuse). Absent hosts drop through a left-semi
+    join (the oracle's `dst IN hosts`): its size estimate is the edge
+    candidates' (~12 KB at sf0.01), where an inner join's is the product
+    of both sides (~115 MB), which plans sort-merge joins on the edges."""
+    d = load_table(spark, sf_dir, "documents")
+    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct() \
+        .localCheckpoint(eager=False)
+    h = F.col("h")
+    peers = [(3 * h + 1) % 97, (5 * h + 2) % 97, (7 * h + 3) % 97]
+    if ring:
+        peers += [(h + 1) % 97, (h + 2) % 97]
+    cand = hosts.select("h", F.explode(F.array(*peers)).alias("dst")) \
+        .where(F.col("dst") != h).distinct()
+    edges = cand.join(
+        hosts.select(F.col("h").alias("dst")), "dst", "left_semi"
+    ).select(F.col("h").alias("src"), "dst").localCheckpoint(eager=False)
+    return hosts, edges
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Each undirected edge once as (a, b) with a < b, staged: the
+    triangle, k-core and link-prediction queries all read it from
+    several places."""
+    return edges.select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    ).distinct().localCheckpoint(eager=False)
+
+
+def _power_rank_oracle(seed: str, out: str) -> str:
+    """The oracle side of _power_rank: `seed` is a SQL predicate on h,
+    `out` the final select list over r3(h, r)."""
+    parts = [
+        _duck_host_graph(),
         "outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg"
         " FROM edges GROUP BY src)",
-        "r0 AS (SELECT h, CAST(1000000 AS BIGINT) AS r FROM hosts)",
+        f"r0 AS (SELECT h, CAST(CASE WHEN {seed} THEN 1000000 ELSE 0 END"
+        " AS BIGINT) AS r FROM hosts)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, 4):
         parts.append(
             f"""inflow{i} AS (
       SELECT e.dst AS h,
@@ -3421,62 +3473,36 @@ def _pagerank_oracle(iters: int = 3) -> str:
         )
         parts.append(
             f"""r{i} AS (
-      SELECT hosts.h,
-             150000 + CAST((COALESCE(s, 0) * 85
-                            - ((COALESCE(s, 0) * 85 % 100) + 100) % 100)
-                           // 100 AS BIGINT) AS r
-      FROM hosts LEFT JOIN inflow{i} ON hosts.h = inflow{i}.h)"""
+      SELECT h,
+             CASE WHEN {seed} THEN 150000 ELSE 0 END
+               + CAST((COALESCE(s, 0) * 85
+                       - ((COALESCE(s, 0) * 85 % 100) + 100) % 100)
+                      // 100 AS BIGINT) AS r
+      FROM hosts LEFT JOIN inflow{i} USING (h))"""
         )
-    return (
-        "WITH " + ",\n    ".join(parts)
-        + f"\n    SELECT h AS host, r AS rank FROM r{iters}"
-    )
+    return "WITH " + ",\n    ".join(parts) + f"\n    SELECT {out} FROM r3"
 
 
-@query("host_pagerank", _pagerank_oracle())
-def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-graph PageRank in integer micro-units — the authority
-    signal web curation mixes into quality scores. The link graph is
-    synthesized deterministically from the corpus's host space (each
-    host links to 3 affine-mapped peers); 3 power iterations with
-    damping 0.85, teleport 0.15.
+def _power_rank(hosts: DataFrame, edges: DataFrame, seed: Column) -> DataFrame:
+    """3 damped power iterations over the host graph in integer
+    micro-units, (h, r): start mass 1000000 and teleport 150000 on the
+    hosts where `seed` holds, damping 0.85. PageRank seeds every host;
+    TrustRank only the trusted ones.
 
     Bit-exact across engines by the same trick as quantized k-means:
-    ranks live in integer micro-units, every division is the explicit
-    floor form, so all sums commute — the only way a distributed
-    PageRank can be oracle-checked value-for-value.
-
-    Scale: edges shuffle on uniform dst keys with map-side partial
-    sums; ranks are one row per host (10^8 at web scale — a normal
-    shuffle join, or broadcast for small graphs). Iterations are a
-    fixed constant; each is one join + one aggregate.
-    """
+    every division is the explicit floor form, so all sums commute.
+    Each round is one join + one aggregate on uniform dst keys with
+    map-side partial sums; the out-degrees and each round's ranks are
+    staged, since ranks re-enter their own derivation."""
     from ocr_spark.operators.training import floor_div
 
-    d = load_table(spark, sf_dir, "documents")
-    # graph state staged once (r5): hosts/edges/outdeg feed every
-    # iteration, and ranks re-enters its own derivation — un-staged,
-    # the final plan embedded the corpus-distinct subtree per
-    # reference per round (16 scans; the pointer-jump replication
-    # class) with NO runtime exchange reuse
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct() \
-        .localCheckpoint(eager=False)
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    edges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst").localCheckpoint(eager=False)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg")) \
         .localCheckpoint(eager=False)
-    ranks = hosts.select("h", F.lit(1000000).cast("long").alias("r"))
+    teleport = F.when(seed, F.lit(150000)).otherwise(F.lit(0)).cast("long")
+    ranks = hosts.select(
+        "h", F.when(seed, F.lit(1000000)).otherwise(F.lit(0))
+        .cast("long").alias("r"),
+    )
     for _ in range(3):
         inflow = (
             edges.join(ranks.withColumnRenamed("h", "src"), "src")
@@ -3490,7 +3516,7 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "h",
                 (
-                    F.lit(150000).cast("long")
+                    teleport
                     + floor_div(
                         F.coalesce(F.col("s"), F.lit(0)) * 85, F.lit(100)
                     )
@@ -3498,6 +3524,21 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=False)
         )
+    return ranks
+
+
+@query("host_pagerank", _power_rank_oracle("TRUE", "h AS host, r AS rank"))
+def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host-graph PageRank in integer micro-units — the authority
+    signal web curation mixes into quality scores: _power_rank over
+    the synthesized host graph with every host seeded (teleport 0.15).
+
+    Scale: ranks are one row per host (10^8 at web scale — a normal
+    shuffle join, or broadcast for small graphs). Iterations are a
+    fixed constant; each is one join + one aggregate.
+    """
+    hosts, edges = _host_graph(spark, sf_dir)
+    ranks = _power_rank(hosts, edges, F.lit(True))
     return ranks.select(F.col("h").alias("host"), F.col("r").alias("rank"))
 
 
@@ -4638,10 +4679,7 @@ def outlink_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.crawl import outlink_edges
 
     d = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-        F.lit(".example/d"), F.col("doc_id").cast("string"),
-    )
+    url = doc_url()
     html = F.concat(
         F.lit('<nav><a href="/home">home</a>'
               '<a href="mailto:ops@example.com">mail</a></nav>'
@@ -4923,10 +4961,7 @@ def html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pages = d.select(
-        F.concat(
-            F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-            F.lit(".example/d"), F.col("doc_id").cast("string"),
-        ).alias("url"),
+        doc_url().alias("url"),
         F.concat(
             F.lit("<h1>doc</h1><table><tr><th>key</th><th>val</th></tr>"
                   "<tr><td>id</td><td>"),
@@ -5154,10 +5189,7 @@ def page_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.extract import page_metadata
 
     d = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-        F.lit(".example/d"), F.col("doc_id").cast("string"),
-    )
+    url = doc_url()
     i = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit("<head><title>Doc "), i, F.lit("</title>"),
@@ -5463,10 +5495,7 @@ def cocitation_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.crawl import cocitation_pairs, outlink_edges
 
     d = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-        F.lit(".example/d"), F.col("doc_id").cast("string"),
-    )
+    url = doc_url()
     html = F.concat(
         F.lit('<nav><a href="/home">home</a>'
               '<a href="mailto:ops@example.com">mail</a></nav>'
@@ -5511,10 +5540,7 @@ def recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     log = d.select(
-        F.concat(
-            F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-            F.lit(".example/d"), F.col("doc_id").cast("string"),
-        ).alias("url"),
+        doc_url().alias("url"),
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("fetch_idx"),
         "doc_id",
     ).select(
@@ -5529,115 +5555,24 @@ def recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recrawl_intervals(log)
 
 
-def _trustrank_oracle(iters: int = 3) -> str:
-    """_pagerank_oracle with the teleport mass restricted to a trusted
-    seed set (hosts with h % 7 == 0) — TrustRank (Gyöngyi et al.,
-    VLDB'04): authority flows outward from vetted seeds only, so spam
-    farms that manufacture in-links among themselves accumulate little
-    trust."""
-    parts = [
-        "hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents)",
-        """edges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h)""",
-        "outdeg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg"
-        " FROM edges GROUP BY src)",
-        "r0 AS (SELECT h, CAST(CASE WHEN h % 7 = 0 THEN 1000000 ELSE 0 END"
-        " AS BIGINT) AS r FROM hosts)",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""inflow{i} AS (
-      SELECT e.dst AS h,
-             CAST(SUM((p.r - ((p.r % o.deg) + o.deg) % o.deg) // o.deg)
-                  AS BIGINT) AS s
-      FROM edges e JOIN r{i - 1} p ON e.src = p.h
-           JOIN outdeg o ON e.src = o.src
-      GROUP BY e.dst)"""
-        )
-        parts.append(
-            f"""r{i} AS (
-      SELECT hosts.h,
-             CASE WHEN hosts.h % 7 = 0 THEN 150000 ELSE 0 END
-               + CAST((COALESCE(s, 0) * 85
-                       - ((COALESCE(s, 0) * 85 % 100) + 100) % 100)
-                      // 100 AS BIGINT) AS r
-      FROM hosts LEFT JOIN inflow{i} ON hosts.h = inflow{i}.h)"""
-        )
-    return (
-        "WITH " + ",\n    ".join(parts)
-        + f"""
-    SELECT h AS host,
-           CAST(CASE WHEN h % 7 = 0 THEN 1 ELSE 0 END AS BIGINT) AS trusted,
-           r AS trust
-    FROM r{iters}"""
-    )
-
-
-@query("trustrank_hosts", _trustrank_oracle())
+@query(
+    "trustrank_hosts",
+    _power_rank_oracle(
+        "h % 7 = 0",
+        "h AS host, CAST(CASE WHEN h % 7 = 0 THEN 1 ELSE 0 END AS BIGINT)"
+        " AS trusted, r AS trust",
+    ),
+)
 def trustrank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TrustRank (Gyöngyi et al., VLDB'04) over the synthesized host
-    graph: identical integer-micro-unit power iteration as
-    host_pagerank but with the teleport mass restricted to a trusted
-    seed set (h % 7 == 0) — link spam that only cross-links within
-    itself gets ~zero trust, the spam-demotion signal curation mixes
-    with raw PageRank. Same scale shape: uniform dst-key shuffles,
-    map-side partial sums, fixed iteration count."""
-    from ocr_spark.operators.training import floor_div
-
-    d = load_table(spark, sf_dir, "documents")
-    # staged once (r5): same iterative-replication class as
-    # host_pagerank — hosts/edges/outdeg feed every round, ranks
-    # re-enters its own derivation
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct() \
-        .localCheckpoint(eager=False)
-    trusted = (F.col("h") % 7 == 0)
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    edges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst").localCheckpoint(eager=False)
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg")) \
-        .localCheckpoint(eager=False)
-    ranks = hosts.select(
-        "h",
-        F.when(trusted, F.lit(1000000)).otherwise(F.lit(0))
-        .cast("long").alias("r"),
-    )
-    for _ in range(3):
-        inflow = (
-            edges.join(ranks.withColumnRenamed("h", "src"), "src")
-            .join(outdeg, "src")
-            .select("dst", floor_div(F.col("r"), F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            hosts.join(inflow.withColumnRenamed("dst", "h"), "h", "left")
-            .select(
-                "h",
-                (
-                    F.when(trusted, F.lit(150000)).otherwise(F.lit(0))
-                    .cast("long")
-                    + floor_div(
-                        F.coalesce(F.col("s"), F.lit(0)) * 85, F.lit(100)
-                    )
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
+    graph: host_pagerank's power iteration (_power_rank) with the
+    start and teleport mass restricted to a trusted seed set
+    (h % 7 == 0) — authority flows outward from vetted seeds only, so
+    link spam that only cross-links within itself gets ~zero trust,
+    the spam-demotion signal curation mixes with raw PageRank."""
+    trusted = F.col("h") % 7 == 0
+    hosts, edges = _host_graph(spark, sf_dir)
+    return _power_rank(hosts, edges, trusted).select(
         F.col("h").alias("host"),
         F.when(trusted, F.lit(1)).otherwise(F.lit(0))
         .cast("long").alias("trusted"),
@@ -5801,13 +5736,7 @@ def pca_doc_projections(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hits_oracle(iters: int = 2) -> str:
     parts = [
-        "hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents)",
-        """edges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h)""",
+        _duck_host_graph(),
         "hub0 AS (SELECT h, CAST(1000000 AS BIGINT) AS hub FROM hosts)",
     ]
     for i in range(1, iters + 1):
@@ -5863,25 +5792,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial sums; the norm is a 1-row broadcast."""
     from ocr_spark.operators.training import floor_div
 
-    d = load_table(spark, sf_dir, "documents")
-    # staged once (r5): the mutual hub/auth recursion otherwise
-    # embeds the corpus-distinct subtree EXPONENTIALLY (156 scans in
-    # the un-staged plan, zero runtime reuse)
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct() \
-        .localCheckpoint(eager=False)
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    edges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst").localCheckpoint(eager=False)
+    hosts, edges = _host_graph(spark, sf_dir)
 
     def _norm(raw: DataFrame, out: str) -> DataFrame:
         mm = raw.agg(
@@ -6563,13 +6474,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lp_oracle(iters: int = 3) -> str:
     parts = [
-        "hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents)",
-        """dedges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h)""",
+        _duck_host_graph("dedges"),
         # undirected: community structure ignores link direction
         """edges AS (
       SELECT DISTINCT src, dst FROM (
@@ -6612,27 +6517,11 @@ def host_communities_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     for mirror-farm / link-ring grouping where modularity solvers
     don't scale. Deterministic by construction, so the driver can
     hash-check communities. Plan per round: one (node, label) count
-    aggregate + one per-node argmax window — both on uniform host
-    keys; no iteration-growing shuffle width."""
-    d = load_table(spark, sf_dir, "documents")
-    # staged once (r5): edges feed every round and labels re-enter
-    # their own derivation — the iterative-replication class (36
-    # corpus scans in the un-staged plan)
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct() \
-        .localCheckpoint(eager=False)
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    dedges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst")
+    aggregate + one per-node argmax as one BIGINT max (_lp_round) —
+    both on uniform host keys; no iteration-growing shuffle width."""
+    hosts, dedges = _host_graph(spark, sf_dir)
+    # staged: the undirected edges feed every round, and each round's
+    # labels re-enter their own derivation
     edges = dedges.union(
         dedges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint(eager=False)
@@ -7154,14 +7043,8 @@ def postings_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "host_two_hop_reach",
-    """
-    WITH hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents),
-    edges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h),
+    f"""
+    WITH {_duck_host_graph()},
     two_hop AS (
       SELECT a.src, b.dst FROM edges a JOIN edges b ON a.dst = b.src
       WHERE b.dst <> a.src),
@@ -7178,22 +7061,8 @@ def host_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (uniform), a union-distinct, one count. At web scale the
     self-join is the standard triangle/path-join cost; df-cap hub
     mids if a recall-bounded estimate suffices."""
-    d = load_table(spark, sf_dir, "documents")
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct()
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    edges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst").localCheckpoint(eager=False)
-    # edges staged (r5): it feeds both self-join sides and the union
+    # edges are staged: they feed both self-join sides and the union
+    _, edges = _host_graph(spark, sf_dir)
     two_hop = (
         edges.alias("a")
         .join(
@@ -7262,15 +7131,8 @@ def interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "host_triangle_counts",
-    """
-    WITH hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents),
-    dedges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97,
-                          (h + 1) % 97, (h + 2) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h),
+    f"""
+    WITH {_duck_host_graph("dedges", ring=True)},
     und AS (
       SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
       FROM dedges),
@@ -7312,29 +7174,11 @@ def host_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. (The pure affine-map graph is triangle-free, so the edge
     synthesis here adds the +1/+2 ring edges, giving every host a
     guaranteed local triangle plus affine chords.)"""
-    d = load_table(spark, sf_dir, "documents")
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct()
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-                (F.col("h") + 1) % 97,
-                (F.col("h") + 2) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    dedges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst")
     # staged (r5): und feeds deg + ori; ori feeds the wedge self-join
     # (both sides) + the closing set; tri fans into three unions — the
     # un-staged plan carried 90 corpus scans with zero runtime reuse
-    und = dedges.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().localCheckpoint(eager=False)
+    _, dedges = _host_graph(spark, sf_dir, ring=True)
+    und = _undirected(dedges)
     deg = (
         und.select(F.col("a").alias("v"))
         .union(und.select(F.col("b").alias("v")))
@@ -7503,14 +7347,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kcore_oracle(k: int = 3, rounds: int = 3) -> str:
     parts = [
-        "hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents)",
-        """dedges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97,
-                          (h + 1) % 97, (h + 2) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h)""",
+        _duck_host_graph("dedges", ring=True),
         """e0 AS (
       SELECT DISTINCT a, b FROM (
         SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM dedges))""",
@@ -7551,31 +7388,13 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone superset of the true core; R rounds = R joins, no
     unbounded fixpoint loop — the batch-friendly contract). Per round:
     one degree aggregate + two semi-joins, all uniform host keys."""
-    d = load_table(spark, sf_dir, "documents")
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct()
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-                (F.col("h") + 1) % 97,
-                (F.col("h") + 2) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    dedges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst")
+    hosts, dedges = _host_graph(spark, sf_dir, ring=True)
     # staged per round (r5): edges re-enters its own peeling
     # derivation (degree + two semi-joins reference it per round) —
     # the un-staged plan carried 101 corpus scans with zero runtime
     # reuse; staged, each round is one degree agg + two semi-joins
     # over the previous round's materialized edge set
-    edges = dedges.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().localCheckpoint(eager=False)
+    edges = _undirected(dedges)
     live = hosts
     for _ in range(3):
         deg = (
@@ -7858,7 +7677,7 @@ def postings_compression_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
     "canonical_election",
     f"""
     WITH trust AS (
-      SELECT host, trust FROM ({_trustrank_oracle()})),
+      SELECT host, trust FROM ({ORACLE["trustrank_hosts"]})),
     grp AS (
       SELECT a.doc_id, a.doc_id - a.doc_id % 3 AS group_id,
              a.doc_id % 97 AS host
@@ -7912,14 +7731,8 @@ def canonical_election(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "link_prediction_pairs",
-    """
-    WITH hosts AS (SELECT DISTINCT doc_id % 97 AS h FROM documents),
-    dedges AS (
-      SELECT DISTINCT h AS src, dst FROM (
-        SELECT h, unnest([(3*h + 1) % 97, (5*h + 2) % 97, (7*h + 3) % 97])
-          AS dst
-        FROM hosts)
-      WHERE dst IN (SELECT h FROM hosts) AND dst <> h),
+    f"""
+    WITH {_duck_host_graph("dedges")},
     und AS (
       SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
       FROM dedges),
@@ -7961,27 +7774,11 @@ def link_prediction_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer. The common-neighbor join is wedge-shaped (same cost class
     as triangle counting); pair labels/negatives are corpus-free
     arithmetic."""
-    d = load_table(spark, sf_dir, "documents")
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct().localCheckpoint(eager=False)
-    cand = hosts.select(
-        "h",
-        F.explode(
-            F.array(
-                (3 * F.col("h") + 1) % 97,
-                (5 * F.col("h") + 2) % 97,
-                (7 * F.col("h") + 3) % 97,
-            )
-        ).alias("dst"),
-    ).where(F.col("dst") != F.col("h")).distinct()
-    dedges = cand.join(
-        hosts.select(F.col("h").alias("dst")), "dst"
-    ).select(F.col("h").alias("src"), "dst")
+    hosts, dedges = _host_graph(spark, sf_dir)
     # staged (r5): und feeds sym (x2), negs' anti-join, and lab; sym
     # feeds deg + both wedge sides; lab feeds cn + the output — the
     # un-staged plan carried 28 corpus scans with zero runtime reuse
-    und = dedges.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().localCheckpoint(eager=False)
+    und = _undirected(dedges)
     sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint(eager=False)
@@ -8074,10 +7871,7 @@ def url_front_coding_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.training import floor_div
 
     d = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://host"), (F.col("doc_id") % 97).cast("string"),
-        F.lit(".example/d"), F.col("doc_id").cast("string"),
-    )
+    url = doc_url()
     shard = F.concat(F.lit("host"), (F.col("doc_id") % 97).cast("string"))
     w = Window.partitionBy("shard").orderBy("url")
     ordered = d.select(url.alias("url"), shard.alias("shard")).select(

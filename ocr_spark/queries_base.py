@@ -20,7 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.extract import documents_as_pages, with_main_text
+from ocr_spark.operators.extract import doc_url, documents_as_pages, with_main_text
 from ocr_spark.sources.tables import load_table as _load_table_impl
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

@@ -82,7 +82,8 @@ COMMENTARY = {
     ),
     "kmeans_embedding_clusters": (
         "Per round: broadcast centroids (k rows), integer-fold "
-        "distances, min-struct argmin groupBy; recenter is exploded "
+        "distances, argmin as ONE BIGINT min (dist << cbits | cluster); "
+        "recenter is exploded "
         "(cluster, dim) partial sums — map-side combine, uniform tiny "
         "keyspace. No corpus-global sort, no float aggregation."
     ),
@@ -122,11 +123,6 @@ COMMENTARY = {
         "Map-only fan-out: exploded integer range + single-reference "
         "array slice; zero Exchanges — chunk rows inherit the scan "
         "partitioning."
-    ),
-    "global_rank_doc_length": (
-        "Exact global rank with NO one-partition sort: bucket counts "
-        "-> running offsets over the tiny aggregate -> bucket-"
-        "partitioned row_number + offset."
     ),
     "semdedup_pairs": (
         "K-means assignment bounds candidates to within-cluster pairs "
@@ -169,13 +165,6 @@ COMMENTARY = {
         "One groupBy(host) with map-side partial counts; Wilson bound "
         "computed with correctly-rounded ops in pinned association — "
         "bit-exact without rounding, no window/join/python."
-    ),
-    "rendezvous_sharding": (
-        "Constant 16-row node fan-out per doc, codegen md5 weights, "
-        "BOTH assignments (full and drop-node) from one groupBy via "
-        "two single-BIGINT max aggregates ((w+1)*16 + node — hash-"
-        "aggregatable; the max_by struct form planned SortAggregate) "
-        "— no window sort, no self-join."
     ),
     "snapshot_delta": (
         "Both snapshots reduce to (url, md5) before the full-outer "
@@ -281,29 +270,10 @@ COMMENTARY = {
     ),
     "host_communities_lp": (
         "Sync label propagation: per round one (node, label) count "
-        "aggregate + one min-struct argmax — both partial-aggregated "
-        "on uniform host keys; undirected edges built once. No "
-        "iteration-growing state, no window sort."
-    ),
-    "ngram_novelty": (
-        "First-occurrence ownership: shingle rows -> min(doc_id) per "
-        "hash (uniform md5 keys, map-side partials) -> join back -> "
-        "per-doc counters. The dedup-signal query with NO pair "
-        "enumeration at all — cost is linear in shingle rows."
-    ),
-    "feature_hash_embeddings": (
-        "Model-free doc vectors in one explode + one (doc, dim) "
-        "partial-aggregated sum — sign-hash contributions are "
-        "integers, so any partitioning gives identical vectors; the "
-        "cheapest embedding surface for clustering/dedup at corpus "
-        "scale."
-    ),
-    "host_triangle_counts": (
-        "Degree-orientation triangles (Suri-Vassilvitskii): wedges "
-        "built only at each edge's LOW (degree, id) endpoint, closed "
-        "by a left-semi join against the oriented edge set — hub "
-        "vertices contribute O(d_low^2) wedges, never O(d^2), and "
-        "each triangle is counted exactly once."
+        "aggregate + one argmax as ONE BIGINT max (c*128 + 127 - lbl) "
+        "— both partial-aggregated on uniform host keys; undirected "
+        "edges built once from the shared host graph, each round "
+        "staged. No iteration-growing state, no window sort."
     ),
     "minhash_estimate_error": (
         "Sketch-QA: exact-Jaccard candidates from the prefix-filtered "
@@ -312,18 +282,6 @@ COMMENTARY = {
         "then 16 minima compares per surviving pair, signature and set "
         "both read from that one sketch. The all-pairs shape exists "
         "only in the DuckDB oracle."
-    ),
-    "join_size_planner": (
-        "Join cardinality BEFORE the join: two per-key count "
-        "aggregates joined key-to-key (key-cardinality-sized rows), "
-        "sum of count products = exact |A JOIN B|; top-k skew keys "
-        "from the same product table. No corpus-width shuffle."
-    ),
-    "consistent_hash_rebalance": (
-        "HRW vs mod rebalance: a constant 20-row node fan-out per "
-        "doc, two max_by aggregates (no window sort), one diff count "
-        "— quantifies that adding 4 nodes moves ~4/20 of docs under "
-        "rendezvous hashing vs ~all under mod."
     ),
     "cdc_crawl_reuse": (
         "Increment-vs-history chunk reuse: history is touched only "
@@ -366,11 +324,6 @@ COMMENTARY = {
         "BroadcastHashJoin on host + column-pattern regexp_like; "
         "most-specific-match precedence as a single-BIGINT argmax — "
         "HashAggregate with map-side combine, never a string max_by."
-    ),
-    "bitext_mine_pairs": (
-        "Candidates from the exact-recall pivot-banded cosine join; "
-        "per-source best match as max over ONE BIGINT encoding "
-        "(cos DESC, id ASC) — one hash-agg shuffle on the source id."
     ),
     "pipeline_crawl_gate": (
         "Composed canonicalize -> surt -> dedup -> revalidate: two "
@@ -467,21 +420,6 @@ COMMENTARY = {
         "ride single-row cross joins. The lift arithmetic divides the "
         "marginals in BEFORE multiplying counts — the naive numerator "
         "overflowed BIGINT on the 50k smoke track (ANSI threw, loudly)."
-    ),
-    "doc_rare_term_pick": (
-        "tf-idf argmax via the anchor_text_consensus discipline: tf/df/"
-        "per-doc max are HashAggregates; the STRING winner comes from an "
-        "ALIASED equi-join back on (doc_id, score) — a same-lineage join "
-        "on bare columns had its doc_id predicate collapsed to TRUE by "
-        "the analyzer (caught via the trivially-true warning) — and the "
-        "only SortAggregate is MIN(term) over join-reduced tie rows."
-    ),
-    "graph_two_hop_reach": (
-        "Friend-of-friend census: DISTINCT edge dedup (hash) -> one "
-        "equi-join on the mid node -> COUNT(DISTINCT) two-level partial "
-        "aggregate. Edge endpoints decorrelate through a div term (the "
-        "host_link_reciprocity lesson: affine maps of one variable "
-        "collapse the graph to orbits)."
     ),
     "event_funnel_conversion": (
         "Ordered funnel: three per-user HashAggregates chained by "
