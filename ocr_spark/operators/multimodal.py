@@ -24,19 +24,26 @@ subsampling on read), and WAV/PCM audio decode (stdlib ``wave``,
 8/16-bit, any channel count) with integer band features — all public
 specs needing no external codec.
 
-What's STUBBED (the sandbox has no compressed-media codecs):
+What's STUBBED (decodes that need a compressed-media codec library):
 compressed audio (mp3/ogg/flac) and non-huffman JPEG (arithmetic/
 12-bit/hierarchical) raise with the production call or offending
-marker named; a clearly-marked deterministic fake (``fake_audio_features``)
-exists so downstream plumbing is testable without payloads. The
-Spark-side contract (schema, partitioning, UDF signature, batch
-iteration) is identical either way.
+marker named. Their containers still yield metadata (ID3, FLAC
+STREAMINFO, Ogg id headers, ISO-BMFF boxes) without a decode.
+
+Every extractor is a parse function behind one Arrow-batched stage,
+``_payload_rows``: parse maps one payload's bytes to the extractor's
+output rows, and ``_payload_rows`` owns the batch loop, the key column
+and the output frame. ``with_phash`` keeps its own pass-through stage
+because it appends a column to the input rows.
 """
 
 from __future__ import annotations
 
+import io
 import struct
-from typing import Iterator
+import wave
+import zipfile
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -52,7 +59,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_spark.kernels import pnm, scale
+from ocr_spark.kernels import bmp, gif, ico, jpeg, png, pnm, scale
+# aliased: the EXIF code below names its TIFF byte buffers `tiff`
+from ocr_spark.kernels import tiff as _tiff
+from ocr_spark.kernels.util import rgb_mean_gray
 
 MEDIA_META = StructType(
     [
@@ -107,8 +117,6 @@ def decode_image(payload: bytes, kind: str) -> np.ndarray:
         # [-alphapam]` pipes (image.c:265-296). Alpha is dropped here
         # (features read luminance); use png.to_planar for the full
         # planar dict with alpha in chan[0].
-        from ocr_spark.kernels import png
-
         d = png.to_planar(png.decode(payload), png.sniff_color_type(payload))
         if d["chan"][2] is None:
             return d["chan"][1]
@@ -119,10 +127,6 @@ def decode_image(payload: bytes, kind: str) -> np.ndarray:
         # `jpegtopnm` pipes (image.c:265,280). Arithmetic/12-bit/
         # hierarchical streams raise with the marker named; a
         # production build would route those through Pillow.
-        from ocr_spark.kernels import jpeg
-
-        from ocr_spark.kernels.util import rgb_mean_gray
-
         px = jpeg.decode(payload).astype(np.float32)
         if px.ndim == 2:
             return px
@@ -132,18 +136,11 @@ def decode_image(payload: bytes, kind: str) -> np.ndarray:
         # LZW, interlace, transparency; kernels/bmp.py: BI_RGB
         # 8/24/32-bit). Both return (H,W,3) uint8 RGB; luminance is the
         # same 3-channel mean as the PNG/JPEG paths.
-        from ocr_spark.kernels import bmp as _bmp
-        from ocr_spark.kernels import gif as _gif
-        from ocr_spark.kernels.util import rgb_mean_gray
-
-        return rgb_mean_gray((_gif if kind == "gif" else _bmp).decode(payload))
+        return rgb_mean_gray((gif if kind == "gif" else bmp).decode(payload))
     if kind == "tiff":
         # real decode: TIFF 6.0 baseline (kernels/tiff.py: both byte
         # orders, strips, PackBits, gray/RGB/palette). Gray comes back
         # (H,W) u8; RGB/palette collapse via the shared 3-channel mean.
-        from ocr_spark.kernels import tiff as _tiff
-        from ocr_spark.kernels.util import rgb_mean_gray
-
         px = _tiff.decode(payload)
         if px.ndim == 2:
             return px.astype(np.float32)
@@ -161,9 +158,6 @@ def decode_audio(payload: bytes, kind: str) -> tuple[np.ndarray, int]:
     stubbed with the production call named.
     """
     if kind == "wav":
-        import io
-        import wave
-
         if payload[:4] != b"RIFF":
             raise ValueError("wav: bad RIFF magic")
         with wave.open(io.BytesIO(payload)) as w:
@@ -186,9 +180,6 @@ def decode_audio(payload: bytes, kind: str) -> tuple[np.ndarray, int]:
 
 def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
     """16-bit PCM WAV from (n,) or (n, channels) int16 (stdlib wave)."""
-    import io
-    import wave
-
     a = np.asarray(samples, dtype="<i2")
     if a.ndim == 1:
         a = a[:, None]
@@ -201,20 +192,57 @@ def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
     return buf.getvalue()
 
 
-def fake_audio_features(payload: bytes, n_bands: int = 8) -> np.ndarray:
-    """DETERMINISTIC FAKE (clearly marked): stands in for a mel-band
-    energy extractor so downstream plumbing is testable without codecs.
-    Derives pseudo-energies from byte statistics of the payload."""
-    a = np.frombuffer(payload, dtype=np.uint8)
-    pad = (-len(a)) % n_bands
-    if pad:
-        a = np.concatenate([a, np.zeros(pad, dtype=np.uint8)])
-    return a.reshape(n_bands, -1).mean(axis=1).astype(np.float64)
+# ---------------------------------------------------------------------------
+# Spark stages: one Arrow-batched payload stage, one parse per extractor
+# ---------------------------------------------------------------------------
+
+def _payload_rows(
+    df: DataFrame,
+    schema: StructType,
+    parse: Callable[..., Iterable[tuple]],
+    payload_col: str = "media",
+    *extra: str,
+) -> DataFrame:
+    """The Arrow-batched Python stage behind every payload extractor.
+
+    Each output row is ``(key, *fields)``. The key is ``schema``'s first
+    field, read from the input column of the same name; ``fields`` come
+    from ``parse(payload, *extra_values)``, where the payload arrives
+    from Arrow as ``bytes`` (None when NULL) and the extra values are
+    the row's ``extra`` columns. An empty result drops the input row,
+    several fan it out in order — inside the batch, so the plan gains
+    no explode or shuffle.
+    """
+    key = schema.fields[0].name
+    columns = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (k, *fields)
+                for k, payload, *vals in zip(
+                    pdf[key], pdf[payload_col], *(pdf[c] for c in extra)
+                )
+                for fields in parse(payload, *vals)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(run, schema)
 
 
-# ---------------------------------------------------------------------------
-# Spark stages (mapInPandas; Arrow-batched; schema declared up front)
-# ---------------------------------------------------------------------------
+def _dict_rows(
+    parse: Callable[[bytes], dict | None], schema: StructType
+) -> Callable[[bytes], list[tuple]]:
+    """Adapt a parser that returns a {field: value} dict, or None for
+    no row, to ``_payload_rows``: the dict's values in schema order."""
+    names = [f.name for f in schema.fields[1:]]
+
+    def rows(buf: bytes) -> list[tuple]:
+        m = parse(buf)
+        return [] if m is None else [tuple(m[n] for n in names)]
+
+    return rows
+
 
 IMAGE_FEATURES_SCHEMA = StructType(
     [
@@ -229,51 +257,25 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
-def image_features(
-    df: DataFrame, payload_col: str = "media", permissive: bool = True
-) -> DataFrame:
-    """Decode PNM payloads and emit per-image features.
+def image_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
+    """Decode image payloads (the row's ``kind`` picks the decoder, see
+    decode_image) and emit per-image features; pixel math is numpy.
 
-    Batch shape: each pandas batch holds <= session Arrow-row-cap rows;
-    the loop is over images in the batch (table rows), all pixel math
-    vectorized — the 'no per-row Python' contract refers to table rows
-    staying on the Arrow path, which they do.
-
-    permissive=True: corrupt payloads yield NULL features + an error
+    A payload that does not decode yields NULL features and an error
     string (dead-letter channel) instead of failing the stage.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, payload, kind in zip(
-                pdf["url"], pdf[payload_col], pdf["kind"]
-            ):
-                try:
-                    img = decode_image(bytes(payload), kind)
-                    rows.append(
-                        (
-                            url,
-                            img.shape[1],
-                            img.shape[0],
-                            float(img.mean()),
-                            float(img.std()),
-                            float((img < 128).mean()),
-                            None,
-                        )
-                    )
-                except Exception as exc:  # noqa: BLE001 — dead-letter
-                    if not permissive:
-                        raise
-                    rows.append(
-                        (url, None, None, None, None, None,
-                         f"{type(exc).__name__}: {exc}"[:200])
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            )
+    def parse(buf: bytes, kind: str) -> list[tuple]:
+        try:
+            img = decode_image(buf, kind)
+        except Exception as exc:  # noqa: BLE001 — dead-letter
+            return [(None,) * 5 + (f"{type(exc).__name__}: {exc}"[:200],)]
+        return [(img.shape[1], img.shape[0], float(img.mean()),
+                 float(img.std()), float((img < 128).mean()), None)]
 
-    return df.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    return _payload_rows(
+        df, IMAGE_FEATURES_SCHEMA, parse, payload_col, "kind"
+    )
 
 
 RESIZED_SCHEMA = StructType(
@@ -294,22 +296,12 @@ def resize_images(
     factor: 'half' (scale.c:108-113) or 'double' (scale.c:272-323).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                img = pnm.decode_gray(bytes(payload))
-                out = (
-                    scale.half(img) if factor == "half" else scale.double(img, 0.5)
-                )
-                rows.append(
-                    (url, pnm.encode_gray(out), out.shape[1], out.shape[0])
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
+    def parse(buf: bytes) -> list[tuple]:
+        img = pnm.decode_gray(buf)
+        out = scale.half(img) if factor == "half" else scale.double(img, 0.5)
+        return [(pnm.encode_gray(out), out.shape[1], out.shape[0])]
 
-    return df.mapInPandas(run, RESIZED_SCHEMA)
+    return _payload_rows(df, RESIZED_SCHEMA, parse, payload_col)
 
 
 FRAMES_SCHEMA = StructType(
@@ -335,31 +327,19 @@ def sample_frames(
     long video cannot pin a partition.
     """
 
-    def frames_of(payload: bytes) -> list[bytes]:
-        if payload[:4] == _OCRV_MAGIC:
-            return decode_ocrv(payload)
-        if payload[:4] == b"GIF8":
-            from ocr_spark.kernels import gif as _gif
-            from ocr_spark.kernels.util import rgb_mean_gray
-
-            return [
+    def parse(buf: bytes) -> list[tuple]:
+        if buf[:4] == _OCRV_MAGIC:
+            frames = decode_ocrv(buf)
+        elif buf[:4] == b"GIF8":
+            frames = [
                 pnm.encode_gray(rgb_mean_gray(fr["palette"][fr["indices"]]))
-                for fr in _gif.decode_frames(payload)
+                for fr in gif.decode_frames(buf)
             ]
-        raise ValueError("sample_frames: not an OCRV or GIF container")
+        else:
+            raise ValueError("sample_frames: not an OCRV or GIF container")
+        return [(i, fb) for i, fb in enumerate(frames) if i % every_k == 0]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                for i, fb in enumerate(frames_of(bytes(payload))):
-                    if i % every_k == 0:
-                        rows.append((url, i, fb))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAMES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, FRAMES_SCHEMA)
+    return _payload_rows(df, FRAMES_SCHEMA, parse, payload_col)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -371,34 +351,19 @@ AUDIO_FEATURES_SCHEMA = StructType(
 )
 
 
-def audio_features(
-    df: DataFrame, payload_col: str = "media", use_fake: bool = True
-) -> DataFrame:
-    """Per-band energies; STUB path (deterministic fake) by default.
+def audio_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
+    """Per-band energies of 8/16-bit PCM WAV payloads (stdlib
+    ``wave``): the mean |amplitude| of channel 0 over 8 contiguous
+    time bands."""
 
-    use_fake=False decodes REAL 8/16-bit PCM WAV payloads (stdlib
-    ``wave``) and emits per-band mean |amplitude| over 8 contiguous
-    time bands of channel 0 — the Spark-side contract is identical on
-    both paths.
-    """
+    def parse(buf: bytes) -> list[tuple]:
+        samples, _ = decode_audio(buf, "wav")
+        feats = wav_band_abs_sums(samples) / np.maximum(
+            1, _band_lengths(samples.shape[0])
+        )
+        return [(i, float(v)) for i, v in enumerate(feats)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if use_fake:
-                    feats = fake_audio_features(bytes(payload))
-                else:
-                    samples, _ = decode_audio(bytes(payload), "wav")
-                    feats = wav_band_abs_sums(samples) / np.maximum(
-                        1, _band_lengths(samples.shape[0])
-                    )
-                rows.extend((url, i, float(v)) for i, v in enumerate(feats))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+    return _payload_rows(df, AUDIO_FEATURES_SCHEMA, parse, payload_col)
 
 
 def media_corpus(spark, n: int, seed: int = 42) -> DataFrame:
@@ -406,7 +371,7 @@ def media_corpus(spark, n: int, seed: int = 42) -> DataFrame:
     baseline-JPEG, GIF and BMP images, OCRV fake videos, and WAV clips
     keyed by url, with typed metadata — one row per kind the engine
     decodes."""
-    from ocr_spark.kernels import bmp, fixtures, gif, jpeg, png, tiff
+    from ocr_spark.kernels import fixtures
 
     rows = []
     for i in range(n):
@@ -462,7 +427,7 @@ def media_corpus(spark, n: int, seed: int = 42) -> DataFrame:
             u8 = np.clip(fixtures.shaded(h, w, seed, i), 0, 255).astype(
                 np.uint8
             )
-            payload = tiff.encode(
+            payload = _tiff.encode(
                 u8,
                 byte_order=("<" if (i // 9) % 2 == 0 else ">"),
                 compression=(1 if (i // 18) % 2 == 0 else 32773),
@@ -602,8 +567,6 @@ def synth_png_corpus(n: int = 20) -> list[dict]:
     decoded array (``px``, always (H,W,C)) is known BY CONSTRUCTION —
     the oracle never runs the decoder.
     """
-    from ocr_spark.kernels import png
-
     out = []
     for i in range(n):
         ct = (0, 2, 3, 4, 6)[i % 5]
@@ -644,35 +607,17 @@ PNG_FEATURES_SCHEMA = StructType(
 
 
 def png_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Decode PNG payloads (stdlib+numpy) and emit integer features.
-
-    Arrow-batched mapInPandas: the loop is over images in a batch;
-    pixel math is numpy. Same stage shape as image_features, so the
+    """Decode PNG payloads (stdlib+numpy) and emit integer features;
+    pixel math is numpy. Same payload stage as image_features, so the
     real-codec path and the PNM path share plumbing.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import png
+    def parse(buf: bytes) -> list[tuple]:
+        px = png.decode(buf)
+        ct = int(png.sniff_color_type(buf))
+        return [(ct, px.shape[1], px.shape[0], int(px.sum()))]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                buf = bytes(payload)
-                px = png.decode(buf)
-                rows.append(
-                    (
-                        int(img_id),
-                        int(png.sniff_color_type(buf)),
-                        px.shape[1],
-                        px.shape[0],
-                        int(px.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNG_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, PNG_FEATURES_SCHEMA)
+    return _payload_rows(df, PNG_FEATURES_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -745,24 +690,16 @@ WAV_FEATURES_SCHEMA = StructType(
 
 def wav_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Decode WAV payloads (stdlib) -> one row per (clip, band) with
-    the integer |amplitude| sum. Arrow-batched mapInPandas, same stage
-    shape as png_features/image_features."""
+    the integer |amplitude| sum."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for clip_id, payload in zip(pdf["clip_id"], pdf[payload_col]):
-                samples, rate = decode_audio(bytes(payload), "wav")
-                sums = wav_band_abs_sums(samples)
-                rows.extend(
-                    (int(clip_id), int(rate), samples.shape[1], b, int(s))
-                    for b, s in enumerate(sums)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAV_FEATURES_SCHEMA.fields]
-            )
+    def parse(buf: bytes) -> list[tuple]:
+        samples, rate = decode_audio(buf, "wav")
+        return [
+            (int(rate), samples.shape[1], b, int(s))
+            for b, s in enumerate(wav_band_abs_sums(samples))
+        ]
 
-    return df.mapInPandas(run, WAV_FEATURES_SCHEMA)
+    return _payload_rows(df, WAV_FEATURES_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -785,9 +722,7 @@ def synth_jpeg_corpus(n: int = 12, quality: int = 90) -> list[dict]:
     identical either way, so the same closed-form oracle covers the
     multi-scan successive-approximation decode path too.
     """
-    from ocr_spark.kernels import jpeg as J
-
-    q0 = int(J._quality_scale(J.QUANT_LUMA, quality)[0])
+    q0 = int(jpeg._quality_scale(jpeg.QUANT_LUMA, quality)[0])
 
     def closed(v: int) -> int:
         qd = float(np.round(8.0 * (v - 128.0) / q0)) * q0
@@ -808,9 +743,9 @@ def synth_jpeg_corpus(n: int = 12, quality: int = 90) -> list[dict]:
         vals = np.vectorize(safe)(vals)
         img = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
         if i % 3 == 1:
-            payload = J.encode_progressive(img, quality)
+            payload = jpeg.encode_progressive(img, quality)
         else:
-            payload = J.encode(
+            payload = jpeg.encode(
                 img, quality, restart_interval=2 if i % 4 == 0 else 0
             )
         px = np.repeat(
@@ -820,37 +755,26 @@ def synth_jpeg_corpus(n: int = 12, quality: int = 90) -> list[dict]:
     return out
 
 
+JPEG_FEATURES_SCHEMA = StructType(
+    [
+        StructField("img_id", IntegerType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        # LongType for the same int64-wrap reason as PNG_FEATURES_SCHEMA
+        StructField("px_sum", LongType()),
+    ]
+)
+
+
 def jpeg_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Decode baseline JPEG payloads -> integer features (same stage
-    shape as png_features; Arrow-batched mapInPandas)."""
+    """Decode baseline JPEG payloads -> integer features (same payload
+    stage as png_features)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import jpeg as J
+    def parse(buf: bytes) -> list[tuple]:
+        px = jpeg.decode(buf)
+        return [(px.shape[1], px.shape[0], int(px.sum()))]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                px = J.decode(bytes(payload))
-                rows.append(
-                    (int(img_id), px.shape[1], px.shape[0], int(px.sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["img_id", "width", "height", "px_sum"]
-            )
-
-    from pyspark.sql.types import StructType as _St
-
-    schema = _St(
-        [
-            StructField("img_id", IntegerType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            # LongType for the same int64-wrap reason as
-            # PNG_FEATURES_SCHEMA (ADVICE r3)
-            StructField("px_sum", LongType()),
-        ]
-    )
-    return df.mapInPandas(run, schema)
+    return _payload_rows(df, JPEG_FEATURES_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -866,8 +790,6 @@ def synth_gif_corpus(n: int = 16) -> list[dict]:
     image blocks with placement). Pixels come from an integer
     recurrence, so the expected composited RGB array (``px``, (H,W,3))
     is known BY CONSTRUCTION — the oracle never runs the decoder."""
-    from ocr_spark.kernels import gif
-
     out = []
     for i in range(n):
         n_pal = (4, 8, 37, 256)[i % 4]
@@ -914,8 +836,6 @@ def synth_bmp_corpus(n: int = 12) -> list[dict]:
     24-bit BGR / 32-bit BGRX) and row order (bottom-up / top-down),
     with widths chosen to hit every 4-byte row-padding residue.
     Expected RGB pixels are known by construction."""
-    from ocr_spark.kernels import bmp
-
     out = []
     for i in range(n):
         h, w = 5 + i % 4, 4 + i % 5  # w*3 % 4 covers all pad residues
@@ -949,8 +869,6 @@ def synth_tiff_corpus(n: int = 18) -> list[dict]:
     leave a short last strip. Pixels come from an integer recurrence,
     so the expected array (``px``: (H,W) gray or (H,W,3) RGB) is known
     BY CONSTRUCTION — the oracle never runs the decoder."""
-    from ocr_spark.kernels import tiff
-
     out = []
     for i in range(n):
         h, w = 6 + i % 5, 5 + i % 4
@@ -962,7 +880,7 @@ def synth_tiff_corpus(n: int = 18) -> list[dict]:
             px = (
                 (np.arange(h * w * 3, dtype=np.int64) * 41 + i * 13) % 256
             ).astype(np.uint8).reshape(h, w, 3)
-            payload = tiff.encode(
+            payload = _tiff.encode(
                 px, byte_order=bo, compression=comp, rows_per_strip=rps
             )
             depth = 24
@@ -974,7 +892,7 @@ def synth_tiff_corpus(n: int = 18) -> list[dict]:
             pal = (
                 (np.arange(n_pal * 3, dtype=np.int64) * 37 + i) % 256
             ).astype(np.uint8).reshape(n_pal, 3)
-            payload = tiff.encode(
+            payload = _tiff.encode(
                 idx,
                 byte_order=bo,
                 compression=comp,
@@ -987,7 +905,7 @@ def synth_tiff_corpus(n: int = 18) -> list[dict]:
             px = (
                 (np.arange(h * w, dtype=np.int64) * 23 + i * 3) % 256
             ).astype(np.uint8).reshape(h, w)
-            payload = tiff.encode(
+            payload = _tiff.encode(
                 px,
                 byte_order=bo,
                 compression=comp,
@@ -1016,34 +934,16 @@ GIF_FEATURES_SCHEMA = StructType(
 def gif_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Decode GIF payloads (kernels/gif.py) and emit integer features:
     frame count plus dimensions and pixel sum of the first frame
-    composited onto the logical screen. Same Arrow-batched mapInPandas
-    stage shape as png_features."""
+    composited onto the logical screen."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import gif
+    def parse(buf: bytes) -> list[tuple]:
+        # one container parse: decode_frames runs the LZW once; the
+        # first-frame composite reuses the decoded list
+        frames = gif.decode_frames(buf)
+        px = gif.composite_first(frames)
+        return [(len(frames), px.shape[1], px.shape[0], int(px.sum()))]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                # one container parse: decode_frames runs the LZW once;
-                # the first-frame composite reuses the decoded list
-                frames = gif.decode_frames(bytes(payload))
-                px = gif.composite_first(frames)
-                n_frames = len(frames)
-                rows.append(
-                    (
-                        int(img_id),
-                        n_frames,
-                        px.shape[1],
-                        px.shape[0],
-                        int(px.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GIF_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, GIF_FEATURES_SCHEMA)
+    return _payload_rows(df, GIF_FEATURES_SCHEMA, parse, payload_col)
 
 
 BMP_FEATURES_SCHEMA = StructType(
@@ -1059,21 +959,11 @@ BMP_FEATURES_SCHEMA = StructType(
 def bmp_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Decode BMP payloads (kernels/bmp.py) and emit integer features."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import bmp
+    def parse(buf: bytes) -> list[tuple]:
+        px = bmp.decode(buf)
+        return [(px.shape[1], px.shape[0], int(px.sum()))]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                px = bmp.decode(bytes(payload))
-                rows.append(
-                    (int(img_id), px.shape[1], px.shape[0], int(px.sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in BMP_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, BMP_FEATURES_SCHEMA)
+    return _payload_rows(df, BMP_FEATURES_SCHEMA, parse, payload_col)
 
 
 TIFF_FEATURES_SCHEMA = StructType(
@@ -1090,30 +980,14 @@ TIFF_FEATURES_SCHEMA = StructType(
 def tiff_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Decode TIFF payloads (kernels/tiff.py) and emit integer
     features; n_channels distinguishes the gray (1) and RGB/palette
-    (3) decode contracts. Same Arrow-batched mapInPandas stage shape
-    as png_features."""
+    (3) decode contracts."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import tiff
+    def parse(buf: bytes) -> list[tuple]:
+        px = _tiff.decode(buf)
+        n_channels = 1 if px.ndim == 2 else px.shape[2]
+        return [(px.shape[1], px.shape[0], n_channels, int(px.sum()))]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                px = tiff.decode(bytes(payload))
-                rows.append(
-                    (
-                        int(img_id),
-                        px.shape[1],
-                        px.shape[0],
-                        1 if px.ndim == 2 else px.shape[2],
-                        int(px.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TIFF_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, TIFF_FEATURES_SCHEMA)
+    return _payload_rows(df, TIFF_FEATURES_SCHEMA, parse, payload_col)
 
 
 def synth_ico_corpus(n: int = 10) -> list[dict]:
@@ -1122,8 +996,6 @@ def synth_ico_corpus(n: int = 10) -> list[dict]:
     paletted DIB), each DIB carrying a deterministic AND transparency
     mask. Expected per-entry RGB pixels and mask popcounts are known
     BY CONSTRUCTION — the oracle never runs the decoder."""
-    from ocr_spark.kernels import ico
-
     out = []
     for i in range(n):
         k = 1 + i % 3
@@ -1192,36 +1064,19 @@ ICO_FEATURES_SCHEMA = StructType(
 def ico_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Decode ICO containers (kernels/ico.py) and emit one row per
     directory entry: payload kind (png/bmp), decoded dimensions, the
-    RGB pixel sum, and the AND-mask popcount. Same Arrow-batched
-    mapInPandas stage shape as bmp_features — the container fan-out
+    RGB pixel sum, and the AND-mask popcount. The container fan-out
     (1 input row -> n_entries output rows) happens inside the batch,
     so no explode/shuffle is added to the plan."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import ico
+    def parse(buf: bytes) -> list[tuple]:
+        entries = ico.decode(buf)
+        return [
+            (j, len(entries), e["fmt"], e["px"].shape[1], e["px"].shape[0],
+             int(e["px"].sum()), int(e["and_bits"]))
+            for j, e in enumerate(entries)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                entries = ico.decode(bytes(payload))
-                for j, e in enumerate(entries):
-                    rows.append(
-                        (
-                            int(img_id),
-                            j,
-                            len(entries),
-                            e["fmt"],
-                            e["px"].shape[1],
-                            e["px"].shape[0],
-                            int(e["px"].sum()),
-                            int(e["and_bits"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ICO_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, ICO_FEATURES_SCHEMA)
+    return _payload_rows(df, ICO_FEATURES_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1352,8 +1207,6 @@ def synth_exif_corpus(n: int = 12) -> list[dict]:
     byte order (II/MM), cycling all 8 orientations and varying
     Make/DateTime/pixel-dimension fields. Expected fields are known BY
     CONSTRUCTION — the oracle never runs the parser."""
-    from ocr_spark.kernels import jpeg
-
     out = []
     for i in range(n):
         h, w = 16 + (i % 3) * 8, 16 + (i % 2) * 8
@@ -1397,31 +1250,12 @@ EXIF_FEATURES_SCHEMA = StructType(
 
 def exif_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Parse EXIF APP1 metadata out of JPEG payloads (parse_exif) and
-    emit one row per image that carries it. Same Arrow-batched
-    mapInPandas stage shape as the other codec feature extractors;
-    EXIF-free JPEGs drop inside the batch (no separate filter
-    stage)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                meta = parse_exif(bytes(payload))
-                if meta is None:
-                    continue
-                rows.append(
-                    (
-                        int(img_id), meta["byte_order"],
-                        meta["orientation"], meta["make"],
-                        meta["datetime"], meta["exif_w"],
-                        meta["exif_h"], meta["n_ifd0_entries"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EXIF_FEATURES_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, EXIF_FEATURES_SCHEMA)
+    emit one row per image that carries it; EXIF-free JPEGs drop
+    inside the batch (no separate filter stage)."""
+    return _payload_rows(
+        df, EXIF_FEATURES_SCHEMA,
+        _dict_rows(parse_exif, EXIF_FEATURES_SCHEMA), payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1435,8 +1269,6 @@ def synth_png_meta_corpus(n: int = 12) -> list[dict]:
     uncompressed iTXt with language tag on odd ids, and a pHYs
     physical-dimensions chunk on every third id. Expected (kind,
     keyword, value) rows are known BY CONSTRUCTION."""
-    from ocr_spark.kernels import png
-
     out = []
     for i in range(n):
         h, w = 5 + i % 3, 4 + i % 2
@@ -1482,46 +1314,36 @@ def png_meta_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     walk from offset 8) — no pixel decode, so metadata extraction at
     corpus scale never pays the unfilter cost."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                buf = bytes(payload)
-                pos, k = 8, 0
-                while pos + 8 <= len(buf):
-                    ln = int.from_bytes(buf[pos:pos + 4], "big")
-                    tag = buf[pos + 4:pos + 8]
-                    data = buf[pos + 8:pos + 8 + ln]
-                    if tag == b"tEXt":
-                        kw, _, val = data.partition(b"\x00")
-                        rows.append((int(img_id), k, "tEXt",
-                                     kw.decode("latin-1"),
-                                     val.decode("latin-1")))
-                        k += 1
-                    elif tag == b"iTXt":
-                        kw, _, rest = data.partition(b"\x00")
-                        # comp flag + comp method, then lang\0trans\0text
-                        if len(rest) >= 2 and rest[0] == 0:
-                            rest = rest[2:]
-                            _lang, _, rest = rest.partition(b"\x00")
-                            _trans, _, text = rest.partition(b"\x00")
-                            rows.append((int(img_id), k, "iTXt",
-                                         kw.decode("latin-1"),
-                                         text.decode("utf-8")))
-                            k += 1
-                    elif tag == b"pHYs" and ln == 9:
-                        x, y, unit = struct.unpack(">IIB", data)
-                        rows.append((int(img_id), k, "pHYs", "",
-                                     f"{x}:{y}:{unit}"))
-                        k += 1
-                    if tag == b"IEND":
-                        break
-                    pos += 12 + ln
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNG_META_SCHEMA.fields]
-            )
+    def parse(buf: bytes) -> list[tuple]:
+        chunks, pos = [], 8
+        while pos + 8 <= len(buf):
+            ln = int.from_bytes(buf[pos:pos + 4], "big")
+            tag = buf[pos + 4:pos + 8]
+            data = buf[pos + 8:pos + 8 + ln]
+            if tag == b"tEXt":
+                kw, _, val = data.partition(b"\x00")
+                chunks.append(
+                    ("tEXt", kw.decode("latin-1"), val.decode("latin-1"))
+                )
+            elif tag == b"iTXt":
+                kw, _, rest = data.partition(b"\x00")
+                # comp flag + comp method, then lang\0trans\0text
+                if len(rest) >= 2 and rest[0] == 0:
+                    rest = rest[2:]
+                    _lang, _, rest = rest.partition(b"\x00")
+                    _trans, _, text = rest.partition(b"\x00")
+                    chunks.append(
+                        ("iTXt", kw.decode("latin-1"), text.decode("utf-8"))
+                    )
+            elif tag == b"pHYs" and ln == 9:
+                x, y, unit = struct.unpack(">IIB", data)
+                chunks.append(("pHYs", "", f"{x}:{y}:{unit}"))
+            if tag == b"IEND":
+                break
+            pos += 12 + ln
+        return [(k, *c) for k, c in enumerate(chunks)]
 
-    return df.mapInPandas(run, PNG_META_SCHEMA)
+    return _payload_rows(df, PNG_META_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1535,8 +1357,6 @@ def synth_gif_anim_corpus(n: int = 10) -> list[dict]:
     NETSCAPE loop counts, plus a timing-free static GIF every fifth
     id. Expected frame counts / delays / loop counts are known BY
     CONSTRUCTION — the oracle never runs the decoder."""
-    from ocr_spark.kernels import gif
-
     out = []
     for i in range(n):
         n_frames = 1 + i % 4
@@ -1591,31 +1411,16 @@ def gif_anim_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     """Decode GIF frame timing (kernels/gif.py decode_frames) and emit
     per-image animation features: frame count, NETSCAPE loop count
     (-1 when the extension is absent, i.e. a static GIF), and the
-    delay sum/min/max in centiseconds. Same Arrow-batched mapInPandas
-    stage shape as the other codec extractors."""
+    delay sum/min/max in centiseconds."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels import gif
+    def parse(buf: bytes) -> list[tuple]:
+        frames = gif.decode_frames(buf)
+        delays = [f["delay_cs"] for f in frames]
+        loop = frames[0].get("loop_count")
+        return [(len(frames), -1 if loop is None else int(loop),
+                 int(sum(delays)), int(min(delays)), int(max(delays)))]
 
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                frames = gif.decode_frames(bytes(payload))
-                delays = [f["delay_cs"] for f in frames]
-                loop = frames[0].get("loop_count")
-                rows.append(
-                    (
-                        int(img_id), len(frames),
-                        -1 if loop is None else int(loop),
-                        int(sum(delays)), int(min(delays)),
-                        int(max(delays)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GIF_ANIM_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, GIF_ANIM_SCHEMA)
+    return _payload_rows(df, GIF_ANIM_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1682,30 +1487,20 @@ def wav_silence_segments(
     any DSP dependency. One row per run in clip order; vectorized
     numpy run-length inside the Arrow batch."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for clip_id, payload in zip(pdf["clip_id"], pdf[payload_col]):
-                samples, _rate = decode_audio(bytes(payload), "wav")
-                x = samples[:, 0].astype(np.int64)
-                quiet = np.abs(x) <= threshold
-                # run boundaries where the quiet flag changes
-                change = np.flatnonzero(np.diff(quiet)) + 1
-                starts = np.concatenate(([0], change))
-                ends = np.concatenate((change, [len(x)]))
-                for j, (s, e) in enumerate(zip(starts, ends)):
-                    rows.append(
-                        (
-                            int(clip_id), j,
-                            "silence" if quiet[s] else "tone",
-                            int(s), int(e - s),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAV_SILENCE_SCHEMA.fields]
-            )
+    def parse(buf: bytes) -> list[tuple]:
+        samples, _rate = decode_audio(buf, "wav")
+        x = samples[:, 0].astype(np.int64)
+        quiet = np.abs(x) <= threshold
+        # run boundaries where the quiet flag changes
+        change = np.flatnonzero(np.diff(quiet)) + 1
+        starts = np.concatenate(([0], change))
+        ends = np.concatenate((change, [len(x)]))
+        return [
+            (j, "silence" if quiet[s] else "tone", int(s), int(e - s))
+            for j, (s, e) in enumerate(zip(starts, ends))
+        ]
 
-    return df.mapInPandas(run, WAV_SILENCE_SCHEMA)
+    return _payload_rows(df, WAV_SILENCE_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1754,15 +1549,13 @@ def estimate_jpeg_quality(buf: bytes) -> dict | None:
     jcparam.c scaling produces from the Annex K base table. Exact
     when the encoder used standard tables (err == 0); otherwise the
     nearest candidate with is_standard = 0."""
-    from ocr_spark.kernels import jpeg as J
-
     tables = parse_jpeg_dqt(buf)
     luma = next((t for tid, t in tables if tid == 0), None)
     if luma is None:
         return None
     best_q, best_err = 1, None
     for q in range(1, 101):
-        cand = J._quality_scale(J.QUANT_LUMA, q)[J.ZIGZAG]
+        cand = jpeg._quality_scale(jpeg.QUANT_LUMA, q)[jpeg.ZIGZAG]
         err = int(np.abs(cand - luma).sum())
         if best_err is None or err < best_err:
             best_q, best_err = q, err
@@ -1788,27 +1581,11 @@ def jpeg_quality_features(
 ) -> DataFrame:
     """Per-image quality-factor estimate from DQT alone — compression
     provenance (a 95 re-saved at 70 keeps 70's tables) without any
-    entropy decode. Same mapInPandas stage shape as the other codec
-    extractors."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                est = estimate_jpeg_quality(bytes(payload))
-                if est is None:
-                    continue
-                rows.append(
-                    (
-                        int(img_id), est["quality_est"],
-                        est["n_tables"], est["is_standard"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_QUALITY_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, JPEG_QUALITY_SCHEMA)
+    entropy decode; images without a luma table drop."""
+    return _payload_rows(
+        df, JPEG_QUALITY_SCHEMA,
+        _dict_rows(estimate_jpeg_quality, JPEG_QUALITY_SCHEMA), payload_col,
+    )
 
 
 def synth_jpeg_quality_corpus(n: int = 12) -> list[dict]:
@@ -1816,8 +1593,6 @@ def synth_jpeg_quality_corpus(n: int = 12) -> list[dict]:
     gray vs RGB payloads (1 vs 2 DQT tables by construction) and a
     progressive stream every third id. Quality and table count exist
     before encode."""
-    from ocr_spark.kernels import jpeg
-
     qs = (35, 50, 62, 75, 80, 90, 95, 98)
     out = []
     for i in range(n):
@@ -1955,26 +1730,12 @@ def parse_id3(buf: bytes) -> dict:
 
 
 def id3_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Per-clip ID3 text-frame extraction, Arrow-batched mapInPandas
-    — the metadata face of the otherwise-gated compressed-audio
-    family (decode stays behind the named soundfile call)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for clip_id, payload in zip(pdf["clip_id"], pdf[payload_col]):
-                m = parse_id3(bytes(payload))
-                rows.append(
-                    (
-                        int(clip_id), m["has_id3"], m["title"],
-                        m["artist"], m["album"], m["track_no"], m["enc"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ID3_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, ID3_SCHEMA)
+    """Per-clip ID3 text-frame extraction — the metadata face of the
+    otherwise-gated compressed-audio family (decode stays behind the
+    named soundfile call)."""
+    return _payload_rows(
+        df, ID3_SCHEMA, _dict_rows(parse_id3, ID3_SCHEMA), payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1989,8 +1750,6 @@ def synth_webimg_corpus(n: int = 12) -> list[dict]:
     before the bytes are assembled; pixel DECODE for these formats
     stays gated (the named production calls), but routing and
     dimensions must not wait for it."""
-    from ocr_spark.kernels import jpeg
-
     out = []
     for i in range(n):
         v = i % 5
@@ -2069,20 +1828,11 @@ def sniff_webimg(buf: bytes) -> tuple[str, str, int, int]:
 
 
 def webimg_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Per-image container sniff, Arrow-batched mapInPandas — the
-    router in front of the gated webp/avif decoders."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                kind, variant, w, h = sniff_webimg(bytes(payload))
-                rows.append((int(img_id), kind, variant, w, h))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WEBIMG_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, WEBIMG_SCHEMA)
+    """Per-image container sniff — the router in front of the gated
+    webp/avif decoders."""
+    return _payload_rows(
+        df, WEBIMG_SCHEMA, lambda buf: [sniff_webimg(buf)], payload_col
+    )
 
 
 def synth_epub_corpus(n: int = 8) -> list[dict]:
@@ -2091,9 +1841,6 @@ def synth_epub_corpus(n: int = 8) -> list[dict]:
     non-EPUB zip and a non-zip payload. Member lists and sizes are
     recorded at construction; timestamps pinned to the DOS epoch so
     the bytes are reproducible."""
-    import io
-    import zipfile
-
     out = []
     for i in range(n):
         if i % 4 == 3:
@@ -2154,36 +1901,24 @@ def epub_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
     book containers into the document pipeline and sizes the extract
     before any decompression budget is spent."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import zipfile
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                buf = bytes(payload)
-                if buf[:2] != b"PK":
-                    rows.append((int(doc_id), 0, 0, 0, 0, 0))
-                    continue
-                with zipfile.ZipFile(io.BytesIO(buf)) as z:
-                    infos = z.infolist()
-                    is_epub = 0
-                    if infos and infos[0].filename == "mimetype":
-                        if z.read("mimetype") == b"application/epub+zip":
-                            is_epub = 1
-                    rows.append(
-                        (
-                            int(doc_id), 1, is_epub, len(infos),
-                            sum(1 for x in infos
-                                if x.filename.endswith(".xhtml")),
-                            int(sum(x.file_size for x in infos)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EPUB_SCHEMA.fields]
+    def parse(buf: bytes) -> list[tuple]:
+        if buf[:2] != b"PK":
+            return [(0, 0, 0, 0, 0)]
+        with zipfile.ZipFile(io.BytesIO(buf)) as z:
+            infos = z.infolist()
+            is_epub = 0
+            if infos and infos[0].filename == "mimetype":
+                if z.read("mimetype") == b"application/epub+zip":
+                    is_epub = 1
+        return [
+            (
+                1, is_epub, len(infos),
+                sum(1 for x in infos if x.filename.endswith(".xhtml")),
+                int(sum(x.file_size for x in infos)),
             )
+        ]
 
-    return df.mapInPandas(run, EPUB_SCHEMA)
+    return _payload_rows(df, EPUB_SCHEMA, parse, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2298,27 +2033,12 @@ def parse_flac_streaminfo(buf: bytes) -> dict:
 
 
 def flac_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Per-clip FLAC STREAMINFO harvest, Arrow-batched mapInPandas —
-    header bytes only; the (gated) frame decoder is never invoked."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for clip_id, payload in zip(pdf["clip_id"], pdf[payload_col]):
-                m = parse_flac_streaminfo(bytes(payload))
-                rows.append(
-                    (
-                        int(clip_id), m["is_flac"], m["sample_rate"],
-                        m["channels"], m["bits_per_sample"],
-                        m["total_samples"], m["duration_ms"],
-                        m["n_blocks"], m["has_tags"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FLAC_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, FLAC_SCHEMA)
+    """Per-clip FLAC STREAMINFO harvest — header bytes only; the
+    (gated) frame decoder is never invoked."""
+    return _payload_rows(
+        df, FLAC_SCHEMA, _dict_rows(parse_flac_streaminfo, FLAC_SCHEMA),
+        payload_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2432,26 +2152,11 @@ def parse_mp4_boxes(buf: bytes) -> dict:
 
 
 def mp4_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Per-clip ISO-BMFF structure harvest, Arrow-batched
-    mapInPandas — box headers only, no sample decode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for clip_id, payload in zip(pdf["clip_id"], pdf[payload_col]):
-                m = parse_mp4_boxes(bytes(payload))
-                rows.append(
-                    (
-                        int(clip_id), m["is_bmff"], m["major_brand"],
-                        m["timescale"], m["duration_ms"], m["n_traks"],
-                        m["has_mdat"], m["top_boxes"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MP4_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, MP4_SCHEMA)
+    """Per-clip ISO-BMFF structure harvest — box headers only, no
+    sample decode."""
+    return _payload_rows(
+        df, MP4_SCHEMA, _dict_rows(parse_mp4_boxes, MP4_SCHEMA), payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2546,25 +2251,11 @@ def parse_ogg_head(buf: bytes) -> dict:
 
 
 def ogg_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Per-clip Ogg identification-header harvest, Arrow-batched
-    mapInPandas — first page only, no audio decode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for clip_id, payload in zip(pdf["clip_id"], pdf[payload_col]):
-                m = parse_ogg_head(bytes(payload))
-                rows.append(
-                    (
-                        int(clip_id), m["kind"], m["channels"],
-                        m["sample_rate"], m["pre_skip"], m["serial"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in OGG_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, OGG_SCHEMA)
+    """Per-clip Ogg identification-header harvest — first page only,
+    no audio decode."""
+    return _payload_rows(
+        df, OGG_SCHEMA, _dict_rows(parse_ogg_head, OGG_SCHEMA), payload_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2626,8 +2317,6 @@ def synth_gps_corpus(n: int = 10) -> list[dict]:
     precision is the building-level PII case), and a GPS-less
     control. Expected micro-degrees exist before any bytes are
     assembled (exact integer DMS fold, floor division)."""
-    from ocr_spark.kernels import jpeg
-
     out = []
     for i in range(n):
         img = (
@@ -2731,22 +2420,8 @@ GPS_SCHEMA = StructType(
 
 
 def gps_features(df: DataFrame, payload_col: str = "media") -> DataFrame:
-    """Per-image GPS-EXIF harvest, Arrow-batched mapInPandas —
-    segment headers only, no entropy decode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, payload in zip(pdf["img_id"], pdf[payload_col]):
-                m = parse_exif_gps(bytes(payload))
-                rows.append(
-                    (
-                        int(img_id), m["has_gps"], m["byte_order"],
-                        m["lat_microdeg"], m["lon_microdeg"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GPS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(run, GPS_SCHEMA)
+    """Per-image GPS-EXIF harvest — segment headers only, no entropy
+    decode."""
+    return _payload_rows(
+        df, GPS_SCHEMA, _dict_rows(parse_exif_gps, GPS_SCHEMA), payload_col
+    )

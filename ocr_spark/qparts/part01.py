@@ -3442,6 +3442,14 @@ def _host_graph(
     return hosts, edges
 
 
+def _duck_undirected(name: str = "und") -> str:
+    """The oracle side of _undirected: the CTE `{name}(a, b)`, each
+    edge of `dedges` once with a < b."""
+    return f"""{name} AS (
+      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+      FROM dedges)"""
+
+
 def _undirected(edges: DataFrame) -> DataFrame:
     """Each undirected edge once as (a, b) with a < b, staged: the
     triangle, k-core and link-prediction queries all read it from
@@ -7133,9 +7141,7 @@ def interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "host_triangle_counts",
     f"""
     WITH {_duck_host_graph("dedges", ring=True)},
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM dedges),
+    {_duck_undirected()},
     deg AS (
       SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM (
         SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
@@ -7348,9 +7354,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_oracle(k: int = 3, rounds: int = 3) -> str:
     parts = [
         _duck_host_graph("dedges", ring=True),
-        """e0 AS (
-      SELECT DISTINCT a, b FROM (
-        SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM dedges))""",
+        _duck_undirected("e0"),
         "v0 AS (SELECT h FROM hosts)",
     ]
     for i in range(1, rounds + 1):
@@ -7733,9 +7737,7 @@ def canonical_election(spark: SparkSession, sf_dir: str) -> DataFrame:
     "link_prediction_pairs",
     f"""
     WITH {_duck_host_graph("dedges")},
-    und AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM dedges),
+    {_duck_undirected()},
     sym AS (
       SELECT a AS u, b AS v FROM und UNION ALL SELECT b AS u, a AS v FROM und),
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u),

@@ -59,6 +59,18 @@ def host_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _media_frame(
+    spark: SparkSession, corpus: list[dict], key: str
+) -> DataFrame:
+    """``(<key> int, media binary)`` rows of a synthesized codec corpus,
+    hash-spread over 8 partitions: the input every codec query hands
+    to its payload extractor."""
+    return spark.createDataFrame(
+        [(r[key], bytearray(r["payload"])) for r in corpus],
+        f"{key} int, media binary",
+    ).repartition(8, key)
+
+
 # ---------------------------------------------------------------------------
 # PNG decode (kernels/png.py — stdlib zlib + numpy, no external codec)
 # ---------------------------------------------------------------------------
@@ -94,12 +106,7 @@ def png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ocr_spark.operators.multimodal import png_features, synth_png_corpus
 
-    corpus = synth_png_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return png_features(base.repartition(8, "img_id"))
+    return png_features(_media_frame(spark, synth_png_corpus(), "img_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -139,12 +146,7 @@ def jpeg_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ocr_spark.operators.multimodal import jpeg_features, synth_jpeg_corpus
 
-    corpus = synth_jpeg_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return jpeg_features(base.repartition(8, "img_id"))
+    return jpeg_features(_media_frame(spark, synth_jpeg_corpus(), "img_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -188,12 +190,7 @@ def wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ocr_spark.operators.multimodal import synth_wav_corpus, wav_features
 
-    corpus = synth_wav_corpus()
-    base = spark.createDataFrame(
-        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
-        "clip_id int, media binary",
-    )
-    return wav_features(base.repartition(8, "clip_id"))
+    return wav_features(_media_frame(spark, synth_wav_corpus(), "clip_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -235,12 +232,7 @@ def gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ocr_spark.operators.multimodal import gif_features, synth_gif_corpus
 
-    corpus = synth_gif_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return gif_features(base.repartition(8, "img_id"))
+    return gif_features(_media_frame(spark, synth_gif_corpus(), "img_id"))
 
 
 def _bmp_oracle() -> str:
@@ -269,12 +261,7 @@ def bmp_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly."""
     from ocr_spark.operators.multimodal import bmp_features, synth_bmp_corpus
 
-    corpus = synth_bmp_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return bmp_features(base.repartition(8, "img_id"))
+    return bmp_features(_media_frame(spark, synth_bmp_corpus(), "img_id"))
 
 
 def _tiff_oracle() -> str:
@@ -314,12 +301,7 @@ def tiff_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiff_features,
     )
 
-    corpus = synth_tiff_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return tiff_features(base.repartition(8, "img_id"))
+    return tiff_features(_media_frame(spark, synth_tiff_corpus(), "img_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -4437,12 +4419,7 @@ def ico_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     no explode/shuffle in the plan."""
     from ocr_spark.operators.multimodal import ico_features, synth_ico_corpus
 
-    corpus = synth_ico_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return ico_features(base.repartition(8, "img_id"))
+    return ico_features(_media_frame(spark, synth_ico_corpus(), "img_id"))
 
 
 _SHORTENER_HOSTS = ["bit.ly", "t.co", "tinyurl.com", "goo.gl"]
@@ -5232,12 +5209,7 @@ def jpeg_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_exif_corpus,
     )
 
-    corpus = synth_exif_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    return exif_features(base.repartition(8, "img_id"))
+    return exif_features(_media_frame(spark, synth_exif_corpus(), "img_id"))
 
 
 def _pngmeta_oracle() -> str:
@@ -5273,12 +5245,9 @@ def png_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_png_meta_corpus,
     )
 
-    corpus = synth_png_meta_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
+    return png_meta_features(
+        _media_frame(spark, synth_png_meta_corpus(), "img_id")
     )
-    return png_meta_features(base.repartition(8, "img_id"))
 
 
 def _ldbreadcrumb_oracle() -> str:
@@ -5481,12 +5450,9 @@ def gif_animation_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_gif_anim_corpus,
     )
 
-    corpus = synth_gif_anim_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
+    return gif_anim_features(
+        _media_frame(spark, synth_gif_anim_corpus(), "img_id")
     )
-    return gif_anim_features(base.repartition(8, "img_id"))
 
 
 def _trackedge_oracle() -> str:
@@ -5821,12 +5787,9 @@ def wav_silence_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         wav_silence_segments,
     )
 
-    corpus = synth_silence_corpus()
-    base = spark.createDataFrame(
-        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
-        "clip_id int, media binary",
+    return wav_silence_segments(
+        _media_frame(spark, synth_silence_corpus(), "clip_id")
     )
-    return wav_silence_segments(base.repartition(8, "clip_id"))
 
 
 def _jpegq_oracle() -> str:
@@ -5864,12 +5827,9 @@ def jpeg_quality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_jpeg_quality_corpus,
     )
 
-    corpus = synth_jpeg_quality_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
+    return jpeg_quality_features(
+        _media_frame(spark, synth_jpeg_quality_corpus(), "img_id")
     )
-    return jpeg_quality_features(base.repartition(8, "img_id"))
 
 
 def _id3_oracle() -> str:
@@ -5907,12 +5867,7 @@ def mp3_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_id3_corpus,
     )
 
-    corpus = synth_id3_corpus()
-    base = spark.createDataFrame(
-        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
-        "clip_id int, media binary",
-    )
-    return id3_features(base.repartition(8, "clip_id"))
+    return id3_features(_media_frame(spark, synth_id3_corpus(), "clip_id"))
 
 
 def _postal_oracle() -> str:
@@ -6041,12 +5996,9 @@ def webp_avif_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         webimg_features,
     )
 
-    corpus = synth_webimg_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
+    return webimg_features(
+        _media_frame(spark, synth_webimg_corpus(), "img_id")
     )
-    return webimg_features(base.repartition(8, "img_id"))
 
 
 def _epub_oracle() -> str:
@@ -6085,12 +6037,7 @@ def epub_container_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_epub_corpus,
     )
 
-    corpus = synth_epub_corpus()
-    base = spark.createDataFrame(
-        [(r["doc_id"], bytearray(r["payload"])) for r in corpus],
-        "doc_id int, media binary",
-    )
-    return epub_features(base.repartition(4, "doc_id"))
+    return epub_features(_media_frame(spark, synth_epub_corpus(), "doc_id"))
 
 
 def _anchor_consensus_oracle() -> str:
@@ -7069,12 +7016,7 @@ def flac_streaminfo_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_flac_corpus,
     )
 
-    corpus = synth_flac_corpus()
-    base = spark.createDataFrame(
-        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
-        "clip_id int, media binary",
-    )
-    return flac_features(base.repartition(8, "clip_id"))
+    return flac_features(_media_frame(spark, synth_flac_corpus(), "clip_id"))
 
 
 def _mp4_oracle() -> str:
@@ -7115,12 +7057,7 @@ def mp4_container_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_mp4_corpus,
     )
 
-    corpus = synth_mp4_corpus()
-    base = spark.createDataFrame(
-        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
-        "clip_id int, media binary",
-    )
-    return mp4_features(base.repartition(8, "clip_id"))
+    return mp4_features(_media_frame(spark, synth_mp4_corpus(), "clip_id"))
 
 
 def _stickiness_oracle() -> str:
@@ -7299,12 +7236,7 @@ def ogg_opus_head_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_ogg_corpus,
     )
 
-    corpus = synth_ogg_corpus()
-    base = spark.createDataFrame(
-        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
-        "clip_id int, media binary",
-    )
-    return ogg_features(base.repartition(8, "clip_id"))
+    return ogg_features(_media_frame(spark, synth_ogg_corpus(), "clip_id"))
 
 
 def _gps_oracle() -> str:
@@ -7348,12 +7280,7 @@ def jpeg_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_gps_corpus,
     )
 
-    corpus = synth_gps_corpus()
-    base = spark.createDataFrame(
-        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
-        "img_id int, media binary",
-    )
-    out = gps_features(base.repartition(8, "img_id"))
+    out = gps_features(_media_frame(spark, synth_gps_corpus(), "img_id"))
     return out.select(
         "img_id", "has_gps", "byte_order",
         F.col("lat_microdeg").cast("long").alias("lat_microdeg"),

@@ -42,7 +42,7 @@ def test_image_features_across_codecs(media):
 
 def test_audio_features_wav_rows(media):
     wavs = media.where(F.col("kind") == "wav")
-    out = mm.audio_features(wavs, use_fake=False).collect()
+    out = mm.audio_features(wavs).collect()
     assert len(out) == wavs.count() * mm.N_AUDIO_BANDS
     assert all(r.energy >= 0 for r in out)
 
@@ -91,10 +91,6 @@ def test_frame_roundtrip_exact():
 
 
 def test_audio_stub_contract(spark, media):
-    # fake path: deterministic, correct schema, explodes to bands
-    out = mm.audio_features(media.where(F.col("kind") == "pnm").limit(3)).collect()
-    assert len(out) == 3 * 8
-    assert all(isinstance(r.energy, float) for r in out)
     # wav is REAL now: garbage bytes are a format error, not a stub
     with pytest.raises(ValueError, match="RIFF"):
         mm.decode_audio(b"\x00\x01", "wav")
@@ -111,12 +107,48 @@ def test_image_features_permissive_dead_letter(spark, media):
 
     imgs = media.where(F.col("kind") == "pnm").limit(2)
     bad = imgs.limit(1).withColumn("media", F.lit(b"garbage"))
-    mixed = imgs.unionByName(bad)
+    null = imgs.limit(1).withColumn("media", F.lit(None).cast("binary"))
+    mixed = imgs.unionByName(bad).unionByName(null)
     rows = mm.image_features(mixed).collect()
     errs = [r for r in rows if r.error is not None]
     oks = [r for r in rows if r.error is None]
-    assert len(errs) == 1 and len(oks) == 2
-    assert errs[0].mean is None
+    assert len(errs) == 2 and len(oks) == 2
+    assert all(r.mean is None for r in errs)
+
+
+def test_payload_rows_drops_and_fans_out_in_batch_order(spark):
+    """The one payload stage: the key is the schema's first field, read
+    from the input column of that name; parse gets the payload bytes
+    and the extra columns' values; 0 results drop the row, several fan
+    it out, in batch order."""
+    from pyspark.sql.types import IntegerType, StringType, StructField
+    from pyspark.sql.types import StructType
+
+    schema = StructType(
+        [
+            StructField("doc_id", IntegerType()),
+            StructField("part", IntegerType()),
+            StructField("text", StringType()),
+        ]
+    )
+    # one partition, so one Arrow batch carries the rows in this order
+    df = spark.createDataFrame(
+        [("p", bytearray(b""), 7), ("q", bytearray(b"a"), 3),
+         ("r", bytearray(b"xyz"), 5)],
+        "tag string, media binary, doc_id int",
+    ).coalesce(1)
+
+    def parse(buf, tag):
+        return [(j, tag + buf[j:j + 1].decode()) for j in range(len(buf))]
+
+    out = mm._payload_rows(df, schema, parse, "media", "tag")
+    assert out.columns == ["doc_id", "part", "text"]
+    assert [tuple(r) for r in out.collect()] == [
+        (3, 0, "qa"), (5, 0, "rx"), (5, 1, "ry"), (5, 2, "rz"),
+    ]
+    dropped = mm._payload_rows(df, schema, lambda buf, tag: [], "media", "tag")
+    pdf = dropped.toPandas()
+    assert list(pdf.columns) == ["doc_id", "part", "text"] and pdf.empty
 
 
 def test_phash_invariance_and_separation():

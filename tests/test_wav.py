@@ -87,7 +87,7 @@ def test_audio_features_real_path(spark):
         [(f"u{r['clip_id']}", bytearray(r["payload"])) for r in corpus],
         "url string, media binary",
     )
-    out = mm.audio_features(base, use_fake=False).collect()
+    out = mm.audio_features(base).collect()
     assert len(out) == 3 * mm.N_AUDIO_BANDS
     r0 = corpus[0]
     sums = mm.wav_band_abs_sums(r0["samples"])
