@@ -502,10 +502,6 @@ def extract_pdf_text(buf: bytes) -> str:
 # Spark stage
 # ---------------------------------------------------------------------------
 
-PDF_TEXT_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("extracted", StringType())]
-)
-
 PDF_TEXT_PERMISSIVE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -515,17 +511,13 @@ PDF_TEXT_PERMISSIVE_SCHEMA = StructType(
 )
 
 
-def extract_pdf_df(
-    df: DataFrame, pdf_col: str = "pdf", permissive: bool = True
-) -> DataFrame:
-    """(doc_id, pdf binary) -> (doc_id, extracted[, error]).
+def extract_pdf_df(df: DataFrame, pdf_col: str = "pdf") -> DataFrame:
+    """(doc_id, pdf binary) -> (doc_id, extracted, error).
 
-    permissive=True (the 100 TB default): a corrupt document yields
-    extracted=NULL + an error string instead of failing the task — at
-    scale one malformed row must never kill a 10^12-row stage; the
-    error column is the dead-letter channel (filter `error IS NOT NULL`
-    into a quarantine table). permissive=False fails fast for tests
-    and small batch jobs.
+    A corrupt document yields extracted=NULL + an error string instead
+    of failing the task — at scale one malformed row must never kill a
+    10^12-row stage; the error column is the dead-letter channel
+    (filter `error IS NOT NULL` into a quarantine table).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -537,18 +529,13 @@ def extract_pdf_df(
                     texts.append(extract_pdf_text(bytes(b)))
                     errs.append(None)
                 except Exception as exc:  # noqa: BLE001 — dead-letter
-                    if not permissive:
-                        raise
                     texts.append(None)
                     errs.append(f"{type(exc).__name__}: {exc}"[:200])
-            out = {"doc_id": pdf["doc_id"], "extracted": texts}
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "extracted": texts, "error": errs}
+            )
 
-    return df.mapInPandas(
-        run, PDF_TEXT_PERMISSIVE_SCHEMA if permissive else PDF_TEXT_SCHEMA
-    )
+    return df.mapInPandas(run, PDF_TEXT_PERMISSIVE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

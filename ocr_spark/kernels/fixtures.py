@@ -108,18 +108,3 @@ def twopage(h: int = 96, w: int = 256, seed: int = 42, key: int = 0) -> np.ndarr
     page[:, :half] = left
     page[:, half + 12 :] = right[:, : w - half - 12]
     return np.ascontiguousarray(page)
-
-
-ALL_SHAPES = ((8, 8), (13, 17), (48, 64), (97, 129))
-
-
-def canon_fixtures(seed: int = 42) -> dict[str, np.ndarray]:
-    """The canonical battery used by the golden tests."""
-    out: dict[str, np.ndarray] = {}
-    for h, w in ALL_SHAPES:
-        out[f"grad_{h}x{w}"] = grad(h, w)
-        out[f"noise_{h}x{w}"] = noise(h, w, seed)
-    out["glyphs_96x128"] = glyphs(96, 128, seed)
-    out["shaded_96x128"] = shaded(96, 128, seed)
-    out["twopage_96x256"] = twopage(96, 256, seed)
-    return out

@@ -1,9 +1,8 @@
 """Layout segmentation: projection-profile line cuts + glyph boxes.
 
 Generalizes the reference's projection-profile machinery — skew_score
-profiles (transform.c:136-155), mean_y smoothing (misc.c:153-178) and
-find_margin run-length cuts (transform.c:313-356) — into line/column
-segmentation over a binarized page, plus CCL glyph boxes.
+profiles (transform.c:136-155) and mean_y smoothing (misc.c:153-178) —
+into line segmentation over a binarized page, plus CCL glyph boxes.
 """
 
 from __future__ import annotations
@@ -11,8 +10,6 @@ from __future__ import annotations
 import numpy as np
 
 from ocr_spark.kernels import ccl
-
-F32 = np.float32
 
 
 def dark_mask(binary_page: np.ndarray) -> np.ndarray:
@@ -54,16 +51,6 @@ def line_bands(
             bands = merged
         out[k] = [(y0, y1) for y0, y1 in bands if y1 - y0 >= min_height]
     return out if m.ndim == 3 else out[0]
-
-
-def column_cut(binary_page: np.ndarray, text_width: int) -> int:
-    """Best vertical cut position for a text block of width `text_width`,
-    via find_margin on the vertical ink profile (transform.c:313-356)."""
-    from ocr_spark.kernels.geometry import find_margin
-
-    m = dark_mask(binary_page)
-    profile = m.sum(axis=0).astype(F32)
-    return find_margin(profile, text_width)
 
 
 def glyph_boxes(binary_page: np.ndarray, min_area: int = 2):

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ocr_spark.sources.catalog import stage
+
 SESSION_GAP_S = 1800  # industry-standard 30-minute inactivity gap
 
 
@@ -90,21 +92,19 @@ def funnel_counts(events: DataFrame, stages: list[str]) -> DataFrame:
     # each stage's reached set is staged (r5): stage k's table feeds
     # both the k+1 join AND its own count row — un-staged, stage k's
     # count replans stages 1..k (quadratic event scans in K)
-    reached = (
+    reached = stage(
         events.where(F.col("event_type") == stages[0])
         .groupBy("user_id")
         .agg(F.min("ts").alias("t"))
-        .localCheckpoint(eager=False)
     )
     out_rows = [(1, stages[0], reached)]
     for k, ev_type in enumerate(stages[1:], start=2):
-        nxt = (
+        nxt = stage(
             events.where(F.col("event_type") == ev_type)
             .join(reached, "user_id")
             .where(F.col("ts") > F.col("t"))
             .groupBy("user_id")
             .agg(F.min("ts").alias("t"))
-            .localCheckpoint(eager=False)
         )
         out_rows.append((k, ev_type, nxt))
         reached = nxt
@@ -220,15 +220,14 @@ def two_tier_rank(
     over the non-NULL rows. ``tiebreaks`` are ascending and must make
     the order total, or row_number within a bucket is nondeterministic.
 
-    The input is STAGED at entry (lazy localCheckpoint; a table write
-    at warehouse scale): the helper consumes it three times (min/max
-    probe, bucket rows, bucket counts), and an un-staged corpus-scale
-    upstream would re-execute per consumer subtree — the same
-    single-evaluation discipline as budget_apportionment's demands
+    The input is STAGED at entry: the helper consumes it three times
+    (min/max probe, bucket rows, bucket counts), and an un-staged
+    corpus-scale upstream would re-execute per consumer subtree — the
+    same single-evaluation discipline as budget_apportionment's demands
     staging.
     """
     v = F.col(value_col)
-    df = df.where(v.isNotNull()).localCheckpoint(eager=False)
+    df = stage(df.where(v.isNotNull()))
     stats = df.agg(
         F.min(v).cast("long").alias("_lo"), F.max(v).cast("long").alias("_hi")
     )

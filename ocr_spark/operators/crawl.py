@@ -1,22 +1,22 @@
-"""Crawl-side operators: robots gating and rendezvous output sharding.
+"""Crawl-side operators: robots gating, frontier scheduling, link and
+redirect graphs.
 
 Extension tier (no reference counterpart — the reference is a
 single-machine OCR engine, see SURVEY.md §2): the operators a crawl
-ingest pipeline applies before documents reach extraction, and the
-sink-side shard assignment a 100 TB writer uses.
+ingest pipeline applies before documents reach extraction.
 
-Both are pure Column/DataFrame dataflows (codegen md5, broadcast
-equi-joins, max_by aggregates) — no python stages, no window sorts.
+They are pure Column/DataFrame dataflows (codegen md5, broadcast
+equi-joins, max_by aggregates) — no python stages.
 queries.py wraps each in an oracle-checked query; tools/curate_corpus
 runs them as pipeline stages.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.dedup import fast_hash
+from ocr_spark.sources.catalog import stage
 
 N_HOSTS = 97  # the corpus host scheme: host = doc_id % 97
 
@@ -102,29 +102,6 @@ def robots_decisions(spark, docs: DataFrame) -> DataFrame:
             F.col("allow").alias("allowed"),
         )
     )
-
-
-def hrw_shard(id_col: Column, n_nodes: int = 16) -> Column:
-    """Rendezvous (highest-random-weight) shard id as a scalar Column —
-    the sink-side form: ``array_max`` over a CONSTANT-length node
-    array of (weight, node) structs, computed once per row inside one
-    projection (single-reference HOF — safe from the projection-
-    collapse recompute; see dedup.py's module note). Changing the node
-    set remaps only the lost/gained shard's rows (pinned by
-    tests/test_round2.py::test_rendezvous_minimal_movement on the
-    aggregate form in queries.rendezvous_sharding).
-    """
-    nodes = F.sequence(F.lit(0), F.lit(n_nodes - 1))
-    weighted = F.transform(
-        nodes,
-        lambda n: F.struct(
-            fast_hash(
-                F.concat(id_col.cast("string"), F.lit(":"), n.cast("string"))
-            ).alias("w"),
-            n.alias("node"),
-        ),
-    )
-    return F.array_max(weighted)["node"]
 
 
 def frontier_schedule(docs: DataFrame) -> DataFrame:
@@ -226,14 +203,13 @@ def host_mirror_jaccard(docs: DataFrame, max_df: int = 50) -> DataFrame:
     size (only hashes on >max_df hosts), where the under-cap set is
     corpus-sized (most hashes are unique) and must never be broadcast
     or rebuilt per consumer. ``base`` (one small sketch row per
-    (host, doc-prefix)) is staged once with a lazy localCheckpoint so
-    the self-join's two sides, the cap aggregate, and the size table
-    share a single derivation instead of re-scanning the corpus five
-    times (at warehouse scale this staging is a table write).
+    (host, doc-prefix)) is staged once so the self-join's two sides,
+    the cap aggregate, and the size table share a single derivation
+    instead of re-scanning the corpus five times.
     Remaining keys are uniform; per-pair counts partial-aggregate
     map-side.
     """
-    base = (
+    base = stage(
         docs.select(
             (F.col("doc_id") % N_HOSTS).alias("host"),
             F.md5(
@@ -243,7 +219,6 @@ def host_mirror_jaccard(docs: DataFrame, max_df: int = 50) -> DataFrame:
             ).alias("h"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     over_cap = (
         base.groupBy("h")
@@ -352,9 +327,7 @@ def resolve_redirects(pages: DataFrame, max_hops: int = 64) -> DataFrame:
     # and (via m) the live-redirect lookup — and is often the output
     # of a WARC-parse Python stage (redirect_final_url), which must
     # compute exactly once, not once per consumer subtree
-    pages = pages.select("url", "redirect_location").localCheckpoint(
-        eager=False
-    )
+    pages = stage(pages.select("url", "redirect_location"))
     m = pages.where(F.col("redirect_location").isNotNull()).select(
         F.col("url").alias("src"),
         F.col("redirect_location").alias("dst"),
@@ -395,9 +368,8 @@ def _pointer_jump(
     accumulates across jumps (d = d_a + d_b). Returns (mapping,
     rounds); after t rounds every chain up to 2^t hops is collapsed.
 
-    Each round's mapping is MATERIALIZED (lazy ``localCheckpoint``
-    locally; the same slot is a table write on a warehouse run)
-    before the next self-join. Without that boundary the doubling is
+    Each round's mapping is staged before the next self-join.
+    Without that boundary the doubling is
     pure lineage: round t's plan embeds two copies of round t-1's
     subtree, so the final plan carries 2^rounds copies of the edge
     input's upstream — and Spark executes them all (the a-side and
@@ -417,7 +389,7 @@ def _pointer_jump(
         if with_distance and "d" not in edges.columns
         else edges
     )
-    f = f.localCheckpoint(eager=False)
+    f = stage(f)
     for _ in range(rounds):
         cols = [
             F.col("a.src").alias("src"),
@@ -430,11 +402,10 @@ def _pointer_jump(
                     + F.coalesce(F.col("b.d"), F.lit(0).cast("long"))
                 ).alias("d")
             )
-        f = (
+        f = stage(
             f.alias("a")
             .join(f.alias("b"), F.col("a.dst") == F.col("b.src"), "left")
             .select(*cols)
-            .localCheckpoint(eager=False)
         )
     return f, rounds
 
@@ -464,17 +435,16 @@ def budget_apportionment(demands: DataFrame, budget: int) -> DataFrame:
     from ocr_spark.operators.training import floor_div
 
     # demands feeds the total, the shares, and the shortfall — stage it
-    # once (lazy localCheckpoint; a table write at warehouse scale) or
-    # the per-host aggregate re-scans the corpus per consumer
-    demands = demands.localCheckpoint(eager=False)
+    # once or the per-host aggregate re-scans the corpus per consumer
+    demands = stage(demands)
     tot = demands.agg(F.sum("demand").cast("long").alias("dt"))
-    b = demands.crossJoin(F.broadcast(tot)).select(
+    b = stage(demands.crossJoin(F.broadcast(tot)).select(
         "host",
         "demand",
         floor_div(F.lit(budget) * F.col("demand"), F.col("dt")).alias("base"),
         ((F.lit(budget) * F.col("demand")) % F.col("dt")).alias("rem"),
         "dt",
-    ).localCheckpoint(eager=False)
+    ))
     rleft = b.agg((F.lit(budget) - F.sum("base")).cast("long").alias("rleft"))
     # two-tier rank by (rem DESC, host ASC): coarse bucket = rem div
     # width, ranked bucket-desc; offsets from the tiny bucket aggregate
@@ -664,23 +634,21 @@ def pagination_chains(pages: DataFrame, max_hops: int = 64) -> DataFrame:
     resolved)``. chain_len is a hash-aggregated count per root joined
     back (broadcastable: one row per chain).
 
-    The input is staged once (lazy localCheckpoint; a table write at
-    warehouse scale): the self-join doubling otherwise replans the
-    upstream lineage — typically the link-extraction + RFC 3986
+    The input is staged once: the self-join doubling otherwise replans
+    the upstream lineage — typically the link-extraction + RFC 3986
     resolver expressions — 2^rounds times.
     """
-    pages = pages.select("url", "next_url").localCheckpoint(eager=False)
+    pages = stage(pages.select("url", "next_url"))
     # the fan-in predecessor pick is a MIN over a STRING — Spark
     # plans Sort+SortAggregate for string buffers (no hash-agg
     # support), so this aggregate must run exactly ONCE: staged, it
     # feeds both the doubling loop and the live-roots lookup as a
     # materialized scan, and the query's final plan carries zero
     # SortAggregate nodes (pinned in test_plans)
-    e = (
+    e = stage(
         pages.where(F.col("next_url").isNotNull())
         .groupBy(F.col("next_url").alias("src"))
         .agg(F.min("url").alias("dst"))
-        .localCheckpoint(eager=False)
     )
     f, _rounds = _pointer_jump(e, max_hops, with_distance=True)
     res = (

@@ -43,15 +43,17 @@ Scale notes (10^12 docs)
   distinct over the cross product.
 - ``connected_components`` turns pairs into canonical-keeper clusters
   (min-label propagation, O(diameter) rounds). It reads the pair edges
-  once, and each round is one join and one aggregate staged with lazy
-  localCheckpoint, so no round's plan nests the rounds before it; see
-  its docstring for why a ``persist()`` loop cannot do that.
+  once, and each round is one join and one aggregate, staged
+  (``sources.catalog.stage``) so no round's plan nests the rounds
+  before it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ocr_spark.sources.catalog import stage
 
 MOD = 1_000_000_007
 BASE = 131
@@ -632,7 +634,7 @@ def choose_pivot_count(
     for p in range(n_pivots):
         v = _with_theta_band(v, p, dim, w_band)
     m = n_pivots
-    v = v.localCheckpoint(eager=False)
+    v = stage(v)
     while m < max_pivots:
         key = F.concat_ws(
             ":", *[F.col(f"h{p}").cast("string") for p in range(m)]
@@ -645,7 +647,7 @@ def choose_pivot_count(
         )
         if mx is None or mx <= max_bucket:
             break
-        v = _with_theta_band(v, m, dim, w_band).localCheckpoint(eager=False)
+        v = stage(_with_theta_band(v, m, dim, w_band))
         m += 1
     return v, m
 
@@ -749,10 +751,6 @@ def cosine_neardup_pairs(
     # exactly AT the threshold can never straddle 2 buckets.
     w_band = math.acos(threshold) + 1e-9
     v = vecs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("e"))
-    # localCheckpoint (lazy) rather than persist(): the checkpointed
-    # blocks are GC-reclaimed with the DataFrame, so a long-lived
-    # session running many queries (bench/driver) doesn't accumulate
-    # pinned vector partitions that only an explicit unpersist frees.
     if max_bucket is not None:
         v, n_pivots = choose_pivot_count(
             v, dim, w_band, n_pivots, max_bucket, max_pivots
@@ -760,7 +758,7 @@ def cosine_neardup_pairs(
     else:
         for p in range(n_pivots):
             v = _with_theta_band(v, p, dim, w_band)
-        v = v.localCheckpoint(eager=False)
+        v = stage(v)
     home = v.select(
         "id",
         F.concat_ws(
@@ -891,15 +889,11 @@ def connected_components(
       closed neighbourhood is ``min(u) GROUP BY v``.
     - Every later round is one join and one aggregate that yields the
       new label and, through the self loop, the old one; the round is
-      staged (lazy localCheckpoint) and the changed-label count runs on
-      the staged rows, which the next round then reads.
+      staged and the changed-label count runs on the staged rows, which
+      the next round then reads.
 
     Each round's plan starts from the staged frame of the round before,
-    so it does not grow with the rounds. A ``persist()`` keeps the
-    lineage: a round that joins its cached predecessor back for the
-    change count nests every earlier round's plan, and planning time
-    doubled per round (at a 2g driver heap a 6-edge chain took 22 s
-    and a 7-edge chain ran the driver out of memory).
+    so it does not grow with the rounds.
     The loop stays on the driver but touches only counts, never rows.
     """
     a, b = F.col(a_col), F.col(b_col)
@@ -907,24 +901,22 @@ def connected_components(
         F.struct(x.alias("u"), y.alias("v"))
         for x, y in ((a, b), (b, a), (a, a), (b, b))
     ]
-    sym = (
+    sym = stage(
         edges.select(F.inline(F.array(*arcs)))
         .dropna()  # a NULL endpoint is no node
         .distinct()
-        .localCheckpoint(eager=False)
     )
     if max_iter < 1:
         return sym.select(F.col("v").alias("id"), F.col("v").alias("cluster")).distinct()
     labels = sym.groupBy(F.col("v").alias("id")).agg(F.min("u").alias("cluster"))
     for _ in range(max_iter - 1):
-        step = (
+        step = stage(
             sym.join(labels, F.col("u") == F.col("id"))
             .groupBy("v")
             .agg(
                 F.min("cluster").alias("cluster"),
                 F.min(F.when(F.col("u") == F.col("v"), F.col("cluster"))).alias("old"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = step.where(F.col("cluster") < F.col("old")).count()
         labels = step.select(F.col("v").alias("id"), "cluster")

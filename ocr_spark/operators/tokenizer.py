@@ -31,10 +31,8 @@ Design for Spark (and for a cross-engine oracle):
 - **Linear plans over rounds.** Each round consumes the previous
   round's encoding twice (pair counting + merge application); Spark
   plans are trees, so without a boundary the vocab subtree doubles per
-  round (2^R leaf copies). A lazy ``localCheckpoint`` per round keeps
-  the executed work linear in R; at fleet scale the boundary is a
-  catalog write per round instead (executor-local checkpoints are
-  non-reliable).
+  round (2^R leaf copies). Staging the vocabulary each round
+  (``sources.catalog.stage``) keeps the executed work linear in R.
 
 Scale: each round = one explode over vocab symbols (bounded by word
 length), one (s1, s2) hash aggregate with map-side partial sums, one
@@ -45,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ocr_spark.sources.catalog import stage
 
 US = "\x1f"  # symbol start frame
 RS = "\x1e"  # symbol end frame
@@ -135,7 +135,7 @@ def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS):
     vocab = word_vocab(docs)
     merges = None
     for r in range(1, rounds + 1):
-        vocab = vocab.localCheckpoint(eager=False)
+        vocab = stage(vocab)
         best = best_pair(vocab)
         row = best.select(
             F.lit(r).cast("int").alias("merge_rank"),

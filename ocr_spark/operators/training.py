@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import fast_hash, tokens
+from ocr_spark.sources.catalog import stage
 
 PACK_BUDGET = 256           # tokens per packed training sequence
 PACK_BUCKET = 100           # docs per prefix-sum bucket (see pack_sequences)
@@ -285,11 +286,7 @@ def kmeans_recenter(assigned: DataFrame, dim: int) -> DataFrame:
 
 
 def kmeans_quantized(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-    driver_centroids: bool = False,
+    emb: DataFrame, k: int = 8, iters: int = 2, dim: int = 64
 ) -> DataFrame:
     """Lloyd's k-means over quantized embeddings: init = the k vectors
     with the smallest vec_id, ``iters`` rounds of assign/recenter, all
@@ -297,18 +294,10 @@ def kmeans_quantized(
     cluster, dist) after the final assignment.
 
     Scale: centroids are k rows — always broadcast, recomputed per
-    round from a (cluster, dim)-keyed partial-aggregated shuffle; the
-    corpus side is scanned once per round with no corpus-wide shuffle
-    on anything but uniform hashes.
-
-    ``driver_centroids=True`` collects each round's k centroid rows to
-    the driver and re-creates them as a literal table — cutting the
-    lineage so the plan stays FLAT in the round count (what Spark ML's
-    KMeans does; k x dim integers is control-plane-sized, the same
-    bounded-collect contract as the checkpoint layer). Identical
-    results (integer arithmetic — no order sensitivity to launder);
-    use it beyond a handful of rounds. Default False keeps the single
-    lazy plan the oracle gate checks.
+    round from a (cluster, dim)-keyed partial-aggregated shuffle and
+    staged, so the next round reads k rows and the plan stays flat at
+    any ``iters``; the corpus side is scanned once per round with no
+    corpus-wide shuffle on anything but uniform hashes.
     """
     # spread the (single-split) embeddings scan before the per-centroid
     # integer folds — the assign groupBy shuffles by vec_id anyway, so
@@ -321,17 +310,9 @@ def kmeans_quantized(
         vecs.where(F.col("vec_id") < k)
         .select(F.col("vec_id").cast("int").alias("cluster"), F.col("qv").alias("cv"))
     )
-    spark = emb.sparkSession
     assigned = kmeans_assign(vecs, centroids, k)
     for _ in range(iters - 1):
-        centroids = kmeans_recenter(assigned, dim)
-        if driver_centroids:
-            # collected and re-created through Arrow: a list of rows
-            # would be parallelized as a Python RDD, one Python task
-            # per slot every round
-            centroids = spark.createDataFrame(
-                centroids.toArrow(), "cluster int, cv array<bigint>"
-            )
+        centroids = stage(kmeans_recenter(assigned, dim))
         assigned = kmeans_assign(vecs, centroids, k)
     return assigned.select("vec_id", "cluster", "dist")
 
@@ -519,7 +500,7 @@ def kmeans_maximin_init(vecs: DataFrame, k: int) -> DataFrame:
     # and chosen re-enters its own derivation (anti-join + broadcast)
     # — un-staged, round j replans rounds 0..j-1's argmax subtrees
     # (42 corpus scans in the un-staged maximin plan)
-    vecs = vecs.localCheckpoint(eager=False)
+    vecs = stage(vecs)
     chosen = vecs.where(F.col("vec_id") == 0).select(
         F.lit(0).cast("int").alias("cluster"),
         F.col("qv").alias("cv"),
@@ -550,7 +531,7 @@ def kmeans_maximin_init(vecs: DataFrame, k: int) -> DataFrame:
             F.col("w.qv").alias("cv"),
             F.col("w.vec_id").alias("cid"),
         )
-        chosen = chosen.unionByName(winner).localCheckpoint(eager=False)
+        chosen = stage(chosen.unionByName(winner))
     return chosen
 
 
@@ -672,18 +653,18 @@ def pca_power(
     ex = q.select("vec_id", F.posexplode("qv").alias("d0", "x0"))
     # mean staged (r5): it feeds cent AND the initial v — d tiny rows,
     # but its lineage is the corpus explode
-    mean = ex.groupBy("d0").agg(
+    mean = stage(ex.groupBy("d0").agg(
         floor_div(F.sum("x0"), F.count(F.lit(1))).alias("m")
-    ).localCheckpoint(eager=False)
+    ))
     cent = ex.join(F.broadcast(mean), "d0").select(
         "vec_id", (F.col("d0") + 1).alias("d"), (F.col("x0") - F.col("m")).alias("x")
     )
     # cent feeds 2*iters+1 consumer subtrees (s-pass, u-pass per round,
     # final projections) — without a boundary Spark re-derives the
     # explode+mean-join per consumer (the multi-consumer re-evaluation
-    # documented on doc_quality_panel). Lazy local checkpoint
-    # materializes it once; integer rows, so no order sensitivity.
-    cent = cent.localCheckpoint(eager=False)
+    # documented on doc_quality_panel). Staged, it is computed once;
+    # integer rows, so no order sensitivity.
+    cent = stage(cent)
     # the iterated vector lives as d tiny rows (d, v) — always broadcast
     v = mean.select(
         (F.col("d0") + 1).alias("d"), F.lit(PCA_VSCALE).cast("long").alias("v")

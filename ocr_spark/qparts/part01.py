@@ -3419,26 +3419,25 @@ def _host_graph(
     and 7h+3 (mod 97), self-links and absent hosts dropped. `ring` adds
     the h+1 and h+2 peers: the affine maps alone close no triangle.
 
-    Returns (hosts(h), edges(src, dst)), each staged once with a lazy
-    localCheckpoint: every caller reads them from several places (each
-    round, both sides of a self-join), and un-staged each reference
-    replanned the corpus scan and the distinct (16 to 156 scans per
-    plan, with no runtime reuse). Absent hosts drop through a left-semi
-    join (the oracle's `dst IN hosts`): its size estimate is the edge
-    candidates' (~12 KB at sf0.01), where an inner join's is the product
-    of both sides (~115 MB), which plans sort-merge joins on the edges."""
+    Returns (hosts(h), edges(src, dst)), each staged once: every caller
+    reads them from several places (each round, both sides of a
+    self-join), and un-staged each reference replanned the corpus scan
+    and the distinct (16 to 156 scans per plan, with no runtime reuse).
+    Absent hosts drop through a left-semi join (the oracle's `dst IN
+    hosts`): its size estimate is the edge candidates' (~12 KB at
+    sf0.01), where an inner join's is the product of both sides
+    (~115 MB), which plans sort-merge joins on the edges."""
     d = load_table(spark, sf_dir, "documents")
-    hosts = d.select((F.col("doc_id") % 97).alias("h")).distinct() \
-        .localCheckpoint(eager=False)
+    hosts = stage(d.select((F.col("doc_id") % 97).alias("h")).distinct())
     h = F.col("h")
     peers = [(3 * h + 1) % 97, (5 * h + 2) % 97, (7 * h + 3) % 97]
     if ring:
         peers += [(h + 1) % 97, (h + 2) % 97]
     cand = hosts.select("h", F.explode(F.array(*peers)).alias("dst")) \
         .where(F.col("dst") != h).distinct()
-    edges = cand.join(
+    edges = stage(cand.join(
         hosts.select(F.col("h").alias("dst")), "dst", "left_semi"
-    ).select(F.col("h").alias("src"), "dst").localCheckpoint(eager=False)
+    ).select(F.col("h").alias("src"), "dst"))
     return hosts, edges
 
 
@@ -3454,9 +3453,9 @@ def _undirected(edges: DataFrame) -> DataFrame:
     """Each undirected edge once as (a, b) with a < b, staged: the
     triangle, k-core and link-prediction queries all read it from
     several places."""
-    return edges.select(
+    return stage(edges.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct())
 
 
 def _power_rank_oracle(seed: str, out: str) -> str:
@@ -3504,8 +3503,7 @@ def _power_rank(hosts: DataFrame, edges: DataFrame, seed: Column) -> DataFrame:
     staged, since ranks re-enter their own derivation."""
     from ocr_spark.operators.training import floor_div
 
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg")) \
-        .localCheckpoint(eager=False)
+    outdeg = stage(edges.groupBy("src").agg(F.count("*").alias("deg")))
     teleport = F.when(seed, F.lit(150000)).otherwise(F.lit(0)).cast("long")
     ranks = hosts.select(
         "h", F.when(seed, F.lit(1000000)).otherwise(F.lit(0))
@@ -3519,7 +3517,7 @@ def _power_rank(hosts: DataFrame, edges: DataFrame, seed: Column) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        ranks = stage(
             hosts.join(inflow.withColumnRenamed("dst", "h"), "h", "left")
             .select(
                 "h",
@@ -3530,7 +3528,6 @@ def _power_rank(hosts: DataFrame, edges: DataFrame, seed: Column) -> DataFrame:
                     )
                 ).alias("r"),
             )
-            .localCheckpoint(eager=False)
         )
     return ranks
 
@@ -3775,14 +3772,10 @@ def _q_pipeline_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The packing prefix-sum consumes its input TWICE (bucket totals +
     # per-doc placement), and Spark physical plans are trees — shared
     # lineage is re-evaluated per consumer, which would run the
-    # extraction UDF twice (caught by the plan guard). A lazy
-    # localCheckpoint materializes the curated (doc_id, n_tok) rows
-    # once and both branches read the checkpoint. At fleet scale the
-    # boundary is a catalog write instead (tools/curate_corpus.py):
-    # localCheckpoint is executor-local and non-reliable.
-    counts = kept.select(
-        "doc_id", F.col("n_tokens").alias("n_tok")
-    ).localCheckpoint(eager=False)
+    # extraction UDF twice (caught by the plan guard). Staged, the
+    # curated (doc_id, n_tok) rows are computed once and both branches
+    # read them.
+    counts = stage(kept.select("doc_id", F.col("n_tokens").alias("n_tok")))
     return pack_sequences_from_counts(counts)
 
 
@@ -3819,10 +3812,8 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the self-join keys on cluster id; AQE skew-split handles a
     fat cluster, and per-cluster candidate count is (|C| choose 2) —
     choose k so clusters stay ~10^3-10^4. The assignment table is
-    STAGED (r5: lazy localCheckpoint — a catalog write at warehouse
-    scale, the same materialization boundary the capstone and
-    curate_corpus use) so the k-means subtree computes once, not
-    once per join side.
+    STAGED so the k-means subtree computes once, not once per join
+    side.
     """
     from ocr_spark.operators.ann import cosine
     from ocr_spark.operators.dedup import round_det
@@ -3830,8 +3821,7 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = kmeans_quantized(emb).select("vec_id", "cluster")
-    withv = assigned.join(emb.select("vec_id", "embedding"), "vec_id") \
-        .localCheckpoint(eager=False)
+    withv = stage(assigned.join(emb.select("vec_id", "embedding"), "vec_id"))
     a = withv.alias("a")
     b = withv.alias("b")
     cos = round_det(
@@ -4226,7 +4216,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/tokenizer.py — word-type vocabulary (corpus collapses
     once), framed-string symbol encoding, merge application as one
     codegen ``replace``, deterministic argmax (max count, lexicographic
-    tie-break) with no global sort, per-round lazy localCheckpoint so
+    tie-break) with no global sort, the vocabulary staged per round so
     executed work is linear in rounds.
 
     Scale: rounds × (one vocab-sized explode + one (s1,s2) hash
@@ -5821,14 +5811,14 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("h")
             .agg(F.coalesce(F.sum("hub"), F.lit(0)).cast("long").alias("a"))
         )
-        auth = _norm(araw, "auth").localCheckpoint(eager=False)
+        auth = stage(_norm(araw, "auth"))
         hraw = (
             hosts.join(edges.withColumnRenamed("src", "h"), "h", "left")
             .join(auth.select(F.col("h").alias("dst"), "auth"), "dst", "left")
             .groupBy("h")
             .agg(F.coalesce(F.sum("auth"), F.lit(0)).cast("long").alias("a"))
         )
-        hub = _norm(hraw, "hub").localCheckpoint(eager=False)
+        hub = stage(_norm(hraw, "hub"))
     return hub.join(auth, "h").select(
         F.col("h").alias("host"), "hub", "auth"
     )
@@ -6530,12 +6520,12 @@ def host_communities_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     hosts, dedges = _host_graph(spark, sf_dir)
     # staged: the undirected edges feed every round, and each round's
     # labels re-enter their own derivation
-    edges = dedges.union(
+    edges = stage(dedges.union(
         dedges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct())
     labels = hosts.select("h", F.col("h").alias("lbl"))
     for _ in range(3):
-        labels = _lp_round(edges, labels).localCheckpoint(eager=False)
+        labels = stage(_lp_round(edges, labels))
     return labels.select(F.col("h").alias("host"), F.col("lbl").alias("community"))
 
 
@@ -6543,8 +6533,7 @@ def _lp_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """One synchronous label-propagation round — factored out so the
     plan contract (HashAggregate argmax over ONE BIGINT, zero
     SortAggregate) stays pinned by test_plans even though the query
-    stages each round behind a localCheckpoint (which truncates the
-    final plan's lineage)."""
+    stages each round (which truncates the final plan's lineage)."""
     cnt = (
         edges.join(labels.withColumnRenamed("h", "dst"), "dst")
         .groupBy(F.col("src").alias("h"), "lbl")
@@ -6703,8 +6692,7 @@ def cdc_crawl_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the CDC chunking (rolling-hash substring pass over the corpus)
     # feeds BOTH the history index and the increment — staged once (r5)
-    ch = cdc_chunks(load_table(spark, sf_dir, "documents")) \
-        .localCheckpoint(eager=False)
+    ch = stage(cdc_chunks(load_table(spark, sf_dir, "documents")))
     hist = (
         ch.where(F.col("doc_id") % 10 != 0)
         .select("chunk_hash").distinct()
@@ -7191,7 +7179,7 @@ def host_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    ori = (
+    ori = stage(
         und.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
         .join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
         .select(
@@ -7206,7 +7194,6 @@ def host_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b"),
             ).otherwise(F.col("a")).alias("hi"),
         )
-        .localCheckpoint(eager=False)
     )
     wedge = (
         ori.alias("e1")
@@ -7220,12 +7207,12 @@ def host_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing = ori.select(
         F.least("lo", "hi").alias("cu"), F.greatest("lo", "hi").alias("cw")
     ).distinct()
-    tri = wedge.join(
+    tri = stage(wedge.join(
         closing,
         (F.least("u", "w") == F.col("cu"))
         & (F.greatest("u", "w") == F.col("cw")),
         "left_semi",
-    ).localCheckpoint(eager=False)
+    ))
     per = (
         tri.select(F.col("u").alias("host"))
         .union(tri.select(F.col("v").alias("host")))
@@ -7407,12 +7394,10 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        live = deg.where(F.col("d") >= 3).select(F.col("v").alias("h")) \
-            .localCheckpoint(eager=False)
-        edges = edges.join(
+        live = stage(deg.where(F.col("d") >= 3).select(F.col("v").alias("h")))
+        edges = stage(edges.join(
             live.select(F.col("h").alias("a")), "a", "left_semi"
-        ).join(live.select(F.col("h").alias("b")), "b", "left_semi") \
-            .localCheckpoint(eager=False)
+        ).join(live.select(F.col("h").alias("b")), "b", "left_semi"))
     return hosts.join(
         live.withColumn("flag", F.lit(1)), "h", "left"
     ).select(
@@ -7781,9 +7766,9 @@ def link_prediction_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds deg + both wedge sides; lab feeds cn + the output — the
     # un-staged plan carried 28 corpus scans with zero runtime reuse
     und = _undirected(dedges)
-    sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
+    sym = stage(und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=False)
+    ))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     negs = (
         hosts.select(
@@ -7797,9 +7782,9 @@ def link_prediction_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(und, ["a", "b"], "left_anti")
         .distinct()
     )
-    lab = und.withColumn("label", F.lit(1).cast("long")).union(
+    lab = stage(und.withColumn("label", F.lit(1).cast("long")).union(
         negs.withColumn("label", F.lit(0).cast("long"))
-    ).localCheckpoint(eager=False)
+    ))
     cn = (
         lab.select("a", "b")
         .join(sym.select(F.col("u").alias("a"), F.col("v").alias("w1")), "a")
@@ -8168,13 +8153,13 @@ def late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # staged once: base feeds the min/max probe AND the bucket rows
     # (an un-staged corpus upstream would scan events per consumer)
-    base = ev.select(
+    base = stage(ev.select(
         "ts",
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss")
         .alias("win"),
         a.cast("long").alias("a"),
         "event_id",
-    ).localCheckpoint(eager=False)
+    ))
     stats = base.agg(
         F.min("a").alias("_lo"),
         F.expr("CAST((max(a) - min(a)) DIV 256 AS BIGINT)").alias("_w"),
@@ -8309,7 +8294,8 @@ def conversion_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("signup_ts"))
     )
-    p = (
+    # staged: p feeds tot + the rank
+    p = stage(
         ev.where(F.col("event_type") == "purchase")
         .join(s, "user_id")
         .where(F.col("ts") >= F.col("signup_ts"))
@@ -8319,7 +8305,7 @@ def conversion_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_timestamp("ts") - F.unix_timestamp("signup_ts")
             ).cast("long").alias("latency_s")
         )
-    ).localCheckpoint(eager=False)  # staged: feeds tot + the rank
+    )
     tot = p.agg(F.count(F.lit(1)).alias("n"))
     ranked = two_tier_rank(
         p.select("latency_s", "user_id"), "latency_s", ["user_id"], out="rn"
@@ -8443,9 +8429,9 @@ def host_count_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # host counts staged once: c feeds the first median, dev, and
     # (through dev) the second median + the output — un-staged, the
     # corpus aggregate would re-execute per consumer subtree
-    c = d.groupBy((F.col("doc_id") % 97).alias("host")).agg(
+    c = stage(d.groupBy((F.col("doc_id") % 97).alias("host")).agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)
+    ))
 
     def rank_median(df, col: str, out: str) -> DataFrame:
         tot = df.agg(F.count(F.lit(1)).alias("cnt"))
@@ -8460,10 +8446,10 @@ def host_count_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     med = rank_median(c, "n", "median_n")
-    dev = c.crossJoin(F.broadcast(med)).select(
+    dev = stage(c.crossJoin(F.broadcast(med)).select(
         "host", "n", "median_n",
         F.abs(F.col("n") - F.col("median_n")).alias("ad"),
-    ).localCheckpoint(eager=False)
+    ))
     mad = rank_median(dev, "ad", "mad_n")
     return dev.crossJoin(F.broadcast(mad)).select(
         "host", "n", "median_n", "mad_n",

@@ -62,13 +62,19 @@ def host_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _media_frame(
     spark: SparkSession, corpus: list[dict], key: str
 ) -> DataFrame:
-    """``(<key> int, media binary)`` rows of a synthesized codec corpus,
-    hash-spread over 8 partitions: the input every codec query hands
-    to its payload extractor."""
-    return spark.createDataFrame(
-        [(r[key], bytearray(r["payload"])) for r in corpus],
-        f"{key} int, media binary",
-    ).repartition(8, key)
+    """``(<key> int, media binary)`` rows of a synthesized codec corpus:
+    the input every codec query hands to its payload extractor. Built
+    from an Arrow table (no Python task) and dealt round-robin by
+    position over min(rows, 8) partitions, so no payload task is empty."""
+    import pyarrow as pa
+
+    n = min(len(corpus), 8)
+    table = pa.table({
+        key: pa.array([r[key] for r in corpus], pa.int32()),
+        "media": pa.array([bytes(r["payload"]) for r in corpus], pa.binary()),
+        "slot": pa.array([i % n for i in range(len(corpus))], pa.int32()),
+    })
+    return spark.createDataFrame(table).repartitionById(n, "slot").drop("slot")
 
 
 # ---------------------------------------------------------------------------
@@ -1159,10 +1165,10 @@ def sitemap_recrawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # urlset page rows consume it, and an un-staged MapInPandas stage
     # replans (and re-executes) per consumer subtree — the same
     # single-Python-execution discipline as resolve_redirects
-    parsed = df.repartition(8, "sitemap_url").mapInPandas(
+    parsed = stage(df.repartition(8, "sitemap_url").mapInPandas(
         parse,
         "sitemap_url string, kind string, loc string, lastmod string",
-    ).localCheckpoint(eager=False)
+    ))
     index_children = (
         parsed.where(F.col("kind") == "sitemapindex")
         .select(F.col("loc").alias("sitemap_url"))
@@ -6104,8 +6110,8 @@ def anchor_text_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
                   amap[((i + 3) % 5).cast("int")].alias("anchor"))
     # c staged (r5): it feeds the rollup AND the tie join-back side —
     # un-staged, the corpus union+count replans per consumer
-    c = e1.unionAll(e2).groupBy("target", "anchor").count() \
-        .withColumnRenamed("count", "cnt").localCheckpoint(eager=False)
+    c = stage(e1.unionAll(e2).groupBy("target", "anchor").count()
+              .withColumnRenamed("count", "cnt"))
     m = c.groupBy("target").agg(
         F.max("cnt").alias("top_count"),
         F.sum("cnt").alias("n_links"),
@@ -7739,11 +7745,9 @@ def bigram_pmi_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigram passes; ucnt feeds the marginal join sides u1/u2 AND the
     # totals — staged so each corpus pass runs once (the un-staged
     # plan carried 6 corpus scans)
-    tok = p.select(F.split("body", " ").alias("ts")) \
-        .localCheckpoint(eager=False)
+    tok = stage(p.select(F.split("body", " ").alias("ts")))
     uni = tok.select(F.explode("ts").alias("w"))
-    ucnt = uni.groupBy("w").agg(F.count("*").alias("cw")) \
-        .localCheckpoint(eager=False)
+    ucnt = stage(uni.groupBy("w").agg(F.count("*").alias("cw")))
     # single-token bodies: sequence(1, 0) defaults to step -1 and
     # yields [1, 0], whose element_at(ts, 0) throws — guard to the
     # empty array (matching the oracle's empty range(1, 1))
@@ -7755,8 +7759,7 @@ def bigram_pmi_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda j: F.concat(
             F.element_at(F.col("ts"), j), F.lit(" "),
             F.element_at(F.col("ts"), j + 1)))).alias("bg"))
-    bcnt = bigs.groupBy("bg").agg(F.count("*").alias("cxy")) \
-        .localCheckpoint(eager=False)
+    bcnt = stage(bigs.groupBy("bg").agg(F.count("*").alias("cxy")))
     tot = (
         p.agg(F.count("*").alias("nd"))
         .crossJoin(ucnt.agg(F.sum("cw").alias("tu")))
@@ -7864,11 +7867,10 @@ def doc_rare_term_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scored staged (r5): it feeds the per-doc max AND the tie join
     # side, and its lineage carries the corpus token explode twice
     # (tf + df) — staged, the explode computes once
-    scored = (
+    scored = stage(
         tf.join(dfreq, "w").crossJoin(tot)
         .select("doc_id", "w",
                 (F.col("tf") * weight).cast("long").alias("score"))
-        .localCheckpoint(eager=False)
     )
     mx = scored.groupBy("doc_id").agg(F.max("score").alias("top_score"))
     # alias both sides: a same-lineage join on bare columns lets the
@@ -8034,21 +8036,18 @@ def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-stage tables staged (r5): each feeds the next stage AND its
     # own count — un-staged, stage k's count replans stages 1..k
     # (the funnel_counts staging discipline)
-    s1 = (e.where(F.col("event_type") == "view")
-          .groupBy("user_id").agg(F.min("ts").alias("t1"))
-          .localCheckpoint(eager=False))
-    s2 = (
+    s1 = stage(e.where(F.col("event_type") == "view")
+               .groupBy("user_id").agg(F.min("ts").alias("t1")))
+    s2 = stage(
         e.where(F.col("event_type") == "click")
         .join(s1, "user_id")
         .where(F.col("ts") > F.col("t1"))
-        .groupBy("user_id").agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False))
-    s3 = (
+        .groupBy("user_id").agg(F.min("ts").alias("t2")))
+    s3 = stage(
         e.where(F.col("event_type") == "purchase")
         .join(s2, "user_id")
         .where(F.col("ts") > F.col("t2"))
-        .groupBy("user_id").agg(F.min("ts").alias("t3"))
-        .localCheckpoint(eager=False))
+        .groupBy("user_id").agg(F.min("ts").alias("t3")))
     c = (
         e.agg(F.countDistinct("user_id").alias("n_total"))
         .crossJoin(s1.agg(F.count("*").alias("n_step1")))

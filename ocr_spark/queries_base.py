@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.extract import doc_url, documents_as_pages, with_main_text
+from ocr_spark.sources.catalog import stage  # noqa: F401 — the parts' lineage cut
 from ocr_spark.sources.tables import load_table as _load_table_impl
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

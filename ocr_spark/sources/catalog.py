@@ -111,6 +111,41 @@ class IcebergCatalog:
             df.writeTo(self._ident(table)).overwritePartitions()
 
 
+def stage(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: later plans read its rows, not its subtree.
+
+    Every lineage cut in the engine goes through here. Stage a frame
+    that several consumers read (Spark plans are trees, so each one
+    would replan and re-run the subtree, a Python stage included) or
+    that a loop feeds back into its own next round (each round would
+    nest every earlier one).
+
+    - Lazy: the rows are computed and stored by the first action that
+      reads them, inside that action's job, with no count job of their
+      own. An iterative caller materializes each round by running its
+      convergence count on the staged frame. The call does build the
+      frame's RDD, and under adaptive execution that runs the frame's
+      shuffle and broadcast stages here; a frame with no exchange runs
+      nothing.
+    - Not ``persist()``: a persisted frame keeps its whole plan, so a
+      loop that joins it back still plans a tree that doubles per round
+      (planning time doubled per round, and a 7-edge chain once ran the
+      driver out of memory), and its blocks stay pinned until someone
+      calls ``unpersist``. Staged blocks are freed once the frame is
+      garbage-collected.
+    - Executor-local: the rows live in the executors' block managers,
+      not in reliable storage, and a lost executor fails the job rather
+      than recomputing them. That is acceptable because each staged
+      frame is an intermediate of one query run, so rerunning the query
+      rebuilds it; what a run must not lose is written through the
+      catalog above (``checkpointed_run`` resumes from it).
+    - A durable cut, at warehouse scale or for a job that must survive
+      a lost executor, belongs here too: write ``df`` through the
+      catalog and return the table's scan, so no caller changes.
+    """
+    return df.localCheckpoint(eager=False)
+
+
 def get_catalog(spark: SparkSession, warehouse: str):
     """Iceberg if its runtime is loadable in this JVM, else parquet."""
     try:

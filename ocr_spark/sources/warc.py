@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ocr_spark.sources.catalog import stage
+
 CRLF = b"\r\n"
 
 _REVISIT_PROFILE = "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest"
@@ -492,7 +494,7 @@ def resolve_revisits(pages: DataFrame) -> DataFrame:
     # revisits all derive from it, and the caller's input is typically
     # a WARC-parse Python stage that must execute once, not once per
     # consumer subtree (same discipline as resolve_redirects)
-    pages = pages.localCheckpoint(eager=False)
+    pages = stage(pages)
     clean = pages.where(F.col("error").isNull())
     responses = clean.where(F.col("record_type") == "response")
     dim = (

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ocr_spark.sources.catalog import stage
+
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -504,7 +506,8 @@ def _cdc_score_and_commit(
     from ocr_spark.operators.dedup import cdc_chunks
     from ocr_spark.operators.training import floor_div
 
-    ch = cdc_chunks(batch_df).localCheckpoint(eager=False)
+    # the chunks feed both writes below: staged, the batch is chunked once
+    ch = stage(cdc_chunks(batch_df))
     if os.path.isdir(index_dir) and any(
         f.endswith(".parquet")
         for _, _, fs in os.walk(index_dir) for f in fs

@@ -185,3 +185,34 @@ def test_phash_pairs_spark(spark):
     df = spark.createDataFrame(rows, "key int, img binary, h int, w int")
     got = {(r.img_a, r.img_b) for r in phash_pairs(df).collect()}
     assert got == {(k, k + 10) for k in range(4)}
+
+
+CODEC_QUERIES = (
+    "png_decode_features", "jpeg_decode_features", "wav_audio_features",
+    "gif_decode_features", "bmp_decode_features", "tiff_decode_features",
+    "ico_decode_features", "jpeg_exif_extract", "png_text_chunks",
+    "gif_animation_features", "wav_silence_segments",
+    "jpeg_quality_estimate", "mp3_id3_tags", "webp_avif_sniff",
+    "epub_container_list", "flac_streaminfo_parse", "mp4_container_boxes",
+    "ogg_opus_head_parse", "jpeg_exif_gps",
+)
+
+
+@pytest.mark.parametrize("name", CODEC_QUERIES)
+def test_codec_query_input_fills_every_partition(spark, monkeypatch, name):
+    """Each partition of a codec query's input is a Python task of the
+    payload stage; an empty one costs a worker task for no rows."""
+    from ocr_spark.qparts import part02
+    from ocr_spark.queries import QUERIES
+
+    media_frame, frames = part02._media_frame, []
+
+    def capture(*args):
+        frames.append(media_frame(*args))
+        return frames[-1]
+
+    monkeypatch.setattr(part02, "_media_frame", capture)
+    QUERIES[name](spark, "")  # codec queries read synthesized corpora
+    (df,) = frames
+    filled = df.select(F.spark_partition_id()).distinct().count()
+    assert filled == df.rdd.getNumPartitions() == min(df.count(), 8)

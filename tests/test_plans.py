@@ -143,8 +143,8 @@ def test_extraction_udf_never_duplicated(spark):
     ):
         plan = _plan(QUERIES[name](spark, SF))
         n = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
-        # pipeline_pack hides its single UDF eval behind a lazy
-        # localCheckpoint (lineage truncated -> 0 visible nodes); every
+        # pipeline_pack hides its single UDF eval behind stage()
+        # (lineage truncated -> 0 visible nodes); every
         # other extraction plan must show exactly one.
         limit = 1 if name != "pipeline_pack_training_sequences" else 0
         assert n == limit, f"{name}: {n} ArrowEvalPython nodes"
@@ -308,7 +308,7 @@ def _partitionless_ordered_windows(plan: str) -> list[str]:
 # Queries allowed >5 scans of one parquet file: COMPOSITIONS of
 # distinct signal stages, each stage a different column-pruned pass
 # computing a different quantity (NOT replication of one expensive
-# subtree — that class is staged with localCheckpoint and audited
+# subtree — that class is staged with stage() and audited
 # away; see the r5 graph-operator staging work).
 _DISTINCT_PASS_COMPOSITIONS = {
     "doc_quality_panel",      # 5 independent quality signals + LM model
@@ -330,7 +330,7 @@ def test_no_query_has_cartesian_product_or_global_window(registry_plans):
     the named distinct-pass compositions — r5 found iterative
     operators whose un-staged loops replanned (and re-executed, no
     runtime exchange reuse) the corpus subtree up to 156 times; the
-    fix is per-round/multi-consumer staging (localCheckpoint), and
+    fix is per-round/multi-consumer staging (stage()), and
     this cap keeps the class from growing back."""
     import collections
     import re
@@ -418,10 +418,11 @@ def test_kmeans_family_hash_aggregates_only(spark):
         plan = _plan(QUERIES[name](spark, SF))
         assert "SortAggregate" not in plan, name
         # r5: iterative/multi-consumer queries stage their rounds
-        # (lazy localCheckpoint), so the aggregate may live inside a
-        # truncated ExistingRDD lineage rather than the final plan.
-        # For those, the ROUND-BODY plan is pinned separately below
-        # (_lp_round / kmeans_quantized via kmeans_embedding_clusters).
+        # (stage()), so the aggregate may live inside a truncated
+        # ExistingRDD lineage rather than the final plan. For those,
+        # the ROUND-BODY plans are pinned separately below (_lp_round,
+        # and kmeans_recenter, whose centroids kmeans_quantized stages;
+        # its last assign stays in the kmeans_embedding_clusters plan).
         assert "HashAggregate" in plan or "Scan ExistingRDD" in plan, name
 
     # the staged queries' round bodies, pinned UN-staged so the
@@ -435,6 +436,17 @@ def test_kmeans_family_hash_aggregates_only(spark):
     round_plan = _plan(_lp_round(edges, labels))
     assert "SortAggregate" not in round_plan
     assert "HashAggregate" in round_plan
+    from ocr_spark.operators.training import kmeans_assign, kmeans_recenter
+
+    vecs = spark.createDataFrame(
+        [(0, [0, 2]), (1, [4, 6]), (2, [8, 8])], "vec_id long, qv array<bigint>"
+    )
+    cents = vecs.where(F.col("vec_id") < 2).select(
+        F.col("vec_id").cast("int").alias("cluster"), F.col("qv").alias("cv")
+    )
+    recenter_plan = _plan(kmeans_recenter(kmeans_assign(vecs, cents, 2), 2))
+    assert "SortAggregate" not in recenter_plan
+    assert not re.findall(r"^\(\d+\) Sort", recenter_plan, re.M)
     for name in ("kmeans_embedding_clusters", "kmeans_cluster_purity"):
         plan = _plan(QUERIES[name](spark, SF))
         assert not re.findall(r"^\(\d+\) Sort", plan, re.M), name
@@ -704,7 +716,7 @@ def test_source_lang_shapes(spark):
 
 def test_pointer_jump_stages_per_round(spark):
     """VERDICT r4 #2: the doubling loop must not replay its upstream
-    2^rounds times. Each round is staged (lazy localCheckpoint →
+    2^rounds times. Each round is staged (stage() →
     Scan ExistingRDD), so the FINAL plan of redirect_final_url
     contains ZERO WARC-parse Python stages (the parse runs once,
     inside the first staged lineage) and pagination_rel_chains

@@ -20,7 +20,9 @@ from ocr_spark.operators.training import (
     BM25_K1,
     KM_SCALE,
     bm25_scores,
+    kmeans_assign,
     kmeans_quantized,
+    kmeans_recenter,
     pack_sequences,
     quantize_vec,
     temperature_resample,
@@ -268,7 +270,10 @@ def test_temperature_single_host(spark):
     assert len(out) == 9 and all(r.thr == 100 for r in out)
 
 
-def test_kmeans_driver_centroids_identical(spark):
+def test_kmeans_staged_centroids_match_unstaged_rounds(spark):
+    """kmeans_quantized stages each round's centroids; the rounds
+    composed here from kmeans_assign and kmeans_recenter, with no
+    staging, must assign every vector the same way."""
     rng = random.Random(7)
     emb = spark.createDataFrame(
         [
@@ -276,17 +281,19 @@ def test_kmeans_driver_centroids_identical(spark):
             for i in range(80)
         ]
     )
-    lazy = {
+    vecs = emb.select("vec_id", quantize_vec(F.col("embedding")).alias("qv"))
+    cents = vecs.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").cast("int").alias("cluster"), F.col("qv").alias("cv")
+    )
+    assigned = kmeans_assign(vecs, cents, 4)
+    for _ in range(3):
+        assigned = kmeans_assign(vecs, kmeans_recenter(assigned, 8), 4)
+    unstaged = {r.vec_id: (r.cluster, r.dist) for r in assigned.collect()}
+    staged = {
         r.vec_id: (r.cluster, r.dist)
         for r in kmeans_quantized(emb, k=4, iters=4, dim=8).collect()
     }
-    flat = {
-        r.vec_id: (r.cluster, r.dist)
-        for r in kmeans_quantized(
-            emb, k=4, iters=4, dim=8, driver_centroids=True
-        ).collect()
-    }
-    assert lazy == flat
+    assert staged == unstaged
 
 
 def test_incremental_pack_equals_full_repack(spark):

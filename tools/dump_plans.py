@@ -85,7 +85,9 @@ COMMENTARY = {
         "distances, argmin as ONE BIGINT min (dist << cbits | cluster); "
         "recenter is exploded "
         "(cluster, dim) partial sums — map-side combine, uniform tiny "
-        "keyspace. No corpus-global sort, no float aggregation."
+        "keyspace — and its k centroid rows are staged (stage()), so "
+        "the final plan reads the last round's centroids via "
+        "ExistingRDD. No corpus-global sort, no float aggregation."
     ),
     "bm25_topk": (
         "Token explode -> partially-aggregated (doc, term) counts; df "
@@ -114,7 +116,7 @@ COMMENTARY = {
         "aggregated sum on uniform dst keys; ranks in integer "
         "micro-units so every sum commutes. Graph state (hosts, "
         "edges, out-degrees) and each round's ranks are STAGED (r5: "
-        "lazy localCheckpoint — the un-staged loop replanned and "
+        "stage() — the un-staged loop replanned and "
         "re-executed the corpus subtree 16x with zero runtime "
         "reuse), so the final plan reads materialized rounds via "
         "ExistingRDD. No cartesian anywhere."
@@ -178,8 +180,8 @@ COMMENTARY = {
         "case) are removed BEFORE the self-join via a broadcast LEFT "
         "ANTI against the over-cap set, which is tiny by construction "
         "at any corpus size (the under-cap set is corpus-sized and is "
-        "never broadcast); the sketch table is staged once (lazy "
-        "localCheckpoint — a table write at warehouse scale) so the "
+        "never broadcast); the sketch table is staged once (stage()) "
+        "so the "
         "self-join sides, cap aggregate, and host-size table share "
         "one derivation; per-pair counts partial-aggregate map-side "
         "and the host-size table (N_HOSTS rows) broadcasts."
@@ -229,8 +231,8 @@ COMMENTARY = {
         "rides the extraction pass."
     ),
     "crawl_budget_apportionment": (
-        "Hamilton quotas, all integer: demands staged once (lazy "
-        "localCheckpoint), two scalar aggregates broadcast "
+        "Hamilton quotas, all integer: demands staged once "
+        "(stage()), two scalar aggregates broadcast "
         "back; the remainder rank is two-tier (coarse buckets -> tiny "
         "bucket window -> bounded within-bucket row_number), so no "
         "one-partition sort even at 10^7 hosts. sum(budget)==B by "
@@ -247,8 +249,8 @@ COMMENTARY = {
         "Top eigenvector WITHOUT a Gram matrix: each round is a per-"
         "row integer fold (s = <c, v>, v broadcast as d tiny rows) "
         "then a posexplode aggregate on 64 dim keys with map-side "
-        "partial sums; the centered-rows subtree is staged once (lazy "
-        "localCheckpoint) for its 2*iters+1 consumers. The only "
+        "partial sums; the centered-rows subtree is staged once "
+        "(stage()) for its 2*iters+1 consumers. The only "
         "corpus-wide shuffle keys are vec_id and the 64 dims."
     ),
     "containment_pairs": (
@@ -336,8 +338,7 @@ COMMENTARY = {
         "the input is staged once, the fan-in predecessor pick "
         "(min over a STRING url — a Sort+SortAggregate shape Spark "
         "cannot hash-aggregate) is staged so it executes exactly "
-        "once, and EVERY doubling round materializes (lazy "
-        "localCheckpoint; a table write at warehouse scale) before "
+        "once, and EVERY doubling round is staged (stage()) before "
         "the next self-equi-join — the final plan contains ZERO "
         "SortAggregate nodes and no 2^rounds lineage replication "
         "(each round is one join of the previous round's "
